@@ -22,6 +22,7 @@ docker round-trip.
 from __future__ import annotations
 
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,6 +136,10 @@ class Engine:
         either the full old state or the full new state, matching the
         reference's per-request atomicity (one catalog handed to one
         connector run, ``abm/server.py:182-187``).
+
+        Every call commits under its own random batch id: a client write
+        is never an exactly-once redelivery of an earlier one, so two
+        writes within one clock tick both land.
         """
         table_cols = {f.name for f in self.table.schema().fields}
         new_cols = [
@@ -156,7 +161,7 @@ class Engine:
             changes = self.pipeline.transform(changes)
         version = self.table.merge(
             changes,
-            batch_id=now_ms,
+            batch_id=uuid.uuid4().int,
             checkpoint_id=f"write-{mode}",
             truncate=(mode == "overwrite"),
         )

@@ -326,23 +326,6 @@ class LakeTable:
         keys = self.key_columns or [c for c in df.columns if c != model.BUCKET_COLUMN]
         return df.withColumn(model.BUCKET_COLUMN, bucket_expr(self.n_buckets, keys))
 
-    def append_base(self, df: DataFrame) -> int:
-        """Bulk-load rows as base files (initial backfill path)."""
-        snap = self.current_snapshot()
-        new_version = snap["version"] + 1
-        entries = self._stage_write(self.with_bucket(df), new_version)
-        for e in entries:
-            e["kind"] = "base"
-        new_snap = {
-            **snap,
-            "version": new_version,
-            "parent": snap["version"],
-            "entries": snap["entries"] + entries,
-            "lineage": snap["lineage"],
-        }
-        self._write_snapshot(new_snap, expected_parent=snap["version"])
-        return new_version
-
     # ----------------------------------------------------------------- merge
     # bounded optimistic-concurrency retries when another writer's commit
     # races ours between snapshot read and pointer CAS

@@ -62,9 +62,6 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-#: Observed payload field names per row (internal; evolution probe only).
-META_KEYS = "_ab_keys"
-
 
 def envelope_schema(data_schema: T.StructType) -> T.StructType:
     """Full typed envelope schema with the data payload as a struct of the

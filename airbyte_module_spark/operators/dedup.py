@@ -8,15 +8,19 @@ All variants follow the same scale discipline:
 - **MinHash + LSH**: per-doc signature (narrow, no shuffle), banding, then a
   self-join *on the band bucket* — candidate generation is output-linear in
   the number of colliding docs, never all-pairs. This is the 100 TB path.
-- **SimHash**: explode distinct tokens → one groupBy(doc) with 32 per-bit
-  sums; near-dup buckets = equal 32-bit fingerprints.
-- **n-gram Jaccard**: inverted-index join on shingles (explode + equi-join +
-  count) — exact similarity, used at moderate scale or as the verifier
-  behind LSH candidates. All-pairs comparison is never materialized.
+- **SimHash**: per-doc 32-bit fingerprint over distinct tokens (narrow, no
+  shuffle); near-dup buckets = equal fingerprints.
+- **n-gram Jaccard**: inverted index on shingles (posting lists + per-doc
+  pair counting) — exact similarity, used at moderate scale or as the
+  verifier behind LSH candidates. All-pairs comparison is never
+  materialized.
 
-Everything is built from Catalyst expressions over the cross-engine hash
-(:func:`operators.text.hash64`), so every operator has a value-exact DuckDB
-oracle (see ``oracle_sql.py``). No Python UDFs anywhere.
+Tokenization, shingling and grouping are Catalyst expressions; the per-doc
+signatures (``with_minhash``, ``simhash32``) and the n-gram pair counter are
+vectorized Arrow kernels (``pandas_udf`` / ``mapInPandas``), never row-at-a-
+time Python UDFs. Every hash is sha256-derived and bit-identical to the
+SQL side (``sha2``, :func:`operators.text.hash64`), so every operator has a
+value-exact DuckDB oracle (see ``oracle_sql.py``).
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from airbyte_module_spark.operators.text import hash64, word_shingles
+from airbyte_module_spark.operators.text import word_shingles
 
 N_MINHASHES = 16
 N_BANDS = 4  # 4 bands x 4 rows: candidate if any 4-run of minhashes agrees
@@ -54,31 +58,6 @@ def minhash_coeffs(n_hashes: int = N_MINHASHES) -> list[tuple[int, int]]:
         b = int(hashlib.sha256(f"mh-b:{j}".encode()).hexdigest()[:15], 16)
         out.append((a % (MINHASH_PRIME - 1) + 1, b % MINHASH_PRIME))
     return out
-
-
-def _base_hash(col):
-    """32-bit base hash of a shingle: first 8 hex chars of its sha256. ONE
-    digest per shingle — the 16 minhash functions are affine transforms of
-    this value (standard universal-hashing minhash), which cut the r1-r3
-    form's 4 digests + 16 hex-string conversions per shingle down to 1 + 1
-    (sha256 volume was the measured cost floor of the whole family)."""
-    return F.conv(F.substring(F.sha2(col, 256), 1, 8), 16, 10).cast("long")
-
-
-def minhash_signature(col, n_hashes: int = N_MINHASHES) -> list:
-    """MinHash signature columns m0..m{n-1} from an ARRAY of shingles:
-    m_j = min over shingles of (a_j * base(x) + b_j) mod p. Array-lambda
-    form (interpreted in Spark 4) — kept for API parity; the hot path is
-    :func:`with_minhash`'s explode + codegen projection. Null signature for
-    docs with no shingles (< n tokens).
-    """
-    cols = []
-    for j, (a, b) in enumerate(minhash_coeffs(n_hashes)):
-        m = F.array_min(
-            F.transform(col, lambda s: (F.lit(a) * _base_hash(s) + F.lit(b)) % MINHASH_PRIME)
-        )
-        cols.append(m.alias(f"m{j}"))
-    return cols
 
 
 def with_minhash(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:

@@ -82,11 +82,6 @@ def _dot64_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series((A * B).sum(axis=1))
 
 
-def quantize(col) -> Column:
-    """array<float> -> array<long>: round(x*1000). Exact int math follows."""
-    return F.transform(col, lambda x: F.round(x.cast("double") * QUANT).cast("long"))
-
-
 def cosine_from_ints(dot, na, nb) -> Column:
     """cosine = dot / sqrt(na*nb) on exact ints — deterministic double."""
     return dot.cast("double") / F.sqrt((na * nb).cast("double"))

@@ -1,3 +1,3 @@
-from airbyte_module_spark.plans.lineage import BatchLineage, lineage_from_batch
+from airbyte_module_spark.plans.lineage import BatchLineage
 
-__all__ = ["BatchLineage", "lineage_from_batch"]
+__all__ = ["BatchLineage"]

@@ -35,27 +35,26 @@ class BatchLineage:
 
 
 def lineage_from_grouped(
-    grouped: DataFrame, batch_id: int, checkpoint_id: str,
-    with_observed_keys: bool = False,
-) -> BatchLineage | tuple[BatchLineage, list[str]]:
-    """Lineage from the ingest's per-key LWW aggregate (one row per live
-    key: ``_w`` winner struct, ``_n`` event count, ``_mne/_mxe`` cursor
-    range, ``_mns/_mxs`` offset range — see CdcPipeline.apply_batch).
+    grouped: DataFrame, batch_id: int, checkpoint_id: str
+) -> tuple[BatchLineage, list[str]]:
+    """Lineage from the ingest's per-key frame (one row per live key, or
+    per event on a keyless table: ``_w`` winner struct, ``_n`` event count,
+    ``_mne/_mxe`` cursor range, ``_mns/_mxs`` offset range — see
+    CdcPipeline.apply_batch).
 
-    The aggregate is already cached and metadata-sized (1 row per key), so
+    The frame is already cached and, on a keyed table, metadata-sized, so
     lineage costs ONE tiny re-aggregation instead of two extra passes over
     the full feed — the per-partition "source offset range, rows applied"
     the north rule asks for falls out of numbers the dedup already computed.
 
-    ``with_observed_keys=True`` additionally returns the distinct payload
-    field names observed on winner lines — the schema-evolution probe —
-    riding the SAME aggregation job (per-bucket ``collect_set`` of each
-    winner's key array, flattened and deduped driver-side over the <=
-    n_buckets rows). Probe and lineage each cost one driver job per
-    micro-batch when run separately; at production tail cadence (small
-    batches, many triggers) the fixed per-job cost dominates both, so the
-    merged form halves the engine-owned driver jobs between trigger and
-    merge (round-6 multibatch attribution)."""
+    Also returns the distinct payload field names observed on winner
+    lines — the schema-evolution probe — riding the SAME aggregation job
+    (per-bucket ``collect_set`` of each winner's key array, flattened and
+    deduped driver-side over the <= n_buckets rows). Probe and lineage each
+    cost one driver job per micro-batch when run separately; at production
+    tail cadence (small batches, many triggers) the fixed per-job cost
+    dominates both, so the merged form halves the engine-owned driver jobs
+    between trigger and merge (round-6 multibatch attribution)."""
     aggs = [
         F.sum("_n").alias("events"),
         F.count("*").alias("winners"),
@@ -64,27 +63,18 @@ def lineage_from_grouped(
         F.max("_mxe").alias("max_emitted_at"),
         F.min("_mns").alias("min_seq"),
         F.max("_mxs").alias("max_seq"),
-    ]
-    if with_observed_keys:
-        aggs.append(
-            F.array_distinct(
-                F.flatten(
-                    F.collect_set(
-                        F.json_object_keys(
-                            F.get_json_object(
-                                F.col("_w.value"), "$.record.data"
-                            )
-                        )
+        F.array_distinct(
+            F.flatten(
+                F.collect_set(
+                    F.json_object_keys(
+                        F.get_json_object(F.col("_w.value"), "$.record.data")
                     )
                 )
-            ).alias("observed_keys")
-        )
+            )
+        ).alias("observed_keys"),
+    ]
     rows = grouped.groupBy(model.BUCKET_COLUMN).agg(*aggs).collect()
-    observed: list[str] = (
-        sorted({k for r in rows for k in (r["observed_keys"] or [])})
-        if with_observed_keys
-        else []
-    )
+    observed = sorted({k for r in rows for k in (r["observed_keys"] or [])})
     per_partition = [
         {
             model.BUCKET_COLUMN: r[model.BUCKET_COLUMN],
@@ -110,49 +100,4 @@ def lineage_from_grouped(
         buckets=sorted(int(r[model.BUCKET_COLUMN]) for r in rows),
         per_partition=per_partition,
     )
-    return (lin, observed) if with_observed_keys else lin
-
-
-def lineage_from_batch(
-    events: DataFrame, winners: DataFrame, batch_id: int, checkpoint_id: str
-) -> BatchLineage:
-    """Aggregate lineage for one micro-batch.
-
-    ``events`` = parsed change rows (pre-dedup, with bucket column);
-    ``winners`` = post-LWW rows. Two cheap aggregations; the per-partition
-    breakdown groups by the ingest bucket (the engine's unit of parallelism
-    and of file replacement), giving the "source offset range, rows applied"
-    per partition demanded by the north rule.
-    """
-    per_part_rows = (
-        events.groupBy(model.BUCKET_COLUMN)
-        .agg(
-            F.count("*").alias("events"),
-            F.min(model.META_EMITTED).alias("min_emitted_at"),
-            F.max(model.META_EMITTED).alias("max_emitted_at"),
-            F.min(model.META_SEQ).alias("min_seq"),
-            F.max(model.META_SEQ).alias("max_seq"),
-        )
-        .collect()
-    )
-    per_partition = [r.asDict() for r in per_part_rows]
-    n_events = sum(p["events"] for p in per_partition)
-    min_e = min((p["min_emitted_at"] for p in per_partition), default=None)
-    max_e = max((p["max_emitted_at"] for p in per_partition), default=None)
-    win_stats = winners.agg(
-        F.count("*").alias("n"),
-        F.sum((F.col(model.META_OP) == "d").cast("long")).alias("d"),
-    ).collect()[0]
-    n_winners = win_stats["n"] or 0
-    return BatchLineage(
-        batch_id=batch_id,
-        checkpoint_id=checkpoint_id,
-        n_events=n_events,
-        n_winners=n_winners,
-        n_conflicts=n_events - n_winners,
-        n_deletes=int(win_stats["d"] or 0),
-        min_emitted_at=min_e,
-        max_emitted_at=max_e,
-        buckets=sorted(int(p[model.BUCKET_COLUMN]) for p in per_partition),
-        per_partition=per_partition,
-    )
+    return lin, observed

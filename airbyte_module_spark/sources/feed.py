@@ -79,16 +79,12 @@ def parse_envelopes_once(
     raw: DataFrame,
     data_schema: T.StructType | None = None,
     stream: str = model.STREAM_NAME,
-    with_keys: bool = False,
 ) -> DataFrame:
-    """One-pass envelope parse (the ingest hot path).
+    """One-pass envelope parse.
 
     A single ``from_json`` per line decodes the full envelope with the data
-    payload typed as a struct of the *current* table schema (the fast parse
-    shape — see ``model.envelope_schema`` for the measured map-vs-struct
-    pitfall). When ``with_keys`` is set, the observed payload field names for
-    the schema-evolution probe ride the same scan via ``json_object_keys`` on
-    the raw line — evolution detection costs no extra pass over the feed.
+    payload typed as a struct of the given schema (the fast parse shape —
+    see ``model.envelope_schema`` for the measured map-vs-struct pitfall).
     """
     data_schema = data_schema or model.base_data_schema()
     env_schema = model.envelope_schema(data_schema)
@@ -102,12 +98,6 @@ def parse_envelopes_once(
         m["record"]["data"]["seq"].cast("long").alias(model.META_SEQ),
         m["record"]["data"]["op"].alias(model.META_OP),
     ]
-    if with_keys:
-        out_cols.append(
-            F.json_object_keys(
-                F.get_json_object(F.col("value"), "$.record.data")
-            ).alias(model.META_KEYS)
-        )
     return _project_filter_once(raw, m, out_cols, stream)
 
 
@@ -196,17 +186,3 @@ def parse_envelopes_minimal(
         m["record"]["data"]["op"].alias(model.META_OP),
     ]
     return _project_filter_once(raw, m, out_cols, stream, keep_value=True)
-
-
-def observed_data_fields(raw: DataFrame, stream: str = model.STREAM_NAME) -> list[str]:
-    """Distinct data-field names present in a (micro-)batch — the probe behind
-    additive schema evolution (SURVEY.md §2.8 T4). Cheap: one distinct over
-    exploded key names, executed per batch on already-small batch data."""
-    env = raw.select(F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m"))
-    keys = (
-        env.filter((F.col("m.type") == "RECORD") & (F.col("m.record.stream") == stream))
-        .select(F.explode(F.json_object_keys(F.col("m.record.data"))).alias("k"))
-        .distinct()
-        .collect()
-    )
-    return sorted(r["k"] for r in keys)

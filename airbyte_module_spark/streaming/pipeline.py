@@ -20,14 +20,14 @@ import re
 import time
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbyte_module_spark import model
 from airbyte_module_spark.functions import content as cf
 from airbyte_module_spark.lake.table import LakeTable
-from airbyte_module_spark.plans.lineage import lineage_from_batch, lineage_from_grouped
+from airbyte_module_spark.plans.lineage import lineage_from_grouped
 from airbyte_module_spark.sources import feed as feed_src
 
 _INT_RE = re.compile(r"^-?\d+$")
@@ -39,15 +39,16 @@ class CdcPipeline:
         self,
         table: LakeTable,
         stream: str = model.STREAM_NAME,
-        use_pandas_udfs: bool = False,
-        auto_evolve: bool = True,
         collect_lineage: bool = True,
         post_merge_hook=None,
         maintenance_every: int | None = 16,
     ):
-        """``use_pandas_udfs`` switches normalize/sha to the Arrow-batched
-        pandas UDF implementations (both are vectorized; the expression form
-        stays fully inside whole-stage codegen and is the default).
+        """One ingest pipeline for keyed and keyless tables alike; new payload
+        fields always widen the table (additive schema evolution).
+
+        ``collect_lineage``: attach each batch's lineage record to its
+        snapshot. The lineage aggregate runs either way — it is also the
+        schema-evolution probe — so ``False`` only skips storing it.
 
         ``post_merge_hook``: optional ``callable(table, version)`` invoked
         after each successfully committed merge — the user-pluggable
@@ -67,8 +68,6 @@ class CdcPipeline:
         job instead — the cluster-scale deployment shape)."""
         self.table = table
         self.stream = stream
-        self.use_pandas_udfs = use_pandas_udfs
-        self.auto_evolve = auto_evolve
         self.collect_lineage = collect_lineage
         self.post_merge_hook = post_merge_hook
         self.maintenance_every = maintenance_every
@@ -109,48 +108,26 @@ class CdcPipeline:
         return T.StructType(fields)
 
     def transform(self, changes: DataFrame) -> DataFrame:
-        """Normalize content + sha256 fingerprint (north_star F6/F7).
-        Tombstones keep null content/sha."""
-        if self.use_pandas_udfs:
-            norm = cf.normalize_content(F.col("content"))
-            changes = changes.withColumn("content", norm)
-            sha = cf.sha256_content(F.col("content"))
-        else:
-            changes = changes.withColumn(
-                "content", cf.normalize_content_expr(F.col("content"))
-            )
-            sha = cf.sha256_expr(F.col("content"))
+        """Normalize content + sha256 fingerprint (north_star F6/F7), as
+        codegen expressions (no Python boundary). Tombstones keep null
+        content/sha."""
+        changes = changes.withColumn(
+            "content", cf.normalize_content_expr(F.col("content"))
+        )
         return changes.withColumn(
             model.META_SHA,
-            F.when(F.col("content").isNotNull(), sha),
+            F.when(F.col("content").isNotNull(), cf.sha256_expr(F.col("content"))),
         )
 
     # ------------------------------------------------------------- evolution
-    def _evolve_new_fields(self, raw: DataFrame, new: list[str]) -> None:
+    def _evolve_new_fields(self, grouped: DataFrame, new: list[str]) -> None:
         """Widen the table for fields that appeared mid-stream: infer a
         conservative type from one sample value per field (the reference
         plays the same 'number may be int or double, play it safe' game at
         ``/root/reference/abm/connector.py:182-185``). Runs only on the rare
-        batch that actually carries new fields, and samples ALL new fields
-        in ONE aggregation job (first non-null value per field rides a
-        single pass over the batch) instead of one limit/collect job per
-        field."""
-        env = raw.select(F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m"))
-        samples = env.agg(
-            *[
-                F.first(
-                    F.get_json_object(F.col("m.record.data"), f"$.{name}"),
-                    ignorenulls=True,
-                ).alias(name)
-                for name in new
-            ]
-        ).collect()[0]
-        self.table.evolve(self._infer_fields(samples, new))
-
-    def _evolve_new_fields_from_winners(self, grouped: DataFrame, new: list[str]) -> None:
-        """Same type inference, sampling the CACHED winner lines (one job
-        over 1-row-per-key data) — the keyed path never re-reads the feed
-        for evolution."""
+        batch whose winners carry new fields, and samples ALL of them in ONE
+        job over the CACHED winner lines — never a second pass over the
+        feed."""
         samples = grouped.agg(
             *[
                 F.first(
@@ -185,13 +162,15 @@ class CdcPipeline:
         offset_watermark: int | None = None,
     ) -> int | None:
         """Parse + dedup + transform + lineage + MERGE one batch of raw
-        envelope lines. Shared by batch replay and the streaming sink.
+        envelope lines. Shared by batch replay and the streaming sink, for
+        keyed and keyless tables alike.
 
         ``offset_watermark`` is forwarded to ``LakeTable.merge``; ONLY the
         streaming sink sets it (to its own ``batch_id``) because only
         Structured Streaming's checkpoint gives the can-never-redeliver
         guarantee the watermark asserts. Ad-hoc/batch replays leave it None
-        and keyless exactly-once records are then never pruned.
+        and keyless exactly-once records are then never pruned. Keyed
+        tables ignore it.
 
         Plan shape — minimal parse, full decode on WINNERS only:
 
@@ -202,31 +181,31 @@ class CdcPipeline:
            decoding every event pays ~20x the decode the table needs
            (measured: the r2 full-width parse with the probe column was
            2.2x this parse on the 10M-event replay).
-        2. ONE aggregation over (bucket, key): the LWW winner's raw line
-           (``max_by`` over the cursor — see lake.table.dedup_lww for why
-           an aggregate, not a window), event count, cursor/offset ranges.
-           The buffer carries (line, cursor) — map-side partial aggregation
-           collapses conflicts before the exchange. The tiny aggregate
-           (1 row per live key) is what gets cached — never the parsed
-           full-width feed (caching that measured 20s vs 4.7s at r1).
-        3. The schema-evolution probe (``json_object_keys``), lineage, the
-           full payload decode, normalize + sha256 all run on winners only.
-           A new field triggers evolution when a WINNING row carries it (a
-           field seen only on LWW losers is superseded data); since winner
-           selection is schema-independent, evolution widens the table and
-           re-projects the CACHED winners — no second pass over the feed.
-        4. winners take one cheap repartition onto the bucket key for the
+        2. The per-key frame ``grouped``: the winner's raw line ``_w``,
+           event count ``_n``, cursor/offset ranges ``_mne/_mxe/_mns/_mxs``.
+           A keyed table builds it with ONE aggregation over (bucket, key)
+           (LWW ``max_by`` over the cursor — see lake.table.dedup_lww for
+           why an aggregate, not a window); the buffer carries (line,
+           cursor), so map-side partial aggregation collapses conflicts
+           before the exchange. A keyless (append-only — the reference's
+           plain append sink, abm/server.py:182-187) table has no LWW:
+           every event is its own winner, one row with the same columns.
+           ``grouped`` is what gets cached — never the parsed full-width
+           feed (caching that measured 20s vs 4.7s at r1).
+        3. ONE driver job over ``grouped`` computes lineage and the
+           schema-evolution probe (``json_object_keys``). A new field
+           triggers evolution when a WINNING row carries it (a field seen
+           only on LWW losers is superseded data); since winner selection
+           is schema-independent, evolution widens the table and the full
+           decode below re-projects the CACHED winners — no second pass
+           over the feed.
+        4. Full payload decode, normalize + sha256 run on winners only,
+           which take one cheap repartition onto the bucket key for the
            per-bucket file write.
         """
         keys = self.table.key_columns
-        if not keys:
-            return self._apply_batch_keyless(
-                raw, batch_id, checkpoint_id, offset_watermark
-            )
-
         tm = self.timings = {}
         t_batch = time.time()
-        order_key = F.struct(F.col(model.META_EMITTED), F.col(model.META_SEQ))
         key_types = {
             f.name: f.dataType
             for f in self.table.schema().fields
@@ -236,71 +215,60 @@ class CdcPipeline:
             raw, keys, self.stream, key_types=key_types
         )
         minimal = self.table.with_bucket(minimal)
-        aggs = [
-            F.max_by(
-                F.struct(
-                    F.col("value"),
-                    F.col(model.META_EMITTED),
-                    F.col(model.META_SEQ),
-                    F.col(model.META_OP),  # lineage counts winner deletes
-                ),
-                order_key,
-            ).alias("_w"),
-            F.count("*").alias("_n"),
-            F.min(model.META_EMITTED).alias("_mne"),
-            F.max(model.META_EMITTED).alias("_mxe"),
-            F.min(model.META_SEQ).alias("_mns"),
-            F.max(model.META_SEQ).alias("_mxs"),
-        ]
-        grouped = minimal.groupBy(model.BUCKET_COLUMN, *keys).agg(*aggs)
-        # explicit spill level: the cache is 1 row per live key in the
-        # batch — metadata-sized at normal batch cadence, but a 10^9-key
+        winner = F.struct(
+            F.col("value"),
+            F.col(model.META_EMITTED),
+            F.col(model.META_SEQ),
+            F.col(model.META_OP),  # lineage counts winner deletes
+        )
+        if keys:
+            order_key = F.struct(F.col(model.META_EMITTED), F.col(model.META_SEQ))
+            grouped = minimal.groupBy(model.BUCKET_COLUMN, *keys).agg(
+                F.max_by(winner, order_key).alias("_w"),
+                F.count("*").alias("_n"),
+                F.min(model.META_EMITTED).alias("_mne"),
+                F.max(model.META_EMITTED).alias("_mxe"),
+                F.min(model.META_SEQ).alias("_mns"),
+                F.max(model.META_SEQ).alias("_mxs"),
+            )
+        else:
+            grouped = minimal.select(
+                F.col(model.BUCKET_COLUMN),
+                winner.alias("_w"),
+                F.lit(1).cast("long").alias("_n"),
+                F.col(model.META_EMITTED).alias("_mne"),
+                F.col(model.META_EMITTED).alias("_mxe"),
+                F.col(model.META_SEQ).alias("_mns"),
+                F.col(model.META_SEQ).alias("_mxs"),
+            )
+        # explicit spill level: the cache is 1 row per live key (per event
+        # on a keyless table) in the batch — metadata-sized at normal
+        # batch cadence on a keyed table, but a 10^9-key
         # backfill batch must spill to disk, not evict-and-recompute the
         # full parse+agg (MEMORY_AND_DISK is also Spark's default for
         # DataFrame.persist; pinned here so the spill behavior is a
         # documented decision, not an inherited default)
         grouped.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            lineage_obj = None
-            if self.auto_evolve:
-                t0 = time.time()
-                if self.collect_lineage:
-                    # probe + lineage in ONE driver job: the evolution
-                    # probe's distinct key names ride the lineage
-                    # aggregation over the cached per-key winners (see
-                    # lineage_from_grouped) — at tail cadence the fixed
-                    # per-job cost dominated both when run separately
-                    lineage_obj, observed = lineage_from_grouped(
-                        grouped, batch_id, checkpoint_id,
-                        with_observed_keys=True,
-                    )
-                else:
-                    observed = [
-                        r[0]
-                        for r in grouped.select(
-                            F.explode(
-                                F.json_object_keys(
-                                    F.get_json_object(
-                                        F.col("_w.value"), "$.record.data"
-                                    )
-                                )
-                            ).alias("k")
-                        ).distinct().collect()
-                    ]
-                tm["probe_collect"] = round(time.time() - t0, 3)
-                known = {f.name for f in self.data_schema().fields}
-                new = sorted(k for k in observed if k not in known)
-                if new:
-                    self._evolve_new_fields_from_winners(grouped, new)
+            t0 = time.time()
+            # probe + lineage in ONE driver job: the evolution probe's
+            # distinct key names ride the lineage aggregation over the
+            # cached per-key winners (see lineage_from_grouped) — at tail
+            # cadence the fixed per-job cost dominated both when run
+            # separately
+            lineage_obj, observed = lineage_from_grouped(
+                grouped, batch_id, checkpoint_id
+            )
+            tm["probe_collect"] = round(time.time() - t0, 3)
+            known = {f.name for f in self.data_schema().fields}
+            new = sorted(k for k in observed if k not in known)
+            if new:
+                self._evolve_new_fields(grouped, new)
 
             schema = self.data_schema()
             lineage = None
             if self.collect_lineage:
                 t0 = time.time()
-                if lineage_obj is None:
-                    lineage_obj = lineage_from_grouped(
-                        grouped, batch_id, checkpoint_id
-                    )
                 lineage = lineage_obj.to_dict()
                 tm["lineage_collect"] = round(time.time() - t0, 3)
 
@@ -346,6 +314,7 @@ class CdcPipeline:
                 lineage=lineage,
                 pre_deduped=True,
                 pre_partitioned=True,
+                offset_watermark=offset_watermark,
             )
             tm["merge"] = round(time.time() - t0, 3)
             tm["apply_batch_total"] = round(time.time() - t_batch, 3)
@@ -359,64 +328,6 @@ class CdcPipeline:
             return version
         finally:
             grouped.unpersist()
-
-    def _apply_batch_keyless(
-        self,
-        raw: DataFrame,
-        batch_id: int,
-        checkpoint_id: str,
-        offset_watermark: int | None = None,
-    ) -> int | None:
-        """Append-only path (no identity key — the reference's plain append
-        sink, abm/server.py:182-187): no dedup; probe + lineage aggregate the
-        parsed batch directly."""
-        schema = self.data_schema()
-        parsed = feed_src.parse_envelopes_once(
-            raw, schema, self.stream, with_keys=self.auto_evolve
-        )
-        parsed = self.table.with_bucket(parsed)
-        parsed.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            if self.auto_evolve:
-                observed = [
-                    r[0]
-                    for r in parsed.select(
-                        F.explode(model.META_KEYS).alias("k")
-                    ).distinct().collect()
-                ]
-                known = {f.name for f in schema.fields}
-                new = sorted(k for k in observed if k not in known)
-                parsed = parsed.drop(model.META_KEYS)
-                if new:
-                    self._evolve_new_fields(raw, new)
-                    parsed.unpersist()
-                    parsed = self.table.with_bucket(
-                        feed_src.parse_envelopes_once(
-                            raw, self.data_schema(), self.stream
-                        )
-                    )
-                    parsed.persist(StorageLevel.MEMORY_AND_DISK)
-            winners = parsed
-            if "content" in winners.columns:
-                winners = self.transform(winners)
-            lineage = None
-            if self.collect_lineage:
-                lineage = lineage_from_batch(
-                    parsed, winners, batch_id, checkpoint_id
-                ).to_dict()
-            version = self.table.merge(
-                winners,
-                batch_id=batch_id,
-                checkpoint_id=checkpoint_id,
-                lineage=lineage,
-                pre_deduped=True,
-                pre_partitioned=False,
-                offset_watermark=offset_watermark,
-            )
-            self._post_commit(version)
-            return version
-        finally:
-            parsed.unpersist()
 
     def replay_batch(self, feed_path: str, checkpoint_id: str = "batch-replay") -> int | None:
         """One-shot batch replay of an entire feed directory (backfill path).

@@ -56,3 +56,35 @@ def test_pre_evolution_files_null_fill(spark, tmp_path):
     assert dirs_before == dirs_after, "evolution must not rewrite data"
     assert table.read().filter(F.col("stars").isNotNull()).count() == 0
     assert "stars" in table.read().columns
+
+
+def test_keyless_replay_evolves_and_appends_every_event(spark, tmp_path):
+    """A keyless (append-only) table runs the same ingest as a keyed one:
+    fields appearing mid-stream widen the table with inferred types, every
+    non-tombstone event lands as its own row, and lineage records no LWW
+    conflicts (each event is its own winner)."""
+    feed = str(tmp_path / "feed")
+    events = generate_feed(
+        FeedSpec(seed=31, n_events=300, n_shards=6, evolution_after=80), feed
+    )
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8, key_columns=[])
+    CdcPipeline(table).replay_stream(
+        feed, str(tmp_path / "ck"), max_files_per_trigger=2
+    )
+
+    schema = {f.name: f.dataType.simpleString() for f in table.schema().fields}
+    assert schema.get("branch") == "string"
+    assert schema.get("size") == "bigint"
+
+    live = [e["record"]["data"] for e in events if e["record"]["data"]["op"] != "d"]
+    assert table.read().count() == len(live)
+    assert table.read().filter(F.col("branch").isNotNull()).count() == sum(
+        1 for d in live if d.get("branch") is not None
+    )
+
+    lineage = table.lineage()
+    assert lineage
+    for lin in lineage:
+        assert lin["n_conflicts"] == 0
+        assert lin["n_events"] == lin["n_winners"]
+        assert sum(p["events"] for p in lin["per_partition"]) == lin["n_events"]

@@ -538,3 +538,23 @@ def test_cow_cas_retry_budget_is_global(spark, tmp_path, monkeypatch):
     with pytest.raises(ConcurrentCommitError):
         t.merge(ev, batch_id=1, checkpoint_id="a")
     assert calls["publish"] == 1 + LakeTable.MERGE_CAS_RETRIES
+
+
+def test_writes_in_the_same_millisecond_both_commit(spark, tmp_path, monkeypatch):
+    """Two Engine.write calls under one clock tick must both land. Naming the
+    commit after the millisecond made the second write look like an
+    exactly-once redelivery: it returned None and its rows were lost."""
+    import types
+
+    import pyspark.sql.types as T
+
+    from airbyte_module_spark import Engine
+    from airbyte_module_spark import engine as engine_mod
+
+    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    eng = Engine(spark, str(tmp_path / "t"), schema=sch, key_columns=["k"], n_buckets=2)
+    monkeypatch.setattr(engine_mod, "time", types.SimpleNamespace(time=lambda: 1_700_000_000.0))
+    v1 = eng.write(spark.createDataFrame([("a", 1)], sch), mode="append")
+    v2 = eng.write(spark.createDataFrame([("b", 2)], sch), mode="append")
+    assert v1 is not None and v2 is not None
+    assert sorted(tuple(r) for r in eng.read().collect()) == [("a", 1), ("b", 2)]

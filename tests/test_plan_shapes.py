@@ -128,26 +128,18 @@ def test_ann_bruteforce_is_mapside_topk(spark):
     assert "BatchEvalPython" not in plan
 
 
-@pytest.mark.parametrize("use_pandas", [False, True])
-def test_pipeline_transform_vectorized(spark, use_pandas, tmp_path):
-    """The normalize+sha transform is either pure codegen (expression form,
-    zero Python) or ArrowEvalPython (pandas-UDF form) — never BatchEval."""
+def test_pipeline_transform_vectorized(spark, tmp_path):
+    """The normalize+sha transform is pure codegen (expression form, zero
+    Python)."""
     from airbyte_module_spark import Engine
 
-    eng = Engine(
-        spark, str(tmp_path / f"t{use_pandas}"), use_pandas_udfs=use_pandas
-    )
+    eng = Engine(spark, str(tmp_path / "t"))
     df = spark.createDataFrame(
         [("r", "p", "c", "py", "x\r\ny ")],
         ["repo", "path", "commit", "lang", "content"],
     )
     out = eng.pipeline.transform(df)
-    plan = physical(out)
-    assert "BatchEvalPython" not in plan
-    if use_pandas:
-        assert "ArrowEvalPython" in plan
-    else:
-        assert "Python" not in plan
+    assert "Python" not in physical(out)
 
 
 def test_minimal_parse_ingest_plan_single_parse_no_probe_rider(spark, tmp_path):
