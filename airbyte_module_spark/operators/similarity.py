@@ -25,23 +25,25 @@ Scale notes:
   skew is bounded because hyperplane cuts are near-balanced for centered
   data.
 - near-dup at corpus scale: :func:`near_dup_pairs_lsh` — candidates are
-  banded-bucket collisions (grouped pair expansion, candidate-linear), never
-  all-pairs. :func:`near_dup_pairs` (exact all-pairs) is the small-scale
-  verifier only.
+  banded-bucket collisions (in-bucket pair expansion, candidate-linear),
+  never all-pairs. :func:`near_dup_pairs` (exact all-pairs) is the
+  small-scale verifier only.
 - IVF (:func:`ann_ivf`) is the recall-strong ANN path: 64 k-means-trained
   centroids (deterministic driver-side Lloyd over a capped sample, exact
   integer math so the oracle reproduces them bit-for-bit), broadcast
   assignment, nprobe cells searched exactly.
 
-Execution discipline: per-ROW work (norms, bucket signatures, centroid
-similarity) is unrolled Catalyst expressions over literal indices —
-``aggregate(zip_with(...))`` higher-order lambdas are interpreted in Spark 4.
-Per-PAIR scoring goes through ONE Arrow-batched numpy kernel
-(:func:`_dot64_arrow`): a 64-term expression folded into a join condition
-(or fallen out of whole-stage codegen) evaluates interpreted per candidate —
-measured 4-13 µs/pair vs ~0.05 µs vectorized — and routing the dot through
-the Python eval node also stops Catalyst from pushing the cosine filter back
-into the join. Never BatchEvalPython (plan-pinned).
+Execution discipline: vector math runs in numpy inside Arrow-batched
+kernels (``mapInPandas`` / ``mapInArrow`` / pandas UDFs), never as Catalyst
+expressions — a 64-term product-sum folded into a join condition or fallen
+out of whole-stage codegen evaluates interpreted per row or per candidate
+(measured 4-13 µs/pair vs ~0.05 µs vectorized), and
+``aggregate(zip_with(...))`` higher-order lambdas are interpreted in
+Spark 4. Each kernel fuses every numpy step of its pass, so a pass
+crosses the Python boundary once; small sets (queries, centroids, the verifier matrix) ride a broadcast,
+while the near-dup scale path carries the quantized vectors through its
+``(band, bucket)`` exchange so it needs no broadcast at any corpus size.
+Never BatchEvalPython (plan-pinned).
 """
 
 from __future__ import annotations
@@ -52,8 +54,9 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -61,30 +64,6 @@ from pyspark.sql.functions import pandas_udf
 N_PLANES = 8
 PLANE_DIM = 64
 QUANT = 1000
-
-
-@pandas_udf(T.LongType())
-def _dot64_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched exact int64 dot product of two array<long> columns.
-
-    The pair-scoring hot path: Catalyst evaluates a 64-term product-sum
-    expression INTERPRETED once it is folded into a join condition or falls
-    out of whole-stage codegen (measured ~4-13 µs/pair either way at sf0.1);
-    numpy does the same math as one vectorized (batch, 64) int64
-    multiply-sum — bit-exact (int64 wraparound semantics match Spark/DuckDB
-    BIGINT) and ~100x faster per pair, paying only the Arrow column
-    transfer. This is ArrowEvalPython, never BatchEvalPython (pinned by
-    tests/test_plan_shapes.py)."""
-    if len(a) == 0:
-        return pd.Series([], dtype="int64")
-    A = np.stack(a.to_numpy())
-    B = np.stack(b.to_numpy())
-    return pd.Series((A * B).sum(axis=1))
-
-
-def cosine_from_ints(dot, na, nb) -> Column:
-    """cosine = dot / sqrt(na*nb) on exact ints — deterministic double."""
-    return dot.cast("double") / F.sqrt((na * nb).cast("double"))
 
 
 def plane_coeffs(n_planes: int = N_PLANES, dim: int = PLANE_DIM) -> list[list[int]]:
@@ -246,8 +225,8 @@ def _collect_quantized(
 def _srp_planes(
     n_bands: int, rows_per_band: int, stride: int | None = None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(planes matrix, bit weights) for SRP codes — shared by the kernel
-    and the driver-side form so both compute identical buckets."""
+    """(planes matrix, bit weights) for SRP codes — shared by every LSH
+    kernel so they all compute identical buckets."""
     if stride is None:
         stride = rows_per_band
     assert stride >= rows_per_band
@@ -264,45 +243,19 @@ def _srp_planes(
 def _srp_codes_np(
     Q: np.ndarray, n_bands: int, rows_per_band: int, stride: int | None = None
 ) -> np.ndarray:
-    """(n_rows, n_bands) SRP bucket codes — the kernel's exact int64 math
-    ((Q @ P.T) >= 0, bit-weighted sums) run driver-side on an
-    already-quantized matrix."""
+    """(n_rows, n_bands) SRP bucket codes of an already-quantized matrix:
+    bit r of band b = (qv · plane_{b·stride+r}) >= 0, exact int64 math.
+
+    ``stride`` is the plane-index distance between consecutive bands
+    (default ``rows_per_band`` — dense assignment). The banded near-dup
+    path passes a FIXED stride (:data:`NEARDUP_R_MAX`) larger than
+    ``rows_per_band`` so that growing the adaptive code width only APPENDS
+    planes to each band: the r-bit bucket is exactly the low-r-bit
+    truncation of the full-width code, which is what lets the SQL oracle
+    mirror adaptivity with one static code expression and a modulus."""
     planes, weights = _srp_planes(n_bands, rows_per_band, stride)
     bits = (Q @ planes.T) >= 0
     return (bits.reshape(len(Q), n_bands, rows_per_band) * weights).sum(axis=2)
-
-
-def _srp_codes_udf(n_bands: int, rows_per_band: int, stride: int | None = None):
-    """Arrow-batched SRP signature kernel: array<long> qv → array of
-    ``n_bands`` bucket codes, bit r of band b = (qv · plane_{b·stride+r}) >= 0.
-
-    ``stride`` is the plane-index distance between consecutive bands
-    (default ``rows_per_band`` — dense assignment, the historical layout
-    used by :func:`with_buckets` / :func:`lsh_buckets`). The banded
-    near-dup path passes a FIXED stride (:data:`NEARDUP_R_MAX`) larger
-    than ``rows_per_band`` so that growing the adaptive code width only
-    APPENDS planes to each band: the r-bit bucket is exactly the low-r-bit
-    truncation of the full-width code, which is what lets the SQL oracle
-    mirror adaptivity with one static code expression and a modulus.
-
-    One numpy int64 matmul against the (planes × 64) coefficient matrix
-    replaces an n_bands·rows_per_band·64-term Catalyst expression — the
-    expression form is exact too, but a 512-term tree costs seconds of
-    throttled codegen compile per plan in this sandbox and risks falling
-    back to interpreted eval; the kernel's math is identical
-    ((Q @ P.T) >= 0, exact int64), so oracles are unaffected."""
-    planes, weights = _srp_planes(n_bands, rows_per_band, stride)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def codes(qv: pd.Series) -> pd.Series:
-        if len(qv) == 0:
-            return pd.Series([], dtype=object)
-        Q = np.stack(qv.to_numpy())
-        bits = (Q @ planes.T) >= 0
-        out = (bits.reshape(len(Q), n_bands, rows_per_band) * weights).sum(axis=2)
-        return pd.Series(list(out))
-
-    return codes
 
 
 def lsh_buckets(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -534,6 +487,11 @@ CACHE_MISSES = {"count": 0, "centroids": 0}
 
 
 def _corpus_cache_key(df: DataFrame):
+    """(canonicalized plan, input files + local mtime/size), or ``None``
+    when the corpus is not backed by files. A cached corpus DataFrame (or a
+    fresh read of a file some live ``.cache()`` covers, which Spark swaps
+    for the cached relation) reports no input files, so it is never
+    memoized: it recomputes every time, which is correct but slower."""
     try:
         files = df.inputFiles()
         sem = df.semanticHash()
@@ -834,53 +792,6 @@ def ann_ivf(
     return _rank_topk(corpus.mapInPandas(score, schema=out_schema), k)
 
 
-#: Max corpus rows for which the quantized vector table rides a broadcast
-#: into the pair-scoring joins (~536 B/row -> ~110 MB at the cap). Below it
-#: the 10^6-row candidate-pair stream is never shuffled for the attach; above
-#: it the joins fall back to shuffle joins (the vector table no longer fits
-#: every executor). The caller knows the corpus count (cached) — Catalyst
-#: cannot, because the quantize kernel hides the size estimate.
-SCORE_BROADCAST_MAX_ROWS = 200_000
-
-
-def _score_pairs(
-    pairs: DataFrame, q: DataFrame, threshold: float,
-    broadcast_vectors: bool = False,
-) -> DataFrame:
-    """(vec_a, vec_b) id pairs → exact scored pairs >= threshold.
-
-    Shape: two hash-equi joins attach the quantized vectors by id, the dot
-    product runs as ONE Arrow-batched numpy kernel (:func:`_dot64_arrow`),
-    and cosine is a single codegen division of exact ints. Keeping the pair
-    GENERATION id-only and scoring after the joins matters twice at scale:
-    the pair stream stays narrow (16 bytes/pair, not 1 KB of arrays), and
-    the cosine filter cannot be folded back into a join condition (filters
-    do not cross the Python eval node), where Catalyst would evaluate the
-    64-term expression interpreted per candidate."""
-    qa = q.select(
-        F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"), F.col("norm2").alias("na")
-    )
-    qb = q.select(
-        F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"), F.col("norm2").alias("nb")
-    )
-    if broadcast_vectors:
-        qa, qb = F.broadcast(qa), F.broadcast(qb)
-    attached = pairs.join(qa, "vec_a").join(qb, "vec_b")
-    scored = attached.select(
-        "vec_a",
-        "vec_b",
-        _dot64_arrow(F.col("qa"), F.col("qb")).alias("dot_q"),
-        "na",
-        "nb",
-    )
-    return scored.select(
-        "vec_a",
-        "vec_b",
-        "dot_q",
-        cosine_from_ints(F.col("dot_q"), F.col("na"), F.col("nb")).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
-
-
 MAX_VERIFIER_ROWS = 20_000
 
 
@@ -893,9 +804,8 @@ def near_dup_pairs(
     """Embedding-cosine near-duplicate pairs (vec_a < vec_b, cosine >=
     threshold). Exact all-pairs form — O(N²) candidate pairs, the
     small-scale VERIFIER only; the shipped scale path is
-    :func:`near_dup_pairs_lsh` (bucket-equi candidates). Even here the
-    nested loop touches only the two id columns; vectors attach by id
-    afterwards (:func:`_score_pairs`).
+    :func:`near_dup_pairs_lsh` (bucket-collision candidates), and the tests
+    check that path against this one.
 
     ``max_rows`` guards the registry entry at arbitrary sf: above it the
     corpus is deterministically subsampled (``vec_id % ceil(n/max_rows) ==
@@ -908,10 +818,9 @@ def near_dup_pairs(
     is broadcast once (cap 20k × 64 int64 = 10 MB); each partition scores
     its OWN rows against the whole matrix with one numpy int64 matmul and
     emits only the above-threshold pairs. O(N²) multiply-adds but no O(N²)
-    shuffle, no per-pair rows in the plan, ~100x less Arrow traffic than
-    the id-crossjoin + per-pair kernel it replaces (measured 7.2s → see
-    BENCH). The math is bit-identical to the SQL oracle: exact int64 dot,
-    exact int64 norm product, one IEEE-double sqrt + divide."""
+    shuffle and no per-pair rows in the plan. The math is bit-identical to
+    the SQL oracle: exact int64 dot, exact int64 norm product, one
+    IEEE-double sqrt + divide."""
     import pandas as pd
 
     PAIR_SCHEMA = "vec_a long, vec_b long, dot_q long, cosine double"
@@ -1011,7 +920,6 @@ def near_dup_pairs(
 
 
 N_NEARDUP_BANDS = 4
-NEARDUP_ROWS_PER_BAND = 4
 #: Fixed plane stride between bands: band b owns planes
 #: [b*NEARDUP_R_MAX, b*NEARDUP_R_MAX + rows_per_band). Because the stride —
 #: not the adaptive width — fixes plane assignment, an r-bit bucket is the
@@ -1062,17 +970,59 @@ def banded_buckets(
     p = 1-(1-(1-θ/π)^4)^4 ≈ 0.54 at cosine 0.45 and ≈ 0.96 at cosine 0.9,
     while a random pair (cosine 0) still collides in only ~4/16 of buckets'
     worth of pairs (1-(1-1/16)^4 ≈ 0.23 of a 2^4-bucket table per band).
-    Same banding trade as MinHash-LSH (operators/dedup.py)."""
+    Same banding trade as MinHash-LSH (operators/dedup.py).
+
+    Execution: ONE ``mapInArrow`` kernel quantizes each batch
+    (:func:`_quantize_np` — the same loud length and NaN/inf checks as
+    :func:`with_quantized`), computes norms and SRP codes
+    (:func:`_srp_codes_np`), and drops null and zero-norm vectors exactly
+    as :func:`with_quantized` does. ``qv`` leaves the kernel as a flat
+    Arrow list buffer, never as per-row Python lists."""
     if rows_per_band is None:
         rows_per_band = adaptive_rows_per_band(corpus_count(emb))
-    q = with_quantized(emb, vec_col)
-    codes = _srp_codes_udf(n_bands, rows_per_band, stride=NEARDUP_R_MAX)
-    return q.select(
-        "vec_id",
-        "qv",
-        "norm2",
-        F.posexplode(codes(F.col("qv"))).alias("band", "bucket"),
+    bands = np.arange(n_bands, dtype=np.int32)
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            Q = _quantize_np(b.column(1).to_numpy(zero_copy_only=False))
+            norm2 = (Q * Q).sum(axis=1)
+            keep = norm2 > 0
+            ids = np.asarray(b.column(0), dtype=np.int64)[keep]
+            Q, norm2 = Q[keep], norm2[keep]
+            codes = _srp_codes_np(Q, n_bands, rows_per_band, stride=NEARDUP_R_MAX)
+            n_out = len(ids) * n_bands
+            qv = pa.ListArray.from_arrays(
+                pa.array(np.arange(n_out + 1, dtype=np.int32) * PLANE_DIM),
+                pa.array(np.repeat(Q, n_bands, axis=0).ravel()),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(ids, n_bands)),
+                    qv,
+                    pa.array(np.repeat(norm2, n_bands)),
+                    pa.array(np.tile(bands, len(ids))),
+                    pa.array(codes.ravel()),
+                ],
+                names=["vec_id", "qv", "norm2", "band", "bucket"],
+            )
+
+    return (
+        emb.filter(F.col(vec_col).isNotNull())
+        .select("vec_id", vec_col)
+        .mapInArrow(
+            kernel, "vec_id long, qv array<long>, norm2 long, band int, bucket long"
+        )
     )
+
+
+#: Candidate pairs scored per numpy step in :func:`near_dup_pairs_lsh`.
+#: Gathering both vectors of every candidate pair of a partition at once
+#: costs ~1.5 KB per pair (two 64-long gathers and their product) — millions
+#: of pairs per partition at 250k vectors, enough to kill the Python
+#: worker; a chunk bounds the temporary arrays to ~100 MB.
+PAIR_CHUNK = 65_536
 
 
 def near_dup_pairs_lsh(
@@ -1082,143 +1032,80 @@ def near_dup_pairs_lsh(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at corpus scale: candidate
-    pairs come from banded-LSH bucket collisions (grouped in-bucket pair
-    expansion — the same candidate-linear shape as MinHash-LSH dedup, never
-    all-pairs, no nested-loop join), deduplicated across bands by the pair
-    groupBy, then scored exactly (:func:`_score_pairs` — numpy Arrow kernel
-    + codegen cosine). Precision is 1 (every emitted score is bit-identical
-    to the all-pairs verifier); recall per :func:`banded_buckets`.
+    pairs come from banded-LSH bucket collisions (:func:`banded_buckets`),
+    never all-pairs. Precision is 1 (every emitted score is bit-identical
+    to the all-pairs verifier :func:`near_dup_pairs`); recall per
+    :func:`banded_buckets`.
 
     ``max_bucket_size`` (default: operators.dedup.MAX_GROUP_SIZE) caps a
     degenerate bucket — a mass-duplicated embedding — exactly like the
-    dedup caps; audit drops with ``oversize_groups``."""
-    from airbyte_module_spark.operators.dedup import MAX_GROUP_SIZE, _expand_pairs
+    dedup caps; audit drops with ``oversize_groups``.
 
-    if max_bucket_size is None:
-        max_bucket_size = MAX_GROUP_SIZE
-    spark = emb.sparkSession
-    n_corpus = corpus_count(emb)  # memoized per corpus
-    if n_corpus <= SCORE_BROADCAST_MAX_ROWS:
-        # Small-corpus fast path: ONE collect builds the quantized matrix
-        # AND the banded SRP codes driver-side (identical numpy math to the
-        # kernel — _srp_codes_np); the (doc_id, band, bucket) rows re-enter
-        # the plan through an Arrow createDataFrame, group into buckets,
-        # and candidates are scored inside one Arrow kernel over the bucket
-        # tails against the broadcast matrix. The r5 shape re-ran the
-        # quantize+codes kernel chain per consuming job (toPandas + final
-        # collect) with filter-pushdown cloning on top — 18 executed
-        # ArrowEvalPython corpus passes for one query (guide §4.4); now the
-        # corpus crosses the Python boundary once in the driver collect and
-        # once in the scoring kernel, and the only per-pair bytes that move
-        # are the two ids inside tail arrays. Duplicate cross-band
-        # candidates are scored (identical rows — exact math) and collapsed
-        # by one distinct over the tiny thresholded output, as before.
-        ids, M, norms = _collect_quantized(emb, vec_col)
-        if len(ids) == 0:
-            return spark.createDataFrame(
-                [], "vec_a long, vec_b long, dot_q long, cosine double"
-            )
-        r = adaptive_rows_per_band(n_corpus)
-        codes = _srp_codes_np(M, N_NEARDUP_BANDS, r, stride=NEARDUP_R_MAX)
-        bdf = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": np.repeat(ids, N_NEARDUP_BANDS),
-                    "band": np.tile(
-                        np.arange(N_NEARDUP_BANDS, dtype=np.int64), len(ids)
-                    ),
-                    "bucket": codes.reshape(-1),
-                }
-            )
-        )
-        bc = spark.sparkContext.broadcast((ids, M, norms))
-        thr = float(threshold)
-        cap = max_bucket_size
+    Plan: ``banded_buckets → repartition(band, bucket) → mapInArrow(score)
+    → distinct``, the same at every corpus size. The exchange carries each
+    row's quantized vector, so scoring needs no broadcast and no join. The
+    hash partitioning puts every (band, bucket) group whole inside one
+    task, and ``score`` concatenates the partition before grouping, so a
+    group split across Arrow batches keeps all of its pairs. Within a
+    group, members are ordered by vec_id and every a < b pair of a bucket
+    with 2 <= size <= cap is scored once per band, in :data:`PAIR_CHUNK`
+    steps, with exact int64 dots and one IEEE-double sqrt + divide.
+    Cross-band duplicates carry bit-identical scores, and the final
+    distinct over the thresholded pairs collapses them."""
+    from airbyte_module_spark.operators.dedup import MAX_GROUP_SIZE
 
-        def score(batches):
-            # Group, cap, pair-expand AND score inside the kernel: the
-            # repartition below co-locates each (band, bucket) group in one
-            # partition, so an in-task lexsort reproduces the former
-            # groupBy(collect_list) + posexplode/slice pair expansion
-            # exactly — ascending doc ids per bucket, every a < b pair of a
-            # surviving (1 < size <= cap) bucket once per band. Moving
-            # those stages out of Catalyst is a COMPILE-cost fix, not a
-            # row-cost fix: the ObjectHashAggregate + two Generate stages
-            # were several whole-stage-codegen units that this sandbox's
-            # throttled JIT recompiles at seconds apiece whenever a
-            # neighboring heavy query evicts them (measured: the same
-            # query steady at ~2s ran 7.7s inside the full bench, every
-            # trial paying compilation; the kernel plan is one exchange +
-            # MapInPandas).
-            b_ids, B, b_norms = bc.value
-            for batch in batches:
-                if len(batch) == 0:
-                    continue
-                doc = batch["doc_id"].to_numpy().astype(np.int64)
-                band = batch["band"].to_numpy().astype(np.int64)
-                buck = batch["bucket"].to_numpy().astype(np.int64)
-                order = np.lexsort((doc, buck, band))
-                doc, band, buck = doc[order], band[order], buck[order]
-                new = np.empty(len(doc), dtype=bool)
-                new[0] = True
-                np.logical_or(
-                    band[1:] != band[:-1], buck[1:] != buck[:-1], out=new[1:]
+    cap = MAX_GROUP_SIZE if max_bucket_size is None else max_bucket_size
+    thr = float(threshold)
+
+    def score(batches):
+        parts = [b for b in batches if b.num_rows]
+        if not parts:
+            return
+        t = pa.Table.from_batches(parts)
+        ids = t.column("vec_id").to_numpy()
+        n2 = t.column("norm2").to_numpy()
+        band = t.column("band").to_numpy()
+        buck = t.column("bucket").to_numpy()
+        Q = t.column("qv").combine_chunks().flatten().to_numpy()
+        Q = Q.reshape(-1, PLANE_DIM)
+        order = np.lexsort((ids, buck, band))
+        sb, sk = band[order], buck[order]
+        new = np.empty(len(order), dtype=bool)
+        new[0] = True
+        np.logical_or(sb[1:] != sb[:-1], sk[1:] != sk[:-1], out=new[1:])
+        starts = np.flatnonzero(new)
+        sizes = np.diff(np.append(starts, len(order)))
+        live = (sizes >= 2) & (sizes <= cap)
+        a_parts, b_parts = [], []
+        for s, size in zip(starts[live], sizes[live]):
+            ii, jj = np.triu_indices(size, k=1)
+            a_parts.append(order[s + ii])
+            b_parts.append(order[s + jj])
+        if not a_parts:
+            return
+        ai = np.concatenate(a_parts)
+        bi = np.concatenate(b_parts)
+        for lo in range(0, len(ai), PAIR_CHUNK):
+            a = ai[lo : lo + PAIR_CHUNK]
+            b = bi[lo : lo + PAIR_CHUNK]
+            D = (Q[a] * Q[b]).sum(axis=1)
+            cos = D / np.sqrt((n2[a] * n2[b]).astype(np.float64))
+            keep = cos >= thr
+            if keep.any():
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(ids[a[keep]]),
+                        pa.array(ids[b[keep]]),
+                        pa.array(D[keep]),
+                        pa.array(cos[keep]),
+                    ],
+                    names=["vec_a", "vec_b", "dot_q", "cosine"],
                 )
-                starts = np.flatnonzero(new)
-                sizes = np.diff(np.append(starts, len(doc)))
-                a_parts, b_parts = [], []
-                for s, size in zip(starts, sizes):
-                    if size < 2 or (cap is not None and size > cap):
-                        continue
-                    members = doc[s : s + size]
-                    ii, jj = np.triu_indices(size, k=1)
-                    a_parts.append(members[ii])
-                    b_parts.append(members[jj])
-                if not a_parts:
-                    continue
-                a = np.concatenate(a_parts)
-                b = np.concatenate(b_parts)
-                ai = np.searchsorted(b_ids, a)
-                bi = np.searchsorted(b_ids, b)
-                # row-wise exact int64 dot — identical math to _dot64_arrow
-                D = (B[ai] * B[bi]).sum(axis=1)
-                cos = D / np.sqrt(
-                    (b_norms[ai] * b_norms[bi]).astype(np.float64)
-                )
-                keep = cos >= thr
-                if keep.any():
-                    yield pd.DataFrame(
-                        {
-                            "vec_a": a[keep],
-                            "vec_b": b[keep],
-                            "dot_q": D[keep],
-                            "cosine": cos[keep],
-                        }
-                    )
 
-        # hash-partition by (band, bucket) so each bucket group is whole
-        # within one task; what moves is the 24-byte bucket rows, and the
-        # kernel stage runs at cluster parallelism
-        par = emb.sparkSession.sparkContext.defaultParallelism
-        scored = bdf.repartition(par, "band", "bucket").mapInPandas(
-            score, schema="vec_a long, vec_b long, dot_q long, cosine double"
-        )
-        # cross-band duplicates carry bit-identical scores; one distinct
-        # over the post-threshold stream (tiny) replaces the r5 pre-score
-        # pair dedup exchange over every candidate
-        return scored.distinct()
-    # Big-corpus path: the quantized vector table no longer fits every
-    # executor — candidates come from the distributed banded-bucket groupBy
-    # and vectors attach by id through shuffle joins (r5 shape, unchanged).
-    qb = banded_buckets(emb, vec_col).select(
-        F.col("vec_id").alias("doc_id"), "band", "bucket"
+    par = emb.sparkSession.sparkContext.defaultParallelism
+    return (
+        banded_buckets(emb, vec_col)
+        .repartition(par, "band", "bucket")
+        .mapInArrow(score, "vec_a long, vec_b long, dot_q long, cosine double")
+        .distinct()
     )
-    grouped = (
-        qb.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") > 1)
-    )
-    pairs = _expand_pairs(grouped, max_bucket_size).select(
-        F.col("doc_a").alias("vec_a"), F.col("doc_b").alias("vec_b")
-    )
-    return _score_pairs(pairs, with_quantized(emb, vec_col), threshold)

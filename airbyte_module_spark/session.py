@@ -8,9 +8,15 @@ protocol" for the two-parallelism-level evidence run.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+#: Directory holding the ``airbyte_module_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -91,13 +97,21 @@ def get_spark(
     # "true", ...}' overlays arbitrary conf without code changes — used by the
     # scaling harness for config experiments (e.g. off-heap at high thread
     # counts) and by cluster launch wrappers
+    conf: dict[str, str] = {}
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     if env_conf:
         import json as _json
 
-        for k, v in _json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
-    for k, v in (extra_conf or {}).items():
+        conf.update((k, str(v)) for k, v in _json.loads(env_conf).items())
+    conf.update(extra_conf or {})
+    if master.startswith("local"):
+        # Kernels that call module-level helpers are pickled by reference,
+        # so the Python workers must import this package too. A driver
+        # script started outside the package root finds it through its own
+        # sys.path, which local-mode workers do not inherit.
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -117,13 +131,13 @@ def _warm_python_workers(spark: SparkSession) -> None:
     reusable worker pool and warms the imports; nothing from any data
     directory is touched, so there is nothing to cache or replay.
     Disable with SPARK_GRAFT_NO_PY_WARMUP=1 (e.g. Python-free smoke jobs).
+    A failed warmup is logged, not raised, and leaves the session unmarked.
     """
     if os.environ.get("SPARK_GRAFT_NO_PY_WARMUP"):
         return
     sc = spark.sparkContext
     if sc is None or getattr(sc, "_ams_py_warm", False):
         return
-    sc._ams_py_warm = True
 
     def _w(batches):
         import hashlib  # noqa: F401
@@ -133,4 +147,12 @@ def _warm_python_workers(spark: SparkSession) -> None:
             yield b
 
     n = max(sc.defaultParallelism, 1)
-    spark.range(n, numPartitions=n).mapInPandas(_w, "id long").collect()
+    try:
+        spark.range(n, numPartitions=n).mapInPandas(_w, "id long").collect()
+    except Exception:
+        # the session is usable without warm workers: the first kernel
+        # query pays the worker start-up instead, and the next get_spark
+        # call tries again
+        log.warning("Python worker warmup failed", exc_info=True)
+        return
+    sc._ams_py_warm = True

@@ -16,14 +16,21 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
+# Both fixtures unpersist on teardown: while a cached relation lives, a fresh
+# spark.read.parquet of the same file is replaced by it (inputFiles() == []),
+# which silently turns the corpus memo off for every later test module.
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 # ------------------------------------------------------------- fingerprint
@@ -193,31 +200,41 @@ def test_default_caps_do_not_change_small_corpus_results(docs):
 
 
 # -------------------------------------------------------------- similarity
-def test_near_dup_lsh_matches_allpairs_within_buckets(emb):
+@pytest.mark.parametrize("max_records", [None, 50], ids=["default", "50"])
+def test_near_dup_lsh_matches_allpairs_within_buckets(spark, emb, max_records):
     """The banded-LSH near-dup operator must return EXACTLY the all-pairs
     result restricted to pairs colliding in >= 1 band, with identical scores
-    (precision 1; recall = band-collision probability)."""
+    (precision 1; recall = band-collision probability). With small Arrow
+    batches a bucket spans several batches of one partition; it must still
+    yield all of its pairs."""
     from airbyte_module_spark.operators.similarity import (
         banded_buckets,
         near_dup_pairs,
         near_dup_pairs_lsh,
     )
 
-    bands: dict[int, set] = {}
-    for r in banded_buckets(emb).collect():
-        bands.setdefault(r["vec_id"], set()).add((r["band"], r["bucket"]))
-    allp = {
-        (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
-        for r in near_dup_pairs(emb, threshold=0.45).collect()
-    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if max_records is not None:
+        spark.conf.set(key, str(max_records))
+    try:
+        bands: dict[int, set] = {}
+        for r in banded_buckets(emb).collect():
+            bands.setdefault(r["vec_id"], set()).add((r["band"], r["bucket"]))
+        allp = {
+            (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
+            for r in near_dup_pairs(emb, threshold=0.45).collect()
+        }
+        got = {
+            (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
+            for r in near_dup_pairs_lsh(emb, threshold=0.45).collect()
+        }
+    finally:
+        spark.conf.set(key, old)
     expected = {
         pair: score
         for pair, score in allp.items()
         if bands[pair[0]] & bands[pair[1]]
-    }
-    got = {
-        (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
-        for r in near_dup_pairs_lsh(emb, threshold=0.45).collect()
     }
     assert got == expected
     assert got, "fixture should contain banded-LSH near-dup collisions"
@@ -372,13 +389,18 @@ def test_short_embedding_raises_not_silently_drops(spark):
     """ADVICE r2: int_dot's literal indexing returns null past the end of a
     short array — with_quantized must fail loudly on a dimension mismatch
     instead of letting rows vanish through cosine filters."""
-    from airbyte_module_spark.operators.similarity import with_quantized
+    from airbyte_module_spark.operators.similarity import (
+        near_dup_pairs_lsh,
+        with_quantized,
+    )
 
     bad = spark.createDataFrame(
         [(0, [0.1] * 64), (1, [0.2] * 63)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception, match="embedding length != 64"):
         with_quantized(bad).collect()
+    with pytest.raises(Exception, match="embedding length != 64"):
+        near_dup_pairs_lsh(bad).collect()
 
 
 def test_null_embedding_drops_not_crashes(spark):
@@ -453,6 +475,7 @@ def test_zero_norm_embedding_excluded_everywhere(spark):
     from airbyte_module_spark.operators.similarity import (
         ann_brute_force,
         ann_lsh,
+        near_dup_pairs_lsh,
         with_quantized,
     )
 
@@ -468,6 +491,8 @@ def test_zero_norm_embedding_excluded_everywhere(spark):
     lsh = ann_lsh(mixed, n_queries=2, k=3).collect()
     assert {r.query_id for r in lsh} <= {0}
     assert all(r.neighbor_id != 1 for r in lsh)
+    pairs = near_dup_pairs_lsh(mixed, threshold=0.0).collect()
+    assert {(r.vec_a, r.vec_b) for r in pairs} == {(0, 2), (0, 3), (2, 3)}
 
 
 def test_nan_element_raises_not_silent_garbage(spark):
@@ -479,6 +504,7 @@ def test_nan_element_raises_not_silent_garbage(spark):
 
     from airbyte_module_spark.operators.similarity import (
         _quantize_np,
+        near_dup_pairs_lsh,
         with_quantized,
     )
 
@@ -490,6 +516,13 @@ def test_nan_element_raises_not_silent_garbage(spark):
     )
     with pytest.raises(Exception, match="NaN"):
         with_quantized(bad).collect()
+    # a null ELEMENT (not a null vector) is corrupt input for the LSH path too
+    partial = spark.createDataFrame(
+        [(0, [0.1] * 64), (1, [None] + [0.2] * 63)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="NaN"):
+        near_dup_pairs_lsh(partial).collect()
 
 
 def test_adaptive_lsh_width_staircase():

@@ -28,12 +28,40 @@ def test_warmup_env_gate(spark, monkeypatch):
         sc._ams_py_warm = True
 
 
-def test_warmup_runs_no_job_when_already_warm(spark):
+def test_warmup_runs_no_job_when_already_warm(spark, monkeypatch):
     """A warm session must not schedule another warmup job (the flag is the
     only thing consulted)."""
+    monkeypatch.delenv("SPARK_GRAFT_NO_PY_WARMUP", raising=False)
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    _warm_python_workers(spark)
-    after = tracker.getJobIdsForGroup(None)
-    assert len(after) == len(before)
+    assert sc._ams_py_warm is True
+    group = "test-warmup-already-warm"
+    sc.setJobGroup(group, "warm session: warmup must run no job")
+    try:
+        _warm_python_workers(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_warmup_failure_is_logged_not_raised(spark, monkeypatch, caplog):
+    """A failing warmup job must leave a usable session: no exception
+    escapes, a warning is logged, and the session stays unmarked so a
+    later get_spark retries."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_PY_WARMUP", raising=False)
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "_ams_py_warm", False, raising=False)
+    real_range = spark.range
+
+    def failing_range(n, numPartitions=None):
+        return real_range(n, numPartitions=numPartitions).select(
+            F.raise_error(F.lit("warmup boom")).cast("long").alias("id")
+        )
+
+    monkeypatch.setattr(spark, "range", failing_range)
+    with caplog.at_level("WARNING", logger="airbyte_module_spark.session"):
+        _warm_python_workers(spark)
+    assert sc._ams_py_warm is False
+    assert "warmup failed" in caplog.text
