@@ -8,8 +8,9 @@ Re-expresses the query/data-processing capabilities of fybrik/airbyte-module
   per-row Python.
 - Last-writer-wins dedup over the ``emitted_at`` cursor (window/row_number).
 - MERGE into a snapshot-versioned lake table of source-code repositories
-  (Iceberg-style copy-on-write / merge-on-read semantics implemented over
-  parquet with public DataFrame APIs — no proprietary formats).
+  (Iceberg-style merge-on-read semantics with background compaction,
+  implemented over parquet with public DataFrame APIs — no proprietary
+  formats).
 - Structured Streaming tail with checkpointed, idempotent ``foreachBatch``
   upserts (exactly-once effective semantics).
 - Vectorized pandas/Arrow UDFs for content normalization and sha256

@@ -41,7 +41,6 @@ class Engine:
         schema: T.StructType | None = None,
         key_columns: list[str] | None = None,
         n_buckets: int = 32,
-        table_mode: str = "mor",
         **pipeline_opts,
     ):
         """``schema``/``key_columns`` configure a fresh table (any asset shape,
@@ -59,7 +58,6 @@ class Engine:
                 schema=full_schema,
                 key_columns=key_columns,
                 n_buckets=n_buckets,
-                mode=table_mode,
             )
         self.pipeline = CdcPipeline(self.table, **pipeline_opts)
 

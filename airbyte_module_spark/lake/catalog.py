@@ -7,8 +7,8 @@ the expected parent version. This module isolates them behind one small
 interface so the rest of the table format is storage-agnostic:
 
 - :class:`FileCatalog` (shipped): POSIX implementation — ``os.replace`` gives
-  the atomic pointer swap; the parent check gives optimistic concurrency on a
-  shared filesystem.
+  the atomic pointer swap; the parent check, held under a process-wide lock,
+  gives optimistic concurrency among the threads of one driver.
 - an object-store deployment implements the same four methods with
   conditional writes (S3 ``If-None-Match`` PUT / GCS generation
   preconditions / DynamoDB or a catalog service doing the CAS) — exactly the
@@ -21,6 +21,11 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+
+# One lock for every FileCatalog in the process: two handles on the same
+# table share the pointer and the snapshot files, not a catalog object.
+_PUBLISH_LOCK = threading.Lock()
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -70,16 +75,23 @@ class FileCatalog:
         """Persist the immutable snapshot file, then swap the pointer
         atomically iff the current version still equals ``expected_parent``
         (optimistic concurrency; a production catalog does this CAS
-        server-side)."""
-        if expected_parent is not None and self.read_pointer() != expected_parent:
-            raise ConcurrentCommitError(
-                f"snapshot moved past v{expected_parent}; retry the merge"
-            )
-        snap_file = os.path.join(self.meta_dir, f"snap-{snap['version']}.json")
-        with open(snap_file + ".tmp", "w") as f:
-            json.dump(snap, f)
-        os.replace(snap_file + ".tmp", snap_file)
-        ptr = os.path.join(self.meta_dir, self.POINTER)
-        with open(ptr + ".tmp", "w") as f:
-            f.write(str(snap["version"]))
-        os.replace(ptr + ".tmp", ptr)
+        server-side).
+
+        The parent check, the snapshot write and the pointer swap run under
+        one process-wide lock, so threads of one driver cannot both pass
+        the check for the same parent. The lock does not reach other
+        processes: writers in separate processes need the object-store
+        catalog's own CAS (a conditional PUT on the pointer)."""
+        with _PUBLISH_LOCK:
+            if expected_parent is not None and self.read_pointer() != expected_parent:
+                raise ConcurrentCommitError(
+                    f"snapshot moved past v{expected_parent}; retry the commit"
+                )
+            snap_file = os.path.join(self.meta_dir, f"snap-{snap['version']}.json")
+            with open(snap_file + ".tmp", "w") as f:
+                json.dump(snap, f)
+            os.replace(snap_file + ".tmp", snap_file)
+            ptr = os.path.join(self.meta_dir, self.POINTER)
+            with open(ptr + ".tmp", "w") as f:
+                f.write(str(snap["version"]))
+            os.replace(ptr + ".tmp", ptr)

@@ -18,13 +18,17 @@ v2 table and everything above it is unchanged):
   ``bucket(N, repo, path)``. A merge touches only the buckets its batch
   hits; readers prune to requested buckets (file-list pruning at the metadata
   layer + parquet min/max stats on the stored ``_ab_bucket`` column).
-- **Copy-on-write and merge-on-read**: ``mode="cow"`` rewrites affected
-  buckets per merge (read-optimized); ``mode="mor"`` appends LWW-deduped
-  delta files per merge (write-optimized — the 10^10-event ingest path) and
-  resolves winners at read time with a window, exactly like Iceberg MoR with
-  equality deletes; ``maintenance()``/``compact()`` fold deltas into bases —
-  ONLY when explicitly invoked (background-job shape), never inline in
-  ``merge()``, so ingest batches are never stalled by compaction.
+- **Merge-on-read**: every merge appends LWW-deduped delta files
+  (write-optimized — the 10^10-event ingest path) and winners resolve at
+  read time, exactly like Iceberg MoR with equality deletes;
+  ``maintenance()``/``compact()`` fold deltas into bases — ONLY when
+  explicitly invoked (background-job shape), never inline in ``merge()``,
+  so ingest batches are never stalled by compaction.
+- **One commit loop**: ``merge``, ``compact`` and ``evolve`` publish through
+  ``_commit(edit)`` — a CAS on the head version that, when another writer
+  wins, re-applies the pending edit to the new head (Iceberg's retry
+  model). Staged data files never depend on the head, so a rebase is
+  metadata-only.
 - **Deletes are tombstones** (rows with ``_ab_op='d'`` kept internally,
   filtered from user reads). This makes the final state a pure function of
   the event set — independent of batch boundaries, arrival order, and
@@ -62,7 +66,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,7 +128,6 @@ class LakeTable:
         path: str,
         schema: T.StructType | None = None,
         n_buckets: int = 32,
-        mode: str = "mor",
         compact_after_deltas: int = 8,
         key_columns: list[str] | None = None,
         snapshot_retention: int = 64,
@@ -146,7 +151,6 @@ class LakeTable:
             "lineage": [],
             "properties": {
                 "n_buckets": n_buckets,
-                "mode": mode,
                 "compact_after_deltas": compact_after_deltas,
                 "key_columns": key_columns if key_columns is not None else list(model.KEY_COLUMNS),
                 "snapshot_retention": snapshot_retention,
@@ -190,6 +194,46 @@ class LakeTable:
         catalog (see lake/catalog.py for the object-store contract)."""
         self.catalog.publish(snap, expected_parent)
 
+    # bounded optimistic-concurrency retries when another writer's commit
+    # races ours between snapshot read and pointer CAS
+    MERGE_CAS_RETRIES = 3
+
+    def _commit(
+        self, edit: Callable[[dict], dict | None], staged: Iterable[dict] = ()
+    ) -> int | None:
+        """The one commit loop behind ``merge``, ``compact`` and ``evolve``.
+
+        Reads the head, asks ``edit(head)`` for the snapshot fields it
+        changes (``None`` = commit nothing) and publishes them as version
+        ``head + 1`` with a CAS on ``head["version"]``. When another writer
+        wins the CAS, the head is re-read and ``edit`` re-applied — at most
+        ``1 + MERGE_CAS_RETRIES`` publishes, then the last
+        ``ConcurrentCommitError`` propagates. Staged data files never depend
+        on the head, so every rebase is metadata-only.
+
+        ``staged`` are the entries the edit adds; their commit dir is
+        removed when no snapshot will reference it (the edit declined or
+        the retries ran out). Returns the new version, or None if ``edit``
+        declined."""
+        for _ in range(1 + self.MERGE_CAS_RETRIES):
+            head = self.current_snapshot()
+            change = edit(head)
+            if change is None:
+                break
+            try:
+                self._write_snapshot(
+                    {**head, **change, "version": head["version"] + 1, "parent": head["version"]},
+                    expected_parent=head["version"],
+                )
+                return head["version"] + 1
+            except ConcurrentCommitError as e:
+                conflict = e
+        for d in {os.path.dirname(entry["dir"]) for entry in staged}:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        if change is not None:
+            raise conflict  # every attempt lost the CAS
+        return None
+
     # ------------------------------------------------------------------ read
     def _read_entries(
         self, entries: list[dict], schema: T.StructType, buckets: list[int] | None
@@ -218,11 +262,10 @@ class LakeTable:
         """All live rows incl. tombstones + metadata cols, LWW-resolved."""
         snap = self.snapshot(version) if version is not None else self.current_snapshot()
         schema = self.schema(snap)
-        mode = snap["properties"]["mode"]
         df = self._read_entries(snap["entries"], schema, buckets)
         has_delta = any(e["kind"] == "delta" for e in snap["entries"])
         keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
-        if mode == "mor" and has_delta and keys:
+        if has_delta and keys:
             df = dedup_lww(df, keys)
         return df
 
@@ -327,10 +370,6 @@ class LakeTable:
         return df.withColumn(model.BUCKET_COLUMN, bucket_expr(self.n_buckets, keys))
 
     # ----------------------------------------------------------------- merge
-    # bounded optimistic-concurrency retries when another writer's commit
-    # races ours between snapshot read and pointer CAS
-    MERGE_CAS_RETRIES = 3
-
     def merge(
         self,
         changes: DataFrame,
@@ -341,21 +380,17 @@ class LakeTable:
         pre_partitioned: bool = False,
         truncate: bool = False,
         offset_watermark: int | None = None,
-        _attempts: int | None = None,
     ) -> int | None:
         """MERGE a change batch (parsed rows with ``_ab_*`` metadata cols)
         into the table. Returns the new snapshot version, or None if the
         batch was already applied (exactly-once skip).
 
-        COW plans as: LWW-dedup batch → prune target to affected buckets →
-        union + window (one shuffle, equivalent to the MERGE join but also
-        deduping in the same exchange) → rewrite those buckets.
-        MoR plans as: LWW-dedup batch → append delta files (no join at all);
+        Plans as: LWW-dedup batch → append delta files (no join at all);
         winners resolve at read; background ``compact()`` bounds read cost.
 
         ``pre_deduped``/``pre_partitioned`` let the ingest pipeline promise
         the batch is already LWW-resolved and bucket-hash-partitioned, so the
-        MoR fast path adds zero extra shuffles.
+        merge adds zero extra shuffles.
 
         ``truncate=True`` makes this a REPLACEMENT commit (the atomic
         overwrite): the published snapshot references only the batch's
@@ -363,15 +398,12 @@ class LakeTable:
         any point leaves either the complete old state or the complete new
         state, never an empty table (the r3 truncate-then-merge pair could).
 
-        Concurrency: publish is a compare-and-swap on the parent version; on
-        ``ConcurrentCommitError`` the merge retries up to
-        ``MERGE_CAS_RETRIES`` times with a REBASE — re-read the head, skip
-        if the racing writer already applied this very batch, re-point the
-        already-staged files at the new head (MoR deltas and truncating
-        replacements are position-independent, so this is metadata-only);
-        a COW rewrite is recomputed against the new target instead (its
-        staged files bake in the stale target) after removing the stale
-        staging dir.
+        Concurrency: the batch is staged once, then ``_commit`` appends the
+        staged entries to the head (or replaces all entries when
+        ``truncate``); when another writer wins the CAS the same edit is
+        re-applied to the new head. The edit commits nothing — and the
+        staged files are removed — if a racing writer already applied this
+        very ``checkpoint_id:batch_id``.
 
         ``offset_watermark``: the caller's assertion that every batch of
         this ``checkpoint_id`` with ``batch_id <`` the watermark has its
@@ -383,77 +415,42 @@ class LakeTable:
         batch_id (foreachBatch delivers batch N only after every batch < N
         committed); ad-hoc/batch merges pass None and keyless records are
         then never pruned (the r3 contract, unchanged). Keyed tables ignore
-        it — their bounded window + LWW idempotence already covers aging.
-
-        ``_attempts`` (internal) carries the REMAINING retry
-        budget through the COW recomputation recursion so the bound is
-        GLOBAL: without it each recursion level reset the budget, and under
-        sustained contention the documented bound never applied (unbounded
-        stack of full COW rewrites)."""
-        attempts = self.MERGE_CAS_RETRIES if _attempts is None else _attempts
+        it — their bounded window + LWW idempotence already covers aging."""
         snap = self.current_snapshot()
         key = f"{checkpoint_id}:{batch_id}"
         if key in snap["applied_batches"]:
             return None
-        schema = self.schema(snap)
-        mode = snap["properties"]["mode"]
-        new_version = snap["version"] + 1
 
         keys = self.key_columns
-        changes = self._conform(changes, schema)
+        changes = self._conform(changes, self.schema(snap))
         if model.BUCKET_COLUMN not in changes.columns:
             changes = self.with_bucket(changes)
             pre_partitioned = False
         winners = changes if pre_deduped or not keys else dedup_lww(changes, keys)
 
-        if truncate:
-            entries = self._stage_write(
-                winners,
-                new_version,
-                pre_partitioned=pre_partitioned,
-                buckets=lineage.get("buckets") if lineage else None,
-            )
-            for e in entries:
-                e["kind"] = "base"
-            new_entries = entries
-        elif mode == "cow":
-            # the affected-bucket set is already known from the lineage agg;
-            # without lineage, one metadata-sized distinct
-            buckets = (lineage or {}).get("buckets") or [
-                r[0] for r in winners.select(model.BUCKET_COLUMN).distinct().collect()
-            ]
-            target = self._read_entries(
-                [e for e in snap["entries"]], schema, buckets
-            )
-            merged = target.unionByName(winners)
-            if keys:
-                merged = dedup_lww(merged, keys)
-            entries = self._stage_write(merged, new_version, buckets=buckets)
-            for e in entries:
-                e["kind"] = "base"
-            kept = [e for e in snap["entries"] if e["bucket"] not in set(buckets)]
-            new_entries = kept + entries
-        else:  # mor
-            # the batch's bucket set is already known from the lineage agg
-            # (events and winners hit identical buckets: every event bucket
-            # keeps >= 1 LWW winner); without lineage, one distinct job
-            entries = self._stage_write(
-                winners,
-                new_version,
-                pre_partitioned=pre_partitioned,
-                buckets=lineage.get("buckets") if lineage else None,
-            )
-            for e in entries:
-                e["kind"] = "delta"
-            new_entries = snap["entries"] + entries
-
-        staged_entries = entries
+        # the batch's bucket set is already known from the lineage agg
+        # (events and winners hit identical buckets: every event bucket
+        # keeps >= 1 LWW winner); without lineage, one distinct job
+        staged = self._stage_write(
+            winners,
+            snap["version"] + 1,
+            pre_partitioned=pre_partitioned,
+            buckets=lineage.get("buckets") if lineage else None,
+        )
+        for e in staged:
+            e["kind"] = "base" if truncate else "delta"
         max_applied = int(snap["properties"].get("max_applied_batches", 1024))
-        for attempt in range(1 + attempts):
+
+        def edit(head: dict) -> dict | None:
+            if key in head["applied_batches"]:
+                return None  # a racing writer delivered this batch
+            version = head["version"] + 1
             if truncate:
-                applied = {key: new_version}  # fresh state, fresh record
+                entries = staged
+                applied = {key: version}  # fresh state, fresh record
             else:
-                applied = {**snap["applied_batches"], key: new_version}
+                entries = head["entries"] + staged
+                applied = {**head["applied_batches"], key: version}
                 # Keyless (append-mode) tables prune ONLY below an explicit
                 # offset watermark: the record is their ONLY exactly-once
                 # defense (no LWW to make a re-applied aged-out batch a
@@ -478,61 +475,24 @@ class LakeTable:
                     applied = {
                         k: v for k, v in applied.items() if not _committed_below(k)
                     }
-            new_snap = {
-                **snap,
-                "version": new_version,
-                "parent": snap["version"],
-                "entries": new_entries,
+            return {
+                "entries": entries,
                 "applied_batches": applied,
-                "lineage": (snap["lineage"] + [lineage])[-200:] if lineage else snap["lineage"],
+                "lineage": (head["lineage"] + [lineage])[-200:] if lineage else head["lineage"],
             }
-            try:
-                self._write_snapshot(new_snap, expected_parent=snap["version"])
-            except ConcurrentCommitError:
-                if attempt == attempts:
-                    raise
-                snap = self.current_snapshot()
-                if key in snap["applied_batches"]:
-                    return None  # the racing writer delivered this batch
-                if mode == "cow" and not truncate:
-                    # staged rewrite baked in the stale target — drop the
-                    # orphan staging dir and recompute against the new head
-                    if staged_entries:
-                        import shutil
 
-                        shutil.rmtree(
-                            os.path.dirname(
-                                os.path.join(self.path, staged_entries[0]["dir"])
-                            ),
-                            ignore_errors=True,
-                        )
-                    return self.merge(
-                        changes, batch_id, checkpoint_id, lineage,
-                        pre_deduped, pre_partitioned,
-                        offset_watermark=offset_watermark,
-                        _attempts=attempts - attempt - 1,
-                    )
-                # MoR delta / truncating replacement: staged files are
-                # position-independent — rebase metadata onto the new head
-                new_version = snap["version"] + 1
-                new_entries = (
-                    staged_entries if truncate else snap["entries"] + staged_entries
-                )
-                continue
-            # NOTE: merge never compacts inline — a hot bucket crossing the
-            # delta threshold must not stall the ingest batch.
-            # CdcPipeline._post_commit runs maintenance() after every Nth
-            # committed batch (its ``maintenance_every`` option, default 16,
-            # after the commit is durable); deployments that disable it must
-            # schedule maintenance() as an external background job.
-            return new_version
+        # NOTE: merge never compacts inline — a hot bucket crossing the
+        # delta threshold must not stall the ingest batch.
+        # CdcPipeline._post_commit runs maintenance() after every Nth
+        # committed batch (its ``maintenance_every`` option, default 16,
+        # after the commit is durable); deployments that disable it must
+        # schedule maintenance() as an external background job.
+        return self._commit(edit, staged)
 
     def buckets_needing_compaction(self, limit: int | None = None) -> list[int]:
         """Buckets whose delta-file count has reached ``limit`` (defaults to
         the table's ``compact_after_deltas`` property)."""
         snap = self.current_snapshot()
-        if snap["properties"]["mode"] != "mor":
-            return []
         if limit is None:
             limit = int(snap["properties"].get("compact_after_deltas", 8))
         per_bucket: dict[int, int] = {}
@@ -564,8 +524,6 @@ class LakeTable:
         by expired snapshots — without this, every compaction leaves its
         superseded base/delta files on storage forever. Never touches a dir
         any retained snapshot references. Returns the expired versions."""
-        import shutil
-
         versions = self.catalog.list_snapshot_versions()
         keep = set(versions[-keep_last:]) | {self.current_version()}
         expired = [v for v in versions if v not in keep]
@@ -608,54 +566,58 @@ class LakeTable:
 
     def evolve(self, new_fields: list[T.StructField]) -> int:
         """Additive schema evolution: widen the table schema, no data rewrite
-        (SURVEY.md §2.8 T4). Old files read back null for new columns."""
-        snap = self.current_snapshot()
-        schema = self.schema(snap)
-        existing = {f.name for f in schema.fields}
-        add = [f for f in new_fields if f.name not in existing]
-        if not add:
-            return snap["version"]
-        meta_idx = next(
-            i for i, f in enumerate(schema.fields) if f.name.startswith(model.META_PREFIX)
-        )
-        fields = schema.fields[:meta_idx] + add + schema.fields[meta_idx:]
-        new_version = snap["version"] + 1
-        new_snap = {
-            **snap,
-            "version": new_version,
-            "parent": snap["version"],
-            "schema": T.StructType(fields).json(),
-        }
-        self._write_snapshot(new_snap, expected_parent=snap["version"])
-        return new_version
+        (SURVEY.md §2.8 T4). Old files read back null for new columns. A
+        racing commit is rebased over: the head's schema, whatever it is by
+        then, is re-widened."""
+
+        def edit(head: dict) -> dict | None:
+            schema = self.schema(head)
+            existing = {f.name for f in schema.fields}
+            add = [f for f in new_fields if f.name not in existing]
+            if not add:
+                return None
+            meta_idx = next(
+                i for i, f in enumerate(schema.fields) if f.name.startswith(model.META_PREFIX)
+            )
+            fields = schema.fields[:meta_idx] + add + schema.fields[meta_idx:]
+            return {"schema": T.StructType(fields).json()}
+
+        version = self._commit(edit)
+        return self.current_version() if version is None else version
 
     def compact(self, buckets: list[int] | None = None) -> int:
         """Fold delta files into base files for the given buckets (all if
         None): read union, resolve LWW winners (tombstones retained), rewrite
         as base. Bounds MoR read amplification; at cluster scale this runs as
-        a background maintenance job per bucket range."""
+        a background maintenance job per bucket range.
+
+        The commit swaps out exactly the entry dirs the rewrite read, so
+        deltas committed while it ran stay in the head. If a racing commit
+        removed any of those dirs (another compaction, a truncating merge),
+        the rewrite is stale: nothing is committed, its files are removed
+        and the current version is returned."""
         snap = self.current_snapshot()
-        schema = self.schema(snap)
         all_buckets = {e["bucket"] for e in snap["entries"]}
         sel = sorted(all_buckets if buckets is None else set(buckets) & all_buckets)
         if not sel:
             return snap["version"]
-        df = self._read_entries(snap["entries"], schema, sel)
+        read = [e for e in snap["entries"] if e["bucket"] in sel]
+        df = self._read_entries(read, self.schema(snap), sel)
         keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
         df = dedup_lww(df, keys) if keys else df
-        new_version = snap["version"] + 1
-        entries = self._stage_write(df, new_version, buckets=sel)
-        for e in entries:
+        staged = self._stage_write(df, snap["version"] + 1, buckets=sel)
+        for e in staged:
             e["kind"] = "base"
-        kept = [e for e in snap["entries"] if e["bucket"] not in set(sel)]
-        new_snap = {
-            **snap,
-            "version": new_version,
-            "parent": snap["version"],
-            "entries": kept + entries,
-        }
-        self._write_snapshot(new_snap, expected_parent=snap["version"])
-        return new_version
+        read_dirs = {e["dir"] for e in read}
+
+        def edit(head: dict) -> dict | None:
+            if not read_dirs <= {e["dir"] for e in head["entries"]}:
+                return None  # a racing commit already replaced what we read
+            kept = [e for e in head["entries"] if e["dir"] not in read_dirs]
+            return {"entries": kept + staged}
+
+        version = self._commit(edit, staged)
+        return self.current_version() if version is None else version
 
     # ------------------------------------------------------------- utilities
     def changes(
@@ -675,12 +637,12 @@ class LakeTable:
         - **Delta scan** (fast path) while the range's delta history is
           intact: read ONLY the files added in the range — cost scales
           with the delta, not the table.
-        - **Snapshot diff** when a compaction / COW rewrite folded files
-          inside the range: both snapshots remain readable (that is the
-          point of a snapshot format — Iceberg's changelog scan must give
-          up here because its rewrites fold equality-deletes away), so the
-          net changes are recovered as ``LWW state at v2 minus state at
-          v1`` joined on the identity key. One shuffle per side on the
+        - **Snapshot diff** when a compaction or a truncating replacement
+          rewrote files inside the range: both snapshots remain readable
+          (that is the point of a snapshot format — Iceberg's changelog
+          scan must give up here because its rewrites fold equality-deletes
+          away), so the net changes are recovered as ``LWW state at v2
+          minus state at v1`` joined on the identity key. One shuffle per side on the
           (uniform) key hash; cost scales with the table, so consumers
           polling faster than maintenance runs always stay on the fast
           path. Keys removed without a tombstone (a truncating
@@ -703,8 +665,8 @@ class LakeTable:
             if not keys:
                 raise ValueError(
                     f"delta history between v{from_version} and "
-                    f"v{to_snap['version']} was rewritten (compaction or COW "
-                    "merge) and the table is keyless; read the full state "
+                    f"v{to_snap['version']} was rewritten (compaction or "
+                    "overwrite) and the table is keyless; read the full state "
                     "instead"
                 )
             return self._changes_by_state_diff(from_snap, to_snap, keys)

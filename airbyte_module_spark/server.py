@@ -237,8 +237,9 @@ if HAVE_FLIGHT:
             reference re-reads everything per request — its do_get at
             abm/server.py:140-159 has no delta concept; lake assets here
             let a CDC consumer poll just the net changes, tombstones
-            visible). A rewritten range (compaction/COW) fails loudly with
-            the fall-back-to-full-read contract of LakeTable.changes."""
+            visible). A rewritten range (compaction or overwrite) on a keyless
+            table fails loudly with the fall-back-to-full-read contract of
+            LakeTable.changes."""
             payload = json.loads(ticket.ticket.decode())
             asset = payload["asset_name"]
             eng = self._engine(asset)

@@ -37,7 +37,6 @@ def main() -> None:
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
-    ap.add_argument("--table-mode", choices=["mor", "cow"], default="mor")
     args = ap.parse_args()
 
     import os
@@ -58,12 +57,7 @@ def main() -> None:
         master=master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    eng = Engine(
-        spark,
-        args.table,
-        n_buckets=args.n_buckets,
-        table_mode=args.table_mode,
-    )
+    eng = Engine(spark, args.table, n_buckets=args.n_buckets)
     if args.tail:
         query = eng.tail(
             args.feed,

@@ -1,6 +1,6 @@
 """M1: batch replay → MERGE → final state matches the pandas oracle
-(per-row content sha256 equality + whole-table digest, FIXTURES.md).
-Covers both table modes (merge-on-read, copy-on-write)."""
+(per-row content sha256 equality + whole-table digest, FIXTURES.md), plus
+compaction, exactly-once and concurrent-writer commits on the lake table."""
 
 import pytest
 
@@ -12,26 +12,50 @@ from airbyte_module_spark.streaming.pipeline import CdcPipeline
 from tests.util import assert_matches_oracle
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_replay_matches_oracle(spark, tmp_path, mode):
+def _kv_table(spark, path):
+    """Empty two-bucket table keyed on ``k`` with one long column ``v``."""
+    import pyspark.sql.types as T
+
+    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    return LakeTable.create(
+        spark, path, schema=model.table_schema(sch), key_columns=["k"], n_buckets=2
+    )
+
+
+def _kv_event(spark, k, v, cur):
+    """One upsert event for ``_kv_table`` with cursor and seq ``cur``."""
+    return spark.createDataFrame([(k, v)], "k string, v long").selectExpr(
+        "k", "v", f"{cur}L as _ab_emitted_at", f"{cur}L as _ab_seq", "'u' as _ab_op"
+    )
+
+
+def _unreferenced_commit_dirs(table):
+    """``data/commit-*`` dirs on disk that the head snapshot does not reference."""
+    import os
+
+    data = os.path.join(table.path, "data")
+    on_disk = set(os.listdir(data)) if os.path.isdir(data) else set()
+    return on_disk - {e["dir"].split("/")[1] for e in table.current_snapshot()["entries"]}
+
+
+def test_replay_matches_oracle(spark, tmp_path):
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=42, n_events=400), feed)
-    table = LakeTable.create(spark, str(tmp_path / f"t_{mode}"), mode=mode, n_buckets=8)
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8)
     CdcPipeline(table).replay_batch(feed)
     assert_matches_oracle(table, events)
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_batch_boundary_independence(spark, tmp_path, mode):
+def test_batch_boundary_independence(spark, tmp_path):
     """Splitting the same feed into many merges must converge to the same
     digest as one merge — the core replay-equality invariant."""
     feed_all = str(tmp_path / "all")
     events = generate_feed(FeedSpec(seed=11, n_events=300, n_shards=6), feed_all)
 
-    t_one = LakeTable.create(spark, str(tmp_path / f"one_{mode}"), mode=mode, n_buckets=8)
+    t_one = LakeTable.create(spark, str(tmp_path / "one"), n_buckets=8)
     CdcPipeline(t_one).replay_batch(feed_all)
 
-    t_many = LakeTable.create(spark, str(tmp_path / f"many_{mode}"), mode=mode, n_buckets=8)
+    t_many = LakeTable.create(spark, str(tmp_path / "many"), n_buckets=8)
     pipe = CdcPipeline(t_many)
     for i in range(6):
         raw = spark.read.text(f"{feed_all}/shard-{i:05d}.json")
@@ -89,7 +113,7 @@ def test_compaction_preserves_state(spark, tmp_path):
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=9, n_events=300, n_shards=4), feed)
     table = LakeTable.create(
-        spark, str(tmp_path / "t"), mode="mor", n_buckets=4, compact_after_deltas=100
+        spark, str(tmp_path / "t"), n_buckets=4, compact_after_deltas=100
     )
     pipe = CdcPipeline(table)
     for i in range(4):
@@ -111,7 +135,7 @@ def test_merge_never_compacts_inline(spark, tmp_path):
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=21, n_events=300, n_shards=6), feed)
     table = LakeTable.create(
-        spark, str(tmp_path / "t"), mode="mor", n_buckets=2, compact_after_deltas=2
+        spark, str(tmp_path / "t"), n_buckets=2, compact_after_deltas=2
     )
     pipe = CdcPipeline(table)
     for i in range(6):
@@ -141,7 +165,7 @@ def test_changes_between_versions(spark, tmp_path):
 
     feed = str(tmp_path / "feed")
     generate_feed(FeedSpec(seed=31, n_events=300, n_shards=2), feed)
-    table = LakeTable.create(spark, str(tmp_path / "t"), mode="mor", n_buckets=4)
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     pipe = CdcPipeline(table)
     raw0 = spark.read.text(f"{feed}/shard-00000.json")
     v1 = pipe.apply_batch(raw0, batch_id=0, checkpoint_id="c")
@@ -371,21 +395,12 @@ def test_overwrite_is_atomic_under_crash(spark, tmp_path, monkeypatch):
 
 def test_concurrent_writers_both_commit_with_rebase(spark, tmp_path):
     """VERDICT r3 #4: two interleaved writers — writer A stages, writer B
-    commits underneath, A's CAS fails and the bounded retry REBASES A's
-    already-staged MoR delta onto B's head. Both batches land."""
-    import pyspark.sql.types as T
-
-    from airbyte_module_spark import model
-
-    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    commits underneath, and A's commit appends its already-staged delta to
+    B's head instead of A's stale one. Both batches land."""
     path = str(tmp_path / "t")
-    a = LakeTable.create(
-        spark, path, schema=model.table_schema(sch), key_columns=["k"], n_buckets=2
-    )
+    a = _kv_table(spark, path)
     b = LakeTable.load(spark, path)
-    ev = lambda k, v, cur: spark.createDataFrame([(k, v)], sch).selectExpr(
-        "k", "v", f"{cur}L as _ab_emitted_at", f"{cur}L as _ab_seq", "'u' as _ab_op"
-    )
+    ev = lambda k, v, cur: _kv_event(spark, k, v, cur)
 
     # interleave: when A stages its files, B sneaks in a full commit
     orig_stage = LakeTable._stage_write
@@ -414,19 +429,10 @@ def test_concurrent_writers_both_commit_with_rebase(spark, tmp_path):
 def test_concurrent_same_batch_second_writer_skips(spark, tmp_path):
     """If the racing writer delivered the SAME (checkpoint, batch), the
     loser's retry must skip (exactly-once across writers), not double-apply."""
-    import pyspark.sql.types as T
-
-    from airbyte_module_spark import model
-
-    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
     path = str(tmp_path / "t")
-    a = LakeTable.create(
-        spark, path, schema=model.table_schema(sch), key_columns=["k"], n_buckets=2
-    )
+    a = _kv_table(spark, path)
     b = LakeTable.load(spark, path)
-    ev = lambda k, v, cur: spark.createDataFrame([(k, v)], sch).selectExpr(
-        "k", "v", f"{cur}L as _ab_emitted_at", f"{cur}L as _ab_seq", "'u' as _ab_op"
-    )
+    ev = lambda k, v, cur: _kv_event(spark, k, v, cur)
     orig_stage = LakeTable._stage_write
     raced = {"done": False}
 
@@ -444,6 +450,8 @@ def test_concurrent_same_batch_second_writer_skips(spark, tmp_path):
         LakeTable._stage_write = orig_stage
     assert version is None  # second delivery skipped
     assert a.read().count() == 1
+    # the skipped delivery's staged files do not outlive it
+    assert _unreferenced_commit_dirs(a) == set()
 
 
 def test_snapshot_expiration_gc(spark, tmp_path):
@@ -511,33 +519,166 @@ def test_commutative_digest_matches_oracle_and_is_partition_invariant(spark, tmp
     assert dup != single
 
 
-def test_cow_cas_retry_budget_is_global(spark, tmp_path, monkeypatch):
-    """ADVICE r4: the COW conflict path retried via recursion that RESET
-    the MERGE_CAS_RETRIES budget each level — under sustained contention
-    the documented bound never applied (unbounded stack of full COW
-    rewrites). The remaining budget now threads through the recursion, so
-    total publish attempts are globally bounded at 1 + MERGE_CAS_RETRIES."""
+@pytest.mark.parametrize("op", ["merge", "compact", "evolve"])
+def test_cas_retry_budget_is_bounded(spark, tmp_path, monkeypatch, op):
+    """merge, compact and evolve share one commit loop: under sustained
+    contention (every publish loses its CAS) each makes exactly
+    1 + MERGE_CAS_RETRIES publish attempts, then raises — and the files it
+    staged do not outlive the failed commit."""
     import pyspark.sql.types as T
 
-    from airbyte_module_spark import model
     from airbyte_module_spark.lake.catalog import ConcurrentCommitError, FileCatalog
 
-    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), schema=model.table_schema(sch),
-        key_columns=["k"], n_buckets=2, mode="cow",
-    )
-    ev = spark.createDataFrame([("ka", 1)], sch).selectExpr(
-        "k", "v", "100L as _ab_emitted_at", "100L as _ab_seq", "'u' as _ab_op"
-    )
+    t = _kv_table(spark, str(tmp_path / "t"))
+    t.merge(_kv_event(spark, "ka", 1, 100), batch_id=0, checkpoint_id="a")
+    t.merge(_kv_event(spark, "ka", 2, 200), batch_id=1, checkpoint_id="a")
+    run = {
+        "merge": lambda: t.merge(_kv_event(spark, "kb", 1, 300), batch_id=2, checkpoint_id="a"),
+        "compact": t.compact,
+        "evolve": lambda: t.evolve([T.StructField("extra", T.StringType())]),
+    }[op]
     calls = {"publish": 0}
+
     def always_conflict(self, snap, expected_parent):
         calls["publish"] += 1
         raise ConcurrentCommitError("sustained contention")
+
     monkeypatch.setattr(FileCatalog, "publish", always_conflict)
     with pytest.raises(ConcurrentCommitError):
-        t.merge(ev, batch_id=1, checkpoint_id="a")
+        run()
     assert calls["publish"] == 1 + LakeTable.MERGE_CAS_RETRIES
+    assert _unreferenced_commit_dirs(t) == set()
+
+
+def test_compaction_keeps_merge_landing_during_rewrite(spark, tmp_path, monkeypatch):
+    """A merge that commits into the compacting bucket while compact()
+    rewrites it must survive: the compaction swaps out only the entry dirs
+    it read, so the racing delta stays in the head next to the new base."""
+    path = str(tmp_path / "t")
+    a = _kv_table(spark, path)
+    b = LakeTable.load(spark, path)
+    a.merge(_kv_event(spark, "k", 1, 100), batch_id=0, checkpoint_id="a")
+    a.merge(_kv_event(spark, "k", 2, 200), batch_id=1, checkpoint_id="a")
+    read_dirs = {e["dir"] for e in a.current_snapshot()["entries"]}
+
+    orig_stage = LakeTable._stage_write
+    raced = {"done": False}
+
+    def stage_and_race(self, *args, **kw):
+        entries = orig_stage(self, *args, **kw)
+        if self is a and not raced["done"]:
+            raced["done"] = True
+            assert b.merge(_kv_event(spark, "k", 3, 300), batch_id=0, checkpoint_id="b") is not None
+        return entries
+
+    monkeypatch.setattr(LakeTable, "_stage_write", stage_and_race)
+    version = a.compact()
+    assert raced["done"]
+    snap = a.current_snapshot()
+    assert version == snap["version"]
+    dirs = {e["dir"]: e["kind"] for e in snap["entries"]}
+    assert not read_dirs & set(dirs)  # everything the rewrite read is folded
+    assert sorted(dirs.values()) == ["base", "delta"]  # new base + racing delta
+    assert {r["k"]: r["v"] for r in a.read().collect()} == {"k": 3}
+    assert "b:0" in snap["applied_batches"]
+
+
+def test_evolve_rebases_over_racing_merge(spark, tmp_path, monkeypatch):
+    """A merge committing between evolve()'s head read and its publish
+    makes the CAS fail; evolve re-widens the new head's schema instead of
+    raising, and the merged row stays."""
+    import pyspark.sql.types as T
+
+    from airbyte_module_spark.lake.catalog import FileCatalog
+
+    path = str(tmp_path / "t")
+    a = _kv_table(spark, path)
+    b = LakeTable.load(spark, path)
+    a.merge(_kv_event(spark, "ka", 1, 100), batch_id=0, checkpoint_id="a")
+
+    orig_publish = FileCatalog.publish
+    raced = {"done": False}
+
+    def race_then_publish(self, snap, expected_parent):
+        if self is a.catalog and not raced["done"]:
+            raced["done"] = True
+            assert b.merge(_kv_event(spark, "kb", 2, 200), batch_id=0, checkpoint_id="b") is not None
+        return orig_publish(self, snap, expected_parent)
+
+    monkeypatch.setattr(FileCatalog, "publish", race_then_publish)
+    version = a.evolve([T.StructField("extra", T.StringType())])
+    assert raced["done"]
+    snap = a.current_snapshot()
+    assert version == snap["version"] == 3
+    assert "extra" in a.schema().fieldNames()
+    got = {r["k"]: (r["v"], r["extra"]) for r in a.read().collect()}
+    assert got == {"ka": (1, None), "kb": (2, None)}
+    assert {"a:0", "b:0"} <= set(snap["applied_batches"])
+
+
+def test_threads_of_one_driver_both_commit(spark, tmp_path, monkeypatch):
+    """Two handles merging from two threads of one driver, both staged on
+    the same head: the catalog's parent check and pointer swap are one
+    atomic step, so the loser of the CAS rebases and both rows land. Were
+    check and swap separate steps, both threads could pass the check for the
+    same parent: one commit would be lost and the other crash on the shared
+    snapshot temp file."""
+    import json
+    import threading
+    import types
+
+    from airbyte_module_spark.lake import catalog as catalog_mod
+
+    path = str(tmp_path / "t")
+    a = _kv_table(spark, path)
+    b = LakeTable.load(spark, path)
+
+    staged = threading.Barrier(2, timeout=120)
+    orig_stage = LakeTable._stage_write
+
+    def stage_then_wait(self, *args, **kw):
+        entries = orig_stage(self, *args, **kw)
+        staged.wait()  # neither thread commits before both have staged
+        return entries
+
+    # widen the window between parent check and pointer swap: a writer
+    # inside the snapshot write waits (bounded) for the other one
+    inside = threading.Barrier(2, timeout=3)
+
+    def slow_dump(obj, f):
+        try:
+            inside.wait()
+        except threading.BrokenBarrierError:
+            pass
+        json.dump(obj, f)
+
+    monkeypatch.setattr(LakeTable, "_stage_write", stage_then_wait)
+    monkeypatch.setattr(
+        catalog_mod, "json", types.SimpleNamespace(dump=slow_dump, load=json.load)
+    )
+    results, errors = {}, {}
+
+    def run(name, table, k, v):
+        try:
+            results[name] = table.merge(
+                _kv_event(spark, k, v, v), batch_id=1, checkpoint_id=name
+            )
+        except Exception as e:  # surfaced by the asserts below
+            errors[name] = e
+
+    threads = [
+        threading.Thread(target=run, args=("a", a, "ka", 1)),
+        threading.Thread(target=run, args=("b", b, "kb", 2)),
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == {}
+    assert sorted(results.values()) == [1, 2]
+    assert {r["k"]: r["v"] for r in a.read().collect()} == {"ka": 1, "kb": 2}
+    assert {"a:1", "b:1"} <= set(a.current_snapshot()["applied_batches"])
 
 
 def test_writes_in_the_same_millisecond_both_commit(spark, tmp_path, monkeypatch):
