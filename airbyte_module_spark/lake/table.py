@@ -24,6 +24,14 @@ v2 table and everything above it is unchanged):
   ``maintenance()``/``compact()`` fold deltas into bases — ONLY when
   explicitly invoked (background-job shape), never inline in ``merge()``,
   so ingest batches are never stalled by compaction.
+- **Two readers, one result**: ``read()``/``changes()`` are Spark plans
+  (``dedup_lww`` over the entry files) for queries, digests and HTTP.
+  ``read_arrow()``/``changes_arrow()`` run no Spark job and serve Flight:
+  pyarrow reads the snapshot's files one bucket at a time, resolves the
+  bucket's deltas LWW in memory, then streams its base by row group and
+  drops each row a newer delta winner supersedes — Iceberg's
+  equality-delete apply. Late events land in later deltas, so a base row
+  can also beat a delta. Both readers are tested row- and schema-equal.
 - **One commit loop**: ``merge``, ``compact`` and ``evolve`` publish through
   ``_commit(edit)`` — a CAS on the head version that, when another writer
   wins, re-applies the pending edit to the new head (Iceberg's retry
@@ -68,8 +76,12 @@ import json
 import os
 import shutil
 import uuid
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Iterator
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -110,6 +122,67 @@ def dedup_lww(df: DataFrame, key_columns: list[str] | None = None) -> DataFrame:
         .agg(F.max_by(F.struct(*cols), order_key).alias("_w"))
         .select("_w.*")
     )
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Spark's ``DataType.asNullable``: a file scan reads every field,
+    element and map value as nullable, whatever the table schema says."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _conform_arrow(t: pa.Table, schema: pa.Schema) -> pa.Table:
+    """Rows read from one data file, projected onto ``schema``: columns cast
+    to the snapshot's types, columns the file predates null-filled."""
+    return pa.Table.from_arrays(
+        [
+            t[f.name].cast(f.type) if f.name in t.column_names else pa.nulls(t.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+_NEWEST_FIRST = [(model.META_EMITTED, "descending"), (model.META_SEQ, "descending")]
+
+
+def _newest_per_key(t: pa.Table, keys: list[str], aggregates: list) -> pa.Table:
+    """Aggregate a row-id column ``_r`` per key with rows taken newest
+    (cursor, seq) first — ``sort_indices`` is stable and an unthreaded
+    ``group_by`` aggregates in input order, so ``("_r", "first")`` is the
+    LWW winner and earlier rows win ties."""
+    t = t.append_column("_r", pa.array(np.arange(t.num_rows)))
+    order = pc.sort_indices(t, _NEWEST_FIRST, null_placement="at_end")
+    return t.take(order).group_by(keys, use_threads=False).aggregate(aggregates)
+
+
+def _lww_arrow(t: pa.Table, keys: list[str]) -> pa.Table:
+    """``dedup_lww`` in memory: the max-(cursor, seq) row per key,
+    tombstones kept."""
+    cols = keys + [model.META_EMITTED, model.META_SEQ]
+    return t.take(_newest_per_key(t.select(cols), keys, [("_r", "first")])["_r_first"])
+
+
+def _supersede(base: pa.Table, winners: pa.Table, keys: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Equality-delete apply of delta ``winners`` to key-unique ``base``
+    rows: (indices of the base rows that stay, indices of the winners a base
+    row beats). A base row stays unless its key's winner is newer; late
+    events land in later deltas, so a base row can win, and wins ties."""
+    n = base.num_rows
+    cols = keys + [model.META_EMITTED, model.META_SEQ]
+    cand = pa.concat_tables([base.select(cols), winners.select(cols)])
+    groups = _newest_per_key(cand, keys, [("_r", "first"), ("_r", "max")])
+    first = groups["_r_first"].to_numpy()
+    top = groups["_r_max"].to_numpy()
+    base_wins = first < n
+    return np.sort(first[base_wins]), top[base_wins & (top >= n)] - n
 
 
 class LakeTable:
@@ -285,10 +358,11 @@ class LakeTable:
         keep = [c for c in live.columns if not c.startswith(model.META_PREFIX)]
         return live.select(*keep)
 
-    def live_buckets(self) -> list[int]:
-        """Buckets referenced by the current snapshot, ascending — the
-        natural parallel-read split (one Flight endpoint per bucket)."""
-        return sorted({e["bucket"] for e in self.current_snapshot()["entries"]})
+    def live_buckets(self, snap: dict | None = None) -> list[int]:
+        """Buckets referenced by ``snap`` (default: the head), ascending —
+        the natural parallel-read split (one Flight endpoint per bucket)."""
+        snap = snap or self.current_snapshot()
+        return sorted({e["bucket"] for e in snap["entries"]})
 
     def entry_bytes(
         self, buckets: list[int] | None = None, version: int | None = None
@@ -297,22 +371,108 @@ class LakeTable:
         (all buckets when None) — an upper bound on what a read of that
         slice returns (tombstones and LWW-superseded delta rows only
         shrink it). Metadata-sized: one listdir per entry dir, no Spark
-        job; the Flight server uses it to pick the eager (bounded-slice)
-        read path vs the streaming iterator."""
+        job."""
         snap = self.snapshot(version) if version is not None else self.current_snapshot()
         sel = None if buckets is None else set(buckets)
         total = 0
         for e in snap["entries"]:
-            if sel is not None and e["bucket"] not in sel:
-                continue
-            d = os.path.join(self.path, e["dir"])
-            try:
-                for f in os.listdir(d):
-                    if f.endswith(".parquet"):
-                        total += os.path.getsize(os.path.join(d, f))
-            except OSError:
-                continue
+            if sel is None or e["bucket"] in sel:
+                try:
+                    total += sum(os.path.getsize(f) for f in self._files([e]))
+                except OSError:
+                    continue
         return total
+
+    # ------------------------------------------------------------ arrow read
+    def arrow_schema(self, snap: dict | None = None, metadata: bool = False) -> pa.Schema:
+        """Arrow schema of ``read()`` at ``snap`` (default: the head) — of
+        ``changes()`` when ``metadata`` — from snapshot metadata alone:
+        ``to_arrow_schema`` of the snapshot schema, every field nullable as
+        Spark's file scan reads it."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        snap = snap or self.current_snapshot()
+        fields = [
+            f for f in self.schema(snap).fields
+            if metadata or not f.name.startswith(model.META_PREFIX)
+        ]
+        return to_arrow_schema(_as_nullable(T.StructType(fields)))
+
+    def _files(self, entries: list[dict]) -> list[str]:
+        """Data files of ``entries`` — the names Spark's scan reads."""
+        out = []
+        for e in entries:
+            d = os.path.join(self.path, e["dir"])
+            out += [
+                os.path.join(d, f)
+                for f in sorted(os.listdir(d))
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            ]
+        return out
+
+    def _row_groups(self, entries: list[dict], schema: pa.Schema) -> Iterator[pa.Table]:
+        for path in self._files(entries):
+            pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+            cols = [n for n in schema.names if n in pf.schema_arrow.names]
+            for i in range(pf.num_row_groups):
+                yield _conform_arrow(pf.read_row_group(i, columns=cols), schema)
+
+    def _resolve_bucket(
+        self, entries: list[dict], schema: pa.Schema, keys: list[str]
+    ) -> Iterator[pa.Table]:
+        """One bucket's rows, LWW-resolved, tombstones kept: its deltas are
+        resolved in memory, then the base streams by row group with every
+        row a newer delta winner supersedes dropped (Iceberg's
+        equality-delete apply), then the winners no base row beat. Every key
+        lives in one bucket, so memory holds one bucket's deltas plus one
+        row group. Keyless tables and delta-free buckets just stream."""
+        deltas = [e for e in entries if e["kind"] == "delta"]
+        if not keys or not deltas:
+            yield from self._row_groups(entries, schema)
+            return
+        winners = _lww_arrow(
+            pa.concat_tables([schema.empty_table(), *self._row_groups(deltas, schema)]), keys
+        )
+        beaten = np.zeros(winners.num_rows, dtype=bool)
+        for rg in self._row_groups([e for e in entries if e["kind"] != "delta"], schema):
+            keep, lost = _supersede(rg, winners, keys)
+            beaten[lost] = True
+            yield rg.take(keep)
+        yield winners.filter(pa.array(~beaten))
+
+    def _resolved_batches(
+        self, snap: dict, entries: list[dict], buckets: set[int] | None,
+        out: pa.Schema, live: bool,
+    ) -> Iterator[pa.RecordBatch]:
+        """``out``'s columns of ``entries`` (those in ``buckets``), resolved
+        bucket by bucket; ``live`` drops tombstones."""
+        keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
+        full = self.arrow_schema(snap, metadata=True)
+        per_bucket: dict[int, list[dict]] = {}
+        for e in entries:
+            if buckets is None or e["bucket"] in buckets:
+                per_bucket.setdefault(e["bucket"], []).append(e)
+        for b in sorted(per_bucket):
+            for t in self._resolve_bucket(per_bucket[b], full, keys):
+                if live:
+                    t = t.filter(pc.not_equal(t[model.META_OP], "d"))
+                yield from t.select(out.names).to_batches()
+
+    def read_arrow(
+        self, buckets: list[int] | None = None, version: int | None = None
+    ) -> pa.RecordBatchReader:
+        """``read(version, buckets)`` without Spark: the snapshot's parquet
+        files read with pyarrow, one bucket at a time (see
+        ``_resolve_bucket``). Row- and schema-equal to
+        ``read(...).toArrow()``; files older than an ``evolve`` read back
+        null in the columns they lack. The snapshot resolves on call, the
+        rows as the reader is drained."""
+        snap = self.snapshot(version) if version is not None else self.current_snapshot()
+        schema = self.arrow_schema(snap)
+        sel = None if buckets is None else set(buckets)
+        return pa.RecordBatchReader.from_batches(
+            schema, self._resolved_batches(snap, snap["entries"], sel, schema, live=True)
+        )
 
     # ----------------------------------------------------------------- write
     def _stage_write(
@@ -652,7 +812,42 @@ class LakeTable:
         KEYLESS tables have no identity to diff on: a rewritten range
         still raises ValueError there (consumers fall back to a full
         read). An EXPIRED from-snapshot raises FileNotFoundError from the
-        catalog — same fallback."""
+        catalog — same fallback. ``changes_arrow`` is the delta scan
+        without Spark."""
+        from_snap, to_snap, new_entries, rewritten = self._change_range(
+            from_version, to_version
+        )
+        keys = to_snap["properties"].get("key_columns", model.KEY_COLUMNS)
+        if rewritten:
+            return self._changes_by_state_diff(from_snap, to_snap, keys)
+        df = self._read_entries(new_entries, self.schema(to_snap), buckets=None)
+        if keys:
+            df = dedup_lww(df, keys)
+        return df.drop(model.BUCKET_COLUMN)
+
+    def changes_arrow(
+        self, from_version: int, to_version: int | None = None
+    ) -> pa.RecordBatchReader | None:
+        """The delta-scan plan of ``changes`` without Spark: the range's new
+        delta files read with pyarrow bucket by bucket, LWW-resolved,
+        metadata columns and tombstones kept — row- and schema-equal to
+        ``changes(...).toArrow()``. Returns None when the range was
+        rewritten: the snapshot diff stays on Spark (call ``changes``).
+        Raises as ``changes`` does."""
+        _, to_snap, new_entries, rewritten = self._change_range(from_version, to_version)
+        if rewritten:
+            return None
+        schema = self.arrow_schema(to_snap, metadata=True)
+        return pa.RecordBatchReader.from_batches(
+            schema, self._resolved_batches(to_snap, new_entries, None, schema, live=False)
+        )
+
+    def _change_range(
+        self, from_version: int, to_version: int | None
+    ) -> tuple[dict, dict, list[dict], bool]:
+        """(from snapshot, to snapshot, entries added in between, whether a
+        compaction or a truncating replacement rewrote files inside the
+        range). A rewritten range of a keyless table raises ValueError."""
         to_snap = (
             self.current_snapshot() if to_version is None else self.snapshot(to_version)
         )
@@ -660,21 +855,17 @@ class LakeTable:
         old_dirs = {e["dir"] for e in from_snap["entries"]}
         new_dirs = {e["dir"] for e in to_snap["entries"]}
         new_entries = [e for e in to_snap["entries"] if e["dir"] not in old_dirs]
-        keys = to_snap["properties"].get("key_columns", model.KEY_COLUMNS)
-        if (old_dirs - new_dirs) or any(e["kind"] != "delta" for e in new_entries):
-            if not keys:
-                raise ValueError(
-                    f"delta history between v{from_version} and "
-                    f"v{to_snap['version']} was rewritten (compaction or "
-                    "overwrite) and the table is keyless; read the full state "
-                    "instead"
-                )
-            return self._changes_by_state_diff(from_snap, to_snap, keys)
-        schema = self.schema(to_snap)
-        df = self._read_entries(new_entries, schema, buckets=None)
-        if keys:
-            df = dedup_lww(df, keys)
-        return df.drop(model.BUCKET_COLUMN)
+        rewritten = bool(old_dirs - new_dirs) or any(
+            e["kind"] != "delta" for e in new_entries
+        )
+        if rewritten and not to_snap["properties"].get("key_columns", model.KEY_COLUMNS):
+            raise ValueError(
+                f"delta history between v{from_version} and "
+                f"v{to_snap['version']} was rewritten (compaction or "
+                "overwrite) and the table is keyless; read the full state "
+                "instead"
+            )
+        return from_snap, to_snap, new_entries, rewritten
 
     def _changes_by_state_diff(
         self, from_snap: dict, to_snap: dict, keys: list[str]

@@ -17,12 +17,15 @@ Differences that are the point of the exercise:
 
 - the reference's do_get launches a docker connector per request and streams
   its stdout through a temp file per 100-record batch
-  (abm/connector.py:288-297); here ``Engine.read()`` is a Spark plan and
-  the response STREAMS (the reference's one good property, abm/server.py:159,
-  kept): Arrow record batches / NDJSON chunks are produced incrementally
-  from ``toLocalIterator`` — one partition of driver memory at a time, never
-  the whole asset (the r2 ``toArrow()``/``collect()`` forms were the
-  engine's last driver-memory-unbounded data path).
+  (abm/connector.py:288-297); here a lake asset's Flight read runs no Spark
+  job at all: ``LakeTable.read_arrow`` reads the pinned snapshot's parquet
+  files with pyarrow and resolves merge-on-read deltas in memory, one hash
+  bucket at a time (one bucket's deltas plus one row group of driver
+  memory, never the whole asset), and the response STREAMS (the
+  reference's one good property, abm/server.py:159, kept). HTTP NDJSON
+  reads, the snapshot-diff change plan and non-lake assets stream a Spark
+  plan through ``toLocalIterator`` — one partition of driver memory at a
+  time.
 - the reference's do_put iterates rows in Python
   (``batch.to_pandas()`` + ``iterrows``, abm/server.py:206-210 — the
   structural bottleneck called out in BASELINE.md); here the incoming Arrow
@@ -41,8 +44,9 @@ Differences that are the point of the exercise:
   CDC consumer polls deltas instead of re-reading full state per request
   the way the reference's do_get must.
 
-The servers are thin: every data operation is one Engine call, so the
-protocol layer adds no second data path to keep correct.
+The servers are thin: every data operation is one Engine or LakeTable
+call. The Arrow read path is tested row- and schema-equal to the Spark read
+it stands in for.
 """
 
 from __future__ import annotations
@@ -97,27 +101,15 @@ def _arrow_schema(df):
     return to_arrow_schema(df.schema)
 
 
-#: Eager-read gate for bounded slices: when the snapshot metadata proves a
-#: read serves at most this many parquet bytes (LakeTable.entry_bytes — an
-#: upper bound), the server collects it with Spark's native Arrow path
-#: (``toArrow``) instead of the streaming IPC iterator. Measured on the
-#: parallel-read bench corpus (117 MB, 16 buckets): one bucket drains in
-#: 0.22s via toArrow vs 0.7s via the iterator, and 16 THREADED bucket reads
-#: go from ~9s (the toLocalIterator + per-batch Python IPC decode path
-#: serializes on the driver GIL and runs one job per partition-in-flight)
-#: to ~0.9s — the 10x that was the whole r5 "1.23x parallel speedup"
-#: ceiling. Unbounded/huge slices keep the memory-bounded iterator.
-EAGER_READ_MAX_BYTES = 128 << 20
-
-
-def _arrow_batches_eager(df, batch_rows: int | None = None):
-    """Whole-slice Arrow collect, re-sliced to the wire batch size. Only
-    for reads the caller has PROVEN bounded (see EAGER_READ_MAX_BYTES) —
-    driver memory holds the full slice (a few x the parquet bytes)."""
-    if batch_rows is None:
+# perfbench/spans.py wraps this name until ROADMAP item 1 moves spans in
+def _arrow_batches_eager(batches, batch_rows: int | None = None):
+    """The server's one Arrow drain: ``batches`` (a ``LakeTable.read_arrow``
+    / ``changes_arrow`` reader) re-sliced to the wire batch size."""
+    if batch_rows is None:  # resolved at call time so tests can shrink it
         batch_rows = READ_BATCH_ROWS
-    for batch in df.toArrow().to_batches(max_chunksize=batch_rows):
-        yield batch
+    for batch in batches:
+        for off in range(0, batch.num_rows, batch_rows):
+            yield batch.slice(off, batch_rows)
 
 
 def _arrow_batches(df, batch_rows: int | None = None):
@@ -189,57 +181,52 @@ if HAVE_FLIGHT:
             dockerized `discover` round-trip; unknown record/byte counts =
             -1, exactly like abm/server.py:238-256.
 
-            Lake-table assets return ONE ENDPOINT PER LIVE BUCKET (ticket
-            carries the bucket list) so clients can read all slices
-            CONCURRENTLY — every identity key lives wholly inside one
+            Lake-table assets answer from ONE snapshot read, no Spark job:
+            its version is pinned into every endpoint ticket, its schema is
+            the advertised one and its live buckets are the endpoints — one
+            per bucket (ticket carries the bucket list), so clients read all
+            slices CONCURRENTLY. Every identity key lives wholly inside one
             bucket, so per-bucket reads are complete and their union equals
-            the single-stream read. This beats the reference's documented
-            structural ceiling (one endpoint/ticket per asset,
-            abm/server.py:253). Non-bucketed assets keep the single
-            endpoint."""
+            the single-stream read of that version, whatever commits land
+            meanwhile. This beats the reference's documented structural
+            ceiling (one endpoint/ticket per asset, abm/server.py:253).
+            Other assets keep one endpoint and plan a Spark read for the
+            schema."""
             asset = descriptor.command.decode() if descriptor.command else descriptor.path[0].decode()
             eng = self._engine(asset)
-            schema = _arrow_schema(eng.read())  # metadata-only, no Spark job
-            bucket_groups: list[list[int] | None] = [None]
-            version: int | None = None
-            if hasattr(eng, "table"):  # lake-table asset: bucket-sliced
-                # pin ONE snapshot version into every endpoint ticket: each
-                # do_get resolves the ticket's version instead of the head,
-                # so a commit landing between slice reads cannot tear the
-                # multi-endpoint read — the union of slices equals the
-                # single-stream read of the advertised snapshot (the same
-                # race the HTTP path closes with X-Table-Version)
-                version = eng.table.current_version()
-                live = eng.table.live_buckets()
-                if live:
-                    bucket_groups = [[b] for b in live]
-            endpoints = []
-            for group in bucket_groups:
-                payload: dict = {"asset_name": asset}
-                if version is not None:
-                    payload["version"] = version
-                if group is not None:
-                    payload["buckets"] = group
-                endpoints.append(
-                    fl.FlightEndpoint(fl.Ticket(json.dumps(payload).encode()), [])
-                )
+            payload = {"asset_name": asset}
+            if not hasattr(eng, "table"):
+                schema = _arrow_schema(eng.read())  # metadata-only, no Spark job
+                tickets = [payload]
+            else:
+                snap = eng.table.current_snapshot()
+                schema = eng.table.arrow_schema(snap)
+                payload["version"] = snap["version"]
+                live = eng.table.live_buckets(snap)
+                tickets = [{**payload, "buckets": [b]} for b in live] or [payload]
+            endpoints = [
+                fl.FlightEndpoint(fl.Ticket(json.dumps(t).encode()), []) for t in tickets
+            ]
             return fl.FlightInfo(schema, descriptor, endpoints, -1, -1)
 
         # --------------------------------------------------------------- read
         def do_get(self, context, ticket):
-            """Streamed read: a GeneratorStream fed batch-by-batch from the
-            Arrow-native iterator — reference parity with its streamed
-            response (abm/server.py:159) plus bounded driver memory. A
-            ticket carrying ``buckets`` serves just that bucket slice
-            (issued per-bucket by get_flight_info for lake assets); a
-            ticket carrying ``from_version`` serves the INCREMENTAL change
-            rows ``(from_version, to_version]`` instead of full state (the
-            reference re-reads everything per request — its do_get at
-            abm/server.py:140-159 has no delta concept; lake assets here
-            let a CDC consumer poll just the net changes, tombstones
-            visible). A rewritten range (compaction or overwrite) on a keyless
-            table fails loudly with the fall-back-to-full-read contract of
-            LakeTable.changes."""
+            """Streamed read: a GeneratorStream fed batch by batch — reference
+            parity with its streamed response (abm/server.py:159). Lake
+            assets are read straight from the snapshot's parquet files with
+            pyarrow (``LakeTable.read_arrow``: one bucket in memory at a
+            time, no Spark job). A ticket carrying ``buckets`` serves just
+            that bucket slice (issued per bucket by get_flight_info) of the
+            ticket's pinned ``version``. A ticket carrying ``from_version``
+            serves the INCREMENTAL change rows ``(from_version, to_version]``
+            instead of full state, tombstones visible (the reference
+            re-reads everything per request — its do_get at
+            abm/server.py:140-159 has no delta concept): a delta-only range
+            through ``LakeTable.changes_arrow``, a range rewritten by
+            compaction or overwrite through the Spark snapshot diff of
+            ``changes``, which on a keyless table fails loudly with the
+            fall-back-to-full-read contract. Other assets stream their
+            Spark read through the ``toLocalIterator`` drain."""
             payload = json.loads(ticket.ticket.decode())
             asset = payload["asset_name"]
             eng = self._engine(asset)
@@ -248,39 +235,27 @@ if HAVE_FLIGHT:
                     raise fl.FlightServerError(
                         f"asset {asset!r} does not serve incremental changes"
                     )
+                # a server-issued ticket pins `version`; use it as the
+                # default upper bound so the delta read is snapshot-
+                # consistent with the advertised FlightInfo
+                bounds = (
+                    int(payload["from_version"]),
+                    payload.get("to_version", payload.get("version")),
+                )
                 try:
-                    # a server-issued ticket pins `version`; use it as the
-                    # default upper bound so the delta read is snapshot-
-                    # consistent with the advertised FlightInfo
-                    df = eng.changes(
-                        int(payload["from_version"]),
-                        payload.get("to_version", payload.get("version")),
-                    )
+                    batches = eng.table.changes_arrow(*bounds)
+                    if batches is None:  # rewritten range: snapshot diff
+                        df = eng.changes(*bounds)
+                        return fl.GeneratorStream(_arrow_schema(df), _arrow_batches(df))
                 except (ValueError, FileNotFoundError) as e:
-                    # range rewritten by maintenance / from-snapshot expired
+                    # range rewritten on a keyless table / from-snapshot expired
                     raise fl.FlightServerError(str(e))
+            elif hasattr(eng, "table"):
+                batches = eng.table.read_arrow(payload.get("buckets"), payload.get("version"))
             else:
-                kwargs = {
-                    k: payload[k]
-                    for k in ("buckets", "version")
-                    if payload.get(k) is not None
-                }
-                df = eng.read(**kwargs)
-                # size-gated eager path: when snapshot metadata bounds the
-                # slice's bytes (per-bucket endpoints are exactly this
-                # shape), skip the streaming iterator whose per-batch
-                # Python IPC hop serializes concurrent streams on the
-                # driver GIL — see EAGER_READ_MAX_BYTES for the measured
-                # 10x on 16-way parallel bucket reads
-                if hasattr(eng, "table"):
-                    est = eng.table.entry_bytes(
-                        payload.get("buckets"), payload.get("version")
-                    )
-                    if est <= EAGER_READ_MAX_BYTES:
-                        return fl.GeneratorStream(
-                            _arrow_schema(df), _arrow_batches_eager(df)
-                        )
-            return fl.GeneratorStream(_arrow_schema(df), _arrow_batches(df))
+                df = eng.read()
+                return fl.GeneratorStream(_arrow_schema(df), _arrow_batches(df))
+            return fl.GeneratorStream(batches.schema, _arrow_batches_eager(batches))
 
         # -------------------------------------------------------------- write
         def do_put(self, context, descriptor, reader, writer):

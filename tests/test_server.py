@@ -590,40 +590,120 @@ def test_flight_endpoints_pinned_to_one_version(asset, spark):
         assert sorted(got) == before, "torn multi-version read"
 
 
-def test_flight_eager_read_gate_and_equality(spark, tmp_path, monkeypatch):
-    """r6: bounded slices (snapshot-metadata byte bound under
-    EAGER_READ_MAX_BYTES) are served via the toArrow eager path — measured
-    10x over the streaming iterator on 16-way parallel bucket reads — and
-    both paths must return identical rows. Forcing the gate to 0 bytes
-    falls every read back to the memory-bounded iterator."""
-    import pyarrow.flight as fl
-
-    import airbyte_module_spark.server as server_mod
-    from airbyte_module_spark.server import EngineFlightServer
-
+def test_entry_bytes_bounds_each_bucket(spark, tmp_path):
+    """entry_bytes (a metadata-sized listdir per entry, no Spark job) counts
+    the parquet bytes behind a read and adds up over bucket slices."""
     eng = Engine(
-        spark, str(tmp_path / "eager"), schema=USER_SCHEMA,
+        spark, str(tmp_path / "sized"), schema=USER_SCHEMA,
         key_columns=["id"], n_buckets=4,
     )
     df = spark.range(100).selectExpr(
         "id", "concat('u', id) AS first_name", "id * 0.5 AS salary"
     )
     eng.write(df, mode="upsert")
-    # the metadata bound covers the real bytes and is metadata-sized
     est = eng.table.entry_bytes()
     assert est > 0
     assert est == sum(
         eng.table.entry_bytes([b]) for b in eng.table.live_buckets()
     )
-    with EngineFlightServer({"eager": eng}) as server:
+
+
+@pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")
+def test_flight_info_endpoints_match_their_pinned_version(spark, tmp_path, monkeypatch):
+    """get_flight_info takes the pinned version, the schema and the bucket
+    list from ONE snapshot. Reading them from three head reads let a
+    one-bucket overwrite landing in between yield endpoints that pin
+    version v but list only the new head's bucket, so a client reading
+    every endpoint silently missed v's rows in the others. The overwrite is
+    landed right after each head read in turn."""
+    import pyarrow.flight as fl
+
+    from airbyte_module_spark.lake.table import LakeTable
+    from airbyte_module_spark.server import EngineFlightServer
+
+    eng = Engine(
+        spark, str(tmp_path / "torn"), schema=USER_SCHEMA, key_columns=["id"], n_buckets=4
+    )
+    many = spark.range(40).selectExpr(
+        "id", "concat('u', id) AS first_name", "id * 0.5 AS salary"
+    )
+    one = spark.createDataFrame([(7, "solo", 7.0)], USER_SCHEMA)
+    head_read = LakeTable.current_version
+    with EngineFlightServer({"torn": eng}) as server:
         client = fl.connect(f"grpc://127.0.0.1:{server.port}")
-        ticket = fl.Ticket(json.dumps({"asset_name": "eager"}).encode())
-        eager_rows = sorted(
-            tuple(r.values()) for r in client.do_get(ticket).read_all().to_pylist()
-        )
-        monkeypatch.setattr(server_mod, "EAGER_READ_MAX_BYTES", 0)
-        stream_rows = sorted(
-            tuple(r.values()) for r in client.do_get(ticket).read_all().to_pylist()
-        )
-    assert eager_rows == stream_rows
-    assert len(eager_rows) == 100
+        for k in (1, 2, 3):
+            eng.write(many, mode="overwrite")
+            reads = []
+
+            def overwrite_after_kth_read(self):
+                v = head_read(self)
+                reads.append(v)
+                if len(reads) == k:
+                    eng.write(one, mode="overwrite")
+                return v
+
+            monkeypatch.setattr(LakeTable, "current_version", overwrite_after_kth_read)
+            info = client.get_flight_info(fl.FlightDescriptor.for_command(b"torn"))
+            monkeypatch.setattr(LakeTable, "current_version", head_read)
+            assert reads
+            (v,) = {json.loads(ep.ticket.ticket.decode())["version"] for ep in info.endpoints}
+            got = sorted(
+                tuple(r.values())
+                for ep in info.endpoints
+                for r in client.do_get(ep.ticket).read_all().to_pylist()
+            )
+            want = sorted(tuple(r) for r in eng.read(version=v).collect())
+            assert got == want, f"torn endpoint list: overwrite after head read {k}"
+
+
+@pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")
+def test_flight_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
+    """Flight info, every bucket slice, a full read and a delta-scan change
+    poll are served from the snapshot's parquet files with pyarrow: with
+    the Spark read entry points raising they still succeed, and Spark runs
+    no job. A range rewritten by compaction still reaches ``changes``."""
+    import pyarrow.flight as fl
+
+    from airbyte_module_spark.lake.table import LakeTable
+    from airbyte_module_spark.server import EngineFlightServer
+
+    eng = Engine(
+        spark, str(tmp_path / "nojob"), schema=USER_SCHEMA, key_columns=["id"], n_buckets=4
+    )
+    eng.write(
+        spark.range(40).selectExpr("id", "concat('u', id) AS first_name", "id * 0.5 AS salary"),
+        mode="overwrite",
+    )
+    v_base = eng.table.current_version()
+    eng.write(
+        spark.range(30, 50).selectExpr("id", "concat('v', id) AS first_name", "id * 1.0 AS salary"),
+        mode="upsert",
+    )
+    expected = sorted(tuple(r) for r in eng.read().collect())
+    sc = spark.sparkContext
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    def spark_read(*a, **k):
+        raise AssertionError("Spark read on the Flight read path")
+
+    for name in ("read", "read_internal", "changes"):
+        monkeypatch.setattr(LakeTable, name, spark_read)
+    poll = fl.Ticket(json.dumps({"asset_name": "nojob", "from_version": v_base}).encode())
+    with EngineFlightServer({"nojob": eng}) as server:
+        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+        before = last_job()
+        info = client.get_flight_info(fl.FlightDescriptor.for_command(b"nojob"))
+        slices = [client.do_get(ep.ticket).read_all() for ep in info.endpoints]
+        full = client.do_get(fl.Ticket(json.dumps({"asset_name": "nojob"}).encode())).read_all()
+        changes = client.do_get(poll).read_all()
+        assert last_job() == before
+        assert len(info.endpoints) == 4
+        assert sorted(tuple(r.values()) for t in slices for r in t.to_pylist()) == expected
+        assert sorted(tuple(r.values()) for r in full.to_pylist()) == expected
+        assert sorted(r["id"] for r in changes.to_pylist()) == list(range(30, 50))
+        eng.table.compact()
+        with pytest.raises(fl.FlightError, match="Spark read on the Flight read path"):
+            client.do_get(poll).read_all()
