@@ -5,9 +5,10 @@ All variants follow the same scale discipline:
 
 - **exact**: one hash-groupBy on the normalized-content sha256 — a single
   shuffle keyed by a uniform hash; trivially skew-free.
-- **MinHash + LSH**: per-doc signature (narrow, no shuffle), banding, then a
-  self-join *on the band bucket* — candidate generation is output-linear in
-  the number of colliding docs, never all-pairs. This is the 100 TB path.
+- **MinHash + LSH**: per-doc signature (narrow, no shuffle), banding, then
+  one exchange *on the band bucket* and in-bucket pair expansion inside an
+  Arrow kernel — candidate generation is output-linear in the number of
+  colliding docs, never all-pairs. This is the 100 TB path.
 - **SimHash**: per-doc 32-bit fingerprint over distinct tokens (narrow, no
   shuffle); near-dup buckets = equal fingerprints.
 - **n-gram Jaccard**: inverted index on shingles (posting lists + per-doc
@@ -16,11 +17,13 @@ All variants follow the same scale discipline:
   materialized.
 
 Tokenization, shingling and grouping are Catalyst expressions; the per-doc
-signatures (``with_minhash``, ``simhash32``) and the n-gram pair counter are
-vectorized Arrow kernels (``pandas_udf`` / ``mapInPandas``), never row-at-a-
-time Python UDFs. Every hash is sha256-derived and bit-identical to the
-SQL side (``sha2``, :func:`operators.text.hash64`), so every operator has a
-value-exact DuckDB oracle (see ``oracle_sql.py``).
+signatures (``with_minhash``, ``simhash32``), the LSH pair expansion and the
+n-gram pair counter are vectorized Arrow kernels (``pandas_udf`` /
+``mapInArrow`` / ``mapInPandas``), never row-at-a-time Python UDFs. Every
+"group → capped a<b pairs" step goes through one numpy helper pair,
+:func:`sorted_runs` + :func:`run_pairs`. Every hash is sha256-derived and
+bit-identical to the SQL side (``sha2``, :func:`operators.text.hash64`), so
+every operator has a value-exact DuckDB oracle (see ``oracle_sql.py``).
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -128,27 +132,33 @@ def with_minhash(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFra
     )
 
 
-def minhash_bands(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
-    """LSH banding: (doc_id, band, band_hash). Docs sharing a (band,
-    band_hash) bucket are near-dup candidates; the collision probability of
-    a band is jaccard^(rows_per_band), so with 4x4 a 0.9-similar pair is
-    caught with p ~ 1-(1-0.9^4)^4 ~ 0.97 while random pairs never collide."""
-    rows = N_MINHASHES // n_bands
+def minhash_bands(sig: DataFrame) -> DataFrame:
+    """LSH banding: (doc_id, band, key_hi, key_lo). Docs sharing a (band,
+    key_hi, key_lo) bucket are near-dup candidates; the collision probability
+    of a band is jaccard^(rows_per_band), so with 4x4 a 0.9-similar pair is
+    caught with p ~ 1-(1-0.9^4)^4 ~ 0.97 while random pairs never collide.
+
+    The bucket key is the band's 4 minhashes themselves, not a hash of
+    them: each minhash is < 2^31, so two pack exactly into one long
+    (``key_hi`` = m0·2^31 + m1 of the band, ``key_lo`` = m2·2^31 + m3).
+    Equal keys mean equal minhash tuples, which is the same pairing the SQL
+    oracle gets from equal sha256 digests of the comma-joined tuple."""
+    rows = N_MINHASHES // N_BANDS
+
+    def pack(j):
+        return F.shiftleft(F.col(f"m{j}"), 31) + F.col(f"m{j + 1}")
+
     bands = [
         F.struct(
             F.lit(b).alias("band"),
-            F.sha2(
-                F.concat_ws(
-                    ",", *[F.col(f"m{b * rows + r}").cast("string") for r in range(rows)]
-                ),
-                256,
-            ).alias("band_hash"),
+            pack(b * rows).alias("key_hi"),
+            pack(b * rows + 2).alias("key_lo"),
         )
-        for b in range(n_bands)
+        for b in range(N_BANDS)
     ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
+    return sig.select("doc_id", F.explode(F.array(*bands)).alias("bb")).select(
+        "doc_id", "bb.band", "bb.key_hi", "bb.key_lo"
+    )
 
 
 #: Default group-size cap for pair expansion. A bucket/posting list of k docs
@@ -160,39 +170,47 @@ def minhash_bands(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
 MAX_GROUP_SIZE = 512
 
 
-def _expand_pairs(grouped: DataFrame, max_group_size: int | None) -> DataFrame:
-    """Sorted-doc-list groups → (doc_a < doc_b) pairs with collision counts.
+def sorted_runs(keys, within=None):
+    """Runs of equal rows: ``(order, starts, sizes)`` for the row-aligned
+    numpy arrays ``keys`` (most significant first). ``order`` sorts the rows
+    by ``keys`` and then by ``within``; run ``r`` is
+    ``order[starts[r] : starts[r] + sizes[r]]``."""
+    tie = () if within is None else (within,)
+    order = np.lexsort((*tie, *keys[::-1]))
+    new = np.zeros(len(order), dtype=bool)
+    new[:1] = True
+    for k in keys:
+        s = k[order]
+        new[1:] |= s[1:] != s[:-1]
+    starts = np.flatnonzero(new)
+    return order, starts, np.diff(np.append(starts, len(order)))
 
-    Shared pair-expansion tail of :func:`lsh_candidate_pairs` and
-    :func:`ngram_jaccard_pairs`: in-list expansion (flatten/transform), NOT a
-    self-join, so the upstream pipeline is evaluated once and pair generation
-    is output-linear per group. Groups larger than ``max_group_size`` are
-    dropped — never silently: count them with :func:`oversize_groups` and log
-    alongside the job."""
-    if max_group_size is not None:
-        grouped = grouped.filter(F.size("docs") <= max_group_size)
-    # posexplode the sorted list, then explode the strictly-later slice:
-    # pairing each doc with every later doc gives doc_a < doc_b exactly once
-    # per group. Deliberately generator+slice (codegen), NOT a nested
-    # transform lambda building pair structs — higher-order lambdas are
-    # interpreted in Spark 4 and the lambda form measured +1.5s of the whole
-    # ngram_jaccard query at sf0.1 (the r4 "drift"); this form is pure
-    # whole-stage-codegen and ~30% faster end to end. posexplode is 0-based,
-    # slice is 1-based, so the later-docs slice starts at i + 2.
-    a = grouped.select(F.col("docs"), F.posexplode("docs").alias("i", "doc_a"))
-    pairs = a.select(
-        "doc_a",
-        F.explode(
-            F.slice(F.col("docs"), F.col("i") + F.lit(2), F.size("docs"))
-        ).alias("doc_b"),
-    )
-    return pairs.groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_collisions"))
+
+def run_pairs(order, starts, sizes, cap: int | None):
+    """The (a, b) row-index pairs of every run of :func:`sorted_runs` with
+    ``2 <= size <= cap`` (``cap=None``: no upper bound), ``a`` before ``b``
+    in run order — each unordered pair of a run exactly once. Runs over the
+    cap are dropped here, the one place the cap rule lives; audit them with
+    :func:`oversize_groups`. Pairs are built per distinct run size, one
+    ``triu_indices`` broadcast over all runs of that size."""
+    live = sizes >= 2
+    if cap is not None:
+        live &= sizes <= cap
+    a_parts, b_parts = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for size in np.unique(sizes[live]):
+        ii, jj = np.triu_indices(size, k=1)
+        s = starts[live & (sizes == size)][:, None]
+        a_parts.append(order[(s + ii).ravel()])
+        b_parts.append(order[(s + jj).ravel()])
+    return np.concatenate(a_parts), np.concatenate(b_parts)
 
 
 def oversize_groups(grouped: DataFrame, max_group_size: int) -> DataFrame:
-    """Diagnostic for the cap in :func:`_expand_pairs`: the dropped groups
-    with their sizes, so a production job can count/log what was truncated
-    (no silent caps). Works on any (group keys..., docs) grouping."""
+    """Diagnostic for the pair-expansion cap (:func:`run_pairs`, the
+    ``max_doc_freq`` filter of :func:`ngram_jaccard_pairs`): the dropped
+    groups with their sizes, so a production job can count/log what was
+    truncated (no silent caps). Works on any (group keys..., docs)
+    grouping."""
     return grouped.filter(F.size("docs") > max_group_size).select(
         *[c for c in grouped.columns if c != "docs"],
         F.size("docs").alias("n_docs"),
@@ -200,9 +218,10 @@ def oversize_groups(grouped: DataFrame, max_group_size: int) -> DataFrame:
 
 
 def lsh_band_buckets(bands: DataFrame) -> DataFrame:
-    """(band, band_hash, docs): colliding docs per LSH bucket, sorted."""
+    """(band, key_hi, key_lo, docs): colliding docs per LSH bucket, sorted —
+    the audit view for :func:`oversize_groups`."""
     return (
-        bands.groupBy("band", "band_hash")
+        bands.groupBy("band", "key_hi", "key_lo")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
         .filter(F.size("docs") > 1)
     )
@@ -211,16 +230,39 @@ def lsh_band_buckets(bands: DataFrame) -> DataFrame:
 def lsh_candidate_pairs(
     bands: DataFrame, max_bucket_size: int | None = MAX_GROUP_SIZE
 ) -> DataFrame:
-    """Near-dup candidate pairs from band-bucket collisions, with the number
-    of agreeing bands kept as evidence strength.
+    """Near-dup candidate pairs (doc_a < doc_b) from band-bucket collisions,
+    with the number of agreeing bands kept as evidence strength
+    (``n_shared_bands``).
 
-    Buckets larger than ``max_bucket_size`` (boilerplate, not near-dups) are
-    dropped before pair expansion, bounding both the per-row array size and
-    the k²/2 pair blow-up at corpus scale; audit the drops with
-    ``oversize_groups(lsh_band_buckets(bands), max_bucket_size)``."""
-    buckets = lsh_band_buckets(bands)
-    return _expand_pairs(buckets, max_bucket_size).withColumnRenamed(
-        "n_collisions", "n_shared_bands"
+    Plan: ``repartition(band, key) → mapInArrow(pairs) → groupBy(doc_a,
+    doc_b).count()``. The hash partitioning puts every bucket whole inside
+    one task, and the kernel concatenates its partition before grouping, so
+    a bucket split across Arrow batches keeps all of its pairs. Buckets
+    larger than ``max_bucket_size`` (boilerplate, not near-dups) are dropped
+    by :func:`run_pairs`, bounding the k²/2 pair blow-up at corpus scale;
+    audit the drops with ``oversize_groups(lsh_band_buckets(bands),
+    max_bucket_size)``."""
+    key = ["band", "key_hi", "key_lo"]
+
+    def kernel(batches):
+        parts = [b for b in batches if b.num_rows]
+        if not parts:
+            return
+        t = pa.Table.from_batches(parts)
+        ids = t.column("doc_id").to_numpy()
+        keys = [t.column(c).to_numpy() for c in key]
+        a, b = run_pairs(*sorted_runs(keys, within=ids), max_bucket_size)
+        if len(a):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids[a]), pa.array(ids[b])], names=["doc_a", "doc_b"]
+            )
+
+    par = bands.sparkSession.sparkContext.defaultParallelism
+    return (
+        bands.repartition(par, *key)
+        .mapInArrow(kernel, "doc_a long, doc_b long")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_shared_bands"))
     )
 
 
@@ -315,7 +357,7 @@ def _pair_count_kernel(threshold: float):
     emission is one shared shingle of that ordered pair, and ALL emissions
     of a pair share the same ``pa``, so after the pa-partitioning the
     GLOBAL pair count is computable entirely inside one task: concatenate
-    the partition's emissions, lexsort, run-length count — no 10^8-key
+    the partition's emissions, count runs (:func:`sorted_runs`) — no 10^8-key
     hash aggregation, no exchange of per-pair rows at all (the r5 form
     shuffled ~114M distinct (doc_a, doc_b) struct keys through a count
     groupBy at sf1: 90% of pairs share exactly ONE shingle and exist only
@@ -323,8 +365,6 @@ def _pair_count_kernel(threshold: float):
     aggregate). The jaccard division is the same single IEEE-double op on
     exact ints as the expression form (numpy true_divide == Spark's
     double division), so values stay bit-identical to the oracle."""
-    import numpy as np
-    import pandas as pd
 
     def kernel(batches):
         # tails arrive as list<long> cells, NOT pre-exploded flat rows: the
@@ -348,14 +388,8 @@ def _pair_count_kernel(threshold: float):
             return
         a = np.concatenate(a_parts)
         bb = np.concatenate(b_parts).astype(np.int64)
-        order = np.lexsort((bb, a))
-        a, bb = a[order], bb[order]
-        new = np.empty(len(a), dtype=bool)
-        new[0] = True
-        np.logical_or(a[1:] != a[:-1], bb[1:] != bb[:-1], out=new[1:])
-        starts = np.flatnonzero(new)
-        counts = np.diff(np.append(starts, len(a)))
-        pa_u, pb_u = a[starts], bb[starts]
+        order, starts, counts = sorted_runs([a, bb])
+        pa_u, pb_u = a[order[starts]], bb[order[starts]]
         nsh_a = pa_u & (_PACK - 1)
         nsh_b = pb_u & (_PACK - 1)
         jac = counts / (nsh_a + nsh_b - counts)  # exact ints, one IEEE div

@@ -14,16 +14,18 @@ engines, is a safe cross-engine sort key even for unnormalized embeddings
 (ranking by raw dot would be cosine-equivalent only for unit-norm vectors).
 
 Scale notes:
-- brute-force top-k broadcasts the (small) query set against the full corpus
-  — embarrassingly parallel, no shuffle on the corpus side, O(Q*N) compute.
-  Correct baseline; use for Q << N.
+- every ANN top-k (brute force, LSH, IVF) is one map-side scorer,
+  :func:`_map_side_topk`: the (small) query set is broadcast into one Arrow
+  kernel over the corpus — embarrassingly parallel, no shuffle and no join
+  on the corpus side. Brute force scores every row, O(Q*N) compute: the
+  correct baseline, for Q << N.
 - LSH bucketing assigns each vector an 8-bit random-hyperplane signature
-  (deterministic planes derived from sha256). ANN search joins query and
-  corpus *within buckets* (expected N/256 candidates per query), turning
-  O(Q*N) into O(Q*N/2^planes); multi-probe (also searching all buckets at
-  Hamming distance 1) trades 9x candidates for near-exact recall. Bucket
-  skew is bounded because hyperplane cuts are near-balanced for centered
-  data.
+  (deterministic planes derived from sha256). ANN search scores only the
+  corpus rows that land *in a bucket the query probes* (expected N/256
+  candidates per query), turning O(Q*N) into O(Q*N/2^planes); multi-probe
+  (also searching all buckets at Hamming distance 1) trades 9x candidates
+  for near-exact recall. Bucket skew is bounded because hyperplane cuts
+  are near-balanced for centered data.
 - near-dup at corpus scale: :func:`near_dup_pairs_lsh` — candidates are
   banded-bucket collisions (in-bucket pair expansion, candidate-linear),
   never all-pairs. :func:`near_dup_pairs` (exact all-pairs) is the
@@ -61,6 +63,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from airbyte_module_spark.operators.dedup import MAX_GROUP_SIZE, run_pairs, sorted_runs
+
 N_PLANES = 8
 PLANE_DIM = 64
 QUANT = 1000
@@ -91,7 +95,10 @@ def _quantize_np(vectors) -> np.ndarray:
     INT64_MIN), which would flow silent garbage into every downstream
     dot/cosine — the pre-kernel Catalyst form propagated null and dropped
     the pair, so the kernel must not invent values where the expression
-    form had none."""
+    form had none. An empty batch quantizes to an empty (0, PLANE_DIM)
+    matrix, so no kernel needs an empty-batch branch."""
+    if len(vectors) == 0:
+        return np.empty((0, PLANE_DIM), np.int64)
     if any(len(x) != PLANE_DIM for x in vectors):
         raise ValueError(
             f"embedding length != {PLANE_DIM} (vec_id column has a short/long vector)"
@@ -148,12 +155,9 @@ def _quantize_norm_arrow(e: pd.Series) -> pd.DataFrame:
     on exact .5 fractions) — bit-identical to Spark's ``F.round`` HALF_UP
     and DuckDB's ``round()`` on this data (equality pinned against the
     expression form by tests and the oracle gate)."""
-    if len(e) == 0:
-        return pd.DataFrame(
-            {"qv": pd.Series([], dtype=object), "norm2": pd.Series([], dtype="int64")}
-        )
     Q = _quantize_np(e)
-    return pd.DataFrame({"qv": list(Q), "norm2": (Q * Q).sum(axis=1)})
+    qv = pd.Series(list(Q), dtype=object)  # object even when empty: list<long>
+    return pd.DataFrame({"qv": qv, "norm2": (Q * Q).sum(axis=1)})
 
 
 def with_quantized(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -213,20 +217,34 @@ def _collect_quantized(
     pdf = (
         emb.filter(F.col(vec_col).isNotNull()).select("vec_id", vec_col).toPandas()
     )
-    if len(pdf) == 0:
-        return (
-            np.empty(0, np.int64),
-            np.empty((0, PLANE_DIM), np.int64),
-            np.empty(0, np.int64),
-        )
     return _pdf_to_quantized(pdf, vec_col)
 
 
-def _srp_planes(
-    n_bands: int, rows_per_band: int, stride: int | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """(planes matrix, bit weights) for SRP codes — shared by every LSH
-    kernel so they all compute identical buckets."""
+def _cosine(D: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """Cosine matrix of exact int64 dots ``D`` (rows x cols) from the row
+    and column squared norms: ONE sqrt of the exact int64 norm PRODUCT (not
+    sqrt*sqrt) and one divide — bit-identical to the SQL oracle's
+    ``dot / sqrt((na*nb)::DOUBLE)``. A zero norm gives NaN; callers mask
+    those rows."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return D / np.sqrt((na[:, None] * nb[None, :]).astype(np.float64))
+
+
+def _srp_codes_np(
+    Q: np.ndarray, n_bands: int, rows_per_band: int, stride: int | None = None
+) -> np.ndarray:
+    """(n_rows, n_bands) SRP bucket codes of an already-quantized matrix:
+    bit r of band b = (qv · plane_{b·stride+r}) >= 0, exact int64 math.
+    Shared by every LSH kernel (:func:`lsh_buckets`, :func:`ann_lsh`,
+    :func:`banded_buckets`) so they all compute identical buckets.
+
+    ``stride`` is the plane-index distance between consecutive bands
+    (default ``rows_per_band`` — dense assignment). The banded near-dup
+    path passes a FIXED stride (:data:`NEARDUP_R_MAX`) larger than
+    ``rows_per_band`` so that growing the adaptive code width only APPENDS
+    planes to each band: the r-bit bucket is exactly the low-r-bit
+    truncation of the full-width code, which is what lets the SQL oracle
+    mirror adaptivity with one static code expression and a modulus."""
     if stride is None:
         stride = rows_per_band
     assert stride >= rows_per_band
@@ -237,23 +255,6 @@ def _srp_planes(
         dtype=np.int64,
     )
     weights = 1 << np.arange(rows_per_band, dtype=np.int64)
-    return planes, weights
-
-
-def _srp_codes_np(
-    Q: np.ndarray, n_bands: int, rows_per_band: int, stride: int | None = None
-) -> np.ndarray:
-    """(n_rows, n_bands) SRP bucket codes of an already-quantized matrix:
-    bit r of band b = (qv · plane_{b·stride+r}) >= 0, exact int64 math.
-
-    ``stride`` is the plane-index distance between consecutive bands
-    (default ``rows_per_band`` — dense assignment). The banded near-dup
-    path passes a FIXED stride (:data:`NEARDUP_R_MAX`) larger than
-    ``rows_per_band`` so that growing the adaptive code width only APPENDS
-    planes to each band: the r-bit bucket is exactly the low-r-bit
-    truncation of the full-width code, which is what lets the SQL oracle
-    mirror adaptivity with one static code expression and a modulus."""
-    planes, weights = _srp_planes(n_bands, rows_per_band, stride)
     bits = (Q @ planes.T) >= 0
     return (bits.reshape(len(Q), n_bands, rows_per_band) * weights).sum(axis=2)
 
@@ -270,20 +271,12 @@ def lsh_buckets(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     pass (guide §4.4). The fused kernel is marked non-deterministic so the
     optimizer may not duplicate it; no filter needs to cross it (the only
     predicate above it is the zero-norm drop on its own output)."""
-    planes, weights = _srp_planes(1, N_PLANES)
 
     @pandas_udf("norm2 long, bucket long")
     def k(e: pd.Series) -> pd.DataFrame:
-        if len(e) == 0:
-            return pd.DataFrame(
-                {"norm2": pd.Series([], dtype="int64"),
-                 "bucket": pd.Series([], dtype="int64")}
-            )
         Q = _quantize_np(e.to_numpy())
-        bits = (Q @ planes.T) >= 0
-        return pd.DataFrame(
-            {"norm2": (Q * Q).sum(axis=1), "bucket": (bits * weights).sum(axis=1)}
-        )
+        bucket = _srp_codes_np(Q, 1, N_PLANES)[:, 0]
+        return pd.DataFrame({"norm2": (Q * Q).sum(axis=1), "bucket": bucket})
 
     kernel = k.asNondeterministic()
     out = emb.filter(F.col(vec_col).isNotNull()).select(
@@ -307,17 +300,22 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def ann_brute_force(
-    emb: DataFrame, n_queries: int = 10, k: int = 5, vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact cosine top-k: the first ``n_queries`` vec_ids are the query set,
-    broadcast against the whole corpus; rank by (cosine desc, vec_id) per
-    query. Output: (query_id, neighbor_id, rank, dot_q, cosine).
+_TOPK_SCHEMA = "query_id long, neighbor_id long, dot_q long, cosine double"
 
-    Execution is MAP-SIDE TOP-K: the (tiny) quantized query matrix is
-    broadcast, each corpus partition scores its own rows with one numpy
-    int64 matmul and emits only its per-batch top-k per query, and the
-    final rank window sees Q·k·partitions candidate rows instead of Q·N
+
+def _map_side_topk(
+    emb: DataFrame, n_queries: int, k: int, vec_col: str, cells=None
+) -> DataFrame:
+    """The one cosine top-k scorer behind :func:`ann_brute_force`,
+    :func:`ann_lsh` and :func:`ann_ivf`: the first ``n_queries`` vec_ids
+    are the query set; output (query_id, neighbor_id, rank, dot_q, cosine),
+    ranked by (cosine desc, neighbor_id) per query.
+
+    Execution is MAP-SIDE TOP-K: the queries are collected once (a tiny
+    pushed-down scan) and quantized driver-side, the (tiny) query matrix is
+    broadcast, each corpus batch is quantized and scored with one exact
+    numpy int64 matmul, and only its per-batch top-k per query is emitted,
+    so the final rank window sees Q·k·batches candidate rows instead of Q·N
     scored pairs. Per-batch top-k uses the identical (cosine desc,
     neighbor_id asc) order as the global window, so the global winners are
     always inside the surviving candidates — exactness is unchanged while
@@ -326,6 +324,14 @@ def ann_brute_force(
     10^8 vectors that window IS the job). Math is bit-identical to the
     DuckDB oracle: exact int64 dot/norms, one IEEE-double sqrt+divide.
 
+    ``cells`` restricts the candidates: ``cells(QM, q_norms)`` returns
+    ``(cell_of, probe)``, where ``cell_of(C, norms)`` maps each quantized
+    corpus row to a cell index and ``probe[q, cell]`` says whether query
+    ``q`` searches that cell. ``cell_of`` rides the kernel closure (plain
+    pickle, which the broadcast uses, cannot serialize a local function);
+    ``probe`` rides the broadcast with the queries. ``cells=None`` scores
+    every row (brute force).
+
     Zero-norm vectors are excluded on BOTH sides (the
     :func:`with_quantized` contract): their cosine is 0/0 = NaN, which
     Spark's window ranks above every real cosine while ``np.lexsort``
@@ -333,37 +339,30 @@ def ann_brute_force(
     disagree on which candidates survive, silently breaking exactness.
     Masking them out gives both forms (and the oracle, whose fixtures
     have no zero vectors) one defined semantics."""
+    spark = emb.sparkSession
     corpus = emb.filter(F.col(vec_col).isNotNull()).select("vec_id", vec_col)
-    qrows = (
-        corpus.filter(F.col("vec_id") < n_queries).collect()
-    )  # tiny pushed-down scan; queries ride a broadcast, never a join
-    out_schema = "query_id long, neighbor_id long, dot_q long, cosine double"
-    if not qrows:
-        empty = emb.sparkSession.createDataFrame([], out_schema)
-        return _rank_topk(empty, k)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    QM = _quantize_np([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    q_norms = (QM * QM).sum(axis=1)
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, QM, q_norms))
+    q_ids, QM, q_norms = _collect_quantized(
+        corpus.filter(F.col("vec_id") < n_queries), vec_col
+    )  # queries ride a broadcast, never a join; zero-norm queries are dropped
+    if not len(q_ids):
+        return _rank_topk(spark.createDataFrame([], _TOPK_SCHEMA), k)
+    cell_of, probe = cells(QM, q_norms) if cells else (None, None)
+    bc = spark.sparkContext.broadcast((q_ids, QM, q_norms, probe))
 
     def score(batches):
-        q_ids, QM, q_norms = bc.value
-        live_q = np.nonzero(q_norms > 0)[0]  # zero-norm query: no results
+        q_ids, QM, q_norms, probe = bc.value
         for b in batches:
-            if len(b) == 0:
-                continue
             ids = b["vec_id"].to_numpy().astype(np.int64)
             C = _quantize_np(b[vec_col].to_numpy())
             norms = (C * C).sum(axis=1)
             D = QM @ C.T  # exact int64, (n_queries, batch)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = D / np.sqrt(
-                    (q_norms[:, None] * norms[None, :]).astype(np.float64)
-                )
-            for qi in live_q:
-                cand = np.nonzero((ids != q_ids[qi]) & (norms > 0))[0]
-                order = np.lexsort((ids[cand], -cos[qi, cand]))[:k]
-                sel = cand[order]
+            cos = _cosine(D, q_norms, norms)
+            keep = (norms > 0)[None, :] & (ids[None, :] != q_ids[:, None])
+            if cell_of is not None:
+                keep &= probe[:, cell_of(C, norms)]
+            for qi in range(len(q_ids)):
+                cand = np.flatnonzero(keep[qi])
+                sel = cand[np.lexsort((ids[cand], -cos[qi, cand]))[:k]]
                 if len(sel):
                     yield pd.DataFrame(
                         {
@@ -374,7 +373,17 @@ def ann_brute_force(
                         }
                     )
 
-    return _rank_topk(corpus.mapInPandas(score, schema=out_schema), k)
+    return _rank_topk(corpus.mapInPandas(score, schema=_TOPK_SCHEMA), k)
+
+
+def ann_brute_force(
+    emb: DataFrame, n_queries: int = 10, k: int = 5, vec_col: str = "embedding"
+) -> DataFrame:
+    """Exact cosine top-k: the first ``n_queries`` vec_ids are the query set,
+    scored against the whole corpus; rank by (cosine desc, vec_id) per
+    query. Output: (query_id, neighbor_id, rank, dot_q, cosine). Runs the
+    map-side scorer (:func:`_map_side_topk`) with no candidate filter."""
+    return _map_side_topk(emb, n_queries, k, vec_col)
 
 
 def ann_lsh(
@@ -391,72 +400,28 @@ def ann_lsh(
     on the other side; measured recall@5 goes from ~0.5 single-probe to
     ~0.9+). Same output shape as :func:`ann_brute_force`.
 
-    Execution is MAP-SIDE (the :func:`ann_brute_force` shape): the (tiny)
-    quantized query matrix with its probe-bucket sets rides a broadcast
-    into ONE fused Arrow kernel that buckets each corpus batch, keeps the
-    rows landing in a probe bucket, and scores exactly those candidates
-    with one numpy int64 matmul. The former bucket-equi-join form was
-    candidate-linear too, but its plan chained two corpus-wide Python
-    kernels (quantize, codes), cloned them under filter pushdown (18
-    ArrowEvalPython nodes executed — guide §4.4), and paid a third Python
-    hop for the pair dot; one kernel does all of it in a single boundary
-    crossing. Candidates and scores are identical: each corpus vector
-    lives in exactly one bucket and probe buckets are distinct, so
-    membership-in-probe-set equals the old join condition row for row."""
-    spark = emb.sparkSession
-    out_schema = "query_id long, neighbor_id long, dot_q long, cosine double"
-    corpus = emb.filter(F.col(vec_col).isNotNull()).select("vec_id", vec_col)
-    qrows = corpus.filter(F.col("vec_id") < n_queries).collect()
-    planes, weights = _srp_planes(1, N_PLANES)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    if len(qrows):
-        QM = _quantize_np([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        q_norms = (QM * QM).sum(axis=1)
-        live = q_norms > 0  # zero-norm query: no bucket, no results
-        q_ids, QM, q_norms = q_ids[live], QM[live], q_norms[live]
-    if not len(q_ids):
-        return _rank_topk(spark.createDataFrame([], out_schema), k)
-    qbits = (QM @ planes.T) >= 0
-    qbuck = (qbits * weights).sum(axis=1)
-    if multiprobe:
-        flips = (1 << np.arange(N_PLANES, dtype=np.int64))[None, :]
-        probes = np.concatenate([qbuck[:, None], qbuck[:, None] ^ flips], axis=1)
-    else:
-        probes = qbuck[:, None]
-    bc = spark.sparkContext.broadcast((q_ids, QM, q_norms, probes))
+    Execution is the map-side scorer (:func:`_map_side_topk`) with SRP
+    buckets as cells: the queries' probe-bucket sets ride the broadcast,
+    and each corpus batch is bucketed (:func:`_srp_codes_np`, the same
+    planes as :func:`lsh_buckets`) inside the one scoring kernel, which
+    keeps only the rows landing in a probe bucket. The former
+    bucket-equi-join form was candidate-linear too, but its plan chained
+    two corpus-wide Python kernels (quantize, codes), cloned them under
+    filter pushdown (18 ArrowEvalPython nodes executed — guide §4.4), and
+    paid a third Python hop for the pair dot; one kernel does all of it in
+    a single boundary crossing. Candidates and scores are identical: each
+    corpus vector lives in exactly one bucket and probe buckets are
+    distinct, so membership-in-probe-set equals the old join condition row
+    for row."""
 
-    def score(batches):
-        b_qids, b_QM, b_qnorms, b_probes = bc.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b["vec_id"].to_numpy().astype(np.int64)
-            C = _quantize_np(b[vec_col].to_numpy())
-            norms = (C * C).sum(axis=1)
-            buck = (((C @ planes.T) >= 0) * weights).sum(axis=1)
-            D = b_QM @ C.T  # exact int64, (n_queries, batch)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = D / np.sqrt(
-                    (b_qnorms[:, None] * norms[None, :]).astype(np.float64)
-                )
-            for qi in range(len(b_qids)):
-                m = (
-                    (norms > 0)
-                    & (ids != b_qids[qi])
-                    & np.isin(buck, b_probes[qi])
-                )
-                sel = np.nonzero(m)[0]
-                if len(sel):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": b_qids[qi],
-                            "neighbor_id": ids[sel],
-                            "dot_q": D[qi, sel],
-                            "cosine": cos[qi, sel],
-                        }
-                    )
+    def cells(QM, q_norms):
+        flips = [0] + ([1 << i for i in range(N_PLANES)] if multiprobe else [])
+        probes = _srp_codes_np(QM, 1, N_PLANES) ^ np.array(flips)  # (n_q, probes)
+        probe = np.zeros((len(QM), 1 << N_PLANES), dtype=bool)
+        np.put_along_axis(probe, probes, True, axis=1)
+        return (lambda C, norms: _srp_codes_np(C, 1, N_PLANES)[:, 0]), probe
 
-    return _rank_topk(corpus.mapInPandas(score, schema=out_schema), k)
+    return _map_side_topk(emb, n_queries, k, vec_col, cells)
 
 
 N_IVF_CELLS = 64
@@ -536,10 +501,10 @@ def corpus_count(df: DataFrame) -> int:
 
 def _train_centroids_np(
     emb: DataFrame, n_cells: int, vec_col: str
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+) -> tuple[np.ndarray, np.ndarray] | None:
     """TRAINED coarse quantizer: deterministic Lloyd (k-means) refinement of
     the first-``n_cells`` seed, run in the driver over a modulus-capped
-    sample. Returns (cell ids 0..k-1, centroid int64 matrix, norms), or
+    sample. Returns (centroid int64 matrix, norms) — row c is cell c — or
     ``None`` for an empty corpus.
 
     Every step is integer-exact or correctly-rounded IEEE, so the DuckDB
@@ -578,8 +543,6 @@ def _train_centroids_np(
         .select("vec_id", vec_col)
         .toPandas()
     )
-    if len(spdf) == 0:
-        return None
     s_ids, S, sn = _pdf_to_quantized(spdf, vec_col)
     if len(s_ids) == 0:
         return None
@@ -587,8 +550,7 @@ def _train_centroids_np(
     C = S[:k].copy()
     cn = sn[:k].copy()
     for _ in range(KMEANS_ITERS):
-        cos = (S @ C.T) / np.sqrt(np.outer(sn, cn).astype(np.float64))
-        assign = np.argmax(cos, axis=1)  # first max == (cos desc, cell asc)
+        assign = _nearest_cell(S, sn, C, cn)
         for c in range(k):
             members = assign == c
             cnt = int(members.sum())
@@ -600,7 +562,20 @@ def _train_centroids_np(
                 continue
             C[c] = mv
             cn[c] = mn
-    return np.arange(k, dtype=np.int64), C, cn
+    return C, cn
+
+
+def _nearest_cell(
+    Q: np.ndarray, n2: np.ndarray, CM: np.ndarray, c_norms: np.ndarray
+) -> np.ndarray:
+    """Cell of each quantized row: argmax cosine(row, centroid) over exact
+    int64 dots and one IEEE-double sqrt+divide, FIRST maximum on ties — the
+    (cosine desc, cell asc) order the SQL oracle uses. Shared by Lloyd
+    training, :func:`ivf_assign` and :func:`ann_ivf`'s scoring kernel.
+    Zero-norm rows have NaN cosine everywhere and get cell 0; every caller
+    drops them before anything reads the value."""
+    cos = _cosine(Q @ CM.T, n2, c_norms)
+    return np.argmax(np.nan_to_num(cos, nan=-np.inf), axis=1)
 
 
 def _train_centroids(emb: DataFrame, n_cells: int, vec_col: str):
@@ -622,13 +597,12 @@ def ivf_assign(
     emb: DataFrame,
     n_cells: int = N_IVF_CELLS,
     vec_col: str = "embedding",
-    _trained=None,
     cells_only: bool = False,
 ) -> DataFrame:
     """IVF coarse assignment: (vec_id, qv, norm2, cell) with cell = argmax
-    cosine(v, centroid), tiebreak lowest cell id. Centroids come from the
-    trained quantizer (:func:`_train_centroids_np` — driver-side Lloyd over
-    a capped sample; pass ``_trained`` to reuse an already-trained set).
+    cosine(v, centroid), tiebreak lowest cell id (:func:`_nearest_cell`).
+    Centroids come from the trained quantizer (:func:`_train_centroids_np`
+    — driver-side Lloyd over a capped sample, memoized per corpus).
     ``cells_only=True`` returns just (vec_id, cell) and skips shipping the
     int64 vector arrays back across the Arrow boundary (the struct<array>
     column was most of the kernel's per-row cost; the cells query never
@@ -641,45 +615,28 @@ def ivf_assign(
     ``norm2 > 0`` filter pushdown cloned them below the filter (6
     ArrowEvalPython nodes executed for one logical pass — guide §4.4); the
     fused kernel is non-deterministic so the optimizer may not duplicate
-    it. argmax takes the FIRST maximum and centroid rows are ordered by
-    cell id, so the tiebreak is identical; cosine doubles are the same
-    IEEE ops as the expression form (oracle-pinned). Zero-norm rows are
-    assigned a placeholder inside the kernel and dropped by the norm2
-    filter, exactly like the former with_quantized chain."""
-    trained = _trained if _trained is not None else _train_centroids(
-        emb, n_cells, vec_col
-    )
+    it. Cosine doubles are the same IEEE ops as the expression form
+    (oracle-pinned). Zero-norm rows get a placeholder cell inside the
+    kernel and are dropped by the norm2 filter, exactly like the former
+    with_quantized chain."""
+    trained = _train_centroids(emb, n_cells, vec_col)
     if trained is None:
         q = with_quantized(emb, vec_col)
         out = q.withColumn("cell", F.lit(None).cast("long"))
         return out.select("vec_id", "cell") if cells_only else out
-    c_ids, CM, c_norms = trained
-    bc = emb.sparkSession.sparkContext.broadcast((c_ids, CM, c_norms))
+    bc = emb.sparkSession.sparkContext.broadcast(trained)
     fields = "norm2 long, cell long" if cells_only else (
         "qv array<long>, norm2 long, cell long"
     )
 
     @pandas_udf(fields)
     def assign(e: pd.Series) -> pd.DataFrame:
-        cc_ids, CCM, cc_norms = bc.value
-        if len(e) == 0:
-            cols = {"norm2": pd.Series([], dtype="int64"),
-                    "cell": pd.Series([], dtype="int64")}
-            if not cells_only:
-                cols = {"qv": pd.Series([], dtype=object), **cols}
-            return pd.DataFrame(cols)
+        CM, c_norms = bc.value
         Q = _quantize_np(e.to_numpy())
         n2 = (Q * Q).sum(axis=1)
-        D = Q @ CCM.T  # exact int64
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = D / np.sqrt((n2[:, None] * cc_norms[None, :]).astype(np.float64))
-        # zero-norm rows have NaN cosine everywhere; give them cell 0 — the
-        # norm2 > 0 filter drops them before anything reads the value
-        cell = cc_ids[np.argmax(np.nan_to_num(cos, nan=-np.inf), axis=1)]
-        cell = np.where(n2 > 0, cell, 0)
-        cols = {"norm2": n2, "cell": cell}
+        cols = {"norm2": n2, "cell": _nearest_cell(Q, n2, CM, c_norms)}
         if not cells_only:
-            cols = {"qv": list(Q), **cols}
+            cols = {"qv": pd.Series(list(Q), dtype=object), **cols}
         return pd.DataFrame(cols)
 
     kernel = assign.asNondeterministic()
@@ -716,80 +673,32 @@ def ann_ivf(
     0.27-0.39), while IVF cells follow the data's own geometry. Same output
     shape as :func:`ann_brute_force`.
 
-    Execution (r6): MAP-SIDE, one fused Arrow kernel. Queries are collected
-    once (tiny pushed-down scan) and probe cells ranked driver-side with
-    the identical (cosine desc, cell asc) order the former window used
-    (np.lexsort on exact doubles); the kernel gets (query matrix, per-query
-    probe-cell masks, centroid matrix) via broadcast, assigns each corpus
-    batch to cells with one matmul-argmax, and scores exactly the rows
-    whose cell is probed by each query. The r5 form ran assignment and
-    scoring as a broadcast JOIN over a two-kernel quantize chain — 14
-    executed ArrowEvalPython nodes (filter-pushdown cloning, guide §4.4)
-    plus a probe-ranking window; candidates and scores here are
+    Execution: the map-side scorer (:func:`_map_side_topk`) with trained
+    IVF cells. Probe cells are ranked driver-side per query with the
+    (cosine desc, cell asc) order the former window used (a stable argsort
+    of the negated exact doubles; centroid norms are > 0 by construction,
+    so no NaN enters the sort); the probe masks ride the broadcast, the
+    centroid matrix rides the kernel closure, and each corpus batch is
+    assigned to cells with one matmul-argmax (:func:`_nearest_cell`, the
+    :func:`ivf_assign` rule) inside the one scoring kernel. The r5 form ran
+    assignment and scoring as a broadcast JOIN over a two-kernel quantize
+    chain — 14 executed ArrowEvalPython nodes (filter-pushdown cloning,
+    guide §4.4) plus a probe-ranking window; candidates and scores here are
     row-identical (each vector lives in exactly one cell; probe cells are
     distinct per query)."""
-    out_schema = "query_id long, neighbor_id long, dot_q long, cosine double"
-    spark = emb.sparkSession
     trained = _train_centroids(emb, n_cells, vec_col)
     if trained is None:
-        return _rank_topk(spark.createDataFrame([], out_schema), k)
-    c_ids, CM, c_norms = trained
-    corpus = emb.filter(F.col(vec_col).isNotNull()).select("vec_id", vec_col)
-    qrows = corpus.filter(F.col("vec_id") < n_queries).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    if len(qrows):
-        QM = _quantize_np([np.asarray(r[1], dtype=np.float64) for r in qrows])
-        q_norms = (QM * QM).sum(axis=1)
-        live = q_norms > 0  # zero-norm query: no cosine direction, no rows
-        q_ids, QM, q_norms = q_ids[live], QM[live], q_norms[live]
-    if not len(q_ids):
-        return _rank_topk(spark.createDataFrame([], out_schema), k)
-    # probe selection: per query the n_probes best cells by (cosine desc,
-    # cell asc) — np.lexsort reproduces the former row_number window's
-    # order on the same exact doubles (centroid norms are > 0 by
-    # construction, so no NaN enters the sort)
-    qcos = (QM @ CM.T) / np.sqrt(
-        np.outer(q_norms, c_norms).astype(np.float64)
-    )
-    probe_mask = np.zeros((len(q_ids), len(c_ids)), dtype=bool)
-    for qi in range(len(q_ids)):
-        top = np.lexsort((c_ids, -qcos[qi]))[:n_probes]
-        probe_mask[qi, top] = True
-    bc = spark.sparkContext.broadcast((q_ids, QM, q_norms, probe_mask, CM, c_norms))
+        return _rank_topk(emb.sparkSession.createDataFrame([], _TOPK_SCHEMA), k)
+    CM, c_norms = trained
 
-    def score(batches):
-        b_qids, b_QM, b_qnorms, b_mask, b_CM, b_cnorms = bc.value
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b["vec_id"].to_numpy().astype(np.int64)
-            C = _quantize_np(b[vec_col].to_numpy())
-            n2 = (C * C).sum(axis=1)
-            Dc = C @ b_CM.T  # exact int64, (batch, n_cells)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                ccos = Dc / np.sqrt(
-                    (n2[:, None] * b_cnorms[None, :]).astype(np.float64)
-                )
-            cell = np.argmax(np.nan_to_num(ccos, nan=-np.inf), axis=1)
-            D = b_QM @ C.T  # exact int64, (n_queries, batch)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = D / np.sqrt(
-                    (b_qnorms[:, None] * n2[None, :]).astype(np.float64)
-                )
-            for qi in range(len(b_qids)):
-                m = (n2 > 0) & b_mask[qi][cell] & (ids != b_qids[qi])
-                sel = np.nonzero(m)[0]
-                if len(sel):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": b_qids[qi],
-                            "neighbor_id": ids[sel],
-                            "dot_q": D[qi, sel],
-                            "cosine": cos[qi, sel],
-                        }
-                    )
+    def cells(QM, q_norms):
+        qcos = _cosine(QM @ CM.T, q_norms, c_norms)
+        top = np.argsort(-qcos, axis=1, kind="stable")[:, :n_probes]
+        probe = np.zeros((len(QM), len(CM)), dtype=bool)
+        np.put_along_axis(probe, top, True, axis=1)
+        return (lambda C, norms: _nearest_cell(C, norms, CM, c_norms)), probe
 
-    return _rank_topk(corpus.mapInPandas(score, schema=out_schema), k)
+    return _map_side_topk(emb, n_queries, k, vec_col, cells)
 
 
 MAX_VERIFIER_ROWS = 20_000
@@ -873,8 +782,6 @@ def near_dup_pairs(
         # size with BLAS still saturated.
         B_CHUNK = 2048
         for batch in batches:
-            if len(batch) == 0:
-                continue
             raw_ids = batch["vec_id"].to_numpy().astype(np.int64)
             # rows not in the broadcast (null embedding, zero norm, or the
             # id simply absent) are masked out — identical to the former
@@ -894,11 +801,7 @@ def near_dup_pairs(
             for lo in range(0, len(b_ids), B_CHUNK):
                 hi = lo + B_CHUNK
                 D = np.rint(Af @ Bf[lo:hi].T).astype(np.int64)  # exact
-                # ONE sqrt of the int64 norm PRODUCT (not sqrt*sqrt):
-                # bit-identical to the SQL oracle's sqrt((na*nb)::DOUBLE)
-                cos = D / np.sqrt(
-                    (a_norms[:, None] * b_norms[None, lo:hi]).astype(np.float64)
-                )
+                cos = _cosine(D, a_norms, b_norms[lo:hi])
                 mask = (cos >= thr) & (a_ids[:, None] < b_ids[None, lo:hi])
                 ai, bj = np.nonzero(mask)
                 if len(ai):
@@ -984,8 +887,6 @@ def banded_buckets(
 
     def kernel(batches):
         for b in batches:
-            if b.num_rows == 0:
-                continue
             Q = _quantize_np(b.column(1).to_numpy(zero_copy_only=False))
             norm2 = (Q * Q).sum(axis=1)
             keep = norm2 > 0
@@ -1029,7 +930,7 @@ def near_dup_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.45,
     vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
+    max_bucket_size: int | None = MAX_GROUP_SIZE,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at corpus scale: candidate
     pairs come from banded-LSH bucket collisions (:func:`banded_buckets`),
@@ -1037,9 +938,9 @@ def near_dup_pairs_lsh(
     to the all-pairs verifier :func:`near_dup_pairs`); recall per
     :func:`banded_buckets`.
 
-    ``max_bucket_size`` (default: operators.dedup.MAX_GROUP_SIZE) caps a
-    degenerate bucket — a mass-duplicated embedding — exactly like the
-    dedup caps; audit drops with ``oversize_groups``.
+    ``max_bucket_size`` caps a degenerate bucket — a mass-duplicated
+    embedding — exactly like the dedup caps (``None``: uncapped); audit
+    drops with ``oversize_groups``.
 
     Plan: ``banded_buckets → repartition(band, bucket) → mapInArrow(score)
     → distinct``, the same at every corpus size. The exchange carries each
@@ -1048,13 +949,11 @@ def near_dup_pairs_lsh(
     task, and ``score`` concatenates the partition before grouping, so a
     group split across Arrow batches keeps all of its pairs. Within a
     group, members are ordered by vec_id and every a < b pair of a bucket
-    with 2 <= size <= cap is scored once per band, in :data:`PAIR_CHUNK`
-    steps, with exact int64 dots and one IEEE-double sqrt + divide.
+    within the cap (:func:`operators.dedup.run_pairs`) is scored once per
+    band, in :data:`PAIR_CHUNK` steps, with exact int64 dots and one
+    IEEE-double sqrt + divide.
     Cross-band duplicates carry bit-identical scores, and the final
     distinct over the thresholded pairs collapses them."""
-    from airbyte_module_spark.operators.dedup import MAX_GROUP_SIZE
-
-    cap = MAX_GROUP_SIZE if max_bucket_size is None else max_bucket_size
     thr = float(threshold)
 
     def score(batches):
@@ -1064,27 +963,10 @@ def near_dup_pairs_lsh(
         t = pa.Table.from_batches(parts)
         ids = t.column("vec_id").to_numpy()
         n2 = t.column("norm2").to_numpy()
-        band = t.column("band").to_numpy()
-        buck = t.column("bucket").to_numpy()
         Q = t.column("qv").combine_chunks().flatten().to_numpy()
         Q = Q.reshape(-1, PLANE_DIM)
-        order = np.lexsort((ids, buck, band))
-        sb, sk = band[order], buck[order]
-        new = np.empty(len(order), dtype=bool)
-        new[0] = True
-        np.logical_or(sb[1:] != sb[:-1], sk[1:] != sk[:-1], out=new[1:])
-        starts = np.flatnonzero(new)
-        sizes = np.diff(np.append(starts, len(order)))
-        live = (sizes >= 2) & (sizes <= cap)
-        a_parts, b_parts = [], []
-        for s, size in zip(starts[live], sizes[live]):
-            ii, jj = np.triu_indices(size, k=1)
-            a_parts.append(order[s + ii])
-            b_parts.append(order[s + jj])
-        if not a_parts:
-            return
-        ai = np.concatenate(a_parts)
-        bi = np.concatenate(b_parts)
+        keys = [t.column(c).to_numpy() for c in ("band", "bucket")]
+        ai, bi = run_pairs(*sorted_runs(keys, within=ids), max_bucket_size)
         for lo in range(0, len(ai), PAIR_CHUNK):
             a = ai[lo : lo + PAIR_CHUNK]
             b = bi[lo : lo + PAIR_CHUNK]

@@ -354,8 +354,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, LSH-bucketed (the 100 TB path):
-    candidates from bucket collisions via a bucket-equi self-join — no
-    nested-loop join anywhere in the plan (pinned by test_plan_shapes)."""
+    candidates from bucket collisions, expanded inside one Arrow kernel
+    after a (band, bucket) exchange — no join of any kind in the plan
+    (pinned by test_plan_shapes)."""
     from airbyte_module_spark.operators.similarity import near_dup_pairs_lsh
 
     return near_dup_pairs_lsh(_embeddings(spark, sf_dir), threshold=0.45)

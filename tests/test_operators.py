@@ -9,11 +9,28 @@ sensitivity, mapInPandas batch mechanics.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+
+
+@contextmanager
+def arrow_batch_rows(spark, max_records):
+    """Run the block with ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    set to ``max_records`` (``None``: the session default). Small batches
+    split a bucket across several Arrow batches of one partition."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if max_records is not None:
+        spark.conf.set(key, str(max_records))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 # Both fixtures unpersist on teardown: while a cached relation lives, a fresh
@@ -56,9 +73,12 @@ def test_shingles_short_text(spark):
 
 
 # ------------------------------------------------------------------- dedup
-def test_minhash_lsh_finds_true_near_dups(docs):
+@pytest.mark.parametrize("max_records", [None, 50], ids=["default", "50"])
+def test_minhash_lsh_finds_true_near_dups(spark, docs, max_records):
     """Every pair with exact 3-gram jaccard >= 0.8 must be produced as an
-    LSH candidate (banding catches >=0.8 similarity with p ~ 1 at 4x4)."""
+    LSH candidate (banding catches >=0.8 similarity with p ~ 1 at 4x4).
+    With small Arrow batches a band bucket spans several batches of one
+    partition; it must still yield all of its pairs."""
     from airbyte_module_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_bands,
@@ -71,10 +91,11 @@ def test_minhash_lsh_finds_true_near_dups(docs):
         for r in ngram_jaccard_pairs(docs, n=3, threshold=0.8).collect()
     }
     assert true_pairs, "fixture should contain near-duplicate documents"
-    cand = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(minhash_bands(with_minhash(docs))).collect()
-    }
+    with arrow_batch_rows(spark, max_records):
+        cand = {
+            (r["doc_a"], r["doc_b"])
+            for r in lsh_candidate_pairs(minhash_bands(with_minhash(docs))).collect()
+        }
     missed = true_pairs - cand
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
 
@@ -157,6 +178,40 @@ def test_lsh_bucket_cap_drops_pathological_bucket(boilerplate_docs):
     assert all(r["n_docs"] == 40 for r in dropped)
 
 
+def test_run_pairs_cap_boundaries():
+    """The one cap rule of every pair generator, at run sizes 1, 2, cap and
+    cap+1: sizes 2..cap emit each a<b pair once, size 1 emits nothing, cap+1
+    is dropped — unless the cap is None."""
+    import itertools
+
+    import numpy as np
+
+    from airbyte_module_spark.operators.dedup import run_pairs, sorted_runs
+
+    cap = 4
+    rng = np.random.default_rng(3)
+    perm = rng.permutation(1 + 2 + cap + (cap + 1))
+    keys = np.repeat(np.arange(4), [1, 2, cap, cap + 1])[perm]
+    ids = rng.permutation(len(keys)) * 10  # unique, unrelated to row order
+    assert sorted(sorted_runs([keys], within=ids)[2]) == [1, 2, cap, cap + 1]
+
+    def pairs(c):
+        a, b = run_pairs(*sorted_runs([keys], within=ids), c)
+        assert (keys[a] == keys[b]).all()
+        return sorted(zip(ids[a].tolist(), ids[b].tolist()))
+
+    def expected(runs):
+        return sorted(
+            p
+            for k in runs
+            for p in itertools.combinations(sorted(ids[keys == k].tolist()), 2)
+        )
+
+    assert pairs(cap) == expected([1, 2])
+    assert pairs(None) == expected([1, 2, 3])
+    assert pairs(1) == []
+
+
 def test_ngram_df_cap_drops_stop_shingles(boilerplate_docs):
     from airbyte_module_spark.operators.dedup import (
         ngram_jaccard_pairs,
@@ -213,11 +268,7 @@ def test_near_dup_lsh_matches_allpairs_within_buckets(spark, emb, max_records):
         near_dup_pairs_lsh,
     )
 
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    if max_records is not None:
-        spark.conf.set(key, str(max_records))
-    try:
+    with arrow_batch_rows(spark, max_records):
         bands: dict[int, set] = {}
         for r in banded_buckets(emb).collect():
             bands.setdefault(r["vec_id"], set()).add((r["band"], r["bucket"]))
@@ -229,8 +280,6 @@ def test_near_dup_lsh_matches_allpairs_within_buckets(spark, emb, max_records):
             (r["vec_a"], r["vec_b"]): (r["dot_q"], r["cosine"])
             for r in near_dup_pairs_lsh(emb, threshold=0.45).collect()
         }
-    finally:
-        spark.conf.set(key, old)
     expected = {
         pair: score
         for pair, score in allp.items()
@@ -240,6 +289,22 @@ def test_near_dup_lsh_matches_allpairs_within_buckets(spark, emb, max_records):
     assert got, "fixture should contain banded-LSH near-dup collisions"
     # recall accounting: the banded trade should catch most true near-dups
     assert len(got) >= len(allp) // 2, f"recall {len(got)}/{len(allp)} too low"
+
+
+def test_near_dup_lsh_cap_none_is_uncapped(spark):
+    """``max_bucket_size=None`` turns the degenerate-bucket cap off, as in
+    the dedup pair generators: 520 identical vectors (one bucket over the
+    512 default in every band) yield all their pairs, and a cap of 10 keeps
+    only the genuine pair."""
+    from airbyte_module_spark.operators.similarity import near_dup_pairs_lsh
+
+    rows = [(i, [0.5] * 64) for i in range(520)]
+    rows += [(1000 + i, [0.5] * 32 + [-0.5] * 32) for i in range(2)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    uncapped = near_dup_pairs_lsh(emb, threshold=0.9, max_bucket_size=None)
+    assert uncapped.count() == 520 * 519 // 2 + 1
+    capped = near_dup_pairs_lsh(emb, threshold=0.9, max_bucket_size=10)
+    assert {(r.vec_a, r.vec_b) for r in capped.collect()} == {(1000, 1001)}
 
 
 def test_ann_recall_gate(emb):
@@ -282,6 +347,27 @@ def test_ann_recall_gate(emb):
     assert recall_multi >= recall_single, "multiprobe must not lose recall"
     assert recall_ivf >= 0.90, f"trained IVF recall@5 {recall_ivf}"
     assert recall_ivf > recall_multi, "IVF is the recall-strong scale path"
+
+
+def test_ann_topk_independent_of_arrow_batches(spark, emb):
+    """The map-side scorer prunes each Arrow batch to its own top-k; the
+    global top-k must not depend on how the corpus splits into batches,
+    for every candidate filter (LSH single/multi-probe, IVF)."""
+    from airbyte_module_spark.operators.similarity import ann_ivf, ann_lsh
+
+    searches = {
+        "lsh": lambda: ann_lsh(emb, n_queries=10, k=5),
+        "multiprobe": lambda: ann_lsh(emb, n_queries=10, k=5, multiprobe=True),
+        "ivf": lambda: ann_ivf(emb, n_queries=10, k=5),
+    }
+    results = {}
+    for max_records in (None, 50):
+        with arrow_batch_rows(spark, max_records):
+            for name, run in searches.items():
+                results[name, max_records] = sorted(map(tuple, run().collect()))
+    for name in searches:
+        assert results[name, None], f"{name} returned nothing"
+        assert results[name, None] == results[name, 50], name
 
 
 def test_ivf_assignment_covers_corpus(emb):

@@ -92,13 +92,15 @@ def test_no_row_python_in_any_query(spark):
 
 
 def test_near_dup_lsh_no_nested_loop(spark):
-    """The scale-path embedding near-dup must plan as a bucket-equi join
-    (hash/sort-merge) — never the O(N²) BroadcastNestedLoopJoin the exact
-    all-pairs verifier uses."""
+    """The scale-path embedding near-dup must plan as a (band, bucket)
+    exchange into one Arrow pair kernel — no join at all, and never the
+    O(N²) BroadcastNestedLoopJoin or CartesianProduct of an all-pairs
+    form."""
     from airbyte_module_spark.operators.similarity import near_dup_pairs_lsh
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     plan = physical(near_dup_pairs_lsh(emb))
+    assert "Join" not in plan, plan
     assert "NestedLoop" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -114,15 +116,18 @@ def test_dot_product_is_codegen(spark):
     assert "zip_with" not in plan and "aggregate(" not in plan, plan
 
 
-def test_ann_bruteforce_is_mapside_topk(spark):
-    """r4 shape: queries ride a TorrentBroadcast into a mapInPandas kernel
-    that emits per-batch top-k only — the plan has NO join of any kind (the
-    r1-r3 crossJoin form shuffled every scored pair into the rank window)
-    and the window's input is the candidate stream, not the corpus."""
-    from airbyte_module_spark.operators.similarity import ann_brute_force
+@pytest.mark.parametrize("search", ["ann_brute_force", "ann_lsh", "ann_ivf"])
+def test_ann_bruteforce_is_mapside_topk(spark, search):
+    """r4 shape, shared by all three ANN searches: queries ride a
+    TorrentBroadcast into a mapInPandas kernel that emits per-batch top-k
+    only — the plan has NO join of any kind (the r1-r3 crossJoin form
+    shuffled every scored pair into the rank window; the r5 LSH/IVF forms
+    joined on bucket/cell) and the window's input is the candidate stream,
+    not the corpus."""
+    from airbyte_module_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = physical(ann_brute_force(emb, n_queries=5, k=3))
+    plan = physical(getattr(similarity, search)(emb, n_queries=5, k=3))
     assert "MapInPandas" in plan
     assert "Join" not in plan and "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
