@@ -22,7 +22,6 @@ docker round-trip.
 from __future__ import annotations
 
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,9 +134,14 @@ class Engine:
         reference's per-request atomicity (one catalog handed to one
         connector run, ``abm/server.py:182-187``).
 
-        Every call commits under its own random batch id: a client write
-        is never an exactly-once redelivery of an earlier one, so two
-        writes within one clock tick both land.
+        The stamped rows go through the pipeline's one commit tail
+        (:meth:`CdcPipeline.commit`): content transform, merge, then the
+        post-merge hook and scheduled maintenance, so writes count toward
+        ``maintenance_every`` like ingest batches. A write has no batch id:
+        no source can deliver it again, so it is neither checked against
+        nor recorded in the exactly-once record — two writes within one
+        clock tick both land, and the record stays bounded however many
+        writes a keyless table takes.
         """
         table_cols = {f.name for f in self.table.schema().fields}
         new_cols = [
@@ -155,17 +159,7 @@ class Engine:
             )
             .withColumn(model.META_OP, F.lit("u" if mode == "upsert" else "i"))
         )
-        if "content" in df.columns:
-            changes = self.pipeline.transform(changes)
-        version = self.table.merge(
-            changes,
-            batch_id=uuid.uuid4().int,
-            checkpoint_id=f"write-{mode}",
-            truncate=(mode == "overwrite"),
-        )
-        if version is not None and self.pipeline.post_merge_hook is not None:
-            self.pipeline.post_merge_hook(self.table, version)
-        return version
+        return self.pipeline.commit(changes, truncate=(mode == "overwrite"))
 
     # ------------------------------------------------------------------- cdc
     def replay(

@@ -42,19 +42,20 @@ v2 table and everything above it is unchanged):
   the event set — independent of batch boundaries, arrival order, and
   replays — which is what lets a replay from any checkpoint reproduce the
   table byte-for-byte (BASELINE.json north_star).
-- **Exactly-once**: each merge records ``(checkpoint_id, batch_id)`` in the
-  snapshot; re-delivered batches are skipped. The record is RETAINED
-  BOUNDED (``max_applied_batches``, default 1024, most recent by version)
-  so snapshot metadata stays metadata-sized at 10^6+ batches — Structured
-  Streaming only ever re-delivers batches at/after the last unacknowledged
-  checkpoint offset, a window of ~1, so 1024 is a deep margin. Even for a
-  batch whose record has aged out, LWW makes re-application a no-op
-  (idempotent MERGE — the second line of defense). KEYLESS tables have no
-  LWW defense, so their applied-batches record is pruned ONLY below the
-  streaming checkpoint's committed-offset watermark (``merge(...,
-  offset_watermark=N)`` — batches < N can never redeliver), which keeps
-  snapshot metadata bounded on append-only tables without giving up
-  exactly-once; ad-hoc keyless merges (no watermark) never prune.
+- **Exactly-once**: a batch is recorded only under an identity that can be
+  delivered again — the streaming sink's ``(checkpoint_id, batch_id)``, a
+  batch replay's sorted input-file list (hashed) — and skipped once
+  recorded; a client write (``batch_id=None``) checks and records nothing.
+  The record is RETAINED BOUNDED (``max_applied_batches``, default 1024,
+  most recent by version) so snapshot metadata stays metadata-sized at
+  10^6+ batches — Structured Streaming only ever re-delivers batches
+  at/after the last unacknowledged checkpoint offset, a window of ~1, so
+  1024 is a deep margin. Even for a batch whose record has aged out, LWW
+  makes re-application a no-op (idempotent MERGE — the second line of
+  defense). KEYLESS tables have no LWW defense, so their applied-batches
+  record is pruned ONLY below the streaming checkpoint's committed-offset
+  watermark (``merge(..., offset_watermark=N)`` — batches < N can never
+  redeliver); batch replays (no watermark) are never pruned.
 - **Snapshot expiration**: ``expire_snapshots(keep_last)`` (run from
   ``maintenance()``) deletes snapshot files older than the retained window
   and garbage-collects data dirs no retained snapshot references — the
@@ -75,6 +76,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from typing import Callable, Iterable, Iterator
 
@@ -82,7 +84,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -476,14 +478,10 @@ class LakeTable:
 
     # ----------------------------------------------------------------- write
     def _stage_write(
-        self,
-        df: DataFrame,
-        version: int,
-        pre_partitioned: bool = False,
-        buckets: list[int] | None = None,
+        self, df: DataFrame, version: int, pre_partitioned: bool = False
     ) -> list[dict]:
         """Write rows grouped per bucket under a fresh commit dir; return
-        snapshot entries [{dir, bucket, kind(placeholder)}].
+        snapshot entries [{dir, bucket}], one per bucket written.
 
         ``partitionBy`` on a shadow copy of the bucket column keeps
         ``_ab_bucket`` itself inside the data files (so parquet min/max stats
@@ -493,37 +491,29 @@ class LakeTable:
         single shuffle), so the write adds no exchange and each bucket lands
         in exactly one file per commit.
 
-        Manifest entries are computed from ``buckets`` — the bucket set of
-        the staged rows, known to the caller (merge affects exactly the
-        batch's buckets; compaction rewrites exactly the selected buckets) or
-        derived here with one metadata-sized distinct — NEVER by listing the
-        output directory afterwards: directory listing is both slow and
-        non-atomic on object stores (Iceberg manifests are likewise derived
-        from the write plan, not from LIST calls). Callers passing
-        ``buckets`` guarantee every listed bucket has >= 1 row.
+        Manifest entries come from the write plan itself: an unnamed
+        ``Observation`` collects the written bucket set on the write job —
+        no second job, and NEVER a listing of the output directory
+        afterwards (directory listing is both slow and non-atomic on object
+        stores; Iceberg manifests are likewise derived from the write plan,
+        not from LIST calls). A write of zero rows stages nothing.
         """
-        if buckets is None:
-            buckets = [
-                r[0] for r in df.select(model.BUCKET_COLUMN).distinct().collect()
-            ]
-        if not buckets:
-            return []
         commit_dir = f"data/commit-{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, commit_dir)
         staged = df if pre_partitioned else df.repartition(model.BUCKET_COLUMN)
-        import time as _time
-
-        t0 = _time.time()
+        written = Observation()
+        t0 = time.time()
         (
-            staged.withColumn("_pb", F.col(model.BUCKET_COLUMN))
+            staged.observe(written, F.collect_set(model.BUCKET_COLUMN).alias("buckets"))
+            .withColumn("_pb", F.col(model.BUCKET_COLUMN))
             .write.partitionBy("_pb")
             .parquet(out)
         )
-        self.timings["stage_write"] = round(_time.time() - t0, 3)
-        return [
-            {"dir": f"{commit_dir}/_pb={int(b)}", "bucket": int(b)}
-            for b in sorted(buckets)
-        ]
+        self.timings["stage_write"] = round(time.time() - t0, 3)
+        buckets = sorted(written.get["buckets"])
+        if not buckets:
+            shutil.rmtree(out, ignore_errors=True)
+        return [{"dir": f"{commit_dir}/_pb={b}", "bucket": b} for b in buckets]
 
     def with_bucket(self, df: DataFrame) -> DataFrame:
         keys = self.key_columns or [c for c in df.columns if c != model.BUCKET_COLUMN]
@@ -533,11 +523,10 @@ class LakeTable:
     def merge(
         self,
         changes: DataFrame,
-        batch_id: int = 0,
+        batch_id: int | str | None = None,
         checkpoint_id: str = "adhoc",
         lineage: dict | None = None,
-        pre_deduped: bool = False,
-        pre_partitioned: bool = False,
+        prepared: bool = False,
         truncate: bool = False,
         offset_watermark: int | None = None,
     ) -> int | None:
@@ -548,9 +537,12 @@ class LakeTable:
         Plans as: LWW-dedup batch → append delta files (no join at all);
         winners resolve at read; background ``compact()`` bounds read cost.
 
-        ``pre_deduped``/``pre_partitioned`` let the ingest pipeline promise
-        the batch is already LWW-resolved and bucket-hash-partitioned, so the
-        merge adds zero extra shuffles.
+        ``prepared`` lets the ingest pipeline promise the batch is already
+        LWW-resolved and hash-partitioned on the bucket column, so the merge
+        adds zero extra shuffles.
+
+        A batch already recorded as ``checkpoint_id:batch_id`` is skipped;
+        ``batch_id=None`` (a client write) checks and records nothing.
 
         ``truncate=True`` makes this a REPLACEMENT commit (the atomic
         overwrite): the published snapshot references only the batch's
@@ -573,11 +565,11 @@ class LakeTable:
         those entries and keep snapshot metadata bounded instead of growing
         O(total batches) forever. The streaming sink passes its current
         batch_id (foreachBatch delivers batch N only after every batch < N
-        committed); ad-hoc/batch merges pass None and keyless records are
-        then never pruned (the r3 contract, unchanged). Keyed tables ignore
-        it — their bounded window + LWW idempotence already covers aging."""
+        committed); other merges pass None and keyless records are then
+        never pruned. Keyed tables ignore it — their bounded window + LWW
+        idempotence already covers aging."""
         snap = self.current_snapshot()
-        key = f"{checkpoint_id}:{batch_id}"
+        key = None if batch_id is None else f"{checkpoint_id}:{batch_id}"
         if key in snap["applied_batches"]:
             return None
 
@@ -585,18 +577,9 @@ class LakeTable:
         changes = self._conform(changes, self.schema(snap))
         if model.BUCKET_COLUMN not in changes.columns:
             changes = self.with_bucket(changes)
-            pre_partitioned = False
-        winners = changes if pre_deduped or not keys else dedup_lww(changes, keys)
-
-        # the batch's bucket set is already known from the lineage agg
-        # (events and winners hit identical buckets: every event bucket
-        # keeps >= 1 LWW winner); without lineage, one distinct job
-        staged = self._stage_write(
-            winners,
-            snap["version"] + 1,
-            pre_partitioned=pre_partitioned,
-            buckets=lineage.get("buckets") if lineage else None,
-        )
+            prepared = False
+        winners = changes if prepared or not keys else dedup_lww(changes, keys)
+        staged = self._stage_write(winners, snap["version"] + 1, pre_partitioned=prepared)
         for e in staged:
             e["kind"] = "base" if truncate else "delta"
         max_applied = int(snap["properties"].get("max_applied_batches", 1024))
@@ -604,39 +587,29 @@ class LakeTable:
         def edit(head: dict) -> dict | None:
             if key in head["applied_batches"]:
                 return None  # a racing writer delivered this batch
-            version = head["version"] + 1
-            if truncate:
-                entries = staged
-                applied = {key: version}  # fresh state, fresh record
-            else:
-                entries = head["entries"] + staged
-                applied = {**head["applied_batches"], key: version}
-                # Keyless (append-mode) tables prune ONLY below an explicit
-                # offset watermark: the record is their ONLY exactly-once
-                # defense (no LWW to make a re-applied aged-out batch a
-                # no-op), so entries may be dropped only once the caller
-                # asserts the streaming checkpoint has committed past them
-                # (below which redelivery is impossible). Without a
-                # watermark, keyless records are never pruned. Keyed tables
-                # keep the bounded window (LWW is the second line of
-                # defense).
-                if keys and len(applied) > max_applied:
-                    applied = dict(
-                        sorted(applied.items(), key=lambda kv: kv[1])[-max_applied:]
-                    )
-                elif not keys and offset_watermark is not None:
-                    def _committed_below(k: str) -> bool:
-                        cp, _, b = k.rpartition(":")
-                        try:
-                            return cp == checkpoint_id and int(b) < offset_watermark
-                        except ValueError:
-                            return False
+            # a replacement starts a fresh record
+            applied = {} if truncate else dict(head["applied_batches"])
+            if key is not None:
+                applied[key] = head["version"] + 1
+            # keyed: a bounded window (LWW is the second line of defense);
+            # keyless: prune only below an offset watermark (see docstring)
+            if keys and len(applied) > max_applied:
+                applied = dict(
+                    sorted(applied.items(), key=lambda kv: kv[1])[-max_applied:]
+                )
+            elif not keys and offset_watermark is not None:
+                def _committed_below(k: str) -> bool:
+                    cp, _, b = k.rpartition(":")
+                    try:
+                        return cp == checkpoint_id and int(b) < offset_watermark
+                    except ValueError:
+                        return False
 
-                    applied = {
-                        k: v for k, v in applied.items() if not _committed_below(k)
-                    }
+                applied = {
+                    k: v for k, v in applied.items() if not _committed_below(k)
+                }
             return {
-                "entries": entries,
+                "entries": staged if truncate else head["entries"] + staged,
                 "applied_batches": applied,
                 "lineage": (head["lineage"] + [lineage])[-200:] if lineage else head["lineage"],
             }
@@ -644,9 +617,9 @@ class LakeTable:
         # NOTE: merge never compacts inline — a hot bucket crossing the
         # delta threshold must not stall the ingest batch.
         # CdcPipeline._post_commit runs maintenance() after every Nth
-        # committed batch (its ``maintenance_every`` option, default 16,
-        # after the commit is durable); deployments that disable it must
-        # schedule maintenance() as an external background job.
+        # committed batch or put (its ``maintenance_every`` option, default
+        # 16, after the commit is durable); deployments that disable it
+        # must schedule maintenance() as an external background job.
         return self._commit(edit, staged)
 
     def buckets_needing_compaction(self, limit: int | None = None) -> list[int]:
@@ -765,7 +738,7 @@ class LakeTable:
         df = self._read_entries(read, self.schema(snap), sel)
         keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
         df = dedup_lww(df, keys) if keys else df
-        staged = self._stage_write(df, snap["version"] + 1, buckets=sel)
+        staged = self._stage_write(df, snap["version"] + 1)
         for e in staged:
             e["kind"] = "base"
         read_dirs = {e["dir"] for e in read}

@@ -19,7 +19,7 @@ from airbyte_module_spark import model
 
 @dataclass
 class BatchLineage:
-    batch_id: int
+    batch_id: int | str
     checkpoint_id: str
     n_events: int
     n_winners: int
@@ -35,7 +35,7 @@ class BatchLineage:
 
 
 def lineage_from_grouped(
-    grouped: DataFrame, batch_id: int, checkpoint_id: str
+    grouped: DataFrame, batch_id: int | str, checkpoint_id: str
 ) -> tuple[BatchLineage, list[str]]:
     """Lineage from the ingest's per-key frame (one row per live key, or
     per event on a keyless table: ``_w`` winner struct, ``_n`` event count,

@@ -39,10 +39,6 @@ def read_feed_stream(
     return reader.load(feed_path)
 
 
-def _cursor_cols() -> list[Column]:
-    return [F.col(model.META_EMITTED), F.col(model.META_SEQ)]
-
-
 def parse_envelopes(
     raw: DataFrame,
     data_schema: T.StructType | None = None,

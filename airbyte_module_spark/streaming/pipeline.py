@@ -1,10 +1,12 @@
 """CDC pipeline: change-feed tail → transform → MERGE, batch or streaming.
 
 The streaming tail is Structured Streaming with a checkpointed
-``foreachBatch`` sink (SURVEY.md §3.4). Both entry points share one code
-path: ``trigger(availableNow=True)`` gives bounded replay of everything in
-the feed directory; ``processingTime`` gives a continuous tail. Restarting
-from the checkpoint resumes at the last committed source offset, and the
+``foreachBatch`` sink (SURVEY.md §3.4). Batch replay, the streaming sink and
+``Engine.write`` all end in one commit tail, :meth:`CdcPipeline.commit`.
+Streaming replay and tail share one code path: ``trigger(availableNow=True)``
+gives bounded replay of everything in the feed directory;
+``processingTime`` gives a continuous tail. Restarting from the checkpoint
+resumes at the last committed source offset, and the
 ``(checkpoint_id, batch_id)`` dedup inside :meth:`LakeTable.merge` makes
 re-delivered batches no-ops — together: exactly-once effective semantics
 (SURVEY.md §2.8 T2).
@@ -16,7 +18,9 @@ Flight request (``/root/reference/abm/connector.py:223``, cursors disabled at
 
 from __future__ import annotations
 
+import hashlib
 import re
+import threading
 import time
 
 from pyspark import StorageLevel
@@ -60,10 +64,10 @@ class CdcPipeline:
         (already-applied batches) do not re-fire it.
 
         ``maintenance_every``: run :meth:`LakeTable.maintenance` (compact
-        buckets over the delta threshold) after every Nth committed batch —
-        off the commit critical path (the batch is already durable when it
-        runs) but inside the sink, so a long MoR replay/tail bounds its own
-        delta growth without an operator remembering to schedule anything.
+        buckets over the delta threshold) after every Nth committed batch
+        or client write — off the commit critical path (the batch is already
+        durable when it runs) but inside the sink, so a long MoR replay/tail
+        bounds its own delta growth without an operator remembering to schedule anything.
         ``None`` disables it (run maintenance() as an external background
         job instead — the cluster-scale deployment shape)."""
         self.table = table
@@ -72,27 +76,51 @@ class CdcPipeline:
         self.post_merge_hook = post_merge_hook
         self.maintenance_every = maintenance_every
         self._batches_since_maintenance = 0
-        # per-batch phase wall-times (overwritten each batch) — the
+        # commits arrive from the streaming sink and from Flight/HTTP
+        # handler threads at once
+        self._maintenance_lock = threading.Lock()
+        # per-commit phase wall-times (replaced by each commit) — the
         # serial-fraction profile behind the N→4N scaling evidence
         # (scripts/scaling_bench.py --profile reads this)
         self.timings: dict[str, float] = {}
-        # accumulated per-batch profiles + streaming progress (reset by
-        # replay_stream) — the multibatch overhead attribution reads these
-        self.batch_profiles: list[dict] = []
+        # Structured Streaming progress of the last replay_stream
         self.stream_progress: list[dict] = []
 
     def _post_commit(self, version: int | None) -> None:
         """After a durable commit: fire the user hook, then scheduled
-        maintenance every Nth applied batch (never on exactly-once skips)."""
+        maintenance every Nth applied batch or write (never on exactly-once
+        skips). The count-and-check is atomic, so concurrent commits run
+        maintenance once per N between them."""
         if version is None:
             return
         if self.post_merge_hook is not None:
             self.post_merge_hook(self.table, version)
-        if self.maintenance_every:
+        if not self.maintenance_every:
+            return
+        with self._maintenance_lock:
             self._batches_since_maintenance += 1
-            if self._batches_since_maintenance >= self.maintenance_every:
+            due = self._batches_since_maintenance >= self.maintenance_every
+            if due:
                 self._batches_since_maintenance = 0
-                self.table.maintenance()
+        if due:
+            self.table.maintenance()
+
+    def commit(self, rows: DataFrame, timings: dict | None = None, **merge_opts) -> int | None:
+        """The one commit tail of every writer — ``apply_batch`` (streaming
+        sink and batch replay) and ``Engine.write`` (client writes): content
+        transform → :meth:`LakeTable.merge` (``merge_opts`` passed on) →
+        :meth:`_post_commit`. ``timings`` (default: a fresh dict) becomes
+        :attr:`timings`, with the merge and post-commit wall times added."""
+        tm = self.timings = {} if timings is None else timings
+        if "content" in rows.columns:
+            rows = self.transform(rows)
+        t0 = time.time()
+        version = self.table.merge(rows, **merge_opts)
+        tm["merge"] = round(time.time() - t0, 3)
+        t0 = time.time()
+        self._post_commit(version)
+        tm["post_commit"] = round(time.time() - t0, 3)
+        return version
 
     # ------------------------------------------------------------ transforms
     def data_schema(self) -> T.StructType:
@@ -157,13 +185,13 @@ class CdcPipeline:
     def apply_batch(
         self,
         raw: DataFrame,
-        batch_id: int = 0,
+        batch_id: int | str = 0,
         checkpoint_id: str = "adhoc",
         offset_watermark: int | None = None,
     ) -> int | None:
-        """Parse + dedup + transform + lineage + MERGE one batch of raw
-        envelope lines. Shared by batch replay and the streaming sink, for
-        keyed and keyless tables alike.
+        """Parse + dedup + lineage, then the :meth:`commit` tail, for one
+        batch of raw envelope lines. Shared by batch replay and the
+        streaming sink, for keyed and keyless tables alike.
 
         ``offset_watermark`` is forwarded to ``LakeTable.merge``; ONLY the
         streaming sink sets it (to its own ``batch_id``) because only
@@ -287,9 +315,7 @@ class CdcPipeline:
             # conflict), projected through the current — possibly just
             # widened — schema
             env_schema = model.envelope_schema(schema)
-            user_cols = [
-                f.name for f in schema.fields if f.name not in ("op", "seq")
-            ]
+            user_cols = model.user_columns(schema)
             w = grouped.select(
                 F.col(model.BUCKET_COLUMN),
                 F.col(f"_w.{model.META_EMITTED}").alias(model.META_EMITTED),
@@ -304,37 +330,38 @@ class CdcPipeline:
                 F.col(model.BUCKET_COLUMN),
             )
             winners = winners.repartition(n_parts, F.col(model.BUCKET_COLUMN))
-            if "content" in winners.columns:
-                winners = self.transform(winners)
-            t0 = time.time()
-            version = self.table.merge(
+            version = self.commit(
                 winners,
+                tm,
                 batch_id=batch_id,
                 checkpoint_id=checkpoint_id,
                 lineage=lineage,
-                pre_deduped=True,
-                pre_partitioned=True,
+                prepared=True,
                 offset_watermark=offset_watermark,
             )
-            tm["merge"] = round(time.time() - t0, 3)
-            tm["apply_batch_total"] = round(time.time() - t_batch, 3)
-            t0 = time.time()
-            self._post_commit(version)
-            # post-commit (hook + scheduled maintenance) runs AFTER the
-            # apply_batch total so the multibatch attribution can separate
-            # engine maintenance from Structured Streaming machinery
-            tm["post_commit"] = round(time.time() - t0, 3)
-            self.batch_profiles = (self.batch_profiles + [dict(tm)])[-1024:]
+            # the apply_batch total leaves out post-commit (hook + scheduled
+            # maintenance), which is timed on its own
+            tm["apply_batch_total"] = round(time.time() - t_batch - tm["post_commit"], 3)
             return version
         finally:
             grouped.unpersist()
 
-    def replay_batch(self, feed_path: str, checkpoint_id: str = "batch-replay") -> int | None:
+    def replay_batch(self, feed_path: str) -> int | None:
         """One-shot batch replay of an entire feed directory (backfill path).
         Same semantics as the streaming replay — final state is batch-
-        boundary independent."""
+        boundary independent.
+
+        The replay is one batch, recorded under the sha256 of its sorted
+        input-file list — a file is identified by its path, as in the
+        streaming file source. Re-running the same feed is skipped; a
+        different feed, or one that gained files, is a new batch."""
         raw = feed_src.read_feed(self.table.spark, feed_path)
-        return self.apply_batch(raw, batch_id=0, checkpoint_id=checkpoint_id)
+        files = "\n".join(sorted(raw.inputFiles()))
+        return self.apply_batch(
+            raw,
+            batch_id=hashlib.sha256(files.encode()).hexdigest(),
+            checkpoint_id="batch-replay",
+        )
 
     # ------------------------------------------------------------- streaming
     def replay_stream(
@@ -355,7 +382,6 @@ class CdcPipeline:
             self.table.spark, feed_path, max_files_per_trigger
         )
         checkpoint_id = checkpoint_dir
-        self.batch_profiles = []
         self.stream_progress = []
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -383,14 +409,10 @@ class CdcPipeline:
             # per-trigger duration breakdown (latestOffset / walCommit /
             # addBatch / commitOffsets ...) — the only visibility into what
             # Structured Streaming spends OUTSIDE apply_batch; metadata-
-            # sized and read by the multibatch attribution
+            # sized, read by perfbench's tail_serve
             import json as _json
 
             self.stream_progress = [
                 _json.loads(p.json) for p in query.recentProgress
             ]
         return query
-
-
-def throughput(n_events: int, started: float) -> float:
-    return n_events / max(time.time() - started, 1e-9)

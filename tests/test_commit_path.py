@@ -1,0 +1,191 @@
+"""One commit tail for ingest batches, batch replays and client writes:
+exactly-once identities, scheduled maintenance of writes, and the jobs a
+write runs."""
+
+import os
+import shutil
+import threading
+import uuid
+
+import pyspark.sql.types as T
+
+from airbyte_module_spark import Engine, model
+from airbyte_module_spark.lake.table import LakeTable
+from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
+from airbyte_module_spark.streaming.pipeline import CdcPipeline
+from tests.util import assert_matches_oracle
+
+USER_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), True),
+        T.StructField("first_name", T.StringType(), True),
+        T.StructField("salary", T.DoubleType(), True),
+    ]
+)
+
+
+def _split_feed(tmp_path, seed):
+    """One generated feed of 6 shards split into two feeds of 3 shards each:
+    (events of the whole feed, feed A dir, feed B dir)."""
+    whole = tmp_path / "whole"
+    events = generate_feed(FeedSpec(seed=seed, n_events=300, n_shards=6), str(whole))
+    shards = sorted(f for f in os.listdir(whole) if not f.startswith((".", "_")))
+    assert len(shards) == 6
+    halves = []
+    for name, part in (("a", shards[:3]), ("b", shards[3:])):
+        d = tmp_path / name
+        d.mkdir()
+        for f in part:
+            shutil.copy(whole / f, d / f)
+        halves.append(str(d))
+    return events, halves[0], halves[1]
+
+
+def _rows(spark, n, offset=0):
+    return spark.range(offset, offset + n).selectExpr(
+        "id", "concat('u', id) AS first_name", "id * 0.5 AS salary"
+    )
+
+
+def test_batch_replays_of_two_feeds_both_land(spark, tmp_path):
+    """Two batch replays of different feeds both commit: each is recorded
+    under its own input-file list, so the second is no duplicate of the
+    first. Together they give the state of the whole feed; re-running
+    either is skipped."""
+    events, feed_a, feed_b = _split_feed(tmp_path, seed=31)
+    eng = Engine(spark, str(tmp_path / "t"), n_buckets=8)
+    eng.replay(feed_a)
+    v_a = eng.table.current_version()
+    eng.replay(feed_b)
+    assert eng.table.current_version() == v_a + 1
+    assert_matches_oracle(eng.table, events)
+    assert eng.pipeline.replay_batch(feed_a) is None
+    assert eng.pipeline.replay_batch(feed_b) is None
+    assert eng.table.current_version() == v_a + 1
+    # each replay is recorded under the identity its lineage names
+    lineage = {f"{r['checkpoint_id']}:{r['batch_id']}" for r in eng.lineage()}
+    assert set(eng.table.current_snapshot()["applied_batches"]) == lineage
+    assert len(lineage) == 2
+
+
+def test_keyless_batch_replay_rerun_is_skipped(spark, tmp_path):
+    """On a keyless table the exactly-once record is the only defense: the
+    same feed replayed again is skipped and adds no duplicate rows, while a
+    different feed still lands."""
+    _, feed_a, feed_b = _split_feed(tmp_path, seed=32)
+    eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=4)
+    v1 = eng.pipeline.replay_batch(feed_a)
+    assert v1 is not None
+    n_a = eng.read().count()
+    assert n_a > 0
+    assert eng.pipeline.replay_batch(feed_a) is None
+    assert eng.table.current_version() == v1
+    assert eng.read().count() == n_a
+    assert eng.pipeline.replay_batch(feed_b) == v1 + 1
+    assert eng.read().count() > n_a
+
+
+def test_client_writes_leave_exactly_once_record_unchanged(spark, tmp_path):
+    """A client write has no identity a source could deliver again, so it
+    is neither checked nor recorded: any number of writes to a keyless
+    table (whose record is never pruned without a watermark) leaves the
+    record as it was, and every write lands."""
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=33, n_events=60, n_shards=2), feed)
+    eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=2)
+    eng.replay(feed)
+    record = eng.table.current_snapshot()["applied_batches"]
+    assert len(record) == 1
+    n0 = eng.read().count()
+    df = spark.createDataFrame(
+        [("org9/put", f"f{i}", "c", "py", "x") for i in range(3)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    for _ in range(5):
+        assert eng.write(df, mode="append") is not None
+    assert eng.table.current_snapshot()["applied_batches"] == record
+    assert eng.read().count() == n0 + 15
+
+
+def test_writes_compact_on_schedule(spark, tmp_path):
+    """Writes count toward ``maintenance_every`` like ingest batches: four
+    upserts with maintenance every 2 commits and a compaction threshold of
+    2 deltas fold the deltas into bases."""
+    path = str(tmp_path / "t")
+    LakeTable.create(
+        spark, path, schema=model.table_schema(USER_SCHEMA), key_columns=["id"],
+        n_buckets=2, compact_after_deltas=2,
+    )
+    eng = Engine(spark, path, maintenance_every=2)
+    for i in range(4):
+        assert eng.write(_rows(spark, 20, offset=10 * i), mode="upsert") is not None
+    entries = eng.table.current_snapshot()["entries"]
+    assert any(e["kind"] == "base" for e in entries)
+    for b in {e["bucket"] for e in entries}:
+        assert sum(e["kind"] == "delta" and e["bucket"] == b for e in entries) < 4
+    assert sorted(r["id"] for r in eng.read().collect()) == list(range(50))
+
+
+def test_scheduled_maintenance_count_is_atomic():
+    """Commits from many threads at once run maintenance exactly once per
+    ``maintenance_every`` commits between them."""
+
+    calls = []
+
+    class _Table:
+        def maintenance(self):
+            calls.append(1)
+
+    pipe = CdcPipeline(_Table(), maintenance_every=3)
+
+    def commit_many():
+        for v in range(300):
+            pipe._post_commit(v)
+
+    threads = [threading.Thread(target=commit_many) for _ in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(calls) == 8 * 300 // 3
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` runs on this thread."""
+    sc = spark.sparkContext
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_write_runs_no_bucket_listing_job(spark, tmp_path):
+    """The written bucket set is observed on the write job itself: a
+    2000-row write runs 2 Spark jobs on a keyed or keyless table, in every
+    mode (a separate ``distinct().collect()`` of the buckets made it 4)."""
+    for keys in (["id"], []):
+        eng = Engine(
+            spark, str(tmp_path / f"t{len(keys)}"), schema=USER_SCHEMA,
+            key_columns=keys, n_buckets=4,
+        )
+        for mode in ("append", "upsert", "overwrite"):
+            n = _jobs(spark, lambda: eng.write(_rows(spark, 2000), mode=mode))
+            assert n <= 2, (keys, mode, n)
+        assert eng.read().count() == 2000
+        assert sorted(int(e["bucket"]) for e in eng.table.current_snapshot()["entries"]) == [0, 1, 2, 3]
+
+
+def test_empty_write_stages_no_files(spark, tmp_path):
+    """A write of zero rows commits no entry and leaves no commit dir."""
+    eng = Engine(spark, str(tmp_path / "t"), schema=USER_SCHEMA, key_columns=["id"], n_buckets=2)
+    eng.write(_rows(spark, 4), mode="append")
+    entries = eng.table.current_snapshot()["entries"]
+    assert eng.write(_rows(spark, 0), mode="append") is not None
+    assert eng.table.current_snapshot()["entries"] == entries
+    data = os.path.join(eng.table.path, "data")
+    assert len(os.listdir(data)) == len({e["dir"].split("/")[1] for e in entries})

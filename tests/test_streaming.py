@@ -22,8 +22,8 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
 
 def test_engine_replay_multibatch(spark, tmp_path):
     """Engine.replay(max_files_per_trigger=) splits a bounded replay into
-    micro-batches (the production tail shape scripts/multibatch_bench.py
-    measures) with final state identical to the one-shot replay."""
+    micro-batches (the production tail shape perfbench's tail_serve
+    lands) with final state identical to the one-shot replay."""
     from airbyte_module_spark.engine import Engine
 
     feed = str(tmp_path / "feed")
@@ -150,8 +150,8 @@ def test_restart_after_sink_crash_is_exactly_once(spark, tmp_path):
     crashed = {"done": False}
     orig = pipe.apply_batch
 
-    def crashing(raw, batch_id=0, checkpoint_id="adhoc"):
-        out = orig(raw, batch_id=batch_id, checkpoint_id=checkpoint_id)
+    def crashing(raw, batch_id=0, checkpoint_id="adhoc", **kw):
+        out = orig(raw, batch_id=batch_id, checkpoint_id=checkpoint_id, **kw)
         if batch_id == 1 and not crashed["done"]:
             crashed["done"] = True
             raise RuntimeError("injected crash after table commit")
@@ -163,6 +163,7 @@ def test_restart_after_sink_crash_is_exactly_once(spark, tmp_path):
     except Exception:
         pass
     pipe.apply_batch = orig
+    assert crashed["done"]  # the crash hit after batch 1 committed
     pipe.replay_stream(feed, ck, max_files_per_trigger=1)
     assert_matches_oracle(table, events)
 
