@@ -31,6 +31,15 @@ from airbyte_module_spark import model
 from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
 
+WRITE_MODES = ("append", "overwrite", "upsert")
+
+
+def check_write_mode(mode: str) -> None:
+    """Raise ValueError unless ``mode`` is one of :data:`WRITE_MODES` —
+    an unknown mode must not land as an append."""
+    if mode not in WRITE_MODES:
+        raise ValueError(f"unknown write mode {mode!r}; expected one of {WRITE_MODES}")
+
 
 class Engine:
     def __init__(
@@ -141,8 +150,10 @@ class Engine:
         no source can deliver it again, so it is neither checked against
         nor recorded in the exactly-once record — two writes within one
         clock tick both land, and the record stays bounded however many
-        writes a keyless table takes.
+        writes a keyless table takes. Any other ``mode`` raises ValueError
+        before anything is evolved or committed.
         """
+        check_write_mode(mode)
         table_cols = {f.name for f in self.table.schema().fields}
         new_cols = [
             T.StructField(f.name, f.dataType, True)

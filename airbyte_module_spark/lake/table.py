@@ -7,17 +7,23 @@ deployment would have (swap LakeTable.merge for ``MERGE INTO`` on an Iceberg
 v2 table and everything above it is unchanged):
 
 - **Snapshots**: every commit writes an immutable ``_meta/snap-{v}.json``
-  listing (bucket → data dirs); readers resolve the current snapshot through
-  an atomically-swapped pointer behind the ``lake/catalog.py`` interface
-  (POSIX ``os.replace`` here; an object-store catalog does the same CAS with
-  conditional PUTs). Manifest entries are computed from the write plan, never
-  from directory listings. Time travel = read an older snapshot;
+  listing its data dirs and the buckets each holds; readers resolve the
+  current snapshot through an atomically-swapped pointer behind the
+  ``lake/catalog.py`` interface (POSIX ``os.replace`` here; an
+  object-store catalog does the same CAS with conditional PUTs). Manifest
+  entries are computed from the write plan, never from directory listings. Time travel = read an older snapshot;
   ``changes(v1, v2)`` reads just the delta between two snapshots.
 - **Hidden partitioning**: rows are hash-bucketed on the identity key
   ``pmod(xxhash64(repo, path), n_buckets)`` — the analogue of Iceberg
-  ``bucket(N, repo, path)``. A merge touches only the buckets its batch
-  hits; readers prune to requested buckets (file-list pruning at the metadata
-  layer + parquet min/max stats on the stored ``_ab_bucket`` column).
+  ``bucket(N, repo, path)``, stored in every file as ``_ab_bucket``. A
+  delta commit (an ingest batch or a client write) is ONE dir of flat
+  parquet files, one per write task, each sorted by ``_ab_bucket``; its
+  manifest entry lists the buckets it holds. A base (written by
+  ``compact`` or a truncating overwrite) is one dir per bucket. Readers
+  prune to requested buckets at the metadata layer (entries holding none
+  of them are never opened), then filter a shared delta file's rows on
+  ``_ab_bucket`` (Spark also skips row groups by its min/max stats; the
+  Arrow reader skips the files a read has shown hold none of them).
 - **Merge-on-read**: every merge appends LWW-deduped delta files
   (write-optimized — the 10^10-event ingest path) and winners resolve at
   read time, exactly like Iceberg MoR with equality deletes;
@@ -27,11 +33,11 @@ v2 table and everything above it is unchanged):
 - **Two readers, one result**: ``read()``/``changes()`` are Spark plans
   (``dedup_lww`` over the entry files) for queries, digests and HTTP.
   ``read_arrow()``/``changes_arrow()`` run no Spark job and serve Flight:
-  pyarrow reads the snapshot's files one bucket at a time, resolves the
-  bucket's deltas LWW in memory, then streams its base by row group and
-  drops each row a newer delta winner supersedes — Iceberg's
-  equality-delete apply. Late events land in later deltas, so a base row
-  can also beat a delta. Both readers are tested row- and schema-equal.
+  pyarrow reads each delta file once, resolves the deltas LWW in memory,
+  then streams each bucket's base by row group and drops each row a newer
+  delta winner supersedes — Iceberg's equality-delete apply. Late events
+  land in later deltas, so a base row can also beat a delta. Both readers
+  are tested row- and schema-equal.
 - **One commit loop**: ``merge``, ``compact`` and ``evolve`` publish through
   ``_commit(edit)`` — a CAS on the head version that, when another writer
   wins, re-applies the pending edit to the new head (Iceberg's retry
@@ -187,11 +193,20 @@ def _supersede(base: pa.Table, winners: pa.Table, keys: list[str]) -> tuple[np.n
     return np.sort(first[base_wins]), top[base_wins & (top >= n)] - n
 
 
+def _holding(entries: list[dict], buckets: set[int] | None) -> list[dict]:
+    """The entries holding any of ``buckets`` (every entry when None)."""
+    return [e for e in entries if buckets is None or not buckets.isdisjoint(e["buckets"])]
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         self.catalog = FileCatalog(os.path.join(path, "_meta"))
+        # buckets held by each file of a multi-bucket delta entry, learnt
+        # from reads: data files never change, so a slice skips, unopened,
+        # the files it knows hold none of its buckets
+        self._held: dict[str, frozenset[int]] = {}
         # last-commit phase wall-times (scaling serial-fraction profile)
         self.timings: dict[str, float] = {}
 
@@ -274,7 +289,7 @@ class LakeTable:
     MERGE_CAS_RETRIES = 3
 
     def _commit(
-        self, edit: Callable[[dict], dict | None], staged: Iterable[dict] = ()
+        self, edit: Callable[[dict], dict | None], staged_dir: str | None = None
     ) -> int | None:
         """The one commit loop behind ``merge``, ``compact`` and ``evolve``.
 
@@ -286,7 +301,7 @@ class LakeTable:
         ``ConcurrentCommitError`` propagates. Staged data files never depend
         on the head, so every rebase is metadata-only.
 
-        ``staged`` are the entries the edit adds; their commit dir is
+        ``staged_dir`` is the commit dir of the entries the edit adds; it is
         removed when no snapshot will reference it (the edit declined or
         the retries ran out). Returns the new version, or None if ``edit``
         declined."""
@@ -303,8 +318,8 @@ class LakeTable:
                 return head["version"] + 1
             except ConcurrentCommitError as e:
                 conflict = e
-        for d in {os.path.dirname(entry["dir"]) for entry in staged}:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        if staged_dir is not None:
+            shutil.rmtree(os.path.join(self.path, staged_dir), ignore_errors=True)
         if change is not None:
             raise conflict  # every attempt lost the CAS
         return None
@@ -317,17 +332,13 @@ class LakeTable:
             list(schema.fields) + [T.StructField(model.BUCKET_COLUMN, T.IntegerType(), True)]
         )
         sel = None if buckets is None else set(buckets)
-        dirs = [
-            os.path.join(self.path, e["dir"])
-            for e in entries
-            if sel is None or e["bucket"] in sel
-        ]
+        dirs = [os.path.join(self.path, e["dir"]) for e in _holding(entries, sel)]
         if not dirs:
             return self.spark.createDataFrame([], full)
         df = self.spark.read.schema(full).parquet(*dirs)
         if sel is not None:
-            # redundant with metadata pruning, but gives parquet row-group
-            # skipping if a dir ever holds multiple buckets
+            # a delta file holds every bucket its write task wrote; the
+            # filter also skips row groups by their min/max stats
             df = df.filter(F.col(model.BUCKET_COLUMN).isin(*sel))
         return df
 
@@ -364,25 +375,30 @@ class LakeTable:
         """Buckets referenced by ``snap`` (default: the head), ascending —
         the natural parallel-read split (one Flight endpoint per bucket)."""
         snap = snap or self.current_snapshot()
-        return sorted({e["bucket"] for e in snap["entries"]})
+        return sorted({b for e in snap["entries"] for b in e["buckets"]})
 
     def entry_bytes(
         self, buckets: list[int] | None = None, version: int | None = None
     ) -> int:
-        """On-disk parquet bytes of the snapshot entries serving ``buckets``
-        (all buckets when None) — an upper bound on what a read of that
-        slice returns (tombstones and LWW-superseded delta rows only
-        shrink it). Metadata-sized: one listdir per entry dir, no Spark
-        job."""
+        """On-disk parquet bytes of the snapshot's files holding ``buckets``
+        (all buckets when None), each file counted once — an upper bound on
+        what a read of that slice returns (tombstones, LWW-superseded delta
+        rows and the other buckets of a shared delta file only shrink it).
+        No Spark job: one listdir per entry dir, plus the ``_ab_bucket``
+        column of each delta file that also holds other buckets."""
         snap = self.snapshot(version) if version is not None else self.current_snapshot()
         sel = None if buckets is None else set(buckets)
         total = 0
-        for e in snap["entries"]:
-            if sel is None or e["bucket"] in sel:
-                try:
-                    total += sum(os.path.getsize(f) for f in self._files([e]))
-                except OSError:
-                    continue
+        for e in _holding(snap["entries"], sel):
+            shared = sel is not None and not sel.issuperset(e["buckets"])
+            try:
+                total += sum(
+                    os.path.getsize(f)
+                    for f in self._files([e])
+                    if not shared or not sel.isdisjoint(self._file_buckets(f))
+                )
+            except OSError:
+                continue
         return total
 
     # ------------------------------------------------------------ arrow read
@@ -412,84 +428,138 @@ class LakeTable:
             ]
         return out
 
-    def _row_groups(self, entries: list[dict], schema: pa.Schema) -> Iterator[pa.Table]:
-        for path in self._files(entries):
-            pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
-            cols = [n for n in schema.names if n in pf.schema_arrow.names]
-            for i in range(pf.num_row_groups):
-                yield _conform_arrow(pf.read_row_group(i, columns=cols), schema)
+    #: files whose buckets a table remembers; past it the memory restarts
+    HELD_FILES_MAX = 4096
 
-    def _resolve_bucket(
-        self, entries: list[dict], schema: pa.Schema, keys: list[str]
+    def _learn(self, path: str, held: Iterable[int]) -> frozenset[int]:
+        if len(self._held) >= self.HELD_FILES_MAX:
+            self._held.clear()
+        self._held[path] = frozen = frozenset(held)
+        return frozen
+
+    def _file_buckets(self, path: str) -> frozenset[int]:
+        """The buckets one data file holds (its ``_ab_bucket`` column)."""
+        held = self._held.get(path)
+        if held is None:
+            col = pq.ParquetFile(path).read(columns=[model.BUCKET_COLUMN])[model.BUCKET_COLUMN]
+            held = self._learn(path, pc.unique(col).to_pylist())
+        return held
+
+    def _row_groups(
+        self, entries: list[dict], schema: pa.Schema, buckets: set[int] | None = None
     ) -> Iterator[pa.Table]:
-        """One bucket's rows, LWW-resolved, tombstones kept: its deltas are
-        resolved in memory, then the base streams by row group with every
-        row a newer delta winner supersedes dropped (Iceberg's
-        equality-delete apply), then the winners no base row beat. Every key
-        lives in one bucket, so memory holds one bucket's deltas plus one
-        row group. Keyless tables and delta-free buckets just stream."""
+        """``entries``' files by row group, each file opened at most once,
+        conformed to ``schema`` (which carries ``_ab_bucket``). A file of an
+        entry that also holds buckets outside ``buckets`` keeps only the
+        rows of ``buckets``, filtered as each row group is read, and is not
+        opened at all once a read has shown it holds none of them."""
+        want = None if buckets is None else pa.array(sorted(buckets), pa.int32())
+        for e in entries:
+            shared = buckets is not None and not buckets.issuperset(e["buckets"])
+            learn = len(e["buckets"]) > 1
+            for path in self._files([e]):
+                if shared and buckets.isdisjoint(self._held.get(path, buckets)):
+                    continue
+                pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+                cols = [n for n in schema.names if n in pf.schema_arrow.names]
+                held: set[int] = set()
+                for i in range(pf.num_row_groups):
+                    # commit files are small: a thread pool per row group
+                    # costs more than it saves
+                    t = pf.read_row_group(i, columns=cols, use_threads=False)
+                    if learn:
+                        held.update(pc.unique(t[model.BUCKET_COLUMN]).to_pylist())
+                    if shared:
+                        t = t.filter(pc.is_in(t[model.BUCKET_COLUMN], value_set=want))
+                    yield _conform_arrow(t, schema)
+                if learn:
+                    self._learn(path, held)
+
+    def _resolve(
+        self, entries: list[dict], schema: pa.Schema, keys: list[str],
+        buckets: set[int] | None,
+    ) -> Iterator[pa.Table]:
+        """The rows of ``entries`` in ``buckets`` (all when None),
+        LWW-resolved, tombstones kept. Every delta file is read once and
+        its rows resolved in memory; then, bucket by bucket, the base
+        streams by row group with every row a newer delta winner supersedes
+        dropped (Iceberg's equality-delete apply), then the bucket's winners
+        no base row beat. Every key lives in one bucket, so memory holds the
+        selected buckets' delta rows plus one row group. Keyless tables and
+        delta-free reads just stream."""
+        entries = _holding(entries, buckets)
         deltas = [e for e in entries if e["kind"] == "delta"]
         if not keys or not deltas:
-            yield from self._row_groups(entries, schema)
+            yield from self._row_groups(entries, schema, buckets)
             return
         winners = _lww_arrow(
-            pa.concat_tables([schema.empty_table(), *self._row_groups(deltas, schema)]), keys
+            pa.concat_tables([schema.empty_table(), *self._row_groups(deltas, schema, buckets)]),
+            keys,
         )
-        beaten = np.zeros(winners.num_rows, dtype=bool)
-        for rg in self._row_groups([e for e in entries if e["kind"] != "delta"], schema):
-            keep, lost = _supersede(rg, winners, keys)
-            beaten[lost] = True
-            yield rg.take(keep)
-        yield winners.filter(pa.array(~beaten))
+        bases = [e for e in entries if e["kind"] != "delta"]
+        held = {b for e in entries for b in e["buckets"]}
+        for b in sorted(held if buckets is None else held & buckets):
+            w = winners.filter(pc.equal(winners[model.BUCKET_COLUMN], b))
+            beaten = np.zeros(w.num_rows, dtype=bool)
+            for rg in self._row_groups(_holding(bases, {b}), schema, {b}):
+                keep, lost = _supersede(rg, w, keys)
+                beaten[lost] = True
+                yield rg.take(keep)
+            yield w.filter(pa.array(~beaten))
 
-    def _resolved_batches(
-        self, snap: dict, entries: list[dict], buckets: set[int] | None,
-        out: pa.Schema, live: bool,
-    ) -> Iterator[pa.RecordBatch]:
-        """``out``'s columns of ``entries`` (those in ``buckets``), resolved
-        bucket by bucket; ``live`` drops tombstones."""
+    def _reader(
+        self, snap: dict, entries: list[dict], buckets: set[int] | None, live: bool
+    ) -> pa.RecordBatchReader:
+        """``entries``' rows in ``buckets``, resolved (see ``_resolve``) as
+        the rows are drained; ``live`` drops tombstones and metadata
+        columns."""
         keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
         full = self.arrow_schema(snap, metadata=True)
-        per_bucket: dict[int, list[dict]] = {}
-        for e in entries:
-            if buckets is None or e["bucket"] in buckets:
-                per_bucket.setdefault(e["bucket"], []).append(e)
-        for b in sorted(per_bucket):
-            for t in self._resolve_bucket(per_bucket[b], full, keys):
+        out = pa.schema([f for f in full if not (live and f.name.startswith(model.META_PREFIX))])
+        full = full.append(pa.field(model.BUCKET_COLUMN, pa.int32()))
+
+        def batches() -> Iterator[pa.RecordBatch]:
+            for t in self._resolve(entries, full, keys, buckets):
                 if live:
                     t = t.filter(pc.not_equal(t[model.META_OP], "d"))
                 yield from t.select(out.names).to_batches()
+
+        return pa.RecordBatchReader.from_batches(out, batches())
 
     def read_arrow(
         self, buckets: list[int] | None = None, version: int | None = None
     ) -> pa.RecordBatchReader:
         """``read(version, buckets)`` without Spark: the snapshot's parquet
-        files read with pyarrow, one bucket at a time (see
-        ``_resolve_bucket``). Row- and schema-equal to
+        files read with pyarrow, each delta file once, bases one bucket at
+        a time (see ``_resolve``). Row- and schema-equal to
         ``read(...).toArrow()``; files older than an ``evolve`` read back
         null in the columns they lack. The snapshot resolves on call, the
         rows as the reader is drained."""
         snap = self.snapshot(version) if version is not None else self.current_snapshot()
-        schema = self.arrow_schema(snap)
-        sel = None if buckets is None else set(buckets)
-        return pa.RecordBatchReader.from_batches(
-            schema, self._resolved_batches(snap, snap["entries"], sel, schema, live=True)
-        )
+        return self._reader(snap, snap["entries"], None if buckets is None else set(buckets), True)
 
     # ----------------------------------------------------------------- write
     def _stage_write(
-        self, df: DataFrame, version: int, pre_partitioned: bool = False
-    ) -> list[dict]:
-        """Write rows grouped per bucket under a fresh commit dir; return
-        snapshot entries [{dir, bucket}], one per bucket written.
+        self, df: DataFrame, version: int, kind: str, pre_partitioned: bool = False
+    ) -> tuple[str, list[dict]]:
+        """Write rows under a fresh commit dir; return the commit dir and
+        its snapshot entries. ``kind`` picks the layout:
 
-        ``partitionBy`` on a shadow copy of the bucket column keeps
-        ``_ab_bucket`` itself inside the data files (so parquet min/max stats
-        prune at scan time) while producing one directory per bucket for
-        metadata-level pruning. ``pre_partitioned`` promises the input is
-        already hash-partitioned on the bucket column (the ingest pipeline's
-        single shuffle), so the write adds no exchange and each bucket lands
-        in exactly one file per commit.
+        - ``"delta"`` (an ingest batch or a client write): ONE entry
+          ``{dir, kind, buckets}`` for the commit dir, which holds flat
+          parquet files, one per write task, each sorted by ``_ab_bucket``.
+          Every file and dir a commit creates has a fixed cost (on a box
+          without native Hadoop IO each one forks ``chmod``), so a dir and
+          a file per bucket dominated small commits.
+        - ``"base"`` (``compact`` and truncating overwrites): one entry
+          ``{dir, kind, buckets: [b]}`` per bucket — ``partitionBy`` on a
+          shadow copy of the bucket column keeps ``_ab_bucket`` itself inside
+          the files — so compaction stays per bucket and a base slice is
+          one file.
+
+        ``pre_partitioned`` promises the input is already hash-partitioned
+        on the bucket column (the ingest pipeline's single shuffle), so the
+        write adds no exchange and each bucket lands in one file.
 
         Manifest entries come from the write plan itself: an unnamed
         ``Observation`` collects the written bucket set on the write job —
@@ -502,18 +572,22 @@ class LakeTable:
         out = os.path.join(self.path, commit_dir)
         staged = df if pre_partitioned else df.repartition(model.BUCKET_COLUMN)
         written = Observation()
+        staged = staged.observe(written, F.collect_set(model.BUCKET_COLUMN).alias("buckets"))
         t0 = time.time()
-        (
-            staged.observe(written, F.collect_set(model.BUCKET_COLUMN).alias("buckets"))
-            .withColumn("_pb", F.col(model.BUCKET_COLUMN))
-            .write.partitionBy("_pb")
-            .parquet(out)
-        )
+        if kind == "delta":
+            staged.sortWithinPartitions(model.BUCKET_COLUMN).write.parquet(out)
+        else:
+            staged.withColumn("_pb", F.col(model.BUCKET_COLUMN)).write.partitionBy("_pb").parquet(out)
         self.timings["stage_write"] = round(time.time() - t0, 3)
         buckets = sorted(written.get["buckets"])
         if not buckets:
             shutil.rmtree(out, ignore_errors=True)
-        return [{"dir": f"{commit_dir}/_pb={b}", "bucket": b} for b in buckets]
+            return commit_dir, []
+        if kind == "delta":
+            return commit_dir, [{"dir": commit_dir, "kind": kind, "buckets": buckets}]
+        return commit_dir, [
+            {"dir": f"{commit_dir}/_pb={b}", "kind": kind, "buckets": [b]} for b in buckets
+        ]
 
     def with_bucket(self, df: DataFrame) -> DataFrame:
         keys = self.key_columns or [c for c in df.columns if c != model.BUCKET_COLUMN]
@@ -537,9 +611,12 @@ class LakeTable:
         Plans as: LWW-dedup batch → append delta files (no join at all);
         winners resolve at read; background ``compact()`` bounds read cost.
 
-        ``prepared`` lets the ingest pipeline promise the batch is already
-        LWW-resolved and hash-partitioned on the bucket column, so the merge
-        adds zero extra shuffles.
+        The batch lands as ONE delta entry: a commit dir of flat files, one
+        per write task, sorted by bucket (a truncating merge writes one base
+        dir per bucket instead; see ``_stage_write``). ``prepared`` lets the
+        ingest pipeline promise the batch is already LWW-resolved and
+        hash-partitioned on the bucket column, so the merge adds zero extra
+        shuffles.
 
         A batch already recorded as ``checkpoint_id:batch_id`` is skipped;
         ``batch_id=None`` (a client write) checks and records nothing.
@@ -579,9 +656,10 @@ class LakeTable:
             changes = self.with_bucket(changes)
             prepared = False
         winners = changes if prepared or not keys else dedup_lww(changes, keys)
-        staged = self._stage_write(winners, snap["version"] + 1, pre_partitioned=prepared)
-        for e in staged:
-            e["kind"] = "base" if truncate else "delta"
+        staged_dir, staged = self._stage_write(
+            winners, snap["version"] + 1, "base" if truncate else "delta",
+            pre_partitioned=prepared,
+        )
         max_applied = int(snap["properties"].get("max_applied_batches", 1024))
 
         def edit(head: dict) -> dict | None:
@@ -620,10 +698,10 @@ class LakeTable:
         # committed batch or put (its ``maintenance_every`` option, default
         # 16, after the commit is durable); deployments that disable it
         # must schedule maintenance() as an external background job.
-        return self._commit(edit, staged)
+        return self._commit(edit, staged_dir)
 
     def buckets_needing_compaction(self, limit: int | None = None) -> list[int]:
-        """Buckets whose delta-file count has reached ``limit`` (defaults to
+        """Buckets held by at least ``limit`` delta entries (defaults to
         the table's ``compact_after_deltas`` property)."""
         snap = self.current_snapshot()
         if limit is None:
@@ -631,7 +709,8 @@ class LakeTable:
         per_bucket: dict[int, int] = {}
         for e in snap["entries"]:
             if e["kind"] == "delta":
-                per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + 1
+                for b in e["buckets"]:
+                    per_bucket[b] = per_bucket.get(b, 0) + 1
         return sorted(b for b, n in per_bucket.items() if n >= limit)
 
     def maintenance(self) -> int | None:
@@ -721,8 +800,14 @@ class LakeTable:
     def compact(self, buckets: list[int] | None = None) -> int:
         """Fold delta files into base files for the given buckets (all if
         None): read union, resolve LWW winners (tombstones retained), rewrite
-        as base. Bounds MoR read amplification; at cluster scale this runs as
-        a background maintenance job per bucket range.
+        as one base dir per bucket. Bounds MoR read amplification; at
+        cluster scale this runs as a background maintenance job per bucket
+        range.
+
+        A delta entry is folded only whole: the selection widens to every
+        bucket that shares an entry with it, until nothing changes, so a
+        commit dir stays live for all the buckets it holds (folding part of
+        one would lose or duplicate the rest).
 
         The commit swaps out exactly the entry dirs the rewrite read, so
         deltas committed while it ran stay in the head. If a racing commit
@@ -730,17 +815,20 @@ class LakeTable:
         the rewrite is stale: nothing is committed, its files are removed
         and the current version is returned."""
         snap = self.current_snapshot()
-        all_buckets = {e["bucket"] for e in snap["entries"]}
-        sel = sorted(all_buckets if buckets is None else set(buckets) & all_buckets)
-        if not sel:
+        sel = None if buckets is None else set(buckets)
+        while True:
+            read = _holding(snap["entries"], sel)
+            wider = {b for e in read for b in e["buckets"]}
+            if sel is not None and wider <= sel:
+                break
+            sel = wider
+        if not read:
             return snap["version"]
-        read = [e for e in snap["entries"] if e["bucket"] in sel]
-        df = self._read_entries(read, self.schema(snap), sel)
+        # every entry read lies wholly inside the selection: no row filter
+        df = self._read_entries(read, self.schema(snap), None)
         keys = snap["properties"].get("key_columns", model.KEY_COLUMNS)
         df = dedup_lww(df, keys) if keys else df
-        staged = self._stage_write(df, snap["version"] + 1)
-        for e in staged:
-            e["kind"] = "base"
+        staged_dir, staged = self._stage_write(df, snap["version"] + 1, "base")
         read_dirs = {e["dir"] for e in read}
 
         def edit(head: dict) -> dict | None:
@@ -749,7 +837,7 @@ class LakeTable:
             kept = [e for e in head["entries"] if e["dir"] not in read_dirs]
             return {"entries": kept + staged}
 
-        version = self._commit(edit, staged)
+        version = self._commit(edit, staged_dir)
         return self.current_version() if version is None else version
 
     # ------------------------------------------------------------- utilities
@@ -810,10 +898,7 @@ class LakeTable:
         _, to_snap, new_entries, rewritten = self._change_range(from_version, to_version)
         if rewritten:
             return None
-        schema = self.arrow_schema(to_snap, metadata=True)
-        return pa.RecordBatchReader.from_batches(
-            schema, self._resolved_batches(to_snap, new_entries, None, schema, live=False)
-        )
+        return self._reader(to_snap, new_entries, None, live=False)
 
     def _change_range(
         self, from_version: int, to_version: int | None

@@ -19,10 +19,11 @@ Differences that are the point of the exercise:
   its stdout through a temp file per 100-record batch
   (abm/connector.py:288-297); here a lake asset's Flight read runs no Spark
   job at all: ``LakeTable.read_arrow`` reads the pinned snapshot's parquet
-  files with pyarrow and resolves merge-on-read deltas in memory, one hash
-  bucket at a time (one bucket's deltas plus one row group of driver
-  memory, never the whole asset), and the response STREAMS (the
-  reference's one good property, abm/server.py:159, kept). HTTP NDJSON
+  files with pyarrow, reading each delta file once and resolving the
+  requested buckets' deltas in memory, then streaming bases one hash
+  bucket at a time (those deltas plus one row group of driver memory — a
+  one-bucket slice holds one bucket's deltas), and the response STREAMS
+  (the reference's one good property, abm/server.py:159, kept). HTTP NDJSON
   reads, the snapshot-diff change plan and non-lake assets stream a Spark
   plan through ``toLocalIterator`` — one partition of driver memory at a
   time.
@@ -66,7 +67,7 @@ except ImportError:  # pragma: no cover
     fl = None
     HAVE_FLIGHT = False
 
-from airbyte_module_spark.engine import Engine
+from airbyte_module_spark.engine import Engine, check_write_mode
 
 # rows per Arrow record batch / NDJSON flush on the streamed read paths —
 # bounds driver memory per in-flight chunk regardless of asset size
@@ -259,7 +260,8 @@ if HAVE_FLIGHT:
 
         # -------------------------------------------------------------- write
         def do_put(self, context, descriptor, reader, writer):
-            """Descriptor command = JSON ``{asset, write_mode}``
+            """Descriptor command = JSON ``{asset, write_mode}``; an
+            unknown ``write_mode`` is refused before the stream is read
             (abm/server.py:166-187; json_schema is unnecessary here — the
             Arrow stream carries a real schema, unlike the reference's
             2-type JSON-Schema fabrication at abm/connector.py:302-318).
@@ -280,6 +282,10 @@ if HAVE_FLIGHT:
             asset = cmd["asset"]
             mode = cmd.get("write_mode", "append")
             eng = self._engine(asset)
+            try:
+                check_write_mode(mode)
+            except ValueError as e:
+                raise fl.FlightServerError(str(e))
             staging = _spill_dir()
             spill = os.path.join(staging, "put.parquet")
             try:
@@ -442,12 +448,21 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         chunks (the reference's bounded copy loop,
         abm/connector.py:323-341 — never the whole body in memory), then
         parsed JVM-side by Spark's JSON reader against the asset schema and
-        applied as ONE engine write. No per-row Python dicts anywhere."""
+        applied as ONE engine write. No per-row Python dicts anywhere. An
+        unknown ``X-Write-Mode`` is answered 400 before the body is read."""
         eng = self._engine()
         if eng is None:
             return
         length = int(self.headers.get("Content-Length", "0"))
         mode = self.headers.get("X-Write-Mode", "append")
+        try:
+            check_write_mode(mode)
+        except ValueError:
+            self.send_response(400)
+            self.send_header("Content-Length", "0")
+            self.send_header("Connection", "close")  # the body stays unread
+            self.end_headers()
+            return
         staging = _spill_dir()
         spill = os.path.join(staging, "body.ndjson")
         try:

@@ -228,8 +228,9 @@ class CdcPipeline:
            decode below re-projects the CACHED winners — no second pass
            over the feed.
         4. Full payload decode, normalize + sha256 run on winners only,
-           which take one cheap repartition onto the bucket key for the
-           per-bucket file write.
+           which take one cheap repartition onto the bucket key: each
+           write task writes one delta file holding whole buckets, sorted
+           by bucket, and the batch is one commit dir.
         """
         keys = self.table.key_columns
         tm = self.timings = {}
@@ -300,16 +301,14 @@ class CdcPipeline:
                 lineage = lineage_obj.to_dict()
                 tm["lineage_collect"] = round(time.time() - t0, 3)
 
+            # one write task, so one delta file, per shuffle partition.
             # shuffle.partitions can be non-numeric on some platforms
             # (e.g. "auto" under auto-optimized shuffle) — fall back to
             # the scheduler's default parallelism
             try:
-                conf_parts = int(
-                    self.table.spark.conf.get("spark.sql.shuffle.partitions")
-                )
+                n_parts = int(self.table.spark.conf.get("spark.sql.shuffle.partitions"))
             except (TypeError, ValueError):
-                conf_parts = self.table.spark.sparkContext.defaultParallelism
-            n_parts = max(self.table.n_buckets, conf_parts)
+                n_parts = self.table.spark.sparkContext.defaultParallelism
 
             # full decode of the winning lines (5% of events at 20:1
             # conflict), projected through the current — possibly just

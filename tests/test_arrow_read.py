@@ -1,18 +1,24 @@
 """``LakeTable.read_arrow`` / ``changes_arrow`` against the Spark reads they
 stand in for: row- and schema-equal to ``read(...).toArrow()`` and
-``changes(...).toArrow()`` on every snapshot shape."""
+``changes(...).toArrow()`` on every snapshot shape. Tables have 16 buckets
+and the session 4 shuffle partitions, so a delta file holds several
+buckets and every slice filters a shared file."""
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
 import itertools
+import os
 from decimal import Decimal
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
 from airbyte_module_spark import model
+from airbyte_module_spark.lake import table as table_mod
 from airbyte_module_spark.lake.table import LakeTable
 
 USER = T.StructType(
@@ -30,7 +36,7 @@ META = [
 _batch_ids = itertools.count()
 
 
-def _table(spark, tmp_path, user=USER, key_columns=("id",), n_buckets=4) -> LakeTable:
+def _table(spark, tmp_path, user=USER, key_columns=("id",), n_buckets=16) -> LakeTable:
     return LakeTable.create(
         spark, str(tmp_path / "t"), schema=model.table_schema(user),
         n_buckets=n_buckets, key_columns=list(key_columns),
@@ -72,6 +78,12 @@ def _ids(t: pa.Table) -> dict:
     return {r["id"]: r["name"] for r in t.to_pylist()}
 
 
+def _assert_shared_delta(table: LakeTable) -> None:
+    """Some delta entry of the head holds more than one bucket."""
+    entries = table.current_snapshot()["entries"]
+    assert any(e["kind"] == "delta" and len(e["buckets"]) > 1 for e in entries)
+
+
 BASE_ROWS = [
     (1, "a", 1.0, 100, 1, "i"),
     (2, "b", 2.0, 100, 2, "i"),
@@ -100,6 +112,7 @@ def test_read_arrow_base_plus_deltas_with_tombstones(spark, tmp_path):
     _merge(spark, t, BASE_ROWS, truncate=True)
     _merge(spark, t, DELTA_ROWS)
     _merge(spark, t, [(3, "c2", 3.5, 300, 10, "u"), (6, None, None, 300, 11, "d")])
+    _assert_shared_delta(t)
     got = _check_read(t)
     assert _ids(got) == {1: "a2", 3: "c2", 4: "d", 5: None}
 
@@ -109,6 +122,7 @@ def test_read_arrow_deltas_only(spark, tmp_path):
     _merge(spark, t, BASE_ROWS)
     _merge(spark, t, DELTA_ROWS)
     assert {e["kind"] for e in t.current_snapshot()["entries"]} == {"delta"}
+    _assert_shared_delta(t)
     got = _check_read(t)
     assert _ids(got) == {1: "a2", 4: "d", 5: None, 6: "f"}
 
@@ -152,6 +166,7 @@ def test_read_arrow_keyless_streams_every_file(spark, tmp_path):
     _merge(spark, t, BASE_ROWS, truncate=True)
     v1 = _merge(spark, t, DELTA_ROWS)
     _merge(spark, t, [(1, "a", 1.0, 100, 1, "i")])  # a duplicate row stays
+    _assert_shared_delta(t)
     got = _check_read(t)
     assert got.num_rows == 4 + 3 + 1  # every row but the two tombstones
     _check_changes(t, v1 - 1)
@@ -174,6 +189,7 @@ def test_changes_arrow_delta_ranges(spark, tmp_path):
     v1 = _merge(spark, t, BASE_ROWS)
     v2 = _merge(spark, t, DELTA_ROWS)
     _merge(spark, t, [(6, None, None, 300, 11, "d"), (8, "h", 8.0, 300, 12, "u")])
+    _assert_shared_delta(t)
     got = _check_changes(t, v1)
     assert {r["id"]: r[model.META_OP] for r in got.to_pylist()} == {
         1: "u", 2: "d", 6: "d", 8: "u"
@@ -242,7 +258,107 @@ def test_read_arrow_column_types(spark, tmp_path):
     v = _merge(spark, t, [_typed_row(i, 200, 10 + i) for i in range(3, 9)], user=TYPED)
     nulls = (9,) + (None,) * (len(TYPED.fields) - 1) + (300, 20, "u")
     _merge(spark, t, [nulls, _typed_row(0, 300, 21, "d")], user=TYPED)
+    _assert_shared_delta(t)
     got = _check_read(t)
     assert got.num_rows == 9  # ids 1-9: id 0 deleted
     _check_changes(t, v - 1)
     _check_changes(t, v)
+
+
+def _data_files(table: LakeTable, entries: list[dict]) -> list[str]:
+    out = []
+    for e in entries:
+        d = os.path.join(table.path, e["dir"])
+        out += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    return out
+
+
+@pytest.fixture()
+def several_files_per_delta(spark):
+    """Writes keep all 4 shuffle partitions, so a delta entry of these tiny
+    tables has several files, each holding several buckets."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def _assert_several_files(table: LakeTable) -> None:
+    deltas = [e for e in table.current_snapshot()["entries"] if e["kind"] == "delta"]
+    assert any(len(_data_files(table, [e])) > 1 for e in deltas)
+
+
+@pytest.mark.usefixtures("several_files_per_delta")
+def test_arrow_reads_open_each_file_once_per_call(spark, tmp_path, monkeypatch):
+    """A delta file shared by several buckets is read once per full read
+    and once per change poll, not once per bucket it holds; once a read has
+    shown which buckets each file holds, a slice opens only the files
+    holding its bucket."""
+    t = _table(spark, tmp_path)
+    _merge(spark, t, BASE_ROWS, truncate=True)
+    v = _merge(spark, t, DELTA_ROWS)
+    _merge(spark, t, [(3, "c2", 3.5, 300, 10, "u"), (7, "g", 7.0, 300, 11, "u")])
+    _assert_shared_delta(t)
+    _assert_several_files(t)
+    opens = collections.Counter()
+    orig = pq.ParquetFile
+
+    def counting(path, *a, **k):
+        opens[path] += 1
+        return orig(path, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    entries = t.current_snapshot()["entries"]
+    t.read_arrow().read_all()
+    assert sorted(opens) == sorted(_data_files(t, entries))
+    assert set(opens.values()) == {1}
+    opens.clear()
+    t.changes_arrow(v - 1).read_all()
+    deltas = [e for e in entries if e["kind"] == "delta"]
+    assert sorted(opens) == sorted(_data_files(t, deltas))
+    assert set(opens.values()) == {1}
+    held = {
+        p: set(orig(p).read(columns=[model.BUCKET_COLUMN])[model.BUCKET_COLUMN].to_pylist())
+        for p in _data_files(t, entries)
+    }
+    for b in t.live_buckets():
+        opens.clear()
+        t.read_arrow([b]).read_all()
+        assert sorted(opens) == sorted(p for p, h in held.items() if b in h)
+        assert set(opens.values()) == {1}
+    monkeypatch.undo()
+    _check_read(t)
+    _check_changes(t, v - 1)
+
+
+@pytest.mark.usefixtures("several_files_per_delta")
+def test_one_bucket_slice_holds_only_its_delta_rows(spark, tmp_path, monkeypatch):
+    """A slice filters each shared delta file as it reads it: what it
+    resolves in memory is exactly its own bucket's delta rows."""
+    t = _table(spark, tmp_path)
+    _merge(spark, t, BASE_ROWS, truncate=True)
+    _merge(spark, t, DELTA_ROWS)
+    _merge(spark, t, [(3, "c2", 3.5, 300, 10, "u"), (7, "g", 7.0, 300, 11, "u")])
+    _assert_shared_delta(t)
+    _assert_several_files(t)
+    deltas = [e for e in t.current_snapshot()["entries"] if e["kind"] == "delta"]
+    raw = spark.read.parquet(*[os.path.join(t.path, e["dir"]) for e in deltas])
+    per_bucket = {
+        r[model.BUCKET_COLUMN]: r["count"]
+        for r in raw.groupBy(model.BUCKET_COLUMN).count().collect()
+    }
+    resolved = []
+    orig = table_mod._lww_arrow
+
+    def spy(rows, keys):
+        resolved.append(rows)
+        return orig(rows, keys)
+
+    monkeypatch.setattr(table_mod, "_lww_arrow", spy)
+    for b in t.live_buckets():
+        resolved.clear()
+        _same(t.read_arrow([b]), t.read(buckets=[b]))
+        held = sum(r.num_rows for r in resolved)
+        assert held == per_bucket.get(b, 0)
+        assert all(set(r[model.BUCKET_COLUMN].to_pylist()) <= {b} for r in resolved)

@@ -89,10 +89,11 @@ def test_client_writes_leave_exactly_once_record_unchanged(spark, tmp_path):
     """A client write has no identity a source could deliver again, so it
     is neither checked nor recorded: any number of writes to a keyless
     table (whose record is never pruned without a watermark) leaves the
-    record as it was, and every write lands."""
+    record as it was, and every write lands. With 16 buckets each write is
+    one delta entry holding several of them."""
     feed = str(tmp_path / "feed")
     generate_feed(FeedSpec(seed=33, n_events=60, n_shards=2), feed)
-    eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=2)
+    eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=16)
     eng.replay(feed)
     record = eng.table.current_snapshot()["applied_batches"]
     assert len(record) == 1
@@ -105,6 +106,11 @@ def test_client_writes_leave_exactly_once_record_unchanged(spark, tmp_path):
         assert eng.write(df, mode="append") is not None
     assert eng.table.current_snapshot()["applied_batches"] == record
     assert eng.read().count() == n0 + 15
+    entries = eng.table.current_snapshot()["entries"]
+    assert len(entries) == 6 and all(e["kind"] == "delta" for e in entries)
+    assert any(len(e["buckets"]) > 1 for e in entries[1:])  # a write's entry
+    rows = lambda t: sorted(map(repr, t.to_pylist()))  # noqa: E731
+    assert rows(eng.table.read_arrow().read_all()) == rows(eng.read().toArrow())
 
 
 def test_writes_compact_on_schedule(spark, tmp_path):
@@ -121,8 +127,8 @@ def test_writes_compact_on_schedule(spark, tmp_path):
         assert eng.write(_rows(spark, 20, offset=10 * i), mode="upsert") is not None
     entries = eng.table.current_snapshot()["entries"]
     assert any(e["kind"] == "base" for e in entries)
-    for b in {e["bucket"] for e in entries}:
-        assert sum(e["kind"] == "delta" and e["bucket"] == b for e in entries) < 4
+    for b in {b for e in entries for b in e["buckets"]}:
+        assert sum(e["kind"] == "delta" and b in e["buckets"] for e in entries) < 4
     assert sorted(r["id"] for r in eng.read().collect()) == list(range(50))
 
 
@@ -177,7 +183,9 @@ def test_write_runs_no_bucket_listing_job(spark, tmp_path):
             n = _jobs(spark, lambda: eng.write(_rows(spark, 2000), mode=mode))
             assert n <= 2, (keys, mode, n)
         assert eng.read().count() == 2000
-        assert sorted(int(e["bucket"]) for e in eng.table.current_snapshot()["entries"]) == [0, 1, 2, 3]
+        # the last write is an overwrite: one base entry per bucket
+        entries = eng.table.current_snapshot()["entries"]
+        assert [e["buckets"] for e in entries] == [[0], [1], [2], [3]]
 
 
 def test_empty_write_stages_no_files(spark, tmp_path):

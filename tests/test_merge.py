@@ -477,14 +477,76 @@ def test_snapshot_expiration_gc(spark, tmp_path):
     for n in snaps:
         v = int(n[5:-5])
         retained_dirs |= {e["dir"] for e in table.snapshot(v)["entries"]}
+    # data dirs on disk: flat delta commit dirs and per-bucket base dirs
     data_root = os.path.join(str(tmp_path / "t"), "data")
     on_disk = set()
     for commit in os.listdir(data_root):
-        for pb in os.listdir(os.path.join(data_root, commit)):
-            if pb.startswith("_pb="):
-                on_disk.add(f"data/{commit}/{pb}")
-    assert on_disk <= retained_dirs | set(), f"orphans: {on_disk - retained_dirs}"
+        names = os.listdir(os.path.join(data_root, commit))
+        if any(n.endswith(".parquet") for n in names):
+            on_disk.add(f"data/{commit}")
+        on_disk |= {f"data/{commit}/{n}" for n in names if n.startswith("_pb=")}
+    assert on_disk
+    assert on_disk <= retained_dirs, f"orphans: {on_disk - retained_dirs}"
     assert_matches_oracle(table, events)
+
+
+@pytest.mark.parametrize("keys", [["k"], []], ids=["keyed", "keyless"])
+def test_compaction_folds_shared_delta_entries_whole(spark, tmp_path, keys):
+    """compact([b]) where one delta entry holds buckets b and c, and
+    another c and e: both entries fold whole (b widens to c, c to e), so
+    no commit dir stays live for only some of its buckets, while a delta
+    holding none of them stays. Reads are unchanged (no keyless row lost
+    or doubled), changes() across the rewrite takes the state diff on a
+    keyed table and raises on a keyless one, and every commit dir on disk
+    is still referenced by a snapshot."""
+    import os
+
+    import pyspark.sql.types as T
+
+    sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), schema=model.table_schema(sch), key_columns=keys,
+        n_buckets=16,
+    )
+    cols = "k string, v long, _ab_emitted_at long, _ab_seq long, _ab_op string"
+    cands = [(f"k{i}", i, 100 + i, i, "u") for i in range(64)]
+    # the bucket each candidate row lands in, computed as merge computes it
+    df = t.with_bucket(t._conform(spark.createDataFrame(cands, cols), t.schema()))
+    by_bucket: dict[int, list] = {}
+    for r in df.collect():
+        by_bucket.setdefault(r[model.BUCKET_COLUMN], []).append(tuple(r)[:5])
+    c = next(x for x, rows in by_bucket.items() if len(rows) >= 2)
+    b, e, f = [x for x in by_bucket if x != c][:3]
+
+    def merge(rows):
+        return t.merge(spark.createDataFrame(rows, cols))
+
+    v1 = merge([by_bucket[b][0], by_bucket[c][0]])
+    merge([by_bucket[c][1], by_bucket[e][0]])
+    merge([by_bucket[f][0]])
+    entries = t.current_snapshot()["entries"]
+    assert sorted(x["buckets"] for x in entries) == sorted([sorted([b, c]), sorted([c, e]), [f]])
+    before = sorted(map(tuple, t.read().collect()))
+    assert len(before) == 5
+    want_changes = sorted(map(tuple, t.changes(v1).collect()))
+
+    t.compact([b])
+    head = t.current_snapshot()
+    kinds = sorted((x["buckets"], x["kind"]) for x in head["entries"])
+    assert kinds == sorted([([b], "base"), ([c], "base"), ([e], "base"), ([f], "delta")])
+    assert sorted(map(tuple, t.read().collect())) == before
+    arrow = sorted(map(repr, t.read_arrow().read_all().to_pylist()))
+    assert arrow == sorted(map(repr, t.read().toArrow().to_pylist()))
+    if keys:
+        assert t.changes_arrow(v1) is None  # a rewritten range: the state diff
+        assert sorted(map(tuple, t.changes(v1).collect())) == want_changes
+    else:
+        with pytest.raises(ValueError, match="keyless"):
+            t.changes(v1)
+    referenced = {
+        x["dir"].split("/")[1] for v in range(head["version"] + 1) for x in t.snapshot(v)["entries"]
+    }
+    assert set(os.listdir(os.path.join(t.path, "data"))) == referenced
 
 
 def test_commutative_digest_matches_oracle_and_is_partition_invariant(spark, tmp_path):

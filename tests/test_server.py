@@ -591,21 +591,77 @@ def test_flight_endpoints_pinned_to_one_version(asset, spark):
 
 
 def test_entry_bytes_bounds_each_bucket(spark, tmp_path):
-    """entry_bytes (a metadata-sized listdir per entry, no Spark job) counts
-    the parquet bytes behind a read and adds up over bucket slices."""
+    """entry_bytes (no Spark job) counts the parquet bytes behind a read:
+    the whole table counts each file once, and one bucket counts exactly
+    the files holding it — per-bucket base files, and every delta file
+    that holds the bucket among others."""
+    import os
+
+    import pyarrow.parquet as pq
+
     eng = Engine(
         spark, str(tmp_path / "sized"), schema=USER_SCHEMA,
-        key_columns=["id"], n_buckets=4,
+        key_columns=["id"], n_buckets=16,
     )
     df = spark.range(100).selectExpr(
         "id", "concat('u', id) AS first_name", "id * 0.5 AS salary"
     )
-    eng.write(df, mode="upsert")
-    est = eng.table.entry_bytes()
-    assert est > 0
-    assert est == sum(
-        eng.table.entry_bytes([b]) for b in eng.table.live_buckets()
-    )
+    eng.write(df, mode="overwrite")
+    eng.write(df.filter("id % 3 = 0"), mode="upsert")
+    entries = eng.table.current_snapshot()["entries"]
+    assert {e["kind"] for e in entries} == {"base", "delta"}
+    files = {}  # path -> (bytes, buckets it holds)
+    for e in entries:
+        d = os.path.join(eng.table.path, e["dir"])
+        for f in os.listdir(d):
+            if f.endswith(".parquet"):
+                p = os.path.join(d, f)
+                held = set(pq.read_table(p, columns=["_ab_bucket"])["_ab_bucket"].to_pylist())
+                files[p] = (os.path.getsize(p), held)
+    assert any(len(held) > 1 for _, held in files.values())  # a shared delta file
+    assert eng.table.entry_bytes() == sum(n for n, _ in files.values())
+    for b in eng.table.live_buckets():
+        assert eng.table.entry_bytes([b]) == sum(n for n, held in files.values() if b in held)
+
+
+def test_unknown_write_mode_lands_nothing(asset):
+    """A write mode other than append/overwrite/upsert is rejected before
+    anything is evolved or committed — by Engine.write, by Flight do_put
+    and (as 400) by HTTP PUT — instead of landing as an append."""
+    before, version = _rows(asset), asset.table.current_version()
+    df = asset.spark.createDataFrame([(3, "cal", 300.25, "x")], "id long, first_name string, salary double, extra string")
+    with pytest.raises(ValueError, match="overwirte"):
+        asset.write(df, mode="overwirte")
+    if HAVE_FLIGHT:
+        import pyarrow.flight as fl
+
+        from airbyte_module_spark.server import EngineFlightServer
+
+        with EngineFlightServer({"userdata": asset}) as server:
+            client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+            new = pa.table({"id": [3], "first_name": ["cal"], "salary": [300.25]})
+            desc = fl.FlightDescriptor.for_command(
+                json.dumps({"asset": "userdata", "write_mode": "overwirte"}).encode()
+            )
+            with pytest.raises(fl.FlightError, match="overwirte"):
+                writer, _ = client.do_put(desc, new.schema)
+                writer.write_table(new)
+                writer.close()
+    server = EngineHttpServer({"userdata": asset}).start()
+    try:
+        body = json.dumps({"id": 3, "first_name": "cal", "salary": 300.25}).encode()
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{server.port}/userdata", data=body, method="PUT"
+        )
+        req.add_header("X-Write-Mode", "overwirte")
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(req)
+        assert err.value.code == 400
+    finally:
+        server.stop()
+    assert _rows(asset) == before
+    assert asset.table.current_version() == version
+    assert "extra" not in asset.schema().fieldNames()
 
 
 @pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")

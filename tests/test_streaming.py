@@ -10,14 +10,27 @@ from tests.util import assert_matches_oracle
 
 
 def test_streaming_replay_matches_oracle(spark, tmp_path):
+    """16 buckets over 4 shuffle partitions: every micro-batch is one delta
+    entry of files holding several buckets each, and both readers agree
+    on the full table and on every bucket slice."""
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=21, n_events=300, n_shards=6), feed)
-    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8)
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=16)
     pipe = CdcPipeline(table)
     pipe.replay_stream(feed, str(tmp_path / "ck"), max_files_per_trigger=2)
     assert_matches_oracle(table, events)
     # multiple micro-batches actually happened (maxFilesPerTrigger honored)
-    assert len(table.current_snapshot()["applied_batches"]) >= 3
+    snap = table.current_snapshot()
+    assert len(snap["applied_batches"]) >= 3
+    assert len(snap["entries"]) == len(snap["applied_batches"])
+    assert any(len(e["buckets"]) > 1 for e in snap["entries"])
+
+    def rows(t):
+        return sorted(map(repr, t.to_pylist()))
+
+    assert rows(table.read_arrow().read_all()) == rows(table.read().toArrow())
+    for b in table.live_buckets():
+        assert rows(table.read_arrow([b]).read_all()) == rows(table.read(buckets=[b]).toArrow())
 
 
 def test_engine_replay_multibatch(spark, tmp_path):
@@ -186,7 +199,8 @@ def test_scheduled_maintenance_bounds_delta_growth(spark, tmp_path):
     per_bucket: dict[int, int] = {}
     for e in snap["entries"]:
         if e["kind"] == "delta":
-            per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + 1
+            for b in e["buckets"]:
+                per_bucket[b] = per_bucket.get(b, 0) + 1
     assert all(n < 8 for n in per_bucket.values()) or not per_bucket
     assert any(e["kind"] == "base" for e in snap["entries"])
     assert_matches_oracle(table, events)
