@@ -179,17 +179,17 @@ class Engine:
         checkpoint_dir: str | None = None,
         max_files_per_trigger: int | None = None,
     ) -> None:
-        """Bounded replay of a change feed (streaming with availableNow when
-        a checkpoint dir is given — resumable; plain batch otherwise).
-        ``max_files_per_trigger`` splits the bounded replay into multiple
-        micro-batches (availableNow honors source rate limits) — the shape a
-        production tail actually runs."""
-        if checkpoint_dir:
-            self.pipeline.replay_stream(
-                feed_path, checkpoint_dir, max_files_per_trigger=max_files_per_trigger
-            )
-        else:
-            self.pipeline.replay_batch(feed_path)
+        """Bounded, resumable replay of a change feed directory: a stream
+        with ``trigger(availableNow=True)`` that lands every file the
+        checkpoint has not yet consumed. Without ``checkpoint_dir`` the
+        table keeps one checkpoint per feed path (see
+        :meth:`CdcPipeline.replay_stream`), so replaying a feed again lands
+        only its new files. ``max_files_per_trigger`` splits the bounded
+        replay into multiple micro-batches (availableNow honors source rate
+        limits) — the shape a production tail actually runs."""
+        self.pipeline.replay_stream(
+            feed_path, checkpoint_dir, max_files_per_trigger=max_files_per_trigger
+        )
 
     def tail(
         self,

@@ -49,9 +49,10 @@ v2 table and everything above it is unchanged):
   replays — which is what lets a replay from any checkpoint reproduce the
   table byte-for-byte (BASELINE.json north_star).
 - **Exactly-once**: a batch is recorded only under an identity that can be
-  delivered again — the streaming sink's ``(checkpoint_id, batch_id)``, a
-  batch replay's sorted input-file list (hashed) — and skipped once
-  recorded; a client write (``batch_id=None``) checks and records nothing.
+  delivered again — the streaming sink's ``(checkpoint_id, batch_id)`` —
+  and skipped once recorded; a client write (``batch_id=None``) checks and
+  records nothing. A replay without a checkpoint of its own streams through
+  one the table keeps under ``_checkpoints/``, one per feed path.
   The record is RETAINED BOUNDED (``max_applied_batches``, default 1024,
   most recent by version) so snapshot metadata stays metadata-sized at
   10^6+ batches — Structured Streaming only ever re-delivers batches
@@ -61,7 +62,7 @@ v2 table and everything above it is unchanged):
   defense). KEYLESS tables have no LWW defense, so their applied-batches
   record is pruned ONLY below the streaming checkpoint's committed-offset
   watermark (``merge(..., offset_watermark=N)`` — batches < N can never
-  redeliver); batch replays (no watermark) are never pruned.
+  redeliver); records merged without a watermark are never pruned.
 - **Snapshot expiration**: ``expire_snapshots(keep_last)`` (run from
   ``maintenance()``) deletes snapshot files older than the retained window
   and garbage-collects data dirs no retained snapshot references — the
@@ -191,6 +192,12 @@ def _supersede(base: pa.Table, winners: pa.Table, keys: list[str]) -> tuple[np.n
     top = groups["_r_max"].to_numpy()
     base_wins = first < n
     return np.sort(first[base_wins]), top[base_wins & (top >= n)] - n
+
+
+def _commit_dir(entry_dir: str) -> str:
+    """The ``data/commit-*`` dir an entry dir lies in (a delta entry's dir
+    is its commit dir; a base entry's is ``<commit dir>/_pb=<b>``)."""
+    return "/".join(entry_dir.split("/")[:2])
 
 
 def _holding(entries: list[dict], buckets: set[int] | None) -> list[dict]:
@@ -642,8 +649,8 @@ class LakeTable:
         those entries and keep snapshot metadata bounded instead of growing
         O(total batches) forever. The streaming sink passes its current
         batch_id (foreachBatch delivers batch N only after every batch < N
-        committed); other merges pass None and keyless records are then
-        never pruned. Keyed tables ignore it — their bounded window + LWW
+        committed); a direct merge may pass None, and its keyless records
+        are then never pruned. Keyed tables ignore it — their bounded window + LWW
         idempotence already covers aging."""
         snap = self.current_snapshot()
         key = None if batch_id is None else f"{checkpoint_id}:{batch_id}"
@@ -728,14 +735,15 @@ class LakeTable:
         self.expire_snapshots(keep_last=keep)
         return version
 
-    def expire_snapshots(
-        self, keep_last: int = 64, delete_orphan_data: bool = True
-    ) -> list[int]:
+    def expire_snapshots(self, keep_last: int = 64) -> list[int]:
         """Delete snapshot metadata older than the newest ``keep_last``
-        versions and (by default) garbage-collect data dirs referenced ONLY
-        by expired snapshots — without this, every compaction leaves its
-        superseded base/delta files on storage forever. Never touches a dir
-        any retained snapshot references. Returns the expired versions."""
+        versions and garbage-collect the data dirs only expired snapshots
+        reference — without this, every compaction leaves its superseded
+        base/delta files on storage forever. A ``data/commit-*`` dir goes
+        whole once no retained snapshot references any entry under it;
+        until then only the expired entry's own dir goes. Never touches a
+        dir any retained snapshot references. Returns the expired
+        versions."""
         versions = self.catalog.list_snapshot_versions()
         keep = set(versions[-keep_last:]) | {self.current_version()}
         expired = [v for v in versions if v not in keep]
@@ -744,14 +752,14 @@ class LakeTable:
         kept_dirs: set[str] = set()
         for v in keep:
             kept_dirs |= {e["dir"] for e in self.snapshot(v)["entries"]}
+        kept_commits = {_commit_dir(d) for d in kept_dirs}
         for v in expired:
-            if delete_orphan_data:
-                for e in self.snapshot(v)["entries"]:
-                    if e["dir"] not in kept_dirs:
-                        shutil.rmtree(
-                            os.path.join(self.path, e["dir"]), ignore_errors=True
-                        )
-                        kept_dirs.add(e["dir"])  # rmtree once per dir
+            for e in self.snapshot(v)["entries"]:
+                commit = _commit_dir(e["dir"])
+                gone = e["dir"] if commit in kept_commits else commit
+                if gone not in kept_dirs:
+                    shutil.rmtree(os.path.join(self.path, gone), ignore_errors=True)
+                    kept_dirs.add(gone)  # rmtree once per dir
             self.catalog.delete_snapshot(v)
         return expired
 

@@ -1,4 +1,4 @@
-from airbyte_module_spark.sources.feed import parse_envelopes, read_feed, read_feed_stream
+from airbyte_module_spark.sources.feed import read_feed_stream
 from airbyte_module_spark.sources.files import read_file, write_file
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed, generate_feed_spark
 from airbyte_module_spark.sources.jdbc import jdbc_options, jdbc_url, read_jdbc, write_jdbc
@@ -9,8 +9,6 @@ __all__ = [
     "generate_feed_spark",
     "jdbc_options",
     "jdbc_url",
-    "parse_envelopes",
-    "read_feed",
     "read_feed_stream",
     "read_file",
     "read_jdbc",

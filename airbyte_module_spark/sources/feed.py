@@ -19,11 +19,6 @@ from pyspark.sql import types as T
 from airbyte_module_spark import model
 
 
-def read_feed(spark: SparkSession, feed_path: str) -> DataFrame:
-    """Batch-read raw envelope lines (column ``value``)."""
-    return spark.read.text(feed_path)
-
-
 def read_feed_stream(
     spark: SparkSession, feed_path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -37,38 +32,6 @@ def read_feed_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(feed_path)
-
-
-def parse_envelopes(
-    raw: DataFrame,
-    data_schema: T.StructType | None = None,
-    stream: str = model.STREAM_NAME,
-) -> DataFrame:
-    """Envelope lines → typed change rows.
-
-    Output columns: user data columns + ``_ab_emitted_at, _ab_seq, _ab_op``.
-    Entirely JVM-side (``from_json`` + projections); ``.explain`` shows a
-    single WholeStageCodegen span with the RECORD/stream filters pushed onto
-    the scan.
-    """
-    data_schema = data_schema or model.base_data_schema()
-    env = raw.select(
-        F.from_json(F.col("value"), model.ENVELOPE_SCHEMA).alias("m")
-    ).select("m.type", "m.record.*")
-    records = env.filter(
-        (F.col("type") == "RECORD") & (F.col("stream") == stream)
-    )
-    parsed = records.select(
-        F.col("emitted_at").alias(model.META_EMITTED),
-        F.from_json(F.col("data"), data_schema).alias("d"),
-    )
-    user_cols = [f.name for f in data_schema.fields if f.name not in ("op", "seq")]
-    return parsed.select(
-        *[F.col(f"d.{c}").alias(c) for c in user_cols],
-        F.col(model.META_EMITTED),
-        F.col("d.seq").alias(model.META_SEQ),
-        F.col("d.op").alias(model.META_OP),
-    ).filter(F.col(model.META_OP).isNotNull())
 
 
 def parse_envelopes_once(

@@ -1,15 +1,14 @@
-"""CDC pipeline: change-feed tail → transform → MERGE, batch or streaming.
+"""CDC pipeline: change-feed tail → transform → MERGE.
 
-The streaming tail is Structured Streaming with a checkpointed
-``foreachBatch`` sink (SURVEY.md §3.4). Batch replay, the streaming sink and
-``Engine.write`` all end in one commit tail, :meth:`CdcPipeline.commit`.
-Streaming replay and tail share one code path: ``trigger(availableNow=True)``
-gives bounded replay of everything in the feed directory;
-``processingTime`` gives a continuous tail. Restarting from the checkpoint
-resumes at the last committed source offset, and the
-``(checkpoint_id, batch_id)`` dedup inside :meth:`LakeTable.merge` makes
-re-delivered batches no-ops — together: exactly-once effective semantics
-(SURVEY.md §2.8 T2).
+Every ingest is Structured Streaming with a checkpointed ``foreachBatch``
+sink (SURVEY.md §3.4); the sink and ``Engine.write`` end in one commit
+tail, :meth:`CdcPipeline.commit`. Replay and tail share one code path:
+``trigger(availableNow=True)`` gives bounded replay of every feed file the
+checkpoint has not yet consumed; ``processingTime`` gives a continuous
+tail. Restarting from the checkpoint resumes at the last committed source
+offset, and the ``(checkpoint_id, batch_id)`` dedup inside
+:meth:`LakeTable.merge` makes re-delivered batches no-ops — together:
+exactly-once effective semantics (SURVEY.md §2.8 T2).
 
 Replaces the reference's pull loop — one full_refresh connector run per HTTP/
 Flight request (``/root/reference/abm/connector.py:223``, cursors disabled at
@@ -19,6 +18,7 @@ Flight request (``/root/reference/abm/connector.py:223``, cursors disabled at
 from __future__ import annotations
 
 import hashlib
+import os
 import re
 import threading
 import time
@@ -106,8 +106,8 @@ class CdcPipeline:
             self.table.maintenance()
 
     def commit(self, rows: DataFrame, timings: dict | None = None, **merge_opts) -> int | None:
-        """The one commit tail of every writer — ``apply_batch`` (streaming
-        sink and batch replay) and ``Engine.write`` (client writes): content
+        """The one commit tail of every writer — ``apply_batch`` (the
+        streaming sink) and ``Engine.write`` (client writes): content
         transform → :meth:`LakeTable.merge` (``merge_opts`` passed on) →
         :meth:`_post_commit`. ``timings`` (default: a fresh dict) becomes
         :attr:`timings`, with the merge and post-commit wall times added."""
@@ -190,15 +190,14 @@ class CdcPipeline:
         offset_watermark: int | None = None,
     ) -> int | None:
         """Parse + dedup + lineage, then the :meth:`commit` tail, for one
-        batch of raw envelope lines. Shared by batch replay and the
-        streaming sink, for keyed and keyless tables alike.
+        batch of raw envelope lines — the streaming sink's body, for keyed
+        and keyless tables alike.
 
-        ``offset_watermark`` is forwarded to ``LakeTable.merge``; ONLY the
-        streaming sink sets it (to its own ``batch_id``) because only
-        Structured Streaming's checkpoint gives the can-never-redeliver
-        guarantee the watermark asserts. Ad-hoc/batch replays leave it None
-        and keyless exactly-once records are then never pruned. Keyed
-        tables ignore it.
+        ``offset_watermark`` is forwarded to ``LakeTable.merge``; the
+        streaming sink sets it to its own ``batch_id`` because Structured
+        Streaming's checkpoint gives the can-never-redeliver guarantee the
+        watermark asserts. A direct call may leave it None, and its keyless
+        exactly-once records are then never pruned. Keyed tables ignore it.
 
         Plan shape — minimal parse, full decode on WINNERS only:
 
@@ -345,38 +344,30 @@ class CdcPipeline:
         finally:
             grouped.unpersist()
 
-    def replay_batch(self, feed_path: str) -> int | None:
-        """One-shot batch replay of an entire feed directory (backfill path).
-        Same semantics as the streaming replay — final state is batch-
-        boundary independent.
-
-        The replay is one batch, recorded under the sha256 of its sorted
-        input-file list — a file is identified by its path, as in the
-        streaming file source. Re-running the same feed is skipped; a
-        different feed, or one that gained files, is a new batch."""
-        raw = feed_src.read_feed(self.table.spark, feed_path)
-        files = "\n".join(sorted(raw.inputFiles()))
-        return self.apply_batch(
-            raw,
-            batch_id=hashlib.sha256(files.encode()).hexdigest(),
-            checkpoint_id="batch-replay",
-        )
-
     # ------------------------------------------------------------- streaming
     def replay_stream(
         self,
         feed_path: str,
-        checkpoint_dir: str,
+        checkpoint_dir: str | None = None,
         max_files_per_trigger: int | None = None,
         processing_time: str | None = None,
-        timeout_sec: float | None = None,
     ):
-        """Streaming ingest with checkpointed offsets.
+        """Streaming ingest of a feed directory with checkpointed offsets —
+        the one ingest path for replays and tails alike.
 
         ``processing_time=None`` → ``trigger(availableNow=True)``: process
         everything currently in the feed then stop (bounded replay / resume).
         Otherwise a continuous tail at the given cadence.
+
+        ``checkpoint_dir=None`` uses a checkpoint the table owns, one per
+        feed: ``<table>/_checkpoints/<sha256(feed_path)[:16]>`` (trailing
+        ``/`` stripped). Replaying the same feed again then lands only the
+        files the stream has not yet consumed, so a feed that gained files
+        lands exactly once on a keyless table too.
         """
+        if checkpoint_dir is None:
+            feed_id = hashlib.sha256(feed_path.rstrip("/").encode()).hexdigest()[:16]
+            checkpoint_dir = os.path.join(self.table.path, "_checkpoints", feed_id)
         raw = feed_src.read_feed_stream(
             self.table.spark, feed_path, max_files_per_trigger
         )
@@ -404,7 +395,7 @@ class CdcPipeline:
             writer = writer.trigger(availableNow=True)
         query = writer.start()
         if processing_time is None:
-            query.awaitTermination(timeout_sec)
+            query.awaitTermination()
             # per-trigger duration breakdown (latestOffset / walCommit /
             # addBatch / commitOffsets ...) — the only visibility into what
             # Structured Streaming spends OUTSIDE apply_batch; metadata-

@@ -1,5 +1,5 @@
-"""One commit tail for ingest batches, batch replays and client writes:
-exactly-once identities, scheduled maintenance of writes, and the jobs a
+"""One commit tail for ingest batches and client writes: exactly-once
+identities of replays, scheduled maintenance of writes, and the jobs a
 write runs."""
 
 import os
@@ -47,11 +47,11 @@ def _rows(spark, n, offset=0):
     )
 
 
-def test_batch_replays_of_two_feeds_both_land(spark, tmp_path):
-    """Two batch replays of different feeds both commit: each is recorded
-    under its own input-file list, so the second is no duplicate of the
-    first. Together they give the state of the whole feed; re-running
-    either is skipped."""
+def test_replays_of_two_feeds_both_land(spark, tmp_path):
+    """Two replays of different feeds without a checkpoint dir both commit:
+    the table keeps one checkpoint per feed path, so the second is no
+    duplicate of the first. Together they give the state of the whole
+    feed; re-running either lands nothing."""
     events, feed_a, feed_b = _split_feed(tmp_path, seed=31)
     eng = Engine(spark, str(tmp_path / "t"), n_buckets=8)
     eng.replay(feed_a)
@@ -59,30 +59,50 @@ def test_batch_replays_of_two_feeds_both_land(spark, tmp_path):
     eng.replay(feed_b)
     assert eng.table.current_version() == v_a + 1
     assert_matches_oracle(eng.table, events)
-    assert eng.pipeline.replay_batch(feed_a) is None
-    assert eng.pipeline.replay_batch(feed_b) is None
+    eng.replay(feed_a)
+    eng.replay(feed_b)
     assert eng.table.current_version() == v_a + 1
+    assert len(os.listdir(os.path.join(eng.table.path, "_checkpoints"))) == 2
     # each replay is recorded under the identity its lineage names
     lineage = {f"{r['checkpoint_id']}:{r['batch_id']}" for r in eng.lineage()}
     assert set(eng.table.current_snapshot()["applied_batches"]) == lineage
     assert len(lineage) == 2
 
 
-def test_keyless_batch_replay_rerun_is_skipped(spark, tmp_path):
+def test_keyless_replay_rerun_is_skipped(spark, tmp_path):
     """On a keyless table the exactly-once record is the only defense: the
-    same feed replayed again is skipped and adds no duplicate rows, while a
-    different feed still lands."""
+    same feed replayed again — with or without a trailing "/" — adds no
+    duplicate rows, while a different feed still lands."""
     _, feed_a, feed_b = _split_feed(tmp_path, seed=32)
     eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=4)
-    v1 = eng.pipeline.replay_batch(feed_a)
-    assert v1 is not None
+    eng.replay(feed_a)
+    v1 = eng.table.current_version()
     n_a = eng.read().count()
     assert n_a > 0
-    assert eng.pipeline.replay_batch(feed_a) is None
+    eng.replay(feed_a)
+    eng.replay(feed_a + "/")
     assert eng.table.current_version() == v1
     assert eng.read().count() == n_a
-    assert eng.pipeline.replay_batch(feed_b) == v1 + 1
+    eng.replay(feed_b)
+    assert eng.table.current_version() == v1 + 1
     assert eng.read().count() > n_a
+
+
+def test_keyless_replay_of_grown_feed_lands_once(spark, tmp_path):
+    """A feed dir replayed, then grown by a shard and replayed again, lands
+    every event exactly once on a keyless table: the second replay reads
+    only the new shard."""
+    whole = tmp_path / "whole"
+    events = generate_feed(FeedSpec(seed=34, n_events=150, n_shards=3), str(whole))
+    live = tmp_path / "live"
+    live.mkdir()
+    for i in range(2):
+        shutil.copy(whole / f"shard-{i:05d}.json", live / f"shard-{i:05d}.json")
+    eng = Engine(spark, str(tmp_path / "t"), key_columns=[], n_buckets=4)
+    eng.replay(str(live))
+    shutil.copy(whole / "shard-00002.json", live / "shard-00002.json")
+    eng.replay(str(live))
+    assert eng.read().count() == sum(1 for e in events if e["record"]["data"]["op"] != "d")
 
 
 def test_client_writes_leave_exactly_once_record_unchanged(spark, tmp_path):

@@ -48,7 +48,7 @@ def test_pre_evolution_files_null_fill(spark, tmp_path):
     feed = str(tmp_path / "feed")
     generate_feed(FeedSpec(seed=32, n_events=100, n_shards=1), feed)
     table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
-    CdcPipeline(table).replay_batch(feed)
+    CdcPipeline(table).replay_stream(feed)
     dirs_before = sorted(e["dir"] for e in table.current_snapshot()["entries"])
 
     table.evolve([T.StructField("stars", T.LongType(), True)])

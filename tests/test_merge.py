@@ -1,4 +1,4 @@
-"""M1: batch replay → MERGE → final state matches the pandas oracle
+"""M1: replay → MERGE → final state matches the pandas oracle
 (per-row content sha256 equality + whole-table digest, FIXTURES.md), plus
 compaction, exactly-once and concurrent-writer commits on the lake table."""
 
@@ -42,7 +42,7 @@ def test_replay_matches_oracle(spark, tmp_path):
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=42, n_events=400), feed)
     table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8)
-    CdcPipeline(table).replay_batch(feed)
+    CdcPipeline(table).replay_stream(feed)
     assert_matches_oracle(table, events)
 
 
@@ -53,7 +53,7 @@ def test_batch_boundary_independence(spark, tmp_path):
     events = generate_feed(FeedSpec(seed=11, n_events=300, n_shards=6), feed_all)
 
     t_one = LakeTable.create(spark, str(tmp_path / "one"), n_buckets=8)
-    CdcPipeline(t_one).replay_batch(feed_all)
+    CdcPipeline(t_one).replay_stream(feed_all)
 
     t_many = LakeTable.create(spark, str(tmp_path / "many"), n_buckets=8)
     pipe = CdcPipeline(t_many)
@@ -176,7 +176,7 @@ def test_changes_between_versions(spark, tmp_path):
         (r["repo"], r["path"]): (r[model.META_SEQ], r[model.META_OP])
         for r in table.changes(v1, v2).collect()
     }
-    expected_rows = dedup_lww(feed_src.parse_envelopes(raw1)).collect()
+    expected_rows = dedup_lww(feed_src.parse_envelopes_once(raw1)).collect()
     expected = {
         (r["repo"], r["path"]): (r[model.META_SEQ], r[model.META_OP])
         for r in expected_rows
@@ -255,7 +255,7 @@ def test_lineage_recorded(spark, tmp_path):
     feed = str(tmp_path / "feed")
     generate_feed(FeedSpec(seed=4, n_events=150), feed)
     table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
-    CdcPipeline(table).replay_batch(feed)
+    CdcPipeline(table).replay_stream(feed)
     lin = table.lineage()
     assert len(lin) == 1
     rec = lin[0]
@@ -477,14 +477,15 @@ def test_snapshot_expiration_gc(spark, tmp_path):
     for n in snaps:
         v = int(n[5:-5])
         retained_dirs |= {e["dir"] for e in table.snapshot(v)["entries"]}
-    # data dirs on disk: flat delta commit dirs and per-bucket base dirs
+    # data dirs on disk: a base commit dir's per-bucket dirs, else the
+    # commit dir itself — so a commit dir left holding no retained entry
+    # (only its _SUCCESS marker, say) counts as an orphan
     data_root = os.path.join(str(tmp_path / "t"), "data")
     on_disk = set()
     for commit in os.listdir(data_root):
         names = os.listdir(os.path.join(data_root, commit))
-        if any(n.endswith(".parquet") for n in names):
-            on_disk.add(f"data/{commit}")
-        on_disk |= {f"data/{commit}/{n}" for n in names if n.startswith("_pb=")}
+        pb_dirs = {f"data/{commit}/{n}" for n in names if n.startswith("_pb=")}
+        on_disk |= pb_dirs or {f"data/{commit}"}
     assert on_disk
     assert on_disk <= retained_dirs, f"orphans: {on_disk - retained_dirs}"
     assert_matches_oracle(table, events)

@@ -3,6 +3,9 @@ after new data, restart idempotence (SURVEY.md §2.8 T1/T2)."""
 
 import shutil
 
+import pytest
+from pyspark.errors import StreamingQueryException
+
 from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
@@ -36,14 +39,17 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
 def test_engine_replay_multibatch(spark, tmp_path):
     """Engine.replay(max_files_per_trigger=) splits a bounded replay into
     micro-batches (the production tail shape perfbench's tail_serve
-    lands) with final state identical to the one-shot replay."""
+    lands) with final state identical to the one-shot replay — also
+    without a checkpoint dir: one delta entry per shard."""
     from airbyte_module_spark.engine import Engine
 
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=22, n_events=300, n_shards=6), feed)
     eng = Engine(spark, str(tmp_path / "t"), collect_lineage=True)
-    eng.replay(feed, checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1)
-    assert len(eng.lineage()) >= 6
+    eng.replay(feed, max_files_per_trigger=1)
+    entries = eng.table.current_snapshot()["entries"]
+    assert len(entries) == 6 and all(e["kind"] == "delta" for e in entries)
+    assert len(eng.lineage()) == 6
     assert_matches_oracle(eng.table, events)
 
 
@@ -224,3 +230,16 @@ def test_malformed_lines_skipped_like_reference(spark, tmp_path):
     table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     CdcPipeline(table).replay_stream(feed, str(tmp_path / "ck"))
     assert_matches_oracle(table, events)
+
+
+def test_replay_of_a_file_path_raises(spark, tmp_path):
+    """A replay reads a feed DIRECTORY: a single file path fails loudly
+    instead of landing anything."""
+    from airbyte_module_spark.engine import Engine
+
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=24, n_events=40, n_shards=1), feed)
+    eng = Engine(spark, str(tmp_path / "t"), n_buckets=2)
+    with pytest.raises(StreamingQueryException, match="must be a directory"):
+        eng.replay(f"{feed}/shard-00000.json")
+    assert eng.table.current_snapshot()["entries"] == []
