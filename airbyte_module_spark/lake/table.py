@@ -7,23 +7,24 @@ deployment would have (swap LakeTable.merge for ``MERGE INTO`` on an Iceberg
 v2 table and everything above it is unchanged):
 
 - **Snapshots**: every commit writes an immutable ``_meta/snap-{v}.json``
-  listing its data dirs and the buckets each holds; readers resolve the
-  current snapshot through an atomically-swapped pointer behind the
-  ``lake/catalog.py`` interface (POSIX ``os.replace`` here; an
-  object-store catalog does the same CAS with conditional PUTs). Manifest
-  entries are computed from the write plan, never from directory listings. Time travel = read an older snapshot;
+  listing its data dirs and, in each, every data file with its buckets
+  and size; readers resolve the current snapshot through an
+  atomically-swapped pointer behind the ``lake/catalog.py`` interface
+  (POSIX ``os.replace`` here; an object-store catalog does the same CAS
+  with conditional PUTs). Only the writer lists a dir — its own commit
+  dir, once; readers open the files the manifest names, as with an
+  Iceberg manifest. Time travel = read an older snapshot;
   ``changes(v1, v2)`` reads just the delta between two snapshots.
 - **Hidden partitioning**: rows are hash-bucketed on the identity key
   ``pmod(xxhash64(repo, path), n_buckets)`` — the analogue of Iceberg
   ``bucket(N, repo, path)``, stored in every file as ``_ab_bucket``. A
   delta commit (an ingest batch or a client write) is ONE dir of flat
   parquet files, one per write task, each sorted by ``_ab_bucket``; its
-  manifest entry lists the buckets it holds. A base (written by
+  manifest entry lists the buckets each file holds. A base (written by
   ``compact`` or a truncating overwrite) is one dir per bucket. Readers
-  prune to requested buckets at the metadata layer (entries holding none
-  of them are never opened), then filter a shared delta file's rows on
-  ``_ab_bucket`` (Spark also skips row groups by its min/max stats; the
-  Arrow reader skips the files a read has shown hold none of them).
+  prune to requested buckets at the metadata layer (files holding none of
+  them are never opened), then filter a shared delta file's rows on
+  ``_ab_bucket`` (Spark also skips row groups by its min/max stats).
 - **Merge-on-read**: every merge appends LWW-deduped delta files
   (write-optimized — the 10^10-event ingest path) and winners resolve at
   read time, exactly like Iceberg MoR with equality deletes;
@@ -85,7 +86,7 @@ import os
 import shutil
 import time
 import uuid
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -210,10 +211,6 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self.catalog = FileCatalog(os.path.join(path, "_meta"))
-        # buckets held by each file of a multi-bucket delta entry, learnt
-        # from reads: data files never change, so a slice skips, unopened,
-        # the files it knows hold none of its buckets
-        self._held: dict[str, frozenset[int]] = {}
         # last-commit phase wall-times (scaling serial-fraction profile)
         self.timings: dict[str, float] = {}
 
@@ -339,10 +336,10 @@ class LakeTable:
             list(schema.fields) + [T.StructField(model.BUCKET_COLUMN, T.IntegerType(), True)]
         )
         sel = None if buckets is None else set(buckets)
-        dirs = [os.path.join(self.path, e["dir"]) for e in _holding(entries, sel)]
-        if not dirs:
+        paths = [path for path, _ in self._files(entries, sel)]
+        if not paths:
             return self.spark.createDataFrame([], full)
-        df = self.spark.read.schema(full).parquet(*dirs)
+        df = self.spark.read.schema(full).parquet(*paths)
         if sel is not None:
             # a delta file holds every bucket its write task wrote; the
             # filter also skips row groups by their min/max stats
@@ -391,22 +388,10 @@ class LakeTable:
         (all buckets when None), each file counted once — an upper bound on
         what a read of that slice returns (tombstones, LWW-superseded delta
         rows and the other buckets of a shared delta file only shrink it).
-        No Spark job: one listdir per entry dir, plus the ``_ab_bucket``
-        column of each delta file that also holds other buckets."""
+        The sum of the sizes the manifest records: no I/O, no Spark job."""
         snap = self.snapshot(version) if version is not None else self.current_snapshot()
         sel = None if buckets is None else set(buckets)
-        total = 0
-        for e in _holding(snap["entries"], sel):
-            shared = sel is not None and not sel.issuperset(e["buckets"])
-            try:
-                total += sum(
-                    os.path.getsize(f)
-                    for f in self._files([e])
-                    if not shared or not sel.isdisjoint(self._file_buckets(f))
-                )
-            except OSError:
-                continue
-        return total
+        return sum(f["bytes"] for _, f in self._files(snap["entries"], sel))
 
     # ------------------------------------------------------------ arrow read
     def arrow_schema(self, snap: dict | None = None, metadata: bool = False) -> pa.Schema:
@@ -423,64 +408,38 @@ class LakeTable:
         ]
         return to_arrow_schema(_as_nullable(T.StructType(fields)))
 
-    def _files(self, entries: list[dict]) -> list[str]:
-        """Data files of ``entries`` — the names Spark's scan reads."""
-        out = []
-        for e in entries:
-            d = os.path.join(self.path, e["dir"])
-            out += [
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            ]
-        return out
-
-    #: files whose buckets a table remembers; past it the memory restarts
-    HELD_FILES_MAX = 4096
-
-    def _learn(self, path: str, held: Iterable[int]) -> frozenset[int]:
-        if len(self._held) >= self.HELD_FILES_MAX:
-            self._held.clear()
-        self._held[path] = frozen = frozenset(held)
-        return frozen
-
-    def _file_buckets(self, path: str) -> frozenset[int]:
-        """The buckets one data file holds (its ``_ab_bucket`` column)."""
-        held = self._held.get(path)
-        if held is None:
-            col = pq.ParquetFile(path).read(columns=[model.BUCKET_COLUMN])[model.BUCKET_COLUMN]
-            held = self._learn(path, pc.unique(col).to_pylist())
-        return held
+    def _files(
+        self, entries: list[dict], buckets: set[int] | None = None
+    ) -> list[tuple[str, dict]]:
+        """``(path, manifest record)`` of each data file of ``entries``
+        holding any of ``buckets`` (every file when None), straight from
+        the manifest: no directory is listed."""
+        return [
+            (os.path.join(self.path, e["dir"], f["name"]), f)
+            for e in _holding(entries, buckets)
+            for f in e["files"]
+            if buckets is None or not buckets.isdisjoint(f["buckets"])
+        ]
 
     def _row_groups(
         self, entries: list[dict], schema: pa.Schema, buckets: set[int] | None = None
     ) -> Iterator[pa.Table]:
-        """``entries``' files by row group, each file opened at most once,
-        conformed to ``schema`` (which carries ``_ab_bucket``). A file of an
-        entry that also holds buckets outside ``buckets`` keeps only the
-        rows of ``buckets``, filtered as each row group is read, and is not
-        opened at all once a read has shown it holds none of them."""
+        """The row groups of ``entries``' files holding any of ``buckets``,
+        each file opened once, conformed to ``schema`` (which carries
+        ``_ab_bucket``). A file that also holds other buckets keeps only
+        the rows of ``buckets``, filtered as each row group is read."""
         want = None if buckets is None else pa.array(sorted(buckets), pa.int32())
-        for e in entries:
-            shared = buckets is not None and not buckets.issuperset(e["buckets"])
-            learn = len(e["buckets"]) > 1
-            for path in self._files([e]):
-                if shared and buckets.isdisjoint(self._held.get(path, buckets)):
-                    continue
-                pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
-                cols = [n for n in schema.names if n in pf.schema_arrow.names]
-                held: set[int] = set()
-                for i in range(pf.num_row_groups):
-                    # commit files are small: a thread pool per row group
-                    # costs more than it saves
-                    t = pf.read_row_group(i, columns=cols, use_threads=False)
-                    if learn:
-                        held.update(pc.unique(t[model.BUCKET_COLUMN]).to_pylist())
-                    if shared:
-                        t = t.filter(pc.is_in(t[model.BUCKET_COLUMN], value_set=want))
-                    yield _conform_arrow(t, schema)
-                if learn:
-                    self._learn(path, held)
+        for path, f in self._files(entries, buckets):
+            shared = buckets is not None and not buckets.issuperset(f["buckets"])
+            pf = pq.ParquetFile(path, coerce_int96_timestamp_unit="us")
+            cols = [n for n in schema.names if n in pf.schema_arrow.names]
+            for i in range(pf.num_row_groups):
+                # commit files are small: a thread pool per row group
+                # costs more than it saves
+                t = pf.read_row_group(i, columns=cols, use_threads=False)
+                if shared:
+                    t = t.filter(pc.is_in(t[model.BUCKET_COLUMN], value_set=want))
+                yield _conform_arrow(t, schema)
 
     def _resolve(
         self, entries: list[dict], schema: pa.Schema, keys: list[str],
@@ -508,7 +467,7 @@ class LakeTable:
         for b in sorted(held if buckets is None else held & buckets):
             w = winners.filter(pc.equal(winners[model.BUCKET_COLUMN], b))
             beaten = np.zeros(w.num_rows, dtype=bool)
-            for rg in self._row_groups(_holding(bases, {b}), schema, {b}):
+            for rg in self._row_groups(bases, schema, {b}):
                 keep, lost = _supersede(rg, w, keys)
                 beaten[lost] = True
                 yield rg.take(keep)
@@ -553,47 +512,71 @@ class LakeTable:
         its snapshot entries. ``kind`` picks the layout:
 
         - ``"delta"`` (an ingest batch or a client write): ONE entry
-          ``{dir, kind, buckets}`` for the commit dir, which holds flat
-          parquet files, one per write task, each sorted by ``_ab_bucket``.
-          Every file and dir a commit creates has a fixed cost (on a box
-          without native Hadoop IO each one forks ``chmod``), so a dir and
-          a file per bucket dominated small commits.
+          ``{dir, kind, buckets, files}`` for the commit dir, which holds
+          flat parquet files, one per write task, each sorted by
+          ``_ab_bucket``. Every file and dir a commit creates has a fixed
+          cost (on a box without native Hadoop IO each one forks
+          ``chmod``), so a dir and a file per bucket dominated small
+          commits.
         - ``"base"`` (``compact`` and truncating overwrites): one entry
-          ``{dir, kind, buckets: [b]}`` per bucket — ``partitionBy`` on a
-          shadow copy of the bucket column keeps ``_ab_bucket`` itself inside
-          the files — so compaction stays per bucket and a base slice is
-          one file.
+          ``{dir, kind, buckets: [b], files}`` per bucket — ``partitionBy``
+          on a shadow copy of the bucket column keeps ``_ab_bucket`` itself
+          inside the files — so compaction stays per bucket and a base
+          slice is one file.
 
         ``pre_partitioned`` promises the input is already hash-partitioned
         on the bucket column (the ingest pipeline's single shuffle), so the
         write adds no exchange and each bucket lands in one file.
 
-        Manifest entries come from the write plan itself: an unnamed
-        ``Observation`` collects the written bucket set on the write job —
-        no second job, and NEVER a listing of the output directory
-        afterwards (directory listing is both slow and non-atomic on object
-        stores; Iceberg manifests are likewise derived from the write plan,
-        not from LIST calls). A write of zero rows stages nothing.
+        ``files`` lists each data file as ``{name, buckets, bytes}``, so
+        readers never list a directory. An unnamed ``Observation`` collects
+        the (write task, bucket) pairs on the write job — no second job —
+        and the writer then lists its own commit dir once: a delta file
+        ``part-<task>-…`` holds its task's buckets (the empty file Spark
+        writes for a task 0 without rows is left out), a file under
+        ``_pb=<b>`` holds ``[b]``. A write of zero rows stages nothing.
         """
         commit_dir = f"data/commit-{version}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, commit_dir)
         staged = df if pre_partitioned else df.repartition(model.BUCKET_COLUMN)
         written = Observation()
-        staged = staged.observe(written, F.collect_set(model.BUCKET_COLUMN).alias("buckets"))
+        # the task id is projected below the observed aggregate: inside it,
+        # spark_partition_id() is never initialized
+        pairs = F.collect_set(F.struct("_ab_task", model.BUCKET_COLUMN))
+        staged = (
+            staged.withColumn("_ab_task", F.spark_partition_id())
+            .observe(written, pairs.alias("held"))
+            .drop("_ab_task")
+        )
         t0 = time.time()
         if kind == "delta":
             staged.sortWithinPartitions(model.BUCKET_COLUMN).write.parquet(out)
         else:
             staged.withColumn("_pb", F.col(model.BUCKET_COLUMN)).write.partitionBy("_pb").parquet(out)
         self.timings["stage_write"] = round(time.time() - t0, 3)
-        buckets = sorted(written.get["buckets"])
-        if not buckets:
+        held: dict[int, set[int]] = {}
+        for task, b in written.get["held"]:
+            held.setdefault(task, set()).add(b)
+        files: dict[str, list[dict]] = {}  # entry dir -> its files' records
+        for d, _, names in os.walk(out):
+            rel = os.path.relpath(d, self.path)
+            for n in sorted(names):
+                if not n.endswith(".parquet") or n.startswith(("_", ".")):
+                    continue
+                if kind == "base":  # under _pb=<b>
+                    bs = {int(rel.rpartition("=")[2])}
+                else:  # part-<task>-...; none for task 0's empty file
+                    bs = held.get(int(n.split("-")[1]))
+                if bs:
+                    size = os.path.getsize(os.path.join(d, n))
+                    files.setdefault(rel, []).append({"name": n, "buckets": sorted(bs), "bytes": size})
+        if not files:
             shutil.rmtree(out, ignore_errors=True)
             return commit_dir, []
-        if kind == "delta":
-            return commit_dir, [{"dir": commit_dir, "kind": kind, "buckets": buckets}]
         return commit_dir, [
-            {"dir": f"{commit_dir}/_pb={b}", "kind": kind, "buckets": [b]} for b in buckets
+            {"dir": rel, "kind": kind, "buckets": sorted({b for f in fs for b in f["buckets"]}),
+             "files": fs}
+            for rel, fs in sorted(files.items(), key=lambda kv: kv[1][0]["buckets"])
         ]
 
     def with_bucket(self, df: DataFrame) -> DataFrame:

@@ -59,6 +59,8 @@ import tempfile
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from py4j.protocol import Py4JJavaError
+
 try:  # gated: pyarrow.flight needs grpc support compiled in
     import pyarrow.flight as fl
 
@@ -67,7 +69,7 @@ except ImportError:  # pragma: no cover
     fl = None
     HAVE_FLIGHT = False
 
-from airbyte_module_spark.engine import Engine, check_write_mode
+from airbyte_module_spark.engine import WRITE_MODES, Engine
 
 # rows per Arrow record batch / NDJSON flush on the streamed read paths —
 # bounds driver memory per in-flight chunk regardless of asset size
@@ -92,6 +94,16 @@ def _spill_dir() -> str:
     if root:
         os.makedirs(root, exist_ok=True)
     return tempfile.mkdtemp(prefix="abm-put-", dir=root)
+
+
+def _malformed_json(e: Py4JJavaError) -> bool:
+    """Whether a Spark job failed on a line its JSON reader could not parse."""
+    cause = e.java_exception
+    while cause is not None:
+        if (cause.getMessage() or "").startswith("[MALFORMED_RECORD_IN_PARSING"):
+            return True
+        cause = cause.getCause()
+    return False
 
 
 def _arrow_schema(df):
@@ -282,10 +294,8 @@ if HAVE_FLIGHT:
             asset = cmd["asset"]
             mode = cmd.get("write_mode", "append")
             eng = self._engine(asset)
-            try:
-                check_write_mode(mode)
-            except ValueError as e:
-                raise fl.FlightServerError(str(e))
+            if mode not in WRITE_MODES:
+                raise fl.FlightServerError(f"unknown write mode {mode!r}")
             staging = _spill_dir()
             spill = os.path.join(staging, "put.parquet")
             try:
@@ -341,10 +351,16 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         asset = urlsplit(self.path).path.strip("/")
         eng = self.assets.get(asset)
         if eng is None:
-            self.send_response(404)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._empty(404, close=self.command != "GET")  # a write body stays unread
         return eng
+
+    def _empty(self, status: int, close: bool = False) -> None:
+        """An empty answer; ``close`` ends the connection (body unread or short)."""
+        self.send_response(status)
+        self.send_header("Content-Length", "0")
+        if close:
+            self.send_header("Connection", "close")
+        self.end_headers()
 
     def _query(self) -> dict:
         from urllib.parse import parse_qsl, urlsplit
@@ -393,14 +409,14 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
                 if "buckets" in params
                 else None
             )
+            if "to_version" in params and from_v is None:
+                raise ValueError("to_version needs from_version")
             if from_v is not None and not hasattr(eng, "changes"):
                 raise ValueError("asset serves no incremental changes")
             if buckets is not None and not is_lake:
                 raise ValueError("asset is not bucket-sliced")
         except ValueError:
-            self.send_response(400)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._empty(400)
             return
         # pin the whole response to ONE version: header == body contents
         v = eng.table.current_version() if is_lake else None
@@ -417,9 +433,7 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         except (ValueError, FileNotFoundError):
             # range rewritten by maintenance / from-snapshot expired:
             # retryable — consumer falls back to a full read
-            self.send_response(409)
-            self.send_header("Content-Length", "0")
-            self.end_headers()
+            self._empty(409)
             return
         self.send_response(200)
         self.send_header("Content-Type", "application/x-ndjson")
@@ -448,39 +462,40 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         chunks (the reference's bounded copy loop,
         abm/connector.py:323-341 — never the whole body in memory), then
         parsed JVM-side by Spark's JSON reader against the asset schema and
-        applied as ONE engine write. No per-row Python dicts anywhere. An
-        unknown ``X-Write-Mode`` is answered 400 before the body is read."""
+        applied as ONE engine write. No per-row Python dicts anywhere.
+        Nothing lands unless the whole body parses: no ``Content-Length`` is
+        411; a bad one, an unknown ``X-Write-Mode``, a body ending short or
+        a line Spark cannot parse (FAILFAST) is 400."""
         eng = self._engine()
         if eng is None:
             return
-        length = int(self.headers.get("Content-Length", "0"))
         mode = self.headers.get("X-Write-Mode", "append")
-        try:
-            check_write_mode(mode)
-        except ValueError:
-            self.send_response(400)
-            self.send_header("Content-Length", "0")
-            self.send_header("Connection", "close")  # the body stays unread
-            self.end_headers()
+        length = self.headers.get("Content-Length")
+        if length is None or not length.isdecimal() or mode not in WRITE_MODES:
+            self._empty(411 if length is None else 400, close=True)  # the body stays unread
             return
+        remaining = int(length)
         staging = _spill_dir()
         spill = os.path.join(staging, "body.ndjson")
         try:
-            remaining = length
             with open(spill, "wb") as out:
-                while remaining > 0:
-                    chunk = self.rfile.read(min(WRITE_COPY_BYTES, remaining))
-                    if not chunk:
-                        break
+                while remaining and (chunk := self.rfile.read(min(WRITE_COPY_BYTES, remaining))):
                     out.write(chunk)
                     remaining -= len(chunk)
-            df = eng.spark.read.schema(eng.schema()).json(spill)
-            eng.write(df, mode=mode)
+            if remaining:  # the body ended short
+                self._empty(400, close=True)
+                return
+            df = eng.spark.read.schema(eng.schema()).option("mode", "FAILFAST").json(spill)
+            try:
+                eng.write(df, mode=mode)
+            except Py4JJavaError as e:
+                if not _malformed_json(e):
+                    raise
+                self._empty(400)
+                return
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        self.send_response(200)
-        self.send_header("Content-Length", "0")
-        self.end_headers()
+        self._empty(200)
 
     do_PUT = _write
     do_POST = _write

@@ -265,11 +265,18 @@ def test_read_arrow_column_types(spark, tmp_path):
     _check_changes(t, v)
 
 
-def _data_files(table: LakeTable, entries: list[dict]) -> list[str]:
-    out = []
-    for e in entries:
-        d = os.path.join(table.path, e["dir"])
-        out += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+def _disk_files(table: LakeTable, entry: dict) -> dict[str, tuple[list[int], int]]:
+    """Name → (sorted ``_ab_bucket`` set, bytes) of each non-empty parquet
+    file in ``entry``'s dir, as listed on disk — what its manifest
+    ``files`` must record (``test_manifest_files_match_disk``)."""
+    d = os.path.join(table.path, entry["dir"])
+    out = {}
+    for name in os.listdir(d):
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            path = os.path.join(d, name)
+            held = set(pq.read_table(path, columns=[model.BUCKET_COLUMN])[model.BUCKET_COLUMN].to_pylist())
+            if held:
+                out[name] = (sorted(held), os.path.getsize(path))
     return out
 
 
@@ -286,21 +293,33 @@ def several_files_per_delta(spark):
 
 def _assert_several_files(table: LakeTable) -> None:
     deltas = [e for e in table.current_snapshot()["entries"] if e["kind"] == "delta"]
-    assert any(len(_data_files(table, [e])) > 1 for e in deltas)
+    assert any(len(_disk_files(table, e)) > 1 for e in deltas)
+
+
+def _held(table: LakeTable, entries: list[dict]) -> dict[str, set[int]]:
+    """Path → buckets of each non-empty data file of ``entries``."""
+    return {
+        os.path.join(table.path, e["dir"], name): set(held)
+        for e in entries
+        for name, (held, _) in _disk_files(table, e).items()
+    }
 
 
 @pytest.mark.usefixtures("several_files_per_delta")
 def test_arrow_reads_open_each_file_once_per_call(spark, tmp_path, monkeypatch):
     """A delta file shared by several buckets is read once per full read
-    and once per change poll, not once per bucket it holds; once a read has
-    shown which buckets each file holds, a slice opens only the files
-    holding its bucket."""
+    and once per change poll, not once per bucket it holds; a slice opens
+    only the files holding its bucket, from the first slice a freshly
+    loaded table serves on."""
     t = _table(spark, tmp_path)
     _merge(spark, t, BASE_ROWS, truncate=True)
     v = _merge(spark, t, DELTA_ROWS)
     _merge(spark, t, [(3, "c2", 3.5, 300, 10, "u"), (7, "g", 7.0, 300, 11, "u")])
     _assert_shared_delta(t)
     _assert_several_files(t)
+    entries = t.current_snapshot()["entries"]
+    files = _held(t, entries)
+    fresh = LakeTable.load(spark, t.path)
     opens = collections.Counter()
     orig = pq.ParquetFile
 
@@ -309,27 +328,86 @@ def test_arrow_reads_open_each_file_once_per_call(spark, tmp_path, monkeypatch):
         return orig(path, *a, **k)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    entries = t.current_snapshot()["entries"]
-    t.read_arrow().read_all()
-    assert sorted(opens) == sorted(_data_files(t, entries))
+    for b in fresh.live_buckets():
+        opens.clear()
+        fresh.read_arrow([b]).read_all()
+        assert sorted(opens) == sorted(p for p, held in files.items() if b in held)
+        assert set(opens.values()) == {1}
+    opens.clear()
+    fresh.read_arrow().read_all()
+    assert sorted(opens) == sorted(files)
     assert set(opens.values()) == {1}
     opens.clear()
-    t.changes_arrow(v - 1).read_all()
+    fresh.changes_arrow(v - 1).read_all()
     deltas = [e for e in entries if e["kind"] == "delta"]
-    assert sorted(opens) == sorted(_data_files(t, deltas))
+    assert sorted(opens) == sorted(_held(t, deltas))
     assert set(opens.values()) == {1}
-    held = {
-        p: set(orig(p).read(columns=[model.BUCKET_COLUMN])[model.BUCKET_COLUMN].to_pylist())
-        for p in _data_files(t, entries)
-    }
-    for b in t.live_buckets():
-        opens.clear()
-        t.read_arrow([b]).read_all()
-        assert sorted(opens) == sorted(p for p, h in held.items() if b in h)
-        assert set(opens.values()) == {1}
     monkeypatch.undo()
     _check_read(t)
     _check_changes(t, v - 1)
+
+
+@pytest.mark.usefixtures("several_files_per_delta")
+def test_reads_list_no_directory(spark, tmp_path, monkeypatch):
+    """Every read takes its files from the manifest: with directory
+    listing refused, the Arrow and Spark reads, the change polls and
+    ``entry_bytes`` all still work, and ``entry_bytes`` sums the bytes of
+    the non-empty files holding the slice."""
+    t = _table(spark, tmp_path)
+    _merge(spark, t, BASE_ROWS, truncate=True)
+    v = _merge(spark, t, DELTA_ROWS)
+    _merge(spark, t, [(3, "c2", 3.5, 300, 10, "u"), (7, "g", 7.0, 300, 11, "u")])
+    _assert_several_files(t)
+    on_disk = [f for e in t.current_snapshot()["entries"] for f in _disk_files(t, e).values()]
+    want_bytes = {
+        b: sum(size for held, size in on_disk if b in held) for b in t.live_buckets()
+    }
+    want_rows = sorted(map(tuple, t.read().collect()))
+    want_changes = sorted(map(tuple, t.changes(v - 1).collect()))
+
+    def refuse(*a, **k):
+        raise AssertionError("a read listed a directory")
+
+    for name in ("listdir", "scandir", "walk"):
+        monkeypatch.setattr(os, name, refuse)
+    got = _check_read(t)  # the full read and every slice
+    assert got.num_rows == len(want_rows)
+    _check_changes(t, v - 1)
+    assert sorted(map(tuple, t.read().collect())) == want_rows
+    assert sorted(map(tuple, t.changes(v - 1).collect())) == want_changes
+    assert {b: t.entry_bytes([b]) for b in want_bytes} == want_bytes
+    assert t.entry_bytes() == sum(size for _, size in on_disk)
+
+
+@pytest.mark.usefixtures("several_files_per_delta")
+@pytest.mark.parametrize("key_columns", [["repo", "path"], []], ids=["keyed", "keyless"])
+def test_manifest_files_match_disk(spark, tmp_path, key_columns):
+    """Every entry of every snapshot lists exactly the non-empty parquet
+    files in its dir, each with its ``_ab_bucket`` set and size: an ingest
+    batch, an upsert, an overwrite and a compaction, keyed and keyless."""
+    from airbyte_module_spark import Engine
+    from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
+
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=41, n_events=80, n_shards=2), feed)
+    eng = Engine(spark, str(tmp_path / "t"), key_columns=key_columns, n_buckets=16)
+    eng.replay(feed)
+    rows = spark.createDataFrame(
+        [("org9/put", f"f{i}", "c", "py", "x") for i in range(12)],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    eng.write(rows, mode="upsert")
+    eng.write(rows.limit(6), mode="overwrite")
+    eng.write(rows, mode="append")
+    eng.table.compact()
+    t = eng.table
+    entries = [e for v in t.catalog.list_snapshot_versions() for e in t.snapshot(v)["entries"]]
+    assert {e["kind"] for e in entries} == {"delta", "base"}
+    assert any(e["kind"] == "delta" and len(e["files"]) > 1 for e in entries)
+    for e in entries:
+        disk = _disk_files(t, e)
+        assert {f["name"]: (f["buckets"], f["bytes"]) for f in e["files"]} == disk
+        assert e["buckets"] == sorted({b for held, _ in disk.values() for b in held})
 
 
 @pytest.mark.usefixtures("several_files_per_delta")

@@ -8,7 +8,9 @@ Flight clients (/root/reference/helm/client/client.py:10-13,62-65,
 
 from __future__ import annotations
 
+import http.client
 import json
+import socket
 import urllib.error
 import urllib.request
 
@@ -438,7 +440,8 @@ def test_http_get_param_errors_are_400_not_409(keyed_asset):
     server = EngineHttpServer({"versioned": keyed_asset}).start()
     try:
         base = f"http://127.0.0.1:{server.port}/versioned"
-        for bad in ("?from_version=abc", "?buckets=x", "?from_version=1&to_version=z"):
+        for bad in ("?from_version=abc", "?buckets=x", "?from_version=1&to_version=z",
+                    "?to_version=1"):
             with pytest.raises(urllib.error.HTTPError) as e:
                 urllib.request.urlopen(base + bad)
             assert e.value.code == 400, bad
@@ -543,6 +546,8 @@ def test_http_bucket_sliced_reads_union_to_full(spark, tmp_path):
 
 
 def test_http_unknown_asset_404(asset):
+    """A write to an unknown asset leaves its body unread: the 404 closes
+    the connection."""
     server = EngineHttpServer({"userdata": asset}).start()
     try:
         import urllib.error
@@ -550,6 +555,8 @@ def test_http_unknown_asset_404(asset):
         with pytest.raises(urllib.error.HTTPError) as e:
             urllib.request.urlopen(f"http://127.0.0.1:{server.port}/nope")
         assert e.value.code == 404
+        status, headers = _put(server.port, "/nope", ROW, {"Content-Length": str(len(ROW))})
+        assert (status, headers["Connection"]) == (404, "close")
     finally:
         server.stop()
 
@@ -662,6 +669,84 @@ def test_unknown_write_mode_lands_nothing(asset):
     assert _rows(asset) == before
     assert asset.table.current_version() == version
     assert "extra" not in asset.schema().fieldNames()
+
+
+def _put(port: int, path: str, body: bytes, headers: dict, end_body: bool = False):
+    """A PUT written by hand, headers as given: (status, response headers).
+    ``end_body`` shuts the sending side after ``body``."""
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=120)
+    try:
+        conn.putrequest("PUT", path)
+        for k, v in headers.items():
+            conn.putheader(k, v)
+        conn.endheaders(body)
+        if end_body:
+            conn.sock.shutdown(socket.SHUT_WR)
+        resp = conn.getresponse()
+        resp.read()
+        return resp.status, resp.headers
+    finally:
+        conn.close()
+
+
+ROW = json.dumps({"id": 3, "first_name": "cal", "salary": 300.25}).encode() + b"\n"
+
+
+@pytest.mark.parametrize("length", [None, "abc", "-1", "1.5"])
+def test_http_put_needs_a_content_length(asset, length):
+    """A chunked PUT (no Content-Length) is 411 and a length that is not a
+    non-negative integer is 400, both with the connection closed, instead
+    of committing an empty overwrite or failing inside the handler."""
+    before, version = _rows(asset), asset.table.current_version()
+    if length is None:
+        body = f"{len(ROW):x}\r\n".encode() + ROW + b"\r\n0\r\n\r\n"
+        headers = {"Transfer-Encoding": "chunked"}
+    else:
+        body, headers = ROW, {"Content-Length": length}
+    server = EngineHttpServer({"userdata": asset}).start()
+    try:
+        status, got = _put(server.port, "/userdata", body, {**headers, "X-Write-Mode": "overwrite"})
+    finally:
+        server.stop()
+    assert (status, got["Connection"]) == (411 if length is None else 400, "close")
+    assert _rows(asset) == before
+    assert asset.table.current_version() == version
+
+
+def test_http_put_malformed_line_is_400(asset):
+    """A body line that is not JSON fails the whole write (400) instead of
+    landing as an all-null row."""
+    before, version = _rows(asset), asset.table.current_version()
+    server = EngineHttpServer({"userdata": asset}).start()
+    try:
+        body = ROW + b"not json at all\n"
+        status, _ = _put(server.port, "/userdata", body, {"Content-Length": str(len(body))})
+    finally:
+        server.stop()
+    assert status == 400
+    assert _rows(asset) == before
+    assert asset.table.current_version() == version
+
+
+def test_http_put_truncated_body_is_400(asset, spark, monkeypatch):
+    """A body that ends before its Content-Length is refused before any
+    Spark job, instead of committing the part that arrived."""
+
+    def no_json(*a, **k):
+        raise AssertionError("a truncated body reached the JSON reader")
+
+    monkeypatch.setattr(type(spark.read), "json", no_json)
+    before, version = _rows(asset), asset.table.current_version()
+    server = EngineHttpServer({"userdata": asset}).start()
+    try:
+        status, headers = _put(server.port, "/userdata", ROW,
+                               {"Content-Length": str(10 * len(ROW))}, end_body=True)
+    finally:
+        server.stop()
+    monkeypatch.undo()
+    assert (status, headers["Connection"]) == (400, "close")
+    assert _rows(asset) == before
+    assert asset.table.current_version() == version
 
 
 @pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")
