@@ -323,10 +323,14 @@ class LakeTable:
             except ConcurrentCommitError as e:
                 conflict = e
         if staged_dir is not None:
-            shutil.rmtree(os.path.join(self.path, staged_dir), ignore_errors=True)
+            self._drop(staged_dir)
         if change is not None:
             raise conflict  # every attempt lost the CAS
         return None
+
+    def _drop(self, staged_dir: str) -> None:
+        """Remove a staged commit dir no snapshot will reference."""
+        shutil.rmtree(os.path.join(self.path, staged_dir), ignore_errors=True)
 
     # ------------------------------------------------------------------ read
     def _read_entries(
@@ -571,7 +575,7 @@ class LakeTable:
                     size = os.path.getsize(os.path.join(d, n))
                     files.setdefault(rel, []).append({"name": n, "buckets": sorted(bs), "bytes": size})
         if not files:
-            shutil.rmtree(out, ignore_errors=True)
+            self._drop(commit_dir)
             return commit_dir, []
         return commit_dir, [
             {"dir": rel, "kind": kind, "buckets": sorted({b for f in fs for b in f["buckets"]}),
@@ -589,7 +593,7 @@ class LakeTable:
         changes: DataFrame,
         batch_id: int | str | None = None,
         checkpoint_id: str = "adhoc",
-        lineage: dict | None = None,
+        lineage: Callable[[list[dict]], dict | None] | None = None,
         prepared: bool = False,
         truncate: bool = False,
         offset_watermark: int | None = None,
@@ -610,6 +614,12 @@ class LakeTable:
 
         A batch already recorded as ``checkpoint_id:batch_id`` is skipped;
         ``batch_id=None`` (a client write) checks and records nothing.
+
+        ``lineage`` is called once with the staged entries, after the write
+        and before the commit loop, so it can read what the write observed;
+        its result (None = none) is appended to the snapshot's lineage. If
+        it raises, the staged files are removed as for a declined commit
+        and nothing commits.
 
         ``truncate=True`` makes this a REPLACEMENT commit (the atomic
         overwrite): the published snapshot references only the batch's
@@ -650,6 +660,11 @@ class LakeTable:
             winners, snap["version"] + 1, "base" if truncate else "delta",
             pre_partitioned=prepared,
         )
+        try:
+            record = lineage(staged) if lineage is not None else None
+        except BaseException:
+            self._drop(staged_dir)
+            raise
         max_applied = int(snap["properties"].get("max_applied_batches", 1024))
 
         def edit(head: dict) -> dict | None:
@@ -679,7 +694,7 @@ class LakeTable:
             return {
                 "entries": staged if truncate else head["entries"] + staged,
                 "applied_batches": applied,
-                "lineage": (head["lineage"] + [lineage])[-200:] if lineage else head["lineage"],
+                "lineage": (head["lineage"] + [record])[-200:] if record else head["lineage"],
             }
 
         # NOTE: merge never compacts inline — a hot bucket crossing the

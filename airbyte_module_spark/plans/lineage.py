@@ -1,17 +1,23 @@
-"""Per-batch / per-partition lineage records (SURVEY.md §2.4 A1).
+"""Per-batch / per-file lineage records (SURVEY.md §2.4 A1).
 
 BASELINE.json north_star requires "per-partition lineage (source offset
-range, rows applied, merge conflicts) and throughput metrics". Lineage is
-computed with one small aggregation per micro-batch (map-side combined by
-Catalyst) and persisted inside the lake table's snapshot metadata, so a
-snapshot fully explains which batch produced it and what it applied.
+range, rows applied, merge conflicts) and throughput metrics". Lineage
+costs no Spark job of its own: the batch totals are aggregates observed on
+the batch's write itself (``DataFrame.observe`` with :func:`batch_totals`),
+and the per-partition records — one per delta file, the
+``spark_partition_id()`` grain of the write — are read from each file's
+parquet footer. The record is persisted inside the lake table's snapshot
+metadata, so a snapshot fully explains which batch produced it and what it
+applied.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airbyte_module_spark import model
@@ -25,37 +31,31 @@ class BatchLineage:
     n_winners: int
     n_conflicts: int  # events superseded by LWW within the batch
     n_deletes: int
+    # cursor and source-offset ranges over every event of the batch; events
+    # without a cursor are left out (None when no event has one)
     min_emitted_at: int | None
     max_emitted_at: int | None
+    min_seq: int | None
+    max_seq: int | None
     buckets: list[int] = field(default_factory=list)
+    # one record per delta file the batch wrote (one per write task):
+    # {file, buckets, rows, min/max_emitted_at, min/max_seq}, from the
+    # file's footer — rows and ranges count the winners the file holds
     per_partition: list[dict] = field(default_factory=list)
 
     def to_dict(self) -> dict:
         return asdict(self)
 
 
-def lineage_from_grouped(
-    grouped: DataFrame, batch_id: int | str, checkpoint_id: str
-) -> tuple[BatchLineage, list[str]]:
-    """Lineage from the ingest's per-key frame (one row per live key, or
-    per event on a keyless table: ``_w`` winner struct, ``_n`` event count,
-    ``_mne/_mxe`` cursor range, ``_mns/_mxs`` offset range — see
-    CdcPipeline.apply_batch).
-
-    The frame is already cached and, on a keyed table, metadata-sized, so
-    lineage costs ONE tiny re-aggregation instead of two extra passes over
-    the full feed — the per-partition "source offset range, rows applied"
-    the north rule asks for falls out of numbers the dedup already computed.
-
-    Also returns the distinct payload field names observed on winner
-    lines — the schema-evolution probe — riding the SAME aggregation job
-    (per-bucket ``collect_set`` of each winner's key array, flattened and
-    deduped driver-side over the <= n_buckets rows). Probe and lineage each
-    cost one driver job per micro-batch when run separately; at production
-    tail cadence (small batches, many triggers) the fixed per-job cost
-    dominates both, so the merged form halves the engine-owned driver jobs
-    between trigger and merge (round-6 multibatch attribution)."""
-    aggs = [
+def batch_totals() -> list[Column]:
+    """The aggregates a batch's write observes on the ingest's per-key frame
+    (one row per live key, or per event on a keyless table: ``_w`` winner
+    struct, ``_n`` event count, ``_mne/_mxe`` cursor range, ``_mns/_mxs``
+    offset range — see CdcPipeline.apply_batch): event, winner and winner
+    delete counts, the cursor and offset ranges (``min``/``max`` skip
+    nulls), and ``observed_keys`` — the distinct payload field names on
+    winner lines, the schema-evolution probe."""
+    return [
         F.sum("_n").alias("events"),
         F.count("*").alias("winners"),
         F.sum((F.col(f"_w.{model.META_OP}") == "d").cast("long")).alias("deletes"),
@@ -73,31 +73,61 @@ def lineage_from_grouped(
             )
         ).alias("observed_keys"),
     ]
-    rows = grouped.groupBy(model.BUCKET_COLUMN).agg(*aggs).collect()
-    observed = sorted({k for r in rows for k in (r["observed_keys"] or [])})
+
+
+def _footer_ranges(path: str) -> dict:
+    """``rows`` and the ``min/max_emitted_at``, ``min/max_seq`` ranges of
+    one parquet file, from its footer's row-group statistics (no data page
+    is read). A range is None when no row of the file has the column set."""
+    md = pq.read_metadata(path)
+    names = md.schema.names
+    out: dict = {"rows": md.num_rows}
+    for col, name in ((model.META_EMITTED, "emitted_at"), (model.META_SEQ, "seq")):
+        j = names.index(col)
+        stats = [md.row_group(i).column(j).statistics for i in range(md.num_row_groups)]
+        have = [s for s in stats if s is not None and s.has_min_max]
+        out[f"min_{name}"] = min((s.min for s in have), default=None)
+        out[f"max_{name}"] = max((s.max for s in have), default=None)
+    return out
+
+
+def lineage_from_grouped(
+    grouped: DataFrame,
+    totals: dict,
+    batch_id: int | str,
+    checkpoint_id: str,
+    root: str,
+    entries: list[dict],
+) -> tuple[BatchLineage, list[str]]:
+    """Lineage of one committed batch, without a Spark job: ``totals`` is
+    the row of :func:`batch_totals` the write observed on ``grouped`` (the
+    per-key frame the batch was written from; no job runs on it here), or
+    ``{}`` for a batch without rows; ``entries`` are the snapshot entries
+    the write staged under the table dir ``root``, whose files' footers
+    give the per-file records.
+
+    Returns the record and the distinct payload field names observed on
+    winner lines (the schema-evolution probe)."""
     per_partition = [
-        {
-            model.BUCKET_COLUMN: r[model.BUCKET_COLUMN],
-            "events": int(r["events"]),
-            "min_emitted_at": r["min_emitted_at"],
-            "max_emitted_at": r["max_emitted_at"],
-            "min_seq": r["min_seq"],
-            "max_seq": r["max_seq"],
-        }
-        for r in rows
+        {"file": f"{e['dir']}/{f['name']}", "buckets": f["buckets"],
+         **_footer_ranges(os.path.join(root, e["dir"], f["name"]))}
+        for e in entries
+        for f in e["files"]
     ]
-    n_events = sum(int(r["events"]) for r in rows)
-    n_winners = sum(int(r["winners"]) for r in rows)
+    n_events = int(totals.get("events") or 0)
+    n_winners = int(totals.get("winners") or 0)
     lin = BatchLineage(
         batch_id=batch_id,
         checkpoint_id=checkpoint_id,
         n_events=n_events,
         n_winners=n_winners,
         n_conflicts=n_events - n_winners,
-        n_deletes=sum(int(r["deletes"] or 0) for r in rows),
-        min_emitted_at=min((r["min_emitted_at"] for r in rows), default=None),
-        max_emitted_at=max((r["max_emitted_at"] for r in rows), default=None),
-        buckets=sorted(int(r[model.BUCKET_COLUMN]) for r in rows),
+        n_deletes=int(totals.get("deletes") or 0),
+        min_emitted_at=totals.get("min_emitted_at"),
+        max_emitted_at=totals.get("max_emitted_at"),
+        min_seq=totals.get("min_seq"),
+        max_seq=totals.get("max_seq"),
+        buckets=sorted({b for e in entries for b in e["buckets"]}),
         per_partition=per_partition,
     )
-    return lin, observed
+    return lin, sorted(totals.get("observed_keys") or ())

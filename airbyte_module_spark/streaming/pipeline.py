@@ -23,19 +23,40 @@ import re
 import threading
 import time
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airbyte_module_spark import model
 from airbyte_module_spark.functions import content as cf
 from airbyte_module_spark.lake.table import LakeTable
-from airbyte_module_spark.plans.lineage import lineage_from_grouped
+from airbyte_module_spark.plans.lineage import batch_totals, lineage_from_grouped
 from airbyte_module_spark.sources import feed as feed_src
 
 _INT_RE = re.compile(r"^-?\d+$")
 _FLOAT_RE = re.compile(r"^-?\d+\.\d+([eE][+-]?\d+)?$")
+
+
+class _NewFields(Exception):
+    """A batch's winners carry payload fields the table lacks (``names``):
+    its staged write is dropped so the batch can land again after the
+    table evolves."""
+
+    def __init__(self, names: list[str]):
+        super().__init__(names)
+        self.names = names
+
+
+def _observed(seen: Observation) -> dict:
+    """The row ``seen`` collected on the batch's write, or ``{}`` when the
+    observed frame had no rows: adaptive execution replaces a stage that
+    wrote nothing with an empty relation, and the stage's observed
+    metrics go with it (``Observation.get`` then fails on an empty row)."""
+    try:
+        return seen.get
+    except Py4JJavaError:
+        return {}
 
 
 class CdcPipeline:
@@ -51,8 +72,9 @@ class CdcPipeline:
         fields always widen the table (additive schema evolution).
 
         ``collect_lineage``: attach each batch's lineage record to its
-        snapshot. The lineage aggregate runs either way — it is also the
-        schema-evolution probe — so ``False`` only skips storing it.
+        snapshot. The batch totals are observed on the write either way —
+        they carry the schema-evolution probe — so ``False`` only skips
+        storing the record.
 
         ``post_merge_hook``: optional ``callable(table, version)`` invoked
         after each successfully committed merge — the user-pluggable
@@ -154,8 +176,8 @@ class CdcPipeline:
         plays the same 'number may be int or double, play it safe' game at
         ``/root/reference/abm/connector.py:182-185``). Runs only on the rare
         batch whose winners carry new fields, and samples ALL of them in ONE
-        job over the CACHED winner lines — never a second pass over the
-        feed."""
+        job over the per-key winner lines (nothing is cached, so the job
+        parses the batch again) — never a pass over the whole feed."""
         samples = grouped.agg(
             *[
                 F.first(
@@ -189,9 +211,10 @@ class CdcPipeline:
         checkpoint_id: str = "adhoc",
         offset_watermark: int | None = None,
     ) -> int | None:
-        """Parse + dedup + lineage, then the :meth:`commit` tail, for one
-        batch of raw envelope lines — the streaming sink's body, for keyed
-        and keyless tables alike.
+        """Parse + dedup, then the :meth:`commit` tail, for one batch of raw
+        envelope lines — the streaming sink's body, for keyed and keyless
+        tables alike. The write is the batch's one Spark action; a batch
+        already applied runs none.
 
         ``offset_watermark`` is forwarded to ``LakeTable.merge``; the
         streaming sink sets it to its own ``batch_id`` because Structured
@@ -217,15 +240,19 @@ class CdcPipeline:
            before the exchange. A keyless (append-only — the reference's
            plain append sink, abm/server.py:182-187) table has no LWW:
            every event is its own winner, one row with the same columns.
-           ``grouped`` is what gets cached — never the parsed full-width
-           feed (caching that measured 20s vs 4.7s at r1).
-        3. ONE driver job over ``grouped`` computes lineage and the
-           schema-evolution probe (``json_object_keys``). A new field
-           triggers evolution when a WINNING row carries it (a field seen
-           only on LWW losers is superseded data); since winner selection
-           is schema-independent, evolution widens the table and the full
-           decode below re-projects the CACHED winners — no second pass
-           over the feed.
+           Nothing is cached: at tail cadence the cache and its extra
+           action cost more than the rare re-parse below saves.
+        3. One ``Observation`` on ``grouped`` collects the batch totals and
+           the schema-evolution probe (``plans.lineage.batch_totals``) on
+           the write itself. The merge's lineage callback reads it after
+           the write: the totals, plus per-file records from the written
+           files' footers, become the batch's lineage record. A field
+           triggers evolution only when a WINNING row carries it (a field
+           seen only on LWW losers is superseded data): the callback then
+           raises ``_NewFields``, the merge drops the staged files, the
+           table evolves (one sampling job) and the batch runs once more
+           through the widened schema — about 3 parses instead of 1, on
+           that batch only.
         4. Full payload decode, normalize + sha256 run on winners only,
            which take one cheap repartition onto the bucket key: each
            write task writes one delta file holding whole buckets, sorted
@@ -269,67 +296,50 @@ class CdcPipeline:
                 F.col(model.META_SEQ).alias("_mns"),
                 F.col(model.META_SEQ).alias("_mxs"),
             )
-        # explicit spill level: the cache is 1 row per live key (per event
-        # on a keyless table) in the batch — metadata-sized at normal
-        # batch cadence on a keyed table, but a 10^9-key
-        # backfill batch must spill to disk, not evict-and-recompute the
-        # full parse+agg (MEMORY_AND_DISK is also Spark's default for
-        # DataFrame.persist; pinned here so the spill behavior is a
-        # documented decision, not an inherited default)
-        grouped.persist(StorageLevel.MEMORY_AND_DISK)
+        # one write task, so one delta file, per shuffle partition.
+        # shuffle.partitions can be non-numeric on some platforms
+        # (e.g. "auto" under auto-optimized shuffle) — fall back to
+        # the scheduler's default parallelism
         try:
-            t0 = time.time()
-            # probe + lineage in ONE driver job: the evolution probe's
-            # distinct key names ride the lineage aggregation over the
-            # cached per-key winners (see lineage_from_grouped) — at tail
-            # cadence the fixed per-job cost dominated both when run
-            # separately
-            lineage_obj, observed = lineage_from_grouped(
-                grouped, batch_id, checkpoint_id
-            )
-            tm["probe_collect"] = round(time.time() - t0, 3)
-            known = {f.name for f in self.data_schema().fields}
-            new = sorted(k for k in observed if k not in known)
-            if new:
-                self._evolve_new_fields(grouped, new)
+            n_parts = int(self.table.spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):
+            n_parts = self.table.spark.sparkContext.defaultParallelism
 
+        def land(probe: bool) -> int | None:
             schema = self.data_schema()
-            lineage = None
-            if self.collect_lineage:
-                t0 = time.time()
-                lineage = lineage_obj.to_dict()
-                tm["lineage_collect"] = round(time.time() - t0, 3)
-
-            # one write task, so one delta file, per shuffle partition.
-            # shuffle.partitions can be non-numeric on some platforms
-            # (e.g. "auto" under auto-optimized shuffle) — fall back to
-            # the scheduler's default parallelism
-            try:
-                n_parts = int(self.table.spark.conf.get("spark.sql.shuffle.partitions"))
-            except (TypeError, ValueError):
-                n_parts = self.table.spark.sparkContext.defaultParallelism
-
+            known = {f.name for f in schema.fields}
+            seen = Observation()
             # full decode of the winning lines (5% of events at 20:1
-            # conflict), projected through the current — possibly just
-            # widened — schema
+            # conflict), projected through the current schema
             env_schema = model.envelope_schema(schema)
-            user_cols = model.user_columns(schema)
-            w = grouped.select(
+            w = grouped.observe(seen, *batch_totals()).select(
                 F.col(model.BUCKET_COLUMN),
                 F.col(f"_w.{model.META_EMITTED}").alias(model.META_EMITTED),
                 F.col(f"_w.{model.META_SEQ}").alias(model.META_SEQ),
                 F.from_json(F.col("_w.value"), env_schema).alias("m"),
             )
             winners = w.select(
-                *[F.col(f"m.record.data.{c}").alias(c) for c in user_cols],
+                *[F.col(f"m.record.data.{c}").alias(c) for c in model.user_columns(schema)],
                 F.col(model.META_EMITTED),
                 F.col(model.META_SEQ),
                 F.col("m.record.data.op").alias(model.META_OP),
                 F.col(model.BUCKET_COLUMN),
             )
-            winners = winners.repartition(n_parts, F.col(model.BUCKET_COLUMN))
-            version = self.commit(
-                winners,
+
+            def lineage(staged: list[dict]) -> dict | None:
+                t0 = time.time()
+                totals = _observed(seen)
+                new = sorted(set(totals.get("observed_keys") or ()) - known)
+                if probe and new:
+                    raise _NewFields(new)
+                lin, _ = lineage_from_grouped(
+                    grouped, totals, batch_id, checkpoint_id, self.table.path, staged
+                )
+                tm["lineage"] = round(time.time() - t0, 3)
+                return lin.to_dict() if self.collect_lineage else None
+
+            return self.commit(
+                winners.repartition(n_parts, F.col(model.BUCKET_COLUMN)),
                 tm,
                 batch_id=batch_id,
                 checkpoint_id=checkpoint_id,
@@ -337,12 +347,18 @@ class CdcPipeline:
                 prepared=True,
                 offset_watermark=offset_watermark,
             )
-            # the apply_batch total leaves out post-commit (hook + scheduled
-            # maintenance), which is timed on its own
-            tm["apply_batch_total"] = round(time.time() - t_batch - tm["post_commit"], 3)
-            return version
-        finally:
-            grouped.unpersist()
+
+        try:
+            version = land(probe=True)
+        except _NewFields as e:
+            self._evolve_new_fields(grouped, e.names)
+            # the re-run does not probe: a name evolve() leaves out (one
+            # clashing with an ``_ab_`` metadata column) must not fail it
+            version = land(probe=False)
+        # the apply_batch total leaves out post-commit (hook + scheduled
+        # maintenance), which is timed on its own
+        tm["apply_batch_total"] = round(time.time() - t_batch - tm["post_commit"], 3)
+        return version
 
     # ------------------------------------------------------------- streaming
     def replay_stream(

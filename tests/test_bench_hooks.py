@@ -43,6 +43,30 @@ def test_traced_pipeline_keeps_the_attributes_the_benchmark_reads(spark, tmp_pat
     generate_feed(FeedSpec(seed=5, n_events=60, n_shards=2), feed)
     eng = Engine(spark, str(tmp_path / "t"), n_buckets=2)
     eng.replay(feed, checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1)
-    assert {"probe_collect", "merge", "post_commit", "apply_batch_total"} <= set(eng.pipeline.timings)
+    assert {"lineage", "merge", "post_commit", "apply_batch_total"} <= set(eng.pipeline.timings)
     assert eng.pipeline.stream_progress
     assert "stage_write" in eng.table.timings
+
+
+def test_traced_replay_records_lineage_per_batch(spark, spans, tmp_path):
+    """With the traced run's wrappers installed, a replay of 2 batches
+    records one ``plans.lineage`` span per committed batch, each carrying
+    the batch's non-zero event and winner counts, after its own
+    ``sources.parse_lww`` span."""
+    from airbyte_module_spark import Engine
+    from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
+
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=6, n_events=80, n_shards=2), feed)
+    eng = Engine(spark, str(tmp_path / "t"), n_buckets=4)
+    tr = spans.Tracer(spark)
+    tr.recording = True
+    uninstall = spans.install(tr)
+    try:
+        eng.replay(feed, checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1)
+    finally:
+        uninstall()
+    lineage = tr.select("plans.lineage")
+    assert len(lineage) == len(tr.select("sources.parse_lww")) == len(eng.lineage()) == 2
+    assert all(s["events"] > 0 and s["winners"] > 0 for s in lineage)
+    assert [s["events"] for s in lineage] == [lin["n_events"] for lin in eng.lineage()]

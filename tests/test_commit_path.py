@@ -5,7 +5,6 @@ write runs."""
 import os
 import shutil
 import threading
-import uuid
 
 import pyspark.sql.types as T
 
@@ -13,7 +12,7 @@ from airbyte_module_spark import Engine, model
 from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
-from tests.util import assert_matches_oracle
+from tests.util import assert_matches_oracle, count_jobs
 
 USER_SCHEMA = T.StructType(
     [
@@ -176,20 +175,6 @@ def test_scheduled_maintenance_count_is_atomic():
     assert len(calls) == 8 * 300 // 3
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs on this thread."""
-    sc = spark.sparkContext
-    gid = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, gid)
-    try:
-        fn()
-    finally:
-        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(k, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(gid))
-
-
 def test_write_runs_no_bucket_listing_job(spark, tmp_path):
     """The written bucket set is observed on the write job itself: a
     2000-row write runs 2 Spark jobs on a keyed or keyless table, in every
@@ -200,7 +185,7 @@ def test_write_runs_no_bucket_listing_job(spark, tmp_path):
             key_columns=keys, n_buckets=4,
         )
         for mode in ("append", "upsert", "overwrite"):
-            n = _jobs(spark, lambda: eng.write(_rows(spark, 2000), mode=mode))
+            n = count_jobs(spark, lambda: eng.write(_rows(spark, 2000), mode=mode))
             assert n <= 2, (keys, mode, n)
         assert eng.read().count() == 2000
         # the last write is an overwrite: one base entry per bucket
@@ -217,3 +202,41 @@ def test_empty_write_stages_no_files(spark, tmp_path):
     assert eng.table.current_snapshot()["entries"] == entries
     data = os.path.join(eng.table.path, "data")
     assert len(os.listdir(data)) == len({e["dir"].split("/")[1] for e in entries})
+
+
+def test_batch_write_is_its_only_action(spark, tmp_path):
+    """The write is a micro-batch's one action: a keyed batch runs at most
+    3 Spark jobs (the LWW exchange, the bucket exchange, the write), a
+    keyless one at most 2, a re-delivered batch none, and no frame stays
+    persisted while the batch commits (the per-key frame and a separate
+    lineage job made it 6, 5 and 4)."""
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=35, n_events=200, n_shards=2), feed)
+    sc = spark.sparkContext
+    persisted = lambda: set(sc._jsc.getPersistentRDDs().keys())  # noqa: E731
+    for keys, most in ((None, 3), ([], 2)):
+        before = persisted()
+        held: list[set] = []
+        table = LakeTable.create(spark, str(tmp_path / f"t{most}"), n_buckets=8, key_columns=keys)
+        pipe = CdcPipeline(table, post_merge_hook=lambda t, v: held.append(persisted() - before))
+        raw = spark.read.text(feed)
+        n = count_jobs(spark, lambda: pipe.apply_batch(raw, batch_id=1, checkpoint_id="c"))
+        assert n <= most, (keys, n)
+        assert count_jobs(spark, lambda: pipe.apply_batch(raw, batch_id=1, checkpoint_id="c")) == 0
+        assert held == [set()]
+        assert table.lineage()[-1]["n_winners"] > 0
+
+
+def test_batch_without_records_commits_an_empty_lineage(spark, tmp_path):
+    """A batch whose lines are all filtered out (no RECORD of the stream)
+    commits no entry and a lineage record of zeros, keyed and keyless: the
+    write's observation yields no row then, because adaptive execution
+    drops the empty stage that held it."""
+    raw = spark.createDataFrame([('{"type": "STATE", "state": {}}',)], "value string")
+    for keys in (None, []):
+        table = LakeTable.create(spark, str(tmp_path / f"t{keys}"), n_buckets=4, key_columns=keys)
+        assert CdcPipeline(table).apply_batch(raw, batch_id=1, checkpoint_id="c") == 1
+        assert table.current_snapshot()["entries"] == []
+        (rec,) = table.lineage()
+        assert (rec["n_events"], rec["n_winners"], rec["per_partition"]) == (0, 0, [])
+        assert rec["min_emitted_at"] is None and rec["buckets"] == []

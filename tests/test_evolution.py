@@ -8,6 +8,7 @@ from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
 from airbyte_module_spark.oracle import apply_events
+from tests.util import assert_lineage_matches_files, count_jobs, envelope, unreferenced_commit_dirs
 
 
 def test_evolution_adds_columns_with_inferred_types(spark, tmp_path):
@@ -87,4 +88,42 @@ def test_keyless_replay_evolves_and_appends_every_event(spark, tmp_path):
     for lin in lineage:
         assert lin["n_conflicts"] == 0
         assert lin["n_events"] == lin["n_winners"]
-        assert sum(p["events"] for p in lin["per_partition"]) == lin["n_events"]
+        assert_lineage_matches_files(table, lin)
+
+
+def _lines(spark, *lines):
+    return spark.createDataFrame([(line,) for line in lines], "value string")
+
+
+def test_winner_field_evolves_once_and_lands(spark, tmp_path):
+    """A field a WINNING event carries evolves the table once and its
+    values land: the first attempt's staged write is dropped (no data dir
+    left behind), the table widens, and the batch lands once more with
+    one lineage record."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    pipe = CdcPipeline(table)
+    pipe.apply_batch(_lines(spark, envelope("a", 1, 10), envelope("b", 2, 11)), batch_id=0)
+    v0 = table.current_version()
+    batch = _lines(spark, envelope("a", 3, 12, stars=5), envelope("b", 4, 13))
+    assert pipe.apply_batch(batch, batch_id=1) == v0 + 2  # one evolve, one merge
+    assert {f.name: f.dataType.simpleString() for f in table.schema().fields}["stars"] == "bigint"
+    assert {r["path"]: r["stars"] for r in table.read().collect()} == {"a": 5, "b": None}
+    lineage = table.lineage()
+    assert [lin["batch_id"] for lin in lineage] == [0, 1]
+    assert lineage[1]["n_events"] == 2
+    assert_lineage_matches_files(table, lineage[1])
+    assert unreferenced_commit_dirs(table) == set()
+
+
+def test_loser_only_field_neither_evolves_nor_reruns(spark, tmp_path):
+    """A field seen only on an LWW loser is superseded data: the table keeps
+    its schema and the batch lands in one attempt (one merge, no sampling
+    job, no second write)."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    pipe = CdcPipeline(table)
+    v0 = table.current_version()
+    batch = _lines(spark, envelope("a", 1, 10, stars=5), envelope("a", 2, 11))
+    assert count_jobs(spark, lambda: pipe.apply_batch(batch, batch_id=0)) <= 3
+    assert table.current_version() == v0 + 1
+    assert "stars" not in table.schema().fieldNames()
+    assert [r["commit"] for r in table.read().collect()] == ["c2"]

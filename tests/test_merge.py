@@ -9,7 +9,12 @@ from airbyte_module_spark.lake.table import LakeTable
 from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
 from airbyte_module_spark.sources import feed as feed_src
 from airbyte_module_spark.streaming.pipeline import CdcPipeline
-from tests.util import assert_matches_oracle
+from tests.util import (
+    assert_lineage_matches_files,
+    assert_matches_oracle,
+    envelope,
+    unreferenced_commit_dirs,
+)
 
 
 def _kv_table(spark, path):
@@ -27,15 +32,6 @@ def _kv_event(spark, k, v, cur):
     return spark.createDataFrame([(k, v)], "k string, v long").selectExpr(
         "k", "v", f"{cur}L as _ab_emitted_at", f"{cur}L as _ab_seq", "'u' as _ab_op"
     )
-
-
-def _unreferenced_commit_dirs(table):
-    """``data/commit-*`` dirs on disk that the head snapshot does not reference."""
-    import os
-
-    data = os.path.join(table.path, "data")
-    on_disk = set(os.listdir(data)) if os.path.isdir(data) else set()
-    return on_disk - {e["dir"].split("/")[1] for e in table.current_snapshot()["entries"]}
 
 
 def test_replay_matches_oracle(spark, tmp_path):
@@ -262,8 +258,37 @@ def test_lineage_recorded(spark, tmp_path):
     assert rec["n_events"] >= rec["n_winners"] > 0
     assert rec["n_conflicts"] == rec["n_events"] - rec["n_winners"]
     assert rec["min_emitted_at"] <= rec["max_emitted_at"]
+    assert rec["min_seq"] <= rec["max_seq"]
     assert rec["per_partition"], "per-partition lineage missing"
-    assert sum(p["events"] for p in rec["per_partition"]) == rec["n_events"]
+    assert_lineage_matches_files(table, rec)
+    entry = table.current_snapshot()["entries"][0]
+    assert {p["file"] for p in rec["per_partition"]} == {
+        f"{entry['dir']}/{f['name']}" for f in entry["files"]
+    }
+
+
+def test_bucket_without_cursors_lands(spark, tmp_path):
+    """Events without ``record.emitted_at`` land, and the batch's cursor
+    range covers the cursors that are set — also when every event of a
+    bucket lacks one (a per-bucket minimum of None crashed the stream)."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), n_buckets=8)
+    paths = [f"f{i}" for i in range(6)]
+    keyed = spark.createDataFrame([("org/r", p) for p in paths], "repo string, path string")
+    bucket = {r["path"]: r[model.BUCKET_COLUMN] for r in table.with_bucket(keyed).collect()}
+    bare = bucket[paths[0]]  # the bucket whose events carry no cursor
+    cursors = {p: None if bucket[p] == bare else 100 + i for i, p in enumerate(paths)}
+    assert 0 < sum(c is None for c in cursors.values()) < len(paths)
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "shard-0.json").write_text(
+        "\n".join(envelope(p, i + 1, cursors[p], op="i") for i, p in enumerate(paths)) + "\n"
+    )
+    CdcPipeline(table).replay_stream(str(feed))
+    assert sorted(r["path"] for r in table.read().collect()) == paths
+    (rec,) = table.lineage()
+    set_ = [c for c in cursors.values() if c is not None]
+    assert (rec["n_events"], rec["min_emitted_at"], rec["max_emitted_at"]) == (6, min(set_), max(set_))
+    assert_lineage_matches_files(table, rec)
 
 
 def test_applied_batches_retention_bounded(spark, tmp_path):
@@ -451,7 +476,7 @@ def test_concurrent_same_batch_second_writer_skips(spark, tmp_path):
     assert version is None  # second delivery skipped
     assert a.read().count() == 1
     # the skipped delivery's staged files do not outlive it
-    assert _unreferenced_commit_dirs(a) == set()
+    assert unreferenced_commit_dirs(a) == set()
 
 
 def test_snapshot_expiration_gc(spark, tmp_path):
@@ -610,7 +635,7 @@ def test_cas_retry_budget_is_bounded(spark, tmp_path, monkeypatch, op):
     with pytest.raises(ConcurrentCommitError):
         run()
     assert calls["publish"] == 1 + LakeTable.MERGE_CAS_RETRIES
-    assert _unreferenced_commit_dirs(t) == set()
+    assert unreferenced_commit_dirs(t) == set()
 
 
 def test_compaction_keeps_merge_landing_during_rewrite(spark, tmp_path, monkeypatch):
