@@ -22,15 +22,16 @@ dockerized Airbyte connectors; this engine replaces every subprocess boundary
 with Spark-native primitives per SURVEY.md §1.3.
 """
 
-from airbyte_module_spark.engine import Engine
-from airbyte_module_spark.session import get_spark
+import importlib
 
 __all__ = ["Engine", "get_spark", "AssetConfig", "build_assets"]
 
+_LAZY = {"Engine": "engine", "get_spark": "session", "AssetConfig": "config", "build_assets": "config"}
 
-def __getattr__(name):  # lazy: config pulls yaml only when used
-    if name in ("AssetConfig", "build_assets"):
-        from airbyte_module_spark import config as _config
 
-        return getattr(_config, name)
+def __getattr__(name):
+    # lazy: the Python worker daemon and kernels pickled by reference import
+    # this package, and need neither pyspark.sql nor yaml
+    if name in _LAZY:
+        return getattr(importlib.import_module(f"{__name__}.{_LAZY[name]}"), name)
     raise AttributeError(name)

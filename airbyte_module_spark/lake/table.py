@@ -554,9 +554,12 @@ class LakeTable:
         )
         t0 = time.time()
         if kind == "delta":
-            staged.sortWithinPartitions(model.BUCKET_COLUMN).write.parquet(out)
+            writer = staged.sortWithinPartitions(model.BUCKET_COLUMN).write
         else:
-            staged.withColumn("_pb", F.col(model.BUCKET_COLUMN)).write.partitionBy("_pb").parquet(out)
+            writer = staged.withColumn("_pb", F.col(model.BUCKET_COLUMN)).write.partitionBy("_pb")
+        # no _SUCCESS marker (nor its .crc): the snapshot entry records
+        # what committed
+        writer.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(out)
         self.timings["stage_write"] = round(time.time() - t0, 3)
         held: dict[int, set[int]] = {}
         for task, b in written.get["held"]:

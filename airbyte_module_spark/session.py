@@ -92,6 +92,10 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # generated classes are cached by source text; at the default 100
+        # entries (in 4 LRU segments) the 31 corpus plans evicted each other
+        # and recompiled identical sources every round
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # deployment hook: SPARK_GRAFT_EXTRA_CONF='{"spark.memory.offHeap.enabled":
     # "true", ...}' overlays arbitrary conf without code changes — used by the
@@ -111,6 +115,9 @@ def get_spark(
         # sys.path, which local-mode workers do not inherit.
         key = "spark.executorEnv.PYTHONPATH"
         conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+        # the workers fork from a daemon that stops them re-reading
+        # pyspark.zip before every task (see _pydaemon)
+        conf.setdefault("spark.python.daemon.module", "airbyte_module_spark._pydaemon")
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -76,7 +76,7 @@ def _project_filter_once(
     - ALL field extractions + the RECORD/stream/op keep-predicate are
       aliases of ONE projection, so per-operator subexpression elimination
       evaluates the shared ``from_json`` once;
-    - a ``rand()`` guard column rides the projection and the filter
+    - a ``rand(0)`` guard column rides the projection and the filter
       references it (``_nd > -1`` — always true, but NOT foldable: the
       optimizer has no value-range analysis for rand(), whereas
       ``IsNotNull(rand())`` would constant-fold away since rand() is
@@ -84,7 +84,10 @@ def _project_filter_once(
       projection with a non-deterministic alias is a predicate-pushdown
       barrier (PushPredicateThroughNonJoin requires every project field be
       deterministic), so the keep-filter stays ABOVE the projection and
-      tests the computed boolean instead of re-deriving it from the line;
+      tests the computed boolean instead of re-deriving it from the line.
+      The seed is fixed because the generated code embeds it: an unseeded
+      ``rand()`` drew a new seed per micro-batch, so every trigger
+      compiled a fresh class;
     - ``enableJsonExpressionOptimization=false`` (set in session.py) stops
       the per-field schema-pruned from_json rewrite that would defeat CSE
       by making the copies textually different.
@@ -97,7 +100,7 @@ def _project_filter_once(
     cols = list(out_cols)
     if keep_value:
         cols.append(F.col("value"))
-    proj = raw.select(*cols, keep.alias("_keep"), F.rand().alias("_nd"))
+    proj = raw.select(*cols, keep.alias("_keep"), F.rand(0).alias("_nd"))
     return proj.filter(F.col("_keep") & (F.col("_nd") > -1.0)).drop(
         "_keep", "_nd"
     )

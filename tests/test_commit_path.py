@@ -240,3 +240,36 @@ def test_batch_without_records_commits_an_empty_lineage(spark, tmp_path):
         (rec,) = table.lineage()
         assert (rec["n_events"], rec["n_winners"], rec["per_partition"]) == (0, 0, [])
         assert rec["min_emitted_at"] is None and rec["buckets"] == []
+
+
+def test_commit_dirs_hold_only_their_listed_files(spark, tmp_path):
+    """A commit dir holds the data files its snapshot entries list, each
+    with its checksum, and nothing else: no ``_SUCCESS`` marker (with its
+    own ``.crc``) for a delta commit or a base commit. (16 buckets give
+    every write task rows: task 0 of a write without rows leaves an empty,
+    unlisted file.)"""
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=36, n_events=300, n_shards=2), feed)
+    eng = Engine(spark, str(tmp_path / "t"), n_buckets=16)
+
+    def assert_listed_only():
+        listed: dict[str, set[str]] = {}
+        for e in eng.table.current_snapshot()["entries"]:
+            commit = e["dir"].split("/")[1]
+            rel = os.path.relpath(e["dir"], f"data/{commit}")
+            for f in e["files"]:
+                listed.setdefault(commit, set()).update(
+                    os.path.normpath(os.path.join(rel, n)) for n in (f["name"], f".{f['name']}.crc")
+                )
+        assert listed
+        for commit, names in listed.items():
+            root = os.path.join(eng.table.path, "data", commit)
+            on_disk = {os.path.relpath(os.path.join(d, n), root) for d, _, ns in os.walk(root) for n in ns}
+            assert on_disk == names, commit
+
+    eng.replay(feed)
+    assert [e["kind"] for e in eng.table.current_snapshot()["entries"]] == ["delta"]
+    assert_listed_only()
+    eng.table.compact()
+    assert {e["kind"] for e in eng.table.current_snapshot()["entries"]} == {"base"}
+    assert_listed_only()

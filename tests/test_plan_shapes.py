@@ -183,3 +183,22 @@ def test_minimal_parse_ingest_plan_single_parse_no_probe_rider(spark, tmp_path):
     assert "partial_max_by" in plan and plan.index("partial_max_by") > plan.index(
         "Exchange"
     ), f"map-side combine missing:\n{plan}"
+
+
+def test_replays_of_one_feed_shape_compile_nothing_new(spark, tmp_path):
+    """The ingest plan's generated code depends on the feed's shape, not
+    on the micro-batch: once two replays of one shape have run, a third
+    (fresh table, four triggers) compiles no class. An unseeded ``rand()``
+    pushdown barrier compiled one fresh class per trigger."""
+    from airbyte_module_spark import Engine
+    from airbyte_module_spark.sources.generator import FeedSpec, generate_feed
+    from tests.util import codegen_compiles
+
+    feed = str(tmp_path / "feed")
+    generate_feed(FeedSpec(seed=8, n_events=200, n_shards=4), feed)
+    added = []
+    for i in range(3):
+        before = codegen_compiles(spark)
+        Engine(spark, str(tmp_path / f"t{i}"), n_buckets=4).replay(feed, max_files_per_trigger=1)
+        added.append(codegen_compiles(spark) - before)
+    assert added[2] == 0, added

@@ -93,3 +93,10 @@ def envelope(path: str, seq: int, emitted_at: int | None, op: str = "u", **extra
     if emitted_at is not None:
         record["emitted_at"] = emitted_at
     return json.dumps({"type": "RECORD", "record": record})
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far (a
+    generated source found in its cache is not compiled again)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
