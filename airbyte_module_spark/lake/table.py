@@ -54,7 +54,7 @@ v2 table and everything above it is unchanged):
   and skipped once recorded; a client write (``batch_id=None``) checks and
   records nothing. A replay without a checkpoint of its own streams through
   one the table keeps under ``_checkpoints/``, one per feed path.
-  The record is RETAINED BOUNDED (``max_applied_batches``, default 1024,
+  The record is RETAINED BOUNDED (``LakeTable.MAX_APPLIED_BATCHES``, 1024,
   most recent by version) so snapshot metadata stays metadata-sized at
   10^6+ batches — Structured Streaming only ever re-delivers batches
   at/after the last unacknowledged checkpoint offset, a window of ~1, so
@@ -224,8 +224,6 @@ class LakeTable:
         n_buckets: int = 32,
         compact_after_deltas: int = 8,
         key_columns: list[str] | None = None,
-        snapshot_retention: int = 64,
-        max_applied_batches: int = 1024,
     ) -> "LakeTable":
         """Create an empty table. ``schema`` is the *data* schema
         (user columns + ``_ab_*`` metadata columns); defaults to the
@@ -247,8 +245,6 @@ class LakeTable:
                 "n_buckets": n_buckets,
                 "compact_after_deltas": compact_after_deltas,
                 "key_columns": key_columns if key_columns is not None else list(model.KEY_COLUMNS),
-                "snapshot_retention": snapshot_retention,
-                "max_applied_batches": max_applied_batches,
             },
         }
         t._write_snapshot(snap, expected_parent=None)
@@ -291,6 +287,11 @@ class LakeTable:
     # bounded optimistic-concurrency retries when another writer's commit
     # races ours between snapshot read and pointer CAS
     MERGE_CAS_RETRIES = 3
+    # snapshots ``maintenance()`` keeps (older ones expire, see
+    # ``expire_snapshots``)
+    SNAPSHOT_RETENTION = 64
+    # exactly-once records a keyed table keeps (see the module docstring)
+    MAX_APPLIED_BATCHES = 1024
 
     def _commit(
         self, edit: Callable[[dict], dict | None], staged_dir: str | None = None
@@ -668,7 +669,6 @@ class LakeTable:
         except BaseException:
             self._drop(staged_dir)
             raise
-        max_applied = int(snap["properties"].get("max_applied_batches", 1024))
 
         def edit(head: dict) -> dict | None:
             if key in head["applied_batches"]:
@@ -679,9 +679,9 @@ class LakeTable:
                 applied[key] = head["version"] + 1
             # keyed: a bounded window (LWW is the second line of defense);
             # keyless: prune only below an offset watermark (see docstring)
-            if keys and len(applied) > max_applied:
+            if keys and len(applied) > self.MAX_APPLIED_BATCHES:
                 applied = dict(
-                    sorted(applied.items(), key=lambda kv: kv[1])[-max_applied:]
+                    sorted(applied.items(), key=lambda kv: kv[1])[-self.MAX_APPLIED_BATCHES:]
                 )
             elif not keys and offset_watermark is not None:
                 def _committed_below(k: str) -> bool:
@@ -730,13 +730,10 @@ class LakeTable:
         — never inside ``merge()``."""
         hot = self.buckets_needing_compaction()
         version = self.compact(buckets=hot) if hot else None
-        keep = int(
-            self.current_snapshot()["properties"].get("snapshot_retention", 64)
-        )
-        self.expire_snapshots(keep_last=keep)
+        self.expire_snapshots(keep_last=self.SNAPSHOT_RETENTION)
         return version
 
-    def expire_snapshots(self, keep_last: int = 64) -> list[int]:
+    def expire_snapshots(self, keep_last: int = SNAPSHOT_RETENTION) -> list[int]:
         """Delete snapshot metadata older than the newest ``keep_last``
         versions and garbage-collect the data dirs only expired snapshots
         reference — without this, every compaction leaves its superseded
@@ -882,8 +879,10 @@ class LakeTable:
         KEYLESS tables have no identity to diff on: a rewritten range
         still raises ValueError there (consumers fall back to a full
         read). An EXPIRED from-snapshot raises FileNotFoundError from the
-        catalog — same fallback. ``changes_arrow`` is the delta scan
-        without Spark."""
+        catalog — same fallback. A BACKWARDS range (``to_version`` below
+        ``from_version``) raises ValueError: it has no change rows, and the
+        snapshot diff would serve the older state as changes.
+        ``changes_arrow`` is the delta scan without Spark."""
         from_snap, to_snap, new_entries, rewritten = self._change_range(
             from_version, to_version
         )
@@ -914,10 +913,15 @@ class LakeTable:
     ) -> tuple[dict, dict, list[dict], bool]:
         """(from snapshot, to snapshot, entries added in between, whether a
         compaction or a truncating replacement rewrote files inside the
-        range). A rewritten range of a keyless table raises ValueError."""
+        range). A backwards range, or a rewritten range of a keyless table,
+        raises ValueError."""
         to_snap = (
             self.current_snapshot() if to_version is None else self.snapshot(to_version)
         )
+        if to_snap["version"] < from_version:
+            raise ValueError(
+                f"change range ({from_version}, {to_snap['version']}] runs backwards"
+            )
         from_snap = self.snapshot(from_version)
         old_dirs = {e["dir"] for e in from_snap["entries"]}
         new_dirs = {e["dir"] for e in to_snap["entries"]}

@@ -17,16 +17,20 @@ Differences that are the point of the exercise:
 
 - the reference's do_get launches a docker connector per request and streams
   its stdout through a temp file per 100-record batch
-  (abm/connector.py:288-297); here a lake asset's Flight read runs no Spark
-  job at all: ``LakeTable.read_arrow`` reads the pinned snapshot's parquet
-  files with pyarrow, reading each delta file once and resolving the
-  requested buckets' deltas in memory, then streaming bases one hash
+  (abm/connector.py:288-297); here both protocols serve every read through
+  ONE function, ``read_batches``, which yields Arrow record batches.
+  Flight streams them; HTTP writes each as NDJSON lines, the lines Spark's
+  own JSON writer would write (``_ndjson``). A lake asset's read, bucket slice
+  and delta-only change poll run no Spark job at all:
+  ``LakeTable.read_arrow``/``changes_arrow`` read the pinned snapshot's
+  parquet files with pyarrow, reading each delta file once and resolving
+  the requested buckets' deltas in memory, then streaming bases one hash
   bucket at a time (those deltas plus one row group of driver memory — a
   one-bucket slice holds one bucket's deltas), and the response STREAMS
-  (the reference's one good property, abm/server.py:159, kept). HTTP NDJSON
-  reads, the snapshot-diff change plan and non-lake assets stream a Spark
-  plan through ``toLocalIterator`` — one partition of driver memory at a
-  time.
+  (the reference's one good property, abm/server.py:159, kept). The
+  snapshot diff of a rewritten change range and non-lake assets stream a
+  Spark plan through ``toLocalIterator`` — one partition of driver memory
+  at a time.
 - the reference's do_put iterates rows in Python
   (``batch.to_pandas()`` + ``iterrows``, abm/server.py:206-210 — the
   structural bottleneck called out in BASELINE.md); here the incoming Arrow
@@ -46,19 +50,31 @@ Differences that are the point of the exercise:
   the way the reference's do_get must.
 
 The servers are thin: every data operation is one Engine or LakeTable
-call. The Arrow read path is tested row- and schema-equal to the Spark read
-it stands in for.
+call, and every read one ``read_batches`` call, which also decides how a
+refused read answers (``ReadError``: HTTP status, or Flight's
+``FlightServerError``). The Arrow read path is tested row- and schema-equal
+to the Spark read it stands in for, and its NDJSON equal to Spark's JSON
+rows.
 """
 
 from __future__ import annotations
 
+import base64
 import json
 import os
+import re
 import shutil
 import tempfile
 import threading
+from collections.abc import Iterator
+from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from json.encoder import encode_basestring
+from urllib.parse import parse_qsl, urlsplit
+from zoneinfo import ZoneInfo
 
+import numpy as np
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 
 try:  # gated: pyarrow.flight needs grpc support compiled in
@@ -136,8 +152,6 @@ def _arrow_batches(df, batch_rows: int | None = None):
     the asset — and struct/nested columns ride through natively (the
     previous per-row ``Row``→``from_pylist`` loop choked on them and paid a
     large constant factor in driver-side Python)."""
-    import pyarrow as pa
-
     if batch_rows is None:  # resolved at call time so tests can shrink it
         batch_rows = READ_BATCH_ROWS
     rows_cap = batch_rows
@@ -163,6 +177,198 @@ def _arrow_batches(df, batch_rows: int | None = None):
                 if batch.schema != schema:  # strip executor-side metadata
                     batch = pa.RecordBatch.from_arrays(batch.columns, schema=schema)
                 yield batch
+
+
+class ReadError(Exception):
+    """A read ``read_batches`` refuses. ``status`` is the HTTP answer: 400
+    = the request itself is malformed (a client bug, never retried), 404 =
+    unknown asset, 409 = a well-formed range that is unservable now
+    (rewritten on a keyless table, or its snapshot expired) — retryable as
+    a full read. Flight raises every one as ``FlightServerError``."""
+
+    def __init__(self, status: int, message: str):
+        super().__init__(message)
+        self.status = status
+
+
+def read_batches(
+    assets: dict, request: dict
+) -> tuple[pa.Schema, Iterator[pa.RecordBatch], int | None]:
+    """The one read behind Flight ``do_get`` and HTTP ``GET``:
+    ``(schema, record batches, version the batches are pinned to)``.
+
+    ``request`` is a Flight ticket, or the HTTP query in its shape:
+    ``asset_name``, then optional ``version`` (the snapshot to pin; default
+    the head), ``buckets`` (hash-bucket slice), ``from_version`` and
+    ``to_version`` (serve the change rows of ``(from, to]`` instead of
+    state; ``to`` defaults to the pinned version). Every value is validated
+    before any read. A lake read, slice or delta-only change range comes
+    from ``LakeTable.read_arrow``/``changes_arrow`` with no Spark job; a
+    range rewritten by compaction or overwrite takes the Spark snapshot
+    diff of ``Engine.changes``, and a non-lake asset its Spark read, both
+    through the ``toLocalIterator`` drain. Raises ``ReadError``."""
+    eng = assets.get(request.get("asset_name"))
+    if eng is None:
+        raise ReadError(404, f"unknown asset {request.get('asset_name')!r}")
+    table = getattr(eng, "table", None)
+    try:
+        version, from_v, to_v = (
+            None if request.get(k) is None else int(request[k])
+            for k in ("version", "from_version", "to_version")
+        )
+        buckets = request.get("buckets")
+        buckets = None if buckets is None else [int(b) for b in buckets]
+        if to_v is not None and from_v is None:
+            raise ValueError("to_version needs from_version")
+        if table is None and (version, buckets, from_v) != (None, None, None):
+            raise ValueError("asset is not a lake table: no versions, slices or changes")
+        pinned = None if table is None else (
+            table.current_version() if version is None else version
+        )
+        if from_v is not None:
+            to_v = pinned if to_v is None else to_v
+            if not 0 <= from_v <= to_v <= pinned:
+                raise ValueError(
+                    f"change range ({from_v}, {to_v}] must run forwards within versions 0..{pinned}"
+                )
+    except (TypeError, ValueError) as e:
+        raise ReadError(400, str(e)) from None
+    body_v = pinned if from_v is None else to_v
+    try:
+        if table is None:
+            df = eng.read()
+        else:
+            batches = (
+                table.read_arrow(buckets, pinned) if from_v is None
+                else table.changes_arrow(from_v, to_v)
+            )
+            if batches is not None:
+                return batches.schema, _arrow_batches_eager(batches), body_v
+            df = eng.changes(from_v, to_v)  # rewritten range: the Spark snapshot diff
+    except (ValueError, FileNotFoundError) as e:
+        # rewritten on a keyless table / snapshot expired: retry as a full read
+        raise ReadError(409, str(e)) from None
+    return _arrow_schema(df), _arrow_batches(df), body_v
+
+
+# --------------------------------------------------------------- NDJSON
+# Spark's JSON writer (Jackson) escapes control characters with
+# upper-case hex; ``encode_basestring`` writes lower-case
+_CONTROL = re.compile(r'[\x00-\x1f"\\]')
+_ESCAPES = {chr(i): f"\\u{i:04X}" for i in range(32)} | {
+    '"': '\\"', "\\": "\\\\", "\b": "\\b", "\t": "\\t", "\n": "\\n", "\f": "\\f", "\r": "\\r",
+}
+_NON_FINITE = {"nan": '"NaN"', "inf": '"Infinity"', "-inf": '"-Infinity"'}
+
+
+def _json_str(s: str) -> str:
+    """``s`` as a JSON string, escaped as Jackson escapes it."""
+    out = encode_basestring(s)
+    if "\\u00" in out:  # rare: redo with Jackson's escapes
+        out = '"' + _CONTROL.sub(lambda m: _ESCAPES[m.group()], s) + '"'
+    return out
+
+
+def _java_float(v: float, shortest: str) -> str:
+    """Java's ``Double.toString``/``Float.toString`` of ``v``, given its
+    shortest round-trip digits ``shortest`` (Python/numpy ``str``): plain
+    in [1e-3, 1e7), else ``d.dddE±n``; non-finite values quoted."""
+    if v == 0 or 1e-3 <= abs(v) < 1e7:
+        return shortest  # Python and numpy print these plain too
+    if shortest in _NON_FINITE:
+        return _NON_FINITE[shortest]
+    sign, digits, exp = Decimal(shortest).normalize().as_tuple()
+    text = "".join(map(str, digits))
+    return f"{'-' * sign}{text[0]}.{text[1:] or '0'}E{exp + len(text) - 1}"
+
+
+def _millis(d) -> str:
+    """``d`` as ``yyyy-MM-ddTHH:mm:ss.SSS``: microseconds truncated."""
+    return f"{d.replace(microsecond=0, tzinfo=None).isoformat()}.{d.microsecond // 1000:03d}"
+
+
+def _instant(v, zone: ZoneInfo) -> str:
+    """A ``TIMESTAMP`` in the session zone, with Java's ``XXX`` offset."""
+    v = v.astimezone(zone)
+    secs = int(v.utcoffset().total_seconds())
+    sign, secs = ("-", -secs) if secs < 0 else ("+", secs)
+    offset = f"{sign}{secs // 3600:02d}:{secs // 60 % 60:02d}" if secs else "Z"
+    return f'"{_millis(v)}{offset}"'
+
+
+def _scalar(t: pa.DataType, zone: ZoneInfo):
+    """The function writing one non-null value of Arrow type ``t``."""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return _json_str
+    if pa.types.is_integer(t) or pa.types.is_decimal(t):
+        return str  # decimals: every digit, as Java's BigDecimal.toString
+    if pa.types.is_boolean(t):
+        return {True: "true", False: "false"}.__getitem__
+    if pa.types.is_float64(t):
+        return lambda v: _java_float(v, repr(v))
+    if pa.types.is_float32(t):
+        return lambda v: _java_float(v, str(np.float32(v)))
+    if pa.types.is_date(t):
+        return lambda v: f'"{v.isoformat()}"'
+    if pa.types.is_timestamp(t):
+        return (lambda v: f'"{_millis(v)}"') if t.tz is None else (lambda v: _instant(v, zone))
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return lambda v: f'"{base64.b64encode(v).decode()}"'
+    raise TypeError(f"no JSON form for Arrow type {t}")
+
+
+def _values(arr: pa.Array, zone: ZoneInfo) -> list[str | None]:
+    """Each value of ``arr`` as the JSON text Spark writes for it, None
+    for a null. Structs (like rows) leave out null fields; arrays and map
+    values keep theirs as ``null``."""
+    t = arr.type
+    if pa.types.is_struct(t):
+        return _objects([f.name for f in t], arr.flatten(), arr.is_valid().to_pylist(), zone)
+    if not (pa.types.is_map(t) or pa.types.is_list(t) or pa.types.is_large_list(t)):
+        write = _scalar(t, zone)
+        return [None if v is None else write(v) for v in arr.to_pylist()]
+    offs = arr.offsets.to_pylist()  # a map is a list of key/value pairs
+    first, n = offs[0], offs[-1] - offs[0]
+    if pa.types.is_map(t):
+        items = [
+            (k if k.startswith('"') else _json_str(k)) + ":" + ("null" if v is None else v)
+            for k, v in zip(_values(arr.keys.slice(first, n), zone),
+                            _values(arr.items.slice(first, n), zone))
+        ]
+        opening, closing = "{", "}"
+    else:
+        items = ["null" if v is None else v for v in _values(arr.values.slice(first, n), zone)]
+        opening, closing = "[", "]"
+    return [
+        opening + ",".join(items[a - first:b - first]) + closing if ok else None
+        for ok, a, b in zip(arr.is_valid().to_pylist(), offs, offs[1:])
+    ]
+
+
+def _objects(names: list[str], columns: list, valid, zone: ZoneInfo) -> list[str | None]:
+    """One JSON object per row of ``columns``, null fields left out; None
+    where ``valid`` (None = every row) says the row is null."""
+    keys = [_json_str(n) + ":" for n in names]
+    out = [
+        "{" + ",".join([k + v for k, v in zip(keys, cells) if v is not None]) + "}"
+        for cells in zip(*(_values(c, zone) for c in columns))
+    ]
+    if valid is None:
+        return out
+    return [o if ok else None for o, ok in zip(out, valid)]
+
+
+def _ndjson(time_zone: str):
+    """A function writing a record batch as the NDJSON lines Spark's JSON
+    writer writes for its rows (timestamps in ``time_zone``, the
+    session's), one per row, as UTF-8 bytes."""
+    zone = ZoneInfo(time_zone)
+
+    def encode(batch: pa.RecordBatch) -> bytes:
+        lines = _objects(batch.schema.names, batch.columns, None, zone)
+        return "".join(line + "\n" for line in lines).encode()
+
+    return encode
 
 
 if HAVE_FLIGHT:
@@ -203,13 +409,15 @@ if HAVE_FLIGHT:
             the single-stream read of that version, whatever commits land
             meanwhile. This beats the reference's documented structural
             ceiling (one endpoint/ticket per asset, abm/server.py:253).
-            Other assets keep one endpoint and plan a Spark read for the
-            schema."""
+            Other assets keep one endpoint and take the schema of their
+            read, which is not free: a CSV file without a schema infers it
+            with a Spark job, and an API asset pages the whole API on the
+            driver."""
             asset = descriptor.command.decode() if descriptor.command else descriptor.path[0].decode()
             eng = self._engine(asset)
             payload = {"asset_name": asset}
             if not hasattr(eng, "table"):
-                schema = _arrow_schema(eng.read())  # metadata-only, no Spark job
+                schema = _arrow_schema(eng.read())
                 tickets = [payload]
             else:
                 snap = eng.table.current_snapshot()
@@ -225,50 +433,20 @@ if HAVE_FLIGHT:
         # --------------------------------------------------------------- read
         def do_get(self, context, ticket):
             """Streamed read: a GeneratorStream fed batch by batch — reference
-            parity with its streamed response (abm/server.py:159). Lake
-            assets are read straight from the snapshot's parquet files with
-            pyarrow (``LakeTable.read_arrow``: one bucket in memory at a
-            time, no Spark job). A ticket carrying ``buckets`` serves just
-            that bucket slice (issued per bucket by get_flight_info) of the
-            ticket's pinned ``version``. A ticket carrying ``from_version``
-            serves the INCREMENTAL change rows ``(from_version, to_version]``
-            instead of full state, tombstones visible (the reference
-            re-reads everything per request — its do_get at
-            abm/server.py:140-159 has no delta concept): a delta-only range
-            through ``LakeTable.changes_arrow``, a range rewritten by
-            compaction or overwrite through the Spark snapshot diff of
-            ``changes``, which on a keyless table fails loudly with the
-            fall-back-to-full-read contract. Other assets stream their
-            Spark read through the ``toLocalIterator`` drain."""
-            payload = json.loads(ticket.ticket.decode())
-            asset = payload["asset_name"]
-            eng = self._engine(asset)
-            if "from_version" in payload:
-                if not hasattr(eng, "changes"):
-                    raise fl.FlightServerError(
-                        f"asset {asset!r} does not serve incremental changes"
-                    )
-                # a server-issued ticket pins `version`; use it as the
-                # default upper bound so the delta read is snapshot-
-                # consistent with the advertised FlightInfo
-                bounds = (
-                    int(payload["from_version"]),
-                    payload.get("to_version", payload.get("version")),
-                )
-                try:
-                    batches = eng.table.changes_arrow(*bounds)
-                    if batches is None:  # rewritten range: snapshot diff
-                        df = eng.changes(*bounds)
-                        return fl.GeneratorStream(_arrow_schema(df), _arrow_batches(df))
-                except (ValueError, FileNotFoundError) as e:
-                    # range rewritten on a keyless table / from-snapshot expired
-                    raise fl.FlightServerError(str(e))
-            elif hasattr(eng, "table"):
-                batches = eng.table.read_arrow(payload.get("buckets"), payload.get("version"))
-            else:
-                df = eng.read()
-                return fl.GeneratorStream(_arrow_schema(df), _arrow_batches(df))
-            return fl.GeneratorStream(batches.schema, _arrow_batches_eager(batches))
+            parity with its streamed response (abm/server.py:159). The
+            ticket is the ``read_batches`` request: a ticket carrying
+            ``buckets`` serves that bucket slice (issued per bucket by
+            get_flight_info) of the ticket's pinned ``version``; one
+            carrying ``from_version`` serves the INCREMENTAL change rows
+            ``(from_version, to_version]`` instead of full state,
+            tombstones visible (the reference re-reads everything per
+            request — its do_get at abm/server.py:140-159 has no delta
+            concept). A refused read raises ``FlightServerError``."""
+            try:
+                schema, batches, _ = read_batches(self.assets, json.loads(ticket.ticket.decode()))
+            except ReadError as e:
+                raise fl.FlightServerError(str(e)) from None
+            return fl.GeneratorStream(schema, batches)
 
         # -------------------------------------------------------------- write
         def do_put(self, context, descriptor, reader, writer):
@@ -316,8 +494,6 @@ if HAVE_FLIGHT:
                 if pqw is None:
                     # empty stream: zero-row frame from the declared schema
                     # (overwrite-with-empty must still truncate)
-                    import pyarrow as pa
-
                     df = eng.spark.createDataFrame(
                         pa.Table.from_batches([], schema=reader.schema)
                     )
@@ -346,12 +522,10 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         pass
 
     def _engine(self) -> Engine | None:
-        from urllib.parse import urlsplit
-
         asset = urlsplit(self.path).path.strip("/")
         eng = self.assets.get(asset)
         if eng is None:
-            self._empty(404, close=self.command != "GET")  # a write body stays unread
+            self._empty(404, close=True)  # the write body stays unread
         return eng
 
     def _empty(self, status: int, close: bool = False) -> None:
@@ -362,98 +536,53 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
             self.send_header("Connection", "close")
         self.end_headers()
 
-    def _query(self) -> dict:
-        from urllib.parse import parse_qsl, urlsplit
-
-        return dict(parse_qsl(urlsplit(self.path).query))
-
     def do_GET(self):
-        """Chunked NDJSON stream: one partition of JSON lines on the driver
-        at a time (``toJSON().toLocalIterator()``), flushed every
-        READ_BATCH_ROWS lines — the asset never materializes driver-side
-        (the reference's GET also streams, abm/server.py:39-60).
+        """Chunked NDJSON stream of the ``read_batches`` read, one chunk per
+        record batch (at most READ_BATCH_ROWS rows on the driver at a time
+        — the asset never materializes driver-side; the reference's GET
+        also streams, abm/server.py:39-60). Each line is the one Spark's
+        JSON writer writes for the row (see ``_ndjson``).
 
         ``?from_version=N[&to_version=M]`` on a lake asset serves the
         INCREMENTAL change rows instead of full state (tombstones visible,
         metadata columns retained) — the polling CDC-consumer read the
-        reference cannot express. A range rewritten by maintenance returns
-        409 (consumer falls back to a full read, same contract as
-        LakeTable.changes). ``?buckets=0,3,7`` serves just those hash-bucket
-        slices (complete per identity key — parallel HTTP clients split a
-        read bucket-wise exactly like the per-bucket Flight endpoints).
-        Lake responses carry ``X-Table-Version`` — the snapshot version the
-        BODY is pinned to, captured BEFORE planning and threaded through
-        the read/changes call: reading the head version after planning let
-        a commit land in between, making the header advertise a version
-        whose changes were not in the body, so a consumer polling
-        ``?from_version=<header>`` next would silently skip them forever.
+        reference cannot express. ``?buckets=0,3,7`` serves just those
+        hash-bucket slices (complete per identity key — parallel HTTP
+        clients split a read bucket-wise exactly like the per-bucket Flight
+        endpoints). Lake responses carry ``X-Table-Version`` — the snapshot
+        version the BODY is pinned to, resolved once before the read: a
+        header read after the body let a commit land in between, so a
+        consumer polling ``?from_version=<header>`` next silently skipped
+        its changes forever.
 
-        Error mapping: 400 = the request itself is malformed (unparseable
-        ``from_version``/``to_version``/``buckets``, or a version/bucket
-        param on an asset that serves neither); 409 = the request was fine
-        but the range is UNSERVABLE now (rewritten by maintenance on a
-        keyless table, or the from-snapshot expired) — retryable as a full
-        read, so it must not share a status with client bugs."""
-        eng = self._engine()
-        if eng is None:
-            return
-        params = self._query()
-        is_lake = hasattr(eng, "table")
-        try:  # parse/validate BEFORE any engine call: bad input is 400
-            from_v = (
-                int(params["from_version"]) if "from_version" in params else None
-            )
-            to_v = int(params["to_version"]) if params.get("to_version") else None
-            buckets = (
-                [int(b) for b in params["buckets"].split(",") if b]
-                if "buckets" in params
-                else None
-            )
-            if "to_version" in params and from_v is None:
-                raise ValueError("to_version needs from_version")
-            if from_v is not None and not hasattr(eng, "changes"):
-                raise ValueError("asset serves no incremental changes")
-            if buckets is not None and not is_lake:
-                raise ValueError("asset is not bucket-sliced")
-        except ValueError:
-            self._empty(400)
-            return
-        # pin the whole response to ONE version: header == body contents
-        v = eng.table.current_version() if is_lake else None
+        Statuses come from ``ReadError``: 400 = the request is malformed
+        (an unparseable value, ``to_version`` without ``from_version``, a
+        backwards range or one past the head, a version/bucket param on an
+        asset that serves neither); 409 = a well-formed range that is
+        UNSERVABLE now (rewritten by maintenance on a keyless table, or
+        the from-snapshot expired) — retryable as a full read."""
+        url = urlsplit(self.path)
+        asset = url.path.strip("/")
+        params = dict(parse_qsl(url.query))
+        request = {k: v for k, v in params.items() if k in ("from_version", "to_version")}
+        request["asset_name"] = asset
+        if "buckets" in params:
+            request["buckets"] = [b for b in params["buckets"].split(",") if b]
         try:
-            if from_v is not None:
-                df = eng.changes(from_v, to_v if to_v is not None else v)
-                body_v = to_v if to_v is not None else v
-            elif is_lake:
-                df = eng.read(buckets=buckets, version=v)
-                body_v = v
-            else:
-                df = eng.read()
-                body_v = None
-        except (ValueError, FileNotFoundError):
-            # range rewritten by maintenance / from-snapshot expired:
-            # retryable — consumer falls back to a full read
-            self._empty(409)
+            _, batches, version = read_batches(self.assets, request)
+        except ReadError as e:
+            self._empty(e.status)
             return
+        encode = _ndjson(self.assets[asset].spark.conf.get("spark.sql.session.timeZone"))
         self.send_response(200)
         self.send_header("Content-Type", "application/x-ndjson")
         self.send_header("Transfer-Encoding", "chunked")
-        if body_v is not None:
-            self.send_header("X-Table-Version", str(body_v))
+        if version is not None:
+            self.send_header("X-Table-Version", str(version))
         self.end_headers()
-
-        def chunk(data: bytes) -> None:
-            if data:
+        for batch in batches:
+            if data := encode(batch):
                 self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
-
-        buf: list[str] = []
-        for line in df.toJSON().toLocalIterator(prefetchPartitions=True):
-            buf.append(line)
-            if len(buf) >= READ_BATCH_ROWS:
-                chunk(("\n".join(buf) + "\n").encode())
-                buf = []
-        if buf:
-            chunk(("\n".join(buf) + "\n").encode())
         self.wfile.write(b"0\r\n\r\n")
 
     def _write(self):

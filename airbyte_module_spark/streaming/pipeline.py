@@ -63,7 +63,6 @@ class CdcPipeline:
     def __init__(
         self,
         table: LakeTable,
-        stream: str = model.STREAM_NAME,
         collect_lineage: bool = True,
         post_merge_hook=None,
         maintenance_every: int | None = 16,
@@ -93,7 +92,6 @@ class CdcPipeline:
         ``None`` disables it (run maintenance() as an external background
         job instead — the cluster-scale deployment shape)."""
         self.table = table
-        self.stream = stream
         self.collect_lineage = collect_lineage
         self.post_merge_hook = post_merge_hook
         self.maintenance_every = maintenance_every
@@ -266,9 +264,7 @@ class CdcPipeline:
             for f in self.table.schema().fields
             if f.name in keys
         }
-        minimal = feed_src.parse_envelopes_minimal(
-            raw, keys, self.stream, key_types=key_types
-        )
+        minimal = feed_src.parse_envelopes_minimal(raw, keys, key_types=key_types)
         minimal = self.table.with_bucket(minimal)
         winner = F.struct(
             F.col("value"),

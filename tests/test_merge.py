@@ -291,9 +291,9 @@ def test_bucket_without_cursors_lands(spark, tmp_path):
     assert_lineage_matches_files(table, rec)
 
 
-def test_applied_batches_retention_bounded(spark, tmp_path):
+def test_applied_batches_retention_bounded(spark, tmp_path, monkeypatch):
     """Snapshot metadata must stay metadata-sized at 10^6 batches: the
-    exactly-once record keeps only the newest ``max_applied_batches``
+    exactly-once record keeps only the newest ``MAX_APPLIED_BATCHES``
     entries; recent re-deliveries still skip, and even an aged-out batch is
     harmless to re-apply (LWW idempotence)."""
     import pyspark.sql.types as T
@@ -301,9 +301,10 @@ def test_applied_batches_retention_bounded(spark, tmp_path):
     from airbyte_module_spark import model
 
     sch = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.LongType())])
+    monkeypatch.setattr(LakeTable, "MAX_APPLIED_BATCHES", 3)
     table = LakeTable.create(
         spark, str(tmp_path / "t"), schema=model.table_schema(sch),
-        key_columns=["k"], n_buckets=2, max_applied_batches=3,
+        key_columns=["k"], n_buckets=2,
     )
     df = lambda i: spark.createDataFrame([(f"k{i}", i)], sch).selectExpr(
         "k", "v", f"{i}L as _ab_emitted_at", f"{i}L as _ab_seq", "'u' as _ab_op"
@@ -320,7 +321,7 @@ def test_applied_batches_retention_bounded(spark, tmp_path):
     assert table.digest() == before
 
 
-def test_keyless_applied_batches_never_pruned(spark, tmp_path):
+def test_keyless_applied_batches_never_pruned(spark, tmp_path, monkeypatch):
     """ADVICE r3: a keyless (append-mode) table has no LWW second line of
     defense, so its applied-batches record must NOT be pruned — a batch
     re-delivered past the retention window would otherwise append duplicate
@@ -330,16 +331,17 @@ def test_keyless_applied_batches_never_pruned(spark, tmp_path):
     from airbyte_module_spark import model
 
     sch = T.StructType([T.StructField("v", T.LongType())])
+    monkeypatch.setattr(LakeTable, "MAX_APPLIED_BATCHES", 3)
     table = LakeTable.create(
         spark, str(tmp_path / "t"), schema=model.table_schema(sch),
-        key_columns=[], n_buckets=2, max_applied_batches=3,
+        key_columns=[], n_buckets=2,
     )
     df = lambda i: spark.createDataFrame([(i,)], sch).selectExpr(
         "v", f"{i}L as _ab_emitted_at", f"{i}L as _ab_seq", "'i' as _ab_op"
     )
     for i in range(6):
         assert table.merge(df(i), batch_id=i, checkpoint_id="c") is not None
-    # ALL six batch records retained despite max_applied_batches=3
+    # ALL six batch records retained despite MAX_APPLIED_BATCHES=3
     assert len(table.current_snapshot()["applied_batches"]) == 6
     # a redelivery from far past the window still skips — no duplicate rows
     assert table.merge(df(0), batch_id=0, checkpoint_id="c") is None
@@ -479,7 +481,7 @@ def test_concurrent_same_batch_second_writer_skips(spark, tmp_path):
     assert unreferenced_commit_dirs(a) == set()
 
 
-def test_snapshot_expiration_gc(spark, tmp_path):
+def test_snapshot_expiration_gc(spark, tmp_path, monkeypatch):
     """maintenance() expires snapshot history past the retention window and
     deletes data dirs referenced only by expired snapshots — the current
     state stays fully readable and compaction's superseded files actually
@@ -488,9 +490,9 @@ def test_snapshot_expiration_gc(spark, tmp_path):
 
     feed = str(tmp_path / "feed")
     events = generate_feed(FeedSpec(seed=41, n_events=300, n_shards=6), feed)
+    monkeypatch.setattr(LakeTable, "SNAPSHOT_RETENTION", 2)
     table = LakeTable.create(
         spark, str(tmp_path / "t"), n_buckets=2, compact_after_deltas=2,
-        snapshot_retention=2,
     )
     pipe = CdcPipeline(table, maintenance_every=2)
     pipe.replay_stream(feed, str(tmp_path / "ck"), max_files_per_trigger=1)

@@ -8,18 +8,21 @@ Flight clients (/root/reference/helm/client/client.py:10-13,62-65,
 
 from __future__ import annotations
 
+import collections
+import contextlib
 import http.client
 import json
 import socket
 import urllib.error
 import urllib.request
+from decimal import Decimal
 
 import pyarrow as pa
 import pytest
 
 from pyspark.sql import types as T
 
-from airbyte_module_spark import Engine
+from airbyte_module_spark import Engine, model
 from airbyte_module_spark.server import HAVE_FLIGHT, EngineHttpServer
 
 USER_SCHEMA = T.StructType(
@@ -436,12 +439,17 @@ def test_http_get_param_errors_are_400_not_409(keyed_asset):
     """ADVICE r4: a MALFORMED request (unparseable from_version/buckets)
     is a client bug → 400; 409 is reserved for well-formed requests whose
     range became unservable (the retry-as-full-read signal). Conflating
-    them made consumers retry requests that can never succeed."""
+    them made consumers retry requests that can never succeed. A change
+    range running backwards or past the head is malformed too: a backwards
+    one used to serve the older state as changes, one past the head a 409."""
+    head = keyed_asset.table.current_version()
     server = EngineHttpServer({"versioned": keyed_asset}).start()
     try:
         base = f"http://127.0.0.1:{server.port}/versioned"
         for bad in ("?from_version=abc", "?buckets=x", "?from_version=1&to_version=z",
-                    "?to_version=1"):
+                    "?to_version=1", f"?from_version={head}&to_version={head - 1}",
+                    f"?from_version={head + 1}", f"?from_version=1&to_version={head + 1}",
+                    "?from_version=-1"):
             with pytest.raises(urllib.error.HTTPError) as e:
                 urllib.request.urlopen(base + bad)
             assert e.value.code == 400, bad
@@ -495,10 +503,29 @@ def test_flight_incremental_changes_read(keyed_asset):
         eng.table.compact()
         diff = client.do_get(ticket).read_all()
         assert {r["id"] for r in diff.to_pylist()} == {2, 3}
-        # expired from-snapshot: loud FlightError (consumer falls back)
+        # a backwards range is refused, not served as the older state
+        backwards = {"asset_name": "versioned", "from_version": v_mid + 1, "to_version": v_mid}
+        with pytest.raises(fl.FlightServerError, match="run forwards"):
+            client.do_get(fl.Ticket(json.dumps(backwards).encode())).read_all()
+        # expired from-snapshot or pinned version: loud FlightError
+        # (consumer falls back)
         eng.table.expire_snapshots(keep_last=1)
-        with pytest.raises(fl.FlightError):
+        with pytest.raises(fl.FlightServerError):
             client.do_get(ticket).read_all()
+        pinned = {"asset_name": "versioned", "version": v_mid}
+        with pytest.raises(fl.FlightServerError):
+            client.do_get(fl.Ticket(json.dumps(pinned).encode())).read_all()
+
+
+def test_backwards_change_range_raises(keyed_asset):
+    """``changes(5, 3)`` found v5's dirs missing from v3, called the range
+    rewritten, and on a keyed table served v3's older rows as changes plus
+    tombstones for keys added after v3. Both change reads refuse it."""
+    head = keyed_asset.table.current_version()
+    with pytest.raises(ValueError, match="backwards"):
+        keyed_asset.changes(head, head - 1)
+    with pytest.raises(ValueError, match="backwards"):
+        keyed_asset.table.changes_arrow(head, head - 1)
 
 
 @pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")
@@ -797,16 +824,55 @@ def test_flight_info_endpoints_match_their_pinned_version(spark, tmp_path, monke
             assert got == want, f"torn endpoint list: overwrite after head read {k}"
 
 
-@pytest.mark.skipif(not HAVE_FLIGHT, reason="pyarrow.flight unavailable")
-def test_flight_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
-    """Flight info, every bucket slice, a full read and a delta-scan change
-    poll are served from the snapshot's parquet files with pyarrow: with
-    the Spark read entry points raising they still succeed, and Spark runs
-    no job. A range rewritten by compaction still reaches ``changes``."""
+def _flight_reader(stack: contextlib.ExitStack, eng):
+    """(read every bucket slice, read a ticket, the client's error) over
+    Flight; the slices come from the endpoints of the asset's flight info."""
     import pyarrow.flight as fl
 
-    from airbyte_module_spark.lake.table import LakeTable
     from airbyte_module_spark.server import EngineFlightServer
+
+    server = stack.enter_context(EngineFlightServer({"nojob": eng}))
+    client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+
+    def slices() -> list[list[dict]]:
+        info = client.get_flight_info(fl.FlightDescriptor.for_command(b"nojob"))
+        assert len(info.endpoints) == 4
+        return [client.do_get(ep.ticket).read_all().to_pylist() for ep in info.endpoints]
+
+    def get(**ticket) -> list[dict]:
+        ticket = fl.Ticket(json.dumps({"asset_name": "nojob", **ticket}).encode())
+        return client.do_get(ticket).read_all().to_pylist()
+
+    return slices, get, fl.FlightError
+
+
+def _http_reader(stack: contextlib.ExitStack, eng):
+    """``_flight_reader`` over HTTP: a slice is ``?buckets=b``, a ticket
+    the query; a handler that raises drops the connection."""
+    server = EngineHttpServer({"nojob": eng}).start()
+    stack.callback(server.stop)
+
+    def get(**query) -> list[dict]:
+        url = f"http://127.0.0.1:{server.port}/nojob?" + "&".join(f"{k}={v}" for k, v in query.items())
+        with urllib.request.urlopen(url) as resp:
+            return [json.loads(ln) for ln in resp.read().decode().splitlines()]
+
+    def slices() -> list[list[dict]]:
+        return [get(buckets=b) for b in eng.table.live_buckets()]
+
+    return slices, get, ConnectionError
+
+
+@pytest.mark.parametrize("protocol", ["flight", "http"])
+def test_lake_reads_run_no_spark_job(spark, tmp_path, monkeypatch, protocol):
+    """Every bucket slice, a full read and a delta-scan change poll are
+    served from the snapshot's parquet files with pyarrow, over Flight
+    (after its flight info) and over HTTP alike: with the Spark read entry
+    points raising they still succeed, and Spark runs no job. A range
+    rewritten by compaction still reaches ``changes``."""
+    if protocol == "flight" and not HAVE_FLIGHT:
+        pytest.skip("pyarrow.flight unavailable")
+    from airbyte_module_spark.lake.table import LakeTable
 
     eng = Engine(
         spark, str(tmp_path / "nojob"), schema=USER_SCHEMA, key_columns=["id"], n_buckets=4
@@ -827,24 +893,144 @@ def test_flight_reads_run_no_spark_job(spark, tmp_path, monkeypatch):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
 
-    def spark_read(*a, **k):
-        raise AssertionError("Spark read on the Flight read path")
+    called = []
+
+    def spark_read(name):
+        def read(*a, **k):
+            called.append(name)
+            raise AssertionError("Spark read on the lake read path")
+
+        return read
 
     for name in ("read", "read_internal", "changes"):
-        monkeypatch.setattr(LakeTable, name, spark_read)
-    poll = fl.Ticket(json.dumps({"asset_name": "nojob", "from_version": v_base}).encode())
-    with EngineFlightServer({"nojob": eng}) as server:
-        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+        monkeypatch.setattr(LakeTable, name, spark_read(name))
+    with contextlib.ExitStack() as stack:
+        slices, get, refused = (_flight_reader if protocol == "flight" else _http_reader)(stack, eng)
         before = last_job()
-        info = client.get_flight_info(fl.FlightDescriptor.for_command(b"nojob"))
-        slices = [client.do_get(ep.ticket).read_all() for ep in info.endpoints]
-        full = client.do_get(fl.Ticket(json.dumps({"asset_name": "nojob"}).encode())).read_all()
-        changes = client.do_get(poll).read_all()
+        sliced, full, changes = slices(), get(), get(from_version=v_base)
         assert last_job() == before
-        assert len(info.endpoints) == 4
-        assert sorted(tuple(r.values()) for t in slices for r in t.to_pylist()) == expected
-        assert sorted(tuple(r.values()) for r in full.to_pylist()) == expected
-        assert sorted(r["id"] for r in changes.to_pylist()) == list(range(30, 50))
+        assert called == []
+        assert sorted(tuple(r.values()) for t in sliced for r in t) == expected
+        assert sorted(tuple(r.values()) for r in full) == expected
+        assert sorted(r["id"] for r in changes) == list(range(30, 50))
         eng.table.compact()
-        with pytest.raises(fl.FlightError, match="Spark read on the Flight read path"):
-            client.do_get(poll).read_all()
+        with pytest.raises(refused):
+            get(from_version=v_base)
+        assert called == ["changes"]
+
+
+# ------------------------------------------------------------------ NDJSON
+def _lines(port: int, path: str) -> list[str]:
+    """The NDJSON lines of a GET (split on ``\\n`` only: a string may hold
+    other characters ``splitlines`` breaks on)."""
+    with urllib.request.urlopen(f"http://127.0.0.1:{port}/{path}") as resp:
+        body = resp.read().decode()
+    assert body.endswith("\n") or not body
+    return body.split("\n")[:-1]
+
+
+def _canonical(value):
+    """A hashable form of a parsed JSON value."""
+    if isinstance(value, dict):
+        return tuple(sorted((k, _canonical(v)) for k, v in value.items()))
+    if isinstance(value, list):
+        return tuple(_canonical(v) for v in value)
+    return value
+
+
+def _same_json(got: list[str], df) -> None:
+    """``got`` holds the lines Spark's ``toJSON`` writes for ``df``: the
+    same multiset of parsed values, and byte-equal lines."""
+    want = df.toJSON().collect()
+
+    def parsed(lines):
+        return collections.Counter(_canonical(json.loads(ln, parse_float=Decimal)) for ln in lines)
+
+    assert parsed(got) == parsed(want)
+    assert sorted(got) == sorted(want)
+
+
+def _typed_engine(spark, path: str):
+    """A keyed lake table of the 12-type matrix plus a double and a boolean
+    column: a base, a delta, then a delta holding NaN, ±Infinity, 1e20,
+    float32 0.1, a struct with one null field, an all-null row and a
+    tombstone. Returns (engine, version before the last two deltas, a
+    bucket holding the special rows)."""
+    from airbyte_module_spark.lake.table import LakeTable
+    from tests.test_arrow_read import META, TYPED, _typed_row
+
+    user = T.StructType(
+        TYPED.fields
+        + [T.StructField("real", T.DoubleType(), True), T.StructField("flag", T.BooleanType(), True)]
+    )
+    at = {name: TYPED.fieldNames().index(name) for name in ("ratio", "pos")}
+
+    def row(i, cursor, seq, real=None, flag=None, op="u", **typed):
+        r = list(_typed_row(i, cursor, seq, op))
+        for name, v in typed.items():
+            r[at[name]] = v
+        return tuple(r[:-3]) + (real, flag) + tuple(r[-3:])
+
+    table = LakeTable.create(
+        spark, path, schema=model.table_schema(user), n_buckets=16, key_columns=["id"]
+    )
+
+    def merge(rows, truncate=False) -> int:
+        df = spark.createDataFrame(rows, T.StructType(list(user.fields) + META))
+        return table.merge(df, truncate=truncate)
+
+    v_base = merge([row(i, 100, i, real=i * 0.5, flag=i % 2 == 0) for i in range(6)], truncate=True)
+    merge([row(i, 200, 10 + i, real=-i * 1e-5) for i in range(3, 9)])
+    inf, nan = float("inf"), float("nan")
+    merge([
+        row(20, 300, 30, real=nan, ratio=nan),
+        row(21, 300, 31, real=-inf, ratio=inf),
+        row(22, 300, 32, real=inf, ratio=-inf),
+        row(23, 300, 33, real=1e20, ratio=1e20),
+        row(24, 300, 34, real=0.1, ratio=0.1, pos=(24, None)),
+        (25,) + (None,) * (len(user.fields) - 1) + (300, 35, "u"),
+        row(0, 300, 36, op="d"),
+    ])
+    special = table.read_internal().where("id >= 20").select(model.BUCKET_COLUMN).first()[0]
+    return Engine(spark, path), v_base, special
+
+
+def test_ndjson_matches_spark_json(spark, tmp_path, monkeypatch):
+    """HTTP GETs write each row as Spark's ``toJSON`` does: the typed lake
+    table's full read, a bucket slice and a delta poll; a string table
+    byte for byte (quotes, backslashes, tabs, newlines, control characters
+    in upper-case hex, non-ASCII, line separators); a CSV file asset,
+    whose Spark read goes through the same encoder. The encoder also runs
+    on batches cut to 2 rows, so nested columns are written from sliced
+    arrays."""
+    import airbyte_module_spark.server as server_mod
+    from airbyte_module_spark.config import FileAsset
+
+    typed, v_base, special = _typed_engine(spark, str(tmp_path / "typed"))
+    schema = T.StructType(
+        [T.StructField("k", T.StringType(), True), T.StructField("text", T.StringType(), True)]
+    )
+    texts = ['say "hi"\\ there', "tab\there\nnew\r\n", "\x00\x01\x0b\x1f\x7f\x08\x0c",
+             "é ü 漢字 🚀 \u2028\u2029 \x85", "", None, "\\u001f literal"]
+    strings = Engine(spark, str(tmp_path / "s"), schema=schema, key_columns=[], n_buckets=4)
+    strings.write(spark.createDataFrame([(str(i), t) for i, t in enumerate(texts)], schema), "append")
+    csv = tmp_path / "people.csv"
+    csv.write_text('id,name,score,joined\n1,"amy ""a""",1.5,2020-01-02\n2,bob,,\n3,,1e20,1999-12-31\n')
+    people = FileAsset(spark, "people", {"path": str(csv), "format": "csv"})
+    server = EngineHttpServer({"typed": typed, "s": strings, "people": people}).start()
+    try:
+        _same_json(_lines(server.port, "typed"), typed.read())
+        _same_json(_lines(server.port, f"typed?buckets={special}"), typed.read(buckets=[special]))
+        _same_json(_lines(server.port, f"typed?from_version={v_base}"), typed.changes(v_base))
+        _same_json(_lines(server.port, "s"), strings.read())
+        _same_json(_lines(server.port, "people"), people.read())
+    finally:
+        server.stop()
+    monkeypatch.setattr(server_mod, "READ_BATCH_ROWS", 2)
+    encode = server_mod._ndjson(spark.conf.get("spark.sql.session.timeZone"))
+    lines = [
+        ln
+        for b in server_mod._arrow_batches_eager(typed.table.read_arrow())
+        for ln in encode(b).decode().split("\n")[:-1]
+    ]
+    _same_json(lines, typed.read())
