@@ -42,16 +42,25 @@ def _parallel(df: DataFrame) -> DataFrame:
     return df
 
 
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One corpus table through the file source, which resolves it (schema
+    inference job, listing, and the ``df.rdd`` that ``_parallel`` plans)
+    once per session while its file is unchanged."""
+    from airbyte_module_spark.sources.files import read_file
+
+    return read_file(spark, f"{sf_dir}/{name}.parquet", "parquet")
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _table(spark, sf_dir, "events")
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _parallel(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _parallel(_table(spark, sf_dir, "documents"))
 
 
 def _customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/customer.parquet")
+    return _table(spark, sf_dir, "customer")
 
 
 def _cursor():
@@ -340,7 +349,7 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unsplittable scan buys less than the exchange costs (measured +0.2s
     # per ann_* query at sf1); the pair-heavy stages are post-shuffle
     # parallel already, and near_dup_pairs spreads its matmul explicitly
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _table(spark, sf_dir, "embeddings")
 
 
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -588,15 +597,13 @@ def file_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -------------------------------------------------------------- discovery
 def schema_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 schema discovery: infer every table's schema from its data files
-    (metadata-only parquet footer reads — the Spark analogue of the
-    reference's dockerized `discover` round-trip, abm/connector.py:176-180)
-    and render it in engine-neutral type names. The oracle reads the same
-    catalog from DuckDB's information_schema — matching output proves the
-    discovery is faithful, like the reference's catalog-vs-expected diff."""
-    import os as _os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    (the Spark analogue of the reference's dockerized `discover`
+    round-trip, abm/connector.py:176-180) and render it in engine-neutral
+    type names. The oracle reads the same catalog from DuckDB's
+    information_schema — matching output proves the discovery is faithful,
+    like the reference's catalog-vs-expected diff. Each table's schema is
+    inferred once per session and file identity (``_table``), so a repeated
+    discovery of unchanged files runs no Spark job."""
     from pyspark.sql import types as T
 
     def type_name(dt: T.DataType) -> str:
@@ -617,63 +624,15 @@ def schema_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             return f"DECIMAL({dt.precision},{dt.scale})"
         return mapping[type(dt)]
 
-    def arrow_type_name(t: "pa.DataType") -> str:
-        # the engine-neutral rendering of the same parquet footer types the
-        # Spark reader maps (timestamps collapse to TIMESTAMP either way,
-        # so the isAdjustedToUTC split cannot diverge)
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return arrow_type_name(t.value_type) + "[]"
-        if pa.types.is_decimal(t):
-            return f"DECIMAL({t.precision},{t.scale})"
-        if pa.types.is_timestamp(t):
-            return "TIMESTAMP"
-        if pa.types.is_int64(t):
-            return "BIGINT"
-        if pa.types.is_int32(t):
-            return "INTEGER"
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return "VARCHAR"
-        if pa.types.is_float64(t):
-            return "DOUBLE"
-        if pa.types.is_float32(t):
-            return "FLOAT"
-        if pa.types.is_boolean(t):
-            return "BOOLEAN"
-        if pa.types.is_date(t):
-            return "DATE"
-        raise KeyError(str(t))
-
     tables = [
         "region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings",
     ]
-    rows = []
-    for t in tables:
-        path = f"{sf_dir}/{t}.parquet"
-        # Footer-only metadata read via pyarrow (~10x cheaper than spinning
-        # up a Spark relation per table — this loop was ~1s of pure driver
-        # serial time, guide §5 "the driver should do almost no data work").
-        # A directory-shaped table or an exotic footer type falls back to
-        # the Spark reader for that table, whose mapping is authoritative.
-        try:
-            if _os.path.isdir(path):
-                part = sorted(
-                    f for f in _os.listdir(path) if f.endswith(".parquet")
-                )[0]
-                sch = pq.read_schema(_os.path.join(path, part))
-            else:
-                sch = pq.read_schema(path)
-            rows.extend(
-                (t, f_.name, arrow_type_name(f_.type), i + 1)
-                for i, f_ in enumerate(sch)
-            )
-        except (KeyError, IndexError, OSError):
-            rows.extend(
-                (t, f_.name, type_name(f_.dataType), i + 1)
-                for i, f_ in enumerate(
-                    spark.read.parquet(path).schema.fields
-                )
-            )
+    rows = [
+        (t, f.name, type_name(f.dataType), i + 1)
+        for t in tables
+        for i, f in enumerate(_table(spark, sf_dir, t).schema.fields)
+    ]
     return spark.createDataFrame(
         rows, "table_name string, column_name string, data_type string, ordinal bigint"
     )

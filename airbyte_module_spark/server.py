@@ -61,6 +61,7 @@ from __future__ import annotations
 
 import base64
 import json
+import logging
 import os
 import re
 import shutil
@@ -86,6 +87,8 @@ except ImportError:  # pragma: no cover
     HAVE_FLIGHT = False
 
 from airbyte_module_spark.engine import WRITE_MODES, Engine
+
+log = logging.getLogger(__name__)
 
 # rows per Arrow record batch / NDJSON flush on the streamed read paths —
 # bounds driver memory per in-flight chunk regardless of asset size
@@ -222,6 +225,10 @@ def read_batches(
             raise ValueError("to_version needs from_version")
         if table is None and (version, buckets, from_v) != (None, None, None):
             raise ValueError("asset is not a lake table: no versions, slices or changes")
+        if buckets:
+            n = table.n_buckets
+            if not all(0 <= b < n for b in buckets):
+                raise ValueError(f"buckets must lie in 0..{n - 1}, got {buckets}")
         pinned = None if table is None else (
             table.current_version() if version is None else version
         )
@@ -557,10 +564,13 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
 
         Statuses come from ``ReadError``: 400 = the request is malformed
         (an unparseable value, ``to_version`` without ``from_version``, a
-        backwards range or one past the head, a version/bucket param on an
-        asset that serves neither); 409 = a well-formed range that is
-        UNSERVABLE now (rewritten by maintenance on a keyless table, or
-        the from-snapshot expired) — retryable as a full read."""
+        backwards range or one past the head, a bucket outside
+        ``0..n_buckets-1``, a version/bucket param on an asset that serves
+        neither); 409 = a well-formed range that is UNSERVABLE now
+        (rewritten by maintenance on a keyless table, or the from-snapshot
+        expired) — retryable as a full read. Any other failure before the
+        body starts is an empty 500; one after it ends the connection
+        without the final chunk, so the client sees a cut stream."""
         url = urlsplit(self.path)
         asset = url.path.strip("/")
         params = dict(parse_qsl(url.query))
@@ -570,20 +580,34 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
             request["buckets"] = [b for b in params["buckets"].split(",") if b]
         try:
             _, batches, version = read_batches(self.assets, request)
+            encode = _ndjson(self.assets[asset].spark.conf.get("spark.sql.session.timeZone"))
         except ReadError as e:
             self._empty(e.status)
             return
-        encode = _ndjson(self.assets[asset].spark.conf.get("spark.sql.session.timeZone"))
+        except Exception:
+            self._failed()
+            return
         self.send_response(200)
         self.send_header("Content-Type", "application/x-ndjson")
         self.send_header("Transfer-Encoding", "chunked")
         if version is not None:
             self.send_header("X-Table-Version", str(version))
         self.end_headers()
-        for batch in batches:
-            if data := encode(batch):
-                self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
+        try:
+            for batch in batches:
+                if data := encode(batch):
+                    self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
+        except Exception:
+            log.exception("GET %s failed mid-stream", self.path)
+            self.close_connection = True
+            return
         self.wfile.write(b"0\r\n\r\n")
+
+    def _failed(self) -> None:
+        """An unexpected failure before the answer started: logged, and an
+        empty 500 instead of a dropped connection."""
+        log.exception("%s %s failed", self.command, self.path)
+        self._empty(500, close=True)
 
     def _write(self):
         """Streamed NDJSON write: the Content-Length-bounded body is copied
@@ -594,7 +618,8 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
         applied as ONE engine write. No per-row Python dicts anywhere.
         Nothing lands unless the whole body parses: no ``Content-Length`` is
         411; a bad one, an unknown ``X-Write-Mode``, a body ending short or
-        a line Spark cannot parse (FAILFAST) is 400."""
+        a line Spark cannot parse (FAILFAST) is 400, and any other failure
+        an empty 500."""
         eng = self._engine()
         if eng is None:
             return
@@ -615,13 +640,13 @@ class _EngineHttpHandler(BaseHTTPRequestHandler):
                 self._empty(400, close=True)
                 return
             df = eng.spark.read.schema(eng.schema()).option("mode", "FAILFAST").json(spill)
-            try:
-                eng.write(df, mode=mode)
-            except Py4JJavaError as e:
-                if not _malformed_json(e):
-                    raise
+            eng.write(df, mode=mode)
+        except Exception as e:
+            if isinstance(e, Py4JJavaError) and _malformed_json(e):
                 self._empty(400)
-                return
+            else:
+                self._failed()
+            return
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         self._empty(200)

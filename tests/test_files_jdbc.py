@@ -99,3 +99,100 @@ def test_jdbc_options_partitioned_scan():
 def test_jdbc_options_partition_bounds_required():
     with pytest.raises(ValueError):
         jdbc_options("jdbc:mysql://h/d", "t", partition_column="id")
+
+
+# ------------------------------------------------------- resolved-read memo
+def test_repeated_reads_run_no_inference_job(spark, tmp_path, df):
+    """A parquet corpus read and a CSV file asset's schema each infer their
+    schema with a Spark job; repeating the read on unchanged files reuses
+    the resolved plan and runs none."""
+    from airbyte_module_spark import queries as Q
+    from airbyte_module_spark.config import FileAsset
+    from tests.util import count_jobs
+
+    Q.redact_columns(spark, "/root/testdata/sf0.001")
+    assert count_jobs(spark, lambda: Q.redact_columns(spark, "/root/testdata/sf0.001")) == 0
+    path = str(tmp_path / "asset_csv")
+    write_file(df, path, format="csv")
+    asset = FileAsset(spark, "f", {"path": path, "format": "csv"})
+    assert count_jobs(spark, asset.schema) >= 1
+    assert count_jobs(spark, asset.schema) == 0
+    assert asset.read() is asset.read()
+
+
+def test_rewritten_file_is_resolved_again(spark, tmp_path):
+    """A file rewritten in place (new size) reads back its new rows and
+    columns, not the plan resolved for the old file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    first = read_file(spark, path, "parquet")
+    assert sorted(r.a for r in first.collect()) == [1, 2]
+    pq.write_table(pa.table({"a": [3, 4, 5], "b": ["x", "y", "z"]}), path)
+    again = read_file(spark, path, "parquet")
+    assert again is not first
+    assert again.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in again.collect()) == [(3, "x"), (4, "y"), (5, "z")]
+
+
+def test_directory_gaining_a_file_is_resolved_again(spark, tmp_path, df):
+    """A directory read is keyed on its data files: a marker file does not
+    re-resolve it, an appended data file does and its rows show."""
+    path = str(tmp_path / "dir")
+    write_file(df, path, format="parquet")
+    first = read_file(spark, path, "parquet")
+    (tmp_path / "dir" / "_SUCCESS").write_text("")
+    (tmp_path / "dir" / ".hidden").write_text("x")
+    assert read_file(spark, path, "parquet") is first
+    write_file(df, path, format="parquet", mode="append")
+    again = read_file(spark, path, "parquet")
+    assert again is not first
+    assert again.count() == 6
+
+
+def test_sessions_never_share_a_resolved_read(spark, tmp_path, df):
+    """Each session resolves its own reads, and they die with it."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    path = str(tmp_path / "shared")
+    write_file(df, path, format="parquet")
+    mine = read_file(spark, path, "parquet")
+    other = spark.newSession()
+    # a new session binds ``RDD.toDF`` to itself: hand it back to ``spark``
+    _monkey_patch_RDD(spark)
+    theirs = read_file(other, path, "parquet")
+    assert theirs is not mine
+    assert theirs.sparkSession is other and mine.sparkSession is spark
+    assert read_file(other, path, "parquet") is theirs
+    assert read_file(spark, path, "parquet") is mine
+    gone = weakref.ref(other)
+    del other, theirs
+    gc.collect()
+    assert gone() is None
+
+
+def test_relative_glob_url_and_missing_paths_read_afresh(spark, tmp_path, df):
+    """Paths the memo does not key (relative, glob, URL, not stat-able)
+    read as a plain Spark read does, every time."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "plain")
+    write_file(df, path, format="parquet")
+    # Spark resolves a relative path against the JVM's working directory
+    relative = os.path.relpath(path, spark._jvm.System.getProperty("user.dir"))
+    for p in (relative, f"{path}/*.parquet", f"file://{path}"):
+        first = read_file(spark, p, "parquet")
+        assert first.count() == 3, p
+        assert read_file(spark, p, "parquet") is not first, p
+    missing = str(tmp_path / "later")
+    with pytest.raises(AnalysisException):
+        read_file(spark, missing, "parquet")
+    write_file(df, missing, format="parquet")
+    assert read_file(spark, missing, "parquet").count() == 3

@@ -848,7 +848,7 @@ def _flight_reader(stack: contextlib.ExitStack, eng):
 
 def _http_reader(stack: contextlib.ExitStack, eng):
     """``_flight_reader`` over HTTP: a slice is ``?buckets=b``, a ticket
-    the query; a handler that raises drops the connection."""
+    the query; a read that raises answers 500."""
     server = EngineHttpServer({"nojob": eng}).start()
     stack.callback(server.stop)
 
@@ -860,7 +860,7 @@ def _http_reader(stack: contextlib.ExitStack, eng):
     def slices() -> list[list[dict]]:
         return [get(buckets=b) for b in eng.table.live_buckets()]
 
-    return slices, get, ConnectionError
+    return slices, get, urllib.error.HTTPError
 
 
 @pytest.mark.parametrize("protocol", ["flight", "http"])
@@ -1034,3 +1034,100 @@ def test_ndjson_matches_spark_json(spark, tmp_path, monkeypatch):
         for ln in encode(b).decode().split("\n")[:-1]
     ]
     _same_json(lines, typed.read())
+
+
+def test_http_read_failure_before_the_body_is_500(spark, tmp_path):
+    """A CSV file asset whose file is gone fails inside its Spark read;
+    the GET answers an empty 500 instead of dropping the connection."""
+    from airbyte_module_spark.config import FileAsset
+
+    csv = tmp_path / "gone.csv"
+    csv.write_text("id,name\n1,amy\n")
+    server = EngineHttpServer({"gone": FileAsset(spark, "gone", {"path": str(csv)})}).start()
+    try:
+        with urllib.request.urlopen(f"http://127.0.0.1:{server.port}/gone") as resp:
+            assert [json.loads(ln) for ln in resp.read().decode().split("\n")[:-1]] == [
+                {"id": 1, "name": "amy"}
+            ]
+        csv.unlink()
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(f"http://127.0.0.1:{server.port}/gone")
+        assert (e.value.code, e.value.read()) == (500, b"")
+    finally:
+        server.stop()
+
+
+class _FailingAsset:
+    """A non-lake asset whose read fails in its Spark job, after the
+    schema is known, and whose write raises."""
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def read(self):
+        return self.spark.range(3).selectExpr("IF(id >= 0, raise_error('boom'), id) AS id")
+
+    def schema(self):
+        return T.StructType([T.StructField("id", T.LongType(), True)])
+
+    def write(self, df, mode="append"):
+        raise RuntimeError("write failed")
+
+
+def test_http_write_failure_is_500(spark):
+    """A write that raises anything but a JSON parse error answers an
+    empty 500 instead of dropping the connection."""
+    server = EngineHttpServer({"bad": _FailingAsset(spark)}).start()
+    try:
+        status, headers = _put(server.port, "/bad", ROW, {"Content-Length": str(len(ROW))})
+    finally:
+        server.stop()
+    assert (status, headers["Content-Length"]) == (500, "0")
+
+
+def test_http_read_failure_mid_stream_cuts_the_stream(spark):
+    """A read that fails once the 200 and its headers are out ends the
+    connection without the final chunk: the client sees a cut body, not
+    a complete empty one."""
+    server = EngineHttpServer({"bad": _FailingAsset(spark)}).start()
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+    try:
+        conn.request("GET", "/bad")
+        resp = conn.getresponse()
+        assert resp.status == 200
+        with pytest.raises(http.client.IncompleteRead):
+            resp.read()
+    finally:
+        conn.close()
+        server.stop()
+
+
+@pytest.mark.parametrize("protocol", ["flight", "http"])
+def test_bucket_outside_the_table_is_refused(asset, protocol):
+    """A bucket outside ``0..n_buckets-1`` is a malformed request (HTTP
+    400, Flight ``FlightServerError``), not an empty read."""
+    assert asset.table.n_buckets == 2
+    bad = [[2], [-1], [0, 5]]
+    if protocol == "http":
+        server = EngineHttpServer({"userdata": asset}).start()
+        try:
+            for buckets in bad:
+                query = ",".join(map(str, buckets))
+                with pytest.raises(urllib.error.HTTPError) as e:
+                    urllib.request.urlopen(f"http://127.0.0.1:{server.port}/userdata?buckets={query}")
+                assert e.value.code == 400, buckets
+        finally:
+            server.stop()
+        return
+    if not HAVE_FLIGHT:
+        pytest.skip("pyarrow.flight unavailable")
+    import pyarrow.flight as fl
+
+    from airbyte_module_spark.server import EngineFlightServer
+
+    with EngineFlightServer({"userdata": asset}) as server:
+        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+        for buckets in bad:
+            ticket = fl.Ticket(json.dumps({"asset_name": "userdata", "buckets": buckets}).encode())
+            with pytest.raises(fl.FlightServerError, match="buckets must lie in 0..1"):
+                client.do_get(ticket).read_all()
